@@ -301,7 +301,8 @@ def kmeans_fit(
             # empty corpus: no centroids to seed — an empty literal
             # array would be VOID-typed and break the struct extract
             return (
-                df.sparkSession.createDataFrame(
+                local_rows_df(
+                    df.sparkSession,
                     [], f"{id_col} long, cluster_id long, d2 long"
                 ),
                 [],
@@ -1162,7 +1163,8 @@ def ivfpq_topk(
 
     cent_rows = _centroid_rows(df, id_col, vec_col, n_centroids)
     if not cent_rows:
-        return df.sparkSession.createDataFrame(
+        return local_rows_df(
+            df.sparkSession,
             [], "query_id long, neighbor_id long, rank long, adc_d2 long"
         )
     n_probe = min(n_probe, len(cent_rows))
@@ -1297,7 +1299,7 @@ def ivfpq_residual_topk(
     out_schema = "query_id long, neighbor_id long, rank long, adc_d2 long"
     cent_rows = _centroid_rows(df, id_col, vec_col, n_centroids)
     if not cent_rows:
-        return spark.createDataFrame([], out_schema)
+        return local_rows_df(spark, [], out_schema)
     n_probe = min(n_probe, len(cent_rows))
     bc = _ivf_centroid_broadcast(df, cent_rows)
     dim = len(cent_rows[0]["v"])

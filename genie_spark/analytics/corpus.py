@@ -1613,7 +1613,8 @@ def temperature_mix(
     )
     total = int(counts.agg(F.sum("s_alpha")).first()[0] or 0)
     if total == 0:
-        return base.sparkSession.createDataFrame(
+        return local_rows_df(
+            base.sparkSession,
             [],
             base.withColumns(
                 {

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from genie_spark.session import local_rows_df
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -549,7 +551,7 @@ def synthesize_media(spark, n: int = 64) -> DataFrame:
                 (64 + i % 512, 64 + (i * 7) % 512, 1000 * (i % 90), f"x/{mtype}"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_rows_df(spark, rows, MEDIA_SCHEMA)
 
 
 def image_ahash(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from genie_spark.session import local_rows_df
+
 QUANT_SCALE = 1000
 
 
@@ -128,7 +130,7 @@ def cosine_topk(
     q_rows = queries.select(F.col(id_col), quantized(vec_col).alias("v")).collect()
     if not q_rows:
         schema = "query_id long, neighbor_id long, rank int, cosine double"
-        return df.sparkSession.createDataFrame([], schema)
+        return local_rows_df(df.sparkSession, [], schema)
 
     import numpy as np
 
@@ -403,7 +405,7 @@ def ivf_cell_pairs(
     """
     cent_rows = _centroid_rows(df, id_col, vec_col, n_centroids)
     if not cent_rows:
-        return df.sparkSession.createDataFrame([], "a long, b long")
+        return local_rows_df(df.sparkSession, [], "a long, b long")
     if engine == "arrow":
         # corpus-wide probe assignment is the hot loop — Arrow matmul
         # (bit-identical ordering, see _ivf_probes_arrow) instead of
@@ -514,7 +516,8 @@ def ivf_topk(
     """
     cent_rows = _centroid_rows(df, id_col, vec_col, n_centroids)
     if not cent_rows:
-        return df.sparkSession.createDataFrame(
+        return local_rows_df(
+            df.sparkSession,
             [], "query_id long, neighbor_id long, rank int, cosine double"
         )
     queries = df.where(query_filter) if query_filter is not None else df
@@ -1356,7 +1359,8 @@ def sq8_topk(
             )
     q_rows = queries.collect()
     if not q_rows:
-        return df.sparkSession.createDataFrame(
+        return local_rows_df(
+            df.sparkSession,
             [], "query_id long, neighbor_id long, rank int, qcos double"
         )
 
@@ -1467,7 +1471,8 @@ def prefix_rerank_topk(
             )
     q_rows = qset.collect()
     if not q_rows:
-        return df.sparkSession.createDataFrame(
+        return local_rows_df(
+            df.sparkSession,
             [], "query_id long, neighbor_id long, rank int, cosine double"
         )
 

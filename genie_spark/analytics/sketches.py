@@ -305,7 +305,9 @@ def sampled_quantiles(
         F.col(group_col).alias("g"), F.col(value_col).alias("v")
     ).withColumn("rn", F.row_number().over(w))
     counts = ranked.groupBy("g").agg(F.max("rn").cast("long").alias("n_sample"))
-    qdf = local_rows_df(ranked.sparkSession, [(float(q),) for q in qs], ["q"])
+    qdf = local_rows_df(
+        ranked.sparkSession, [(float(q),) for q in qs], "q double"
+    )
     targets = (
         counts.select(F.col("g").alias("tg"), "n_sample")
         .crossJoin(F.broadcast(qdf))
@@ -837,7 +839,8 @@ def quantile_sketch_estimates(
     sized."""
     first = sketch.select("level", "n_items").limit(1).collect()
     if not first:
-        return sketch.sparkSession.createDataFrame(
+        return local_rows_df(
+            sketch.sparkSession,
             [],
             "phi_milli long, n_items long, level long, k_kept long, "
             "target_rank long, est_value long",
@@ -953,7 +956,8 @@ def quantile_level_sketch_by(
             level, n_items = _qs_pick_level(hist, k_max)
             meta.append((g, level, n_items))
         if not meta:
-            return base.sparkSession.createDataFrame(
+            return local_rows_df(
+                base.sparkSession,
                 [],
                 "g string, v long, h60 long, tz long, level long, n_items long",
             )

@@ -378,7 +378,8 @@ def bm25_topk(
         # empty (or all-empty-text) corpus: F.sum over zero rows is
         # null — return the empty result instead of a TypeError
         spark = df.sparkSession
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             [],
             f"{id_col} {dict(df.dtypes)[id_col]}, score bigint, "
             "n_terms_hit bigint, rank bigint",

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from genie_spark.schemas import BED_SCHEMA, MAF_ALLELE_COLS, MAF_NA_STRINGS
+from genie_spark.session import local_rows_df
 
 
 def _paths(p: str | Sequence[str]) -> list[str]:
@@ -195,7 +196,9 @@ def assay_df_from_dict(spark: SparkSession, cfg: dict) -> DataFrame:
             rows.append(row)
     all_keys = ["SEQ_ASSAY_ID"] + sorted({k for r in rows for k in r} - {"SEQ_ASSAY_ID"})
     data = [tuple(r.get(k) for k in all_keys) for r in rows]
-    return spark.createDataFrame(data, ", ".join(f"`{k}` string" for k in all_keys))
+    return local_rows_df(
+        spark, data, ", ".join(f"`{k}` string" for k in all_keys)
+    )
 
 
 def read_assay_yaml(spark: SparkSession, path: str) -> DataFrame:

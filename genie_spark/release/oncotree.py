@@ -19,6 +19,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from genie_spark.session import local_rows_df
+
 ONCOTREE_COLUMNS = [
     "ONCOTREE_CODE",
     "CANCER_TYPE",
@@ -62,7 +64,8 @@ def oncotree_df_from_json(spark: SparkSession, payload: dict) -> DataFrame:
     DataFrame the release joins against."""
     root = payload.get("TISSUE", payload)
     rows = flatten_oncotree(root)
-    return spark.createDataFrame(
+    return local_rows_df(
+        spark,
         [tuple(r[c] for c in ONCOTREE_COLUMNS) for r in rows],
         ", ".join(f"{c} string" for c in ONCOTREE_COLUMNS),
     )

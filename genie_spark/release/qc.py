@@ -76,6 +76,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from genie_spark.rules.engine import ValidationMessage, ValidationReport
+from genie_spark.session import local_rows_df
 
 _CASE_LIST_KEYS = (
     "cancer_study_identifier",
@@ -189,6 +190,11 @@ def _parse_kv_text(path: str) -> dict[str, str]:
     return out
 
 
+def _id_df(spark: SparkSession, ids, col: str = "SAMPLE_ID") -> DataFrame:
+    """Driver-side ids (KB-scale) as a one-column string table."""
+    return local_rows_df(spark, [(i,) for i in ids], f"`{col}` string")
+
+
 def _missing_from(
     spark: SparkSession, ids: list[str], reference: DataFrame, col: str
 ) -> list[str]:
@@ -196,7 +202,7 @@ def _missing_from(
     (data-sized, stays distributed)."""
     if not ids:
         return []
-    probe = spark.createDataFrame([(i,) for i in ids], f"{col} string")
+    probe = _id_df(spark, ids, col)
     return sorted(
         r[0]
         for r in probe.join(reference, col, "left_anti").collect()
@@ -690,9 +696,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     # containment (ids ⊆ clinical) ran per file above; this is the
     # clinical ⊆ cases_all anti-join, distributed like the rest.
     if cases_all_ids is not None:
-        all_probe = spark.createDataFrame(
-            [(i,) for i in cases_all_ids], "SAMPLE_ID string"
-        )
+        all_probe = _id_df(spark, cases_all_ids)
         n = clin_ids.join(
             F.broadcast(all_probe), "SAMPLE_ID", "left_anti"
         ).count()
@@ -758,9 +762,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
             # _sequenced = all released samples,
             # genie/create_case_lists.py:128-147)
             if sequenced_ids is not None:
-                seq_df = spark.createDataFrame(
-                    [(i,) for i in sequenced_ids], "SAMPLE_ID string"
-                )
+                seq_df = _id_df(spark, sequenced_ids)
                 n = (
                     maf.select(F.col(tsb).alias("SAMPLE_ID"))
                     .distinct()
@@ -908,9 +910,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         # the SV profile); data-sized SV table stays distributed
         sv_sid = _resolve(sv, "SAMPLE_ID")
         if sv_case_ids is not None and sv_sid is not None:
-            probe = spark.createDataFrame(
-                [(i,) for i in sorted(sv_case_ids)], "SAMPLE_ID string"
-            )
+            probe = _id_df(spark, sorted(sv_case_ids))
             n = (
                 sv.select(F.col(sv_sid).alias("SAMPLE_ID"))
                 .distinct()
@@ -1063,9 +1063,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         # (database_to_staging.py:1631-1632), mirroring the
         # gene_panel_files exemption above.
         if gm_sid is not None and sequenced_ids is not None:
-            seq_df = spark.createDataFrame(
-                [(i,) for i in sequenced_ids], "SAMPLE_ID string"
-            )
+            seq_df = _id_df(spark, sequenced_ids)
             missing_df = seq_df.join(
                 matrix.select(F.col(gm_sid).alias("SAMPLE_ID")).distinct(),
                 "SAMPLE_ID",

@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from genie_spark.session import local_rows_df
+
 MAX_EXAMPLES = 5
 
 
@@ -75,7 +77,8 @@ class ValidationReport:
              [str(e) for e in m.examples], m.message)
             for m in self.messages
         ]
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             rows,
             "file_type string, rule_id string, severity string, "
             "n_violations long, examples array<string>, message string",

@@ -139,36 +139,47 @@ def get_spark(
 
 def local_rows_df(spark: SparkSession, rows, schema):
     """Driver-local rows → DataFrame as a JVM ``LocalRelation`` via one
-    Arrow batch, instead of the default pickle ``parallelize`` path.
+    Arrow table, instead of the default pickle ``parallelize`` path.
+    This is the package's ONE way to build a driver-local table.
 
     ``spark.createDataFrame(list, schema)`` plans a LogicalRDD whose
     partitions are PYTHON tasks — and those tasks re-execute inside
     EVERY consumer job of the table (each join build, broadcast,
-    write).  Measured r16 (guide §4 — the Python boundary): writing a
-    16-row centroid table sourced from a list cost 4.8-7.5 s PER
-    downstream job (32 pickle-path Python worker tasks each time); the
-    same table via a pandas/Arrow batch plans a ``LocalRelation`` —
-    a JVM literal, zero Python anywhere downstream — and the job cost
-    0.18 s.  Every small driver-built lookup/probe/model table in the
-    package routes through here.
+    write), even when the list is empty.  Measured on PySpark 4.1.2:
+    writing a 16-row centroid table sourced from a list cost
+    4.8-7.5 s PER downstream job (32 pickle-path Python worker tasks
+    each time) against 0.18 s via Arrow; a one-row status table cost
+    ~1.3 s per upsert of the validation-status bookkeeping.  The Arrow
+    table plans a ``LocalRelation`` — a JVM literal, zero Python
+    anywhere downstream — for empty input too.
 
-    Semantics are identical for the simple types these tables use
-    (longs/ints/doubles/strings/arrays of longs) — verified
-    row-and-schema-exact against the pickle path; Arrow-unsupported
-    types fall back to the plain path automatically
-    (``spark.sql.execution.arrow.pyspark.fallback.enabled``).  An
-    empty ``rows`` keeps the plain path (already a no-task empty
-    relation)."""
+    ``schema`` is a DDL string or ``StructType``; types and
+    nullability are exact, as on the pickle path.  A row whose width
+    or values do not fit the schema raises; there is no fallback
+    path.  Arrow reads a naive ``datetime`` as UTC where the pickle
+    path reads local time; no caller passes timestamps."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(schema, StructType):
+        raise TypeError(f"local_rows_df needs a struct schema, got {schema!r}")
+    fields = to_arrow_schema(schema)
     rows = list(rows)
-    if not rows:
-        return spark.createDataFrame([], schema)
-    try:
-        import pandas as pd
-
-        pdf = pd.DataFrame.from_records(rows)
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:  # pandas/Arrow unavailable or shape mismatch
-        return spark.createDataFrame(rows, schema)
+    for r in rows:
+        if len(r) != len(fields):
+            raise ValueError(
+                f"local_rows_df: row {r!r} has {len(r)} values, "
+                f"schema has {len(fields)} ({fields.names})"
+            )
+    cols = list(zip(*rows)) if rows else [() for _ in fields]
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, fields)]
+    for a, f in zip(arrays, fields):
+        if not f.nullable and a.null_count:
+            raise ValueError(f"local_rows_df: null in non-nullable {f.name!r}")
+    return spark.createDataFrame(pa.table(arrays, schema=fields), schema=schema)
 
 
 TESTDATA_TABLES = (

@@ -1020,7 +1020,8 @@ def _quantile_store_merge_by(df: DataFrame, k_max: int) -> DataFrame:
         n_by_g[g] = n_by_g.get(g, 0) + int(r["n_items"])
         floor_by_g[g] = max(floor_by_g.get(g, 0), int(r["level"]))
     if not n_by_g:
-        return df.sparkSession.createDataFrame(
+        return local_rows_df(
+            df.sparkSession,
             [], "g string, v long, h60 long, tz long, level long, n_items long"
         )
     floors = local_rows_df(

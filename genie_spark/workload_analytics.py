@@ -2250,7 +2250,7 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch = count_min_sketch(
         occurrences, "value", width=CM_Q_WIDTH, depth=CM_Q_DEPTH
     )
-    probes = local_rows_df(spark, [(p,) for p in CM_Q_PROBES], ["value"])
+    probes = local_rows_df(spark, [(p,) for p in CM_Q_PROBES], "value string")
     est = count_min_lookup(
         sketch, probes, "value", width=CM_Q_WIDTH, depth=CM_Q_DEPTH
     )
@@ -2335,7 +2335,7 @@ def sketch_cm_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(3)
     ]
     merged = count_min_merge(count_min_merge(shards[0], shards[1]), shards[2])
-    probes = local_rows_df(spark, [(p,) for p in CM_Q_PROBES], ["value"])
+    probes = local_rows_df(spark, [(p,) for p in CM_Q_PROBES], "value string")
     est = count_min_lookup(
         merged, probes, "value", width=CM_Q_WIDTH, depth=CM_Q_DEPTH
     )

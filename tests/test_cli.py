@@ -1765,6 +1765,74 @@ def test_validation_status_workflow(spark, tmp_path, capsys):
     assert len(errs) == 1 and "must at least have" in errs[0]["errors"]
 
 
+def _files(table_dir):
+    """(relative path, size, mtime_ns, bytes) of every file of a table."""
+    out = []
+    for root, _dirs, files in os.walk(table_dir):
+        for f in files:
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            with open(p, "rb") as fh:
+                out.append(
+                    (os.path.relpath(p, table_dir), st.st_size,
+                     st.st_mtime_ns, fh.read())
+                )
+    return sorted(out)
+
+
+def test_record_status_raises_on_unreadable_status_table(spark, tmp_path):
+    """An unreadable status table is not an absent one: record_status
+    raises and leaves the table's files as they were.  Treating it as
+    absent would overwrite every other file's status with one row."""
+    from genie_spark.io.status import STATUS_TABLE, record_status
+
+    wh = str(tmp_path / "warehouse")
+    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    record_status(spark, wh, CENTER, "b.txt", "m2", "VALIDATED", "/in/b.txt")
+    table = os.path.join(wh, STATUS_TABLE)
+    part = next(f for f in sorted(os.listdir(table)) if f.endswith(".parquet"))
+    with open(os.path.join(table, part), "wb") as f:
+        f.write(b"not a parquet file")
+    before = _files(table)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        record_status(
+            spark, wh, CENTER, "c.txt", "m3", "VALIDATED", "/in/c.txt"
+        )
+    assert _files(table) == before
+
+
+def test_record_status_rewrites_error_tracker_only_on_change(spark, tmp_path):
+    """The error tracker is created on the first update, left untouched
+    by an update that neither adds nor clears an error row, and
+    rewritten when a file turns INVALID or back to VALIDATED."""
+    from genie_spark.io.status import ERROR_TABLE, STATUS_TABLE, record_status
+
+    wh = str(tmp_path / "warehouse")
+    tracker = os.path.join(wh, ERROR_TABLE)
+    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    assert os.path.isdir(tracker)
+    assert spark.read.parquet(tracker).count() == 0
+
+    before = _files(tracker)
+    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    assert _files(tracker) == before
+
+    record_status(
+        spark, wh, CENTER, "b.txt", "m2", "INVALID", "/in/b.txt",
+        errors="ERROR [maf.cols]: missing",
+    )
+    assert [tuple(r) for r in spark.read.parquet(tracker).collect()] == [
+        (CENTER, "b.txt", "ERROR [maf.cols]: missing")
+    ]
+    record_status(spark, wh, CENTER, "b.txt", "m3", "VALIDATED", "/in/b.txt")
+    assert spark.read.parquet(tracker).count() == 0
+    status = {
+        r["name"]: (r["md5"], r["status"])
+        for r in spark.read.parquet(os.path.join(wh, STATUS_TABLE)).collect()
+    }
+    assert status == {"a.txt": ("m1", "VALIDATED"), "b.txt": ("m3", "VALIDATED")}
+
+
 def test_workflow_format_and_mutations_in_cis_rules(spark, tmp_path):
     wf = tmp_path / f"{CENTER}-workflow.md"
     wf.write_text("# workflow\n")

@@ -459,6 +459,28 @@ def test_no_nondeterministic_uid_in_package():
     assert not offenders, offenders
 
 
+def test_no_create_dataframe_outside_session():
+    """Repo policy (session.local_rows_df): every driver-local table
+    enters Spark as one Arrow LocalRelation.  A bare
+    ``createDataFrame(list, ...)`` plans a pickle-path LogicalRDD whose
+    Python worker tasks re-run inside every job that consumes it, even
+    when the list is empty — so session.py is the one file allowed to
+    call it."""
+    import glob as _glob
+    import os as _os
+
+    pkg = _os.path.join(_os.path.dirname(__file__), "..", "genie_spark")
+    offenders = []
+    for path in _glob.glob(_os.path.join(pkg, "**", "*.py"), recursive=True):
+        if _os.path.relpath(path, pkg) == "session.py":
+            continue
+        with open(path) as f:
+            for i, line in enumerate(f, 1):
+                if "createDataFrame(" in line:
+                    offenders.append(f"{path}:{i}: {line.strip()}")
+    assert not offenders, offenders
+
+
 def test_hll_sketch_single_bounded_exchange(spark):
     """The register build is ONE partial-aggregable groupBy: repeated
     (group, reg) pairs collapse map-side to ≤2^p rows per partition

@@ -8,6 +8,7 @@ logic without starting a second SparkSession (getOrCreate would just
 reuse the test session anyway).
 """
 
+import pytest
 from pyspark.sql import SparkSession
 
 from genie_spark import session as S
@@ -62,33 +63,75 @@ def test_session_scale_confs(spark):
 
 
 def test_local_rows_df_plans_local_relation_and_matches_pickle_path(spark):
-    """r16: driver-built lookup tables must enter as ONE Arrow batch —
-    a JVM LocalRelation with zero Python tasks downstream — and be
+    """Driver-built tables must enter as ONE Arrow table — a JVM
+    LocalRelation with zero Python tasks downstream — and be
     row-and-schema-identical to the plain createDataFrame path for
-    every shape the package uses (guide §4: the pickle parallelize
-    path re-runs Python worker tasks inside EVERY consumer job;
-    measured 4.8-7.5 s per downstream job for a 16-row table vs
-    0.18 s via Arrow)."""
+    every shape the package uses (the pickle parallelize path re-runs
+    Python worker tasks inside EVERY consumer job; measured 4.8-7.5 s
+    per downstream job for a 16-row table vs 0.18 s via Arrow)."""
+    from pyspark.sql import types as T
+
+    from genie_spark.io.status import ERROR_SCHEMA, STATUS_SCHEMA
+    from genie_spark.release.oncotree import ONCOTREE_COLUMNS
     from genie_spark.session import local_rows_df
 
+    assay_cols = ["SEQ_ASSAY_ID", "SEQ_PIPELINE_ID", "alteration_types",
+                  "is_paired_end", "library_strategy", "preservation_technique"]
     cases = [
-        ([(1,), (2,)], ["value"]),
+        ([(1,), (2,)], "value long"),
         ([(1, [1, 2, 3]), (2, [4, 5, 6])], "cid long, v array<long>"),
         ([(1, "ab"), (2, None)], "k long, s string"),
-        ([(0.5,), (0.25,)], ["q"]),
+        ([(0.5,), (0.25,)], "q double"),
         ([(1, 2, 3, 4, 5)], "query_id long, cell long, s int, cid long, d2 long"),
+        # io/status: one status row, one error row
+        ([("SAGE", "a.txt;b.txt", "0f" * 16, "VALIDATED", "/in/a.txt")],
+         STATUS_SCHEMA),
+        ([("SAGE", "m.txt", "ERROR [maf.cols]: missing|two lines")],
+         ERROR_SCHEMA),
+        # release/oncotree: a row with None strings
+        ([("BRCA", None, "", "BREAST", ""), ("X", "Other", None, None, None)],
+         ", ".join(f"{c} string" for c in ONCOTREE_COLUMNS)),
+        # io/readers.assay_df_from_dict: a wide all-string row
+        ([("SAGE-1", "SAGE-1", "snv;small_indels", "True", None, "FFPE;fresh")],
+         ", ".join(f"`{c}` string" for c in assay_cols)),
+        # rules/engine.ValidationReport.to_df: array<string> examples
+        ([("maf", "maf.cols", "error", 3, ["a", "b"], "bad"),
+          ("maf", "maf.ok", "warning", 0, [], "fine")],
+         "file_type string, rule_id string, severity string, "
+         "n_violations long, examples array<string>, message string"),
     ]
     for rows, schema in cases:
         plain = spark.createDataFrame(rows, schema)
         arrow = local_rows_df(spark, rows, schema)
         assert arrow.schema == plain.schema
-        assert sorted(map(tuple, arrow.collect())) == sorted(
-            map(tuple, plain.collect())
+        assert sorted(map(tuple, arrow.collect()), key=repr) == sorted(
+            map(tuple, plain.collect()), key=repr
         )
         assert (
             arrow._jdf.queryExecution().optimizedPlan().nodeName()
             == "LocalRelation"
         )
-    # empty input keeps the plain path (already a no-task relation)
-    empty = local_rows_df(spark, [], "a long, b string")
-    assert empty.count() == 0 and len(empty.schema) == 2
+    # empty input is a LocalRelation too (the pickle path plans a
+    # Scan ExistingRDD with Python tasks even for no rows), and the
+    # schema is exact, nullability included
+    schema = T.StructType(
+        [
+            T.StructField("a", T.LongType(), False),
+            T.StructField("b", T.StringType(), True),
+        ]
+    )
+    for s in (schema, "a long NOT NULL, b string"):
+        empty = local_rows_df(spark, [], s)
+        assert empty.schema == schema
+        assert empty.count() == 0
+        assert (
+            empty._jdf.queryExecution().optimizedPlan().nodeName()
+            == "LocalRelation"
+        )
+    # a row that does not fit the schema raises; no slower fallback
+    with pytest.raises(ValueError):
+        local_rows_df(spark, [(1,)], "a long, b long")
+    with pytest.raises(ValueError):
+        local_rows_df(spark, [(None, "x")], schema)
+    with pytest.raises(ValueError):  # pyarrow.ArrowInvalid
+        local_rows_df(spark, [("x", "y")], schema)
