@@ -63,7 +63,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from genie_spark.session import get_spark
+    from genie_spark.session import gc_nudge, get_spark
     from genie_spark.workload import QUERIES
 
     spark = get_spark("genie_spark_bench")
@@ -91,7 +91,7 @@ def main() -> None:
     runs_log: dict[str, list] = {}
     construct_log: dict[str, list] = {}
 
-    def gc_nudge() -> None:
+    def nudge() -> None:
         # Python first: the persist-carrying queries tie their cache
         # release to the RESULT DataFrame's collection
         # (dedup._release_on_gc weakref finalizers).  Refcounting
@@ -102,18 +102,10 @@ def main() -> None:
         # just re-registered (CacheManager dedups by canonical plan —
         # the r15 repeat-lifecycle bug's mechanism).  An explicit
         # collect() here pins every finalizer to this inter-run point.
+        # Then the JVM: old executions' shuffle state is only released
+        # on driver GC; letting it pile up degrades later queries.
         gc.collect()
-        # then the JVM: old executions' shuffle state is only released
-        # on driver GC; letting it pile up degrades later queries
-        # (observed 30×: high sys-CPU, shuffle-file churn).  _jvm is a
-        # classic-mode private handle — absent under Spark Connect,
-        # where the nudge simply doesn't apply.
-        try:
-            jvm = spark.sparkContext._jvm
-        except Exception:  # Connect: sparkContext property itself raises
-            jvm = None
-        if jvm is not None:
-            jvm.System.gc()
+        gc_nudge(spark)
 
     for name in HEADLINE:
         fn = QUERIES.get(name)
@@ -157,13 +149,13 @@ def main() -> None:
                 # same session).  Dropping the reference here lets the
                 # refcount finalizer fire before the next construction.
                 df = None  # noqa: F841 — release before next construct
-                gc_nudge()
+                nudge()
             runs_log[name] = runs
             construct_log[name] = constructs
             timings[name] = sorted(runs)[len(runs) // 2]  # median
         except Exception as exc:  # noqa: BLE001 — record and continue
             timings[name] = {"err": f"{type(exc).__name__}: {exc}"[:300]}
-            gc_nudge()
+            nudge()
     total = round(sum(t for t in timings.values() if isinstance(t, float)), 3)
     legacy = round(
         sum(

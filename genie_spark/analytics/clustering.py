@@ -12,11 +12,12 @@ Spark shape — the 100 TB one:
   cached table with a PURE MAP assignment (centroids are collected
   driver-side — k·dim longs — and shipped back out as a Spark
   BROADCAST variable consumed by the Arrow matmul engine, so plan
-  size and per-task cost are independent of k; the ``engine="expr"``
-  fallback embeds them as a literal array instead, bounded to small
-  k) followed by ONE partial-aggregable groupBy((cid, dim)) shuffle
-  for the centroid update.  No iteration ever shuffles the vectors
-  themselves.
+  size and per-task cost are independent of k) followed by ONE
+  partial-aggregable groupBy((cid, dim)) shuffle for the centroid
+  update.  No iteration ever shuffles the vectors themselves.  The
+  Arrow scans are the only engine: k-means, PQ training and PQ
+  encoding all run them, and all omit degenerate rows through
+  ``similarity._finite_rows``.
 * k and iters are FIXED hyper-parameters, so the whole run is
   iters + 1 jobs regardless of corpus size; at 1000 executors each
   job is scan + map + a k·dim-row aggregate.
@@ -29,8 +30,7 @@ bit-for-bit, and reruns reproduce):
   every sampling op).  Hash order is content-INDEPENDENT: on corpora
   where id order correlates with content (ingest order, sorted
   shards) the k lowest ids would all sit in one region and cost Lloyd
-  iterations (VERDICT r7); ``seed="first"`` keeps the legacy
-  lowest-id rule;
+  iterations (VERDICT r7);
 * distance: squared Euclidean on quantized integers — exact longs;
 * ties: lowest centroid id wins (struct-min on (d2, cid));
 * update: element-wise ``floor(sum/count)`` — sum and count are exact
@@ -40,73 +40,30 @@ bit-for-bit, and reruns reproduce):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from genie_spark.session import local_rows_df
 
-from genie_spark.analytics.similarity import _cross_term, quantized
+from genie_spark.analytics.similarity import _cross_term, _finite_rows, quantized
 
 # flat-Lloyd SemDeDup's compute envelope (see semantic_dedup docstring)
 SEMANTIC_DEDUP_MAX_ROWS = 200_000
 
 
-def _assign_cid(vec: Column, centroids: list[tuple[int, list[int]]]) -> Column:
-    """Nearest-centroid id for a quantized vector column: one literal
-    array<struct(d2, cid)> built per centroid, struct-min = (d2 asc,
-    cid asc) — pure map, whole-stage codegen, zero shuffle.  The
-    centroid literals are rendered as ONE F.expr string (per-literal
-    Column objects cost a Py4J round-trip each — see
-    similarity._centroid_literals_from)."""
-    structs = []
-    for cid, cvec in centroids:
-        vs = ",".join(str(int(x)) for x in cvec)
-        structs.append(f"CAST(array({vs}) AS ARRAY<BIGINT>)")
-    cent_arr = F.expr(
-        "array("
-        + ",".join(
-            f"named_struct('cid', CAST({cid} AS BIGINT), 'v', {s})"
-            for (cid, _), s in zip(centroids, structs)
-        )
-        + ")"
+def _md5_seed_rows(q: DataFrame, k: int) -> list:
+    """The one seed rule: the k rows of the quantized ``(__id, __v)``
+    table with the smallest ``(md5(id), id)``, collected by a single
+    TakeOrdered job.  A vector with a null ELEMENT (out of contract —
+    embeddings are non-null fixed-dim) never seeds, so it cannot
+    poison the centroid matrix; the oracle mirrors the same
+    list_filter screen."""
+    return (
+        q.where(~F.exists("__v", lambda x: x.isNull()))
+        .orderBy(F.md5(F.col("__id").cast("string")), F.col("__id"))
+        .limit(k)
+        .collect()
     )
-    scored = F.transform(
-        cent_arr,
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c["v"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("long"),
-                lambda acc, d: acc + d,
-            ).alias("d2"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return F.array_min(scored)
-
-
-def _finite_int64_batch(np, vals: list, dim: int):
-    """Shared degenerate-row policy for the Arrow k-means scans: keep
-    only rows that are non-null, exactly ``dim`` long, AND all-finite.
-    A null ELEMENT inside an array<long> surfaces through Arrow as a
-    float NaN — casting that straight to int64 yields INT64_MIN
-    garbage that poisons centroid sums and reassigns CLEAN rows
-    (ADVICE r6); building the batch as float64 first and dropping
-    non-finite rows before the int64 cast makes the engines actually
-    OMIT degenerate rows, as the ``kmeans_assign`` docstring promises
-    (mirrors ``similarity._ivf_probes_arrow`` / ``sign_signatures``).
-    Returns (keep_row_indices, int64 matrix)."""
-    keep = [
-        i for i, v in enumerate(vals)
-        if v is not None and len(v) == dim
-    ]
-    if not keep:
-        return [], None
-    raw = np.array([vals[i] for i in keep], dtype=np.float64)
-    finite = np.isfinite(raw).all(axis=1)
-    keep = [i for i, good in zip(keep, finite) if good]
-    if not keep:
-        return [], None
-    return keep, raw[finite].astype(np.int64)
 
 
 def _broadcast_centroids(sc, centroids: list[tuple[int, list[int]]]):
@@ -127,14 +84,12 @@ def _broadcast_centroids(sc, centroids: list[tuple[int, list[int]]]):
 
 
 def _assign_scan_arrow(q: DataFrame, bc, dim: int) -> DataFrame:
-    """Final-assignment scan, Arrow engine: one int64 matmul per batch
+    """Final-assignment scan: one int64 matmul per batch
     (‖v‖² − 2·V·Cᵀ + ‖c‖², exact in int64) and a first-occurrence
-    argmin — identical values and tie-break (lowest cid wins; the
-    centroid rows are in ascending-cid order) as the ``_assign_cid``
-    expression, ~10-100× cheaper per row than the interpreted
-    higher-order-function fold.  No shuffle: mapInPandas is a pure
-    map, same plan position as the literal-centroid expression.
-    ``bc`` is a ``_broadcast_centroids`` broadcast."""
+    argmin — lowest cid wins ties (the centroid rows are in
+    ascending-cid order), the oracle's ORDER BY d2, cid.  No shuffle:
+    mapInPandas is a pure map.  ``bc`` is a ``_broadcast_centroids``
+    broadcast."""
     import numpy as np
 
     def score(batches):
@@ -144,9 +99,10 @@ def _assign_scan_arrow(q: DataFrame, bc, dim: int) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            keep, V = _finite_int64_batch(np, pdf["__v"].tolist(), dim)
+            keep, V = _finite_rows(np, pdf["__v"].tolist(), dim)
             if not keep:
                 continue
+            V = V.astype(np.int64)
             cross = _cross_term(np, V, Cf, cmax, dim)
             d2 = (V * V).sum(axis=1)[:, None] - 2 * cross + cc[None, :]
             j = np.argmin(d2, axis=1)
@@ -162,7 +118,7 @@ def _assign_scan_arrow(q: DataFrame, bc, dim: int) -> DataFrame:
 
 
 def _update_partials_arrow(q: DataFrame, bc, dim: int) -> DataFrame:
-    """One Lloyd update scan, Arrow engine: assign the batch (same
+    """One Lloyd update scan: assign the batch (same
     exact argmin as ``_assign_scan_arrow``) and COMBINE map-side —
     per-batch (cid, pos, partial_sum, partial_count) via bincount, so
     the shuffle carries k·dim rows per batch, never the n·dim
@@ -178,9 +134,10 @@ def _update_partials_arrow(q: DataFrame, bc, dim: int) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            keep, V = _finite_int64_batch(np, pdf["__v"].tolist(), dim)
+            keep, V = _finite_rows(np, pdf["__v"].tolist(), dim)
             if not keep:
                 continue
+            V = V.astype(np.int64)
             cross = _cross_term(np, V, Cf, cmax, dim)
             d2 = (V * V).sum(axis=1)[:, None] - 2 * cross + cc[None, :]
             j = np.argmin(d2, axis=1)
@@ -210,12 +167,10 @@ def kmeans_assign(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    engine: str = "arrow",
-    seed: str = "md5",
 ) -> DataFrame:
     """Assignment-only view of ``kmeans_fit`` (the original public
     surface): returns just the (id, cluster_id, d2) DataFrame."""
-    return kmeans_fit(df, id_col, vec_col, k, iters, engine, seed)[0]
+    return kmeans_fit(df, id_col, vec_col, k, iters)[0]
 
 
 def kmeans_fit(
@@ -224,8 +179,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    engine: str = "arrow",
-    seed: str = "md5",
     pre_quantized: bool = False,
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
     """Lloyd's k-means over an ``array<float>`` column; returns the
@@ -233,43 +186,28 @@ def kmeans_fit(
     centroids ``[(cid, vector), ...]`` — the codebook consumers
     (product quantization, X61) need alongside the assignment.
 
-    ``seed="md5"`` (default) takes the k smallest ``(md5(id), id)``
-    vectors as initial centroids — deterministic, engine-portable,
-    and content-independent (an id-sorted corpus spreads its seeds
-    across the data instead of clustering them in the lowest-id
-    region).  ``seed="first"`` is the legacy k-lowest-ids rule.  Both
-    are a single TakeOrdered job; the oracle mirrors whichever rule
-    the query uses.
+    The k smallest ``(md5(id), id)`` vectors are the initial centroids
+    — deterministic, engine-portable, and content-independent (an
+    id-sorted corpus spreads its seeds across the data instead of
+    clustering them in the lowest-id region) — collected by a single
+    TakeOrdered job; the oracle mirrors the same rule.
 
-    Each iteration: assignment is a centroid-literal map over the
-    persisted quantized corpus; the update aggregates per-dimension
-    (cid, dim) sums — a k·dim-group partial aggregate, the ONLY
-    shuffle per iteration — and the new centroids (k·dim longs) are
-    collected driver-side for the next pass.  ``iters`` is fixed (not
-    convergence-tested) so the oracle can unroll the same steps.
-
-    ``engine="arrow"`` (default) runs both scans as Arrow int64
-    matmuls (``mapInPandas`` — the sanctioned dense-vector hot-loop
-    escape, same pattern as ``similarity.cosine_topk``): exact
-    integer math, bit-identical output, but the O(n·k·dim) argmin and
-    the O(n·dim) update fold run vectorized instead of as interpreted
-    per-element expression steps — the difference between
-    overhead-bound and compute-bound at the 1M-row stress tier.
-    ``engine="expr"`` keeps the pure-Catalyst literal-array form
-    (plan-pinned in tests/test_plans.py); both engines share the
-    driver-side update/seed logic, so they cannot drift semantically.
-    Degenerate rows (null vector, or a length different from the
-    centroids'): the Arrow engine OMITS them from both assignment
-    output and centroid updates rather than crashing; the expression
-    engine emits them with null distance (and a ragged row's partial
-    elements into updates) — embeddings are non-null fixed-dim by
-    contract, so the difference is outside the supported domain.
+    Each iteration: one Arrow scan over the persisted quantized corpus
+    assigns every vector (exact int64 matmul against the broadcast
+    centroids) and combines map-side; the update aggregates
+    per-dimension (cid, dim) sums — a k·dim-group partial aggregate,
+    the ONLY shuffle per iteration — and the new centroids (k·dim
+    longs) are collected driver-side for the next pass.  ``iters`` is
+    fixed (not convergence-tested) so the oracle can unroll the same
+    steps.  Degenerate rows (null vector, a length different from the
+    centroids', a null or non-finite element) are OMITTED from both
+    the assignment output and the centroid updates — embeddings are
+    non-null fixed-dim by contract.
     """
     from pyspark import StorageLevel
 
-    # null vectors are dropped at entry: they carry no position, a
-    # null in the k lowest ids would poison the centroid seed, and
-    # filtering HERE makes both engines emit the identical row set
+    # null vectors are dropped at entry: they carry no position, and a
+    # null among the seed ids would poison the centroid matrix
     # pre_quantized: the caller's column is ALREADY exact integers
     # (e.g. IVF residuals — integer minus integer); re-quantizing would
     # multiply by the scale again
@@ -283,23 +221,11 @@ def kmeans_fit(
         .where(F.col("__v").isNotNull())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if seed not in ("md5", "first"):
-        raise ValueError(f"unknown seed rule: {seed!r}")
     try:
-        # seed screen: a vector with a null ELEMENT (in-contract
-        # embeddings are non-null fixed-dim, but don't let an
-        # out-of-contract row poison the centroid matrix) never seeds;
-        # the oracle mirrors the same list_filter screen
-        cand = q.where(~F.exists("__v", lambda x: x.isNull()))
-        if seed == "md5":
-            order = [F.md5(F.col("__id").cast("string")).asc(), F.col("__id").asc()]
-        else:
-            order = [F.col("__id").asc()]
-        init = cand.orderBy(*order).limit(k).collect()
-        centroids = [(i, list(r["__v"])) for i, r in enumerate(init)]
+        centroids = [
+            (i, list(r["__v"])) for i, r in enumerate(_md5_seed_rows(q, k))
+        ]
         if not centroids:
-            # empty corpus: no centroids to seed — an empty literal
-            # array would be VOID-typed and break the struct extract
             return (
                 local_rows_df(
                     df.sparkSession,
@@ -310,30 +236,17 @@ def kmeans_fit(
         dim = len(centroids[0][1])
         sc = df.sparkSession.sparkContext
         for _ in range(iters):
-            if engine == "arrow":
-                bc = _broadcast_centroids(sc, centroids)
-                part = _update_partials_arrow(q, bc, dim)
-            else:
-                assigned = q.withColumn(
-                    "__c", _assign_cid(F.col("__v"), centroids)
-                )
-                part = assigned.select(
-                    F.col("__c")["cid"].alias("cid"),
-                    F.posexplode("__v").alias("pos", "x"),
-                ).select("cid", "pos", F.col("x").alias("s"), F.lit(1).alias("n"))
+            bc = _broadcast_centroids(sc, centroids)
             # collapse the k·dim (cid, pos) rows to k position-sorted
             # ARRAYS before collecting: the driver receives k plain
             # int lists instead of k·dim Row objects — at the √n rule
             # (k≈31k, dim 768) that is 31k rows instead of 24M, the
             # difference between a cheap round-trip and a driver
-            # bottleneck.  Values are bit-identical (same sums, same
-            # floor-divide); positions are contiguous from 0, so the
-            # sorted transform is a full vector for conforming input —
-            # the pad/truncate below preserves the old zero-default
-            # degrade for the expr engine's documented out-of-contract
-            # ragged rows (shorter vectors leave tail positions at 0).
+            # bottleneck.  The partials carry every position of each
+            # live centroid, so each array is a full vector.
             sums = (
-                part.groupBy("cid", "pos")
+                _update_partials_arrow(q, bc, dim)
+                .groupBy("cid", "pos")
                 .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
                 .withColumn("m", F.floor(F.col("s") / F.col("n")).cast("long"))
                 .groupBy("cid")
@@ -345,32 +258,18 @@ def kmeans_fit(
                 )
                 .collect()
             )
-            if engine == "arrow":
-                # the update job is done — drop the executor-side copy
-                # now instead of waiting for driver GC (k·dim longs per
-                # iteration adds up at corpus-scale k)
-                bc.unpersist()
-            by_cid: dict[int, list[int]] = {
-                r["cid"]: (list(r["mv"]) + [0] * dim)[:dim] for r in sums
-            }
+            # the update job is done — drop the executor-side copy now
+            # instead of waiting for driver GC (k·dim longs per
+            # iteration adds up at corpus-scale k)
+            bc.unpersist()
+            by_cid = {r["cid"]: list(r["mv"]) for r in sums}
             centroids = [
                 (cid, by_cid.get(cid, old)) for cid, old in centroids
             ]
-        if engine == "arrow":
-            # the final-scan broadcast stays alive for the returned
-            # (lazy) DataFrame; Spark's ContextCleaner reclaims it when
-            # the consumer and the Broadcast handle are both dropped
-            final = _assign_scan_arrow(
-                q, _broadcast_centroids(sc, centroids), dim
-            )
-        else:
-            final = q.withColumn(
-                "__c", _assign_cid(F.col("__v"), centroids)
-            ).select(
-                "__id",
-                F.col("__c")["cid"].alias("cid"),
-                F.col("__c")["d2"].alias("d2"),
-            )
+        # the final-scan broadcast stays alive for the returned (lazy)
+        # DataFrame; Spark's ContextCleaner reclaims it when the
+        # consumer and the Broadcast handle are both dropped
+        final = _assign_scan_arrow(q, _broadcast_centroids(sc, centroids), dim)
         return (
             final.select(
                 F.col("__id").alias(id_col),
@@ -652,7 +551,6 @@ def pq_train(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    seed: str = "md5",
     pre_quantized: bool = False,
 ) -> tuple[list[list[tuple[int, list[int]]]], int]:
     """Train the ``m`` per-subspace PQ codebooks: split the vector into
@@ -707,8 +605,6 @@ def pq_train(
     if dim % m != 0:
         raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
     sub_dim = dim // m
-    if seed not in ("md5", "first"):
-        raise ValueError(f"unknown seed rule: {seed!r}")
     from pyspark import StorageLevel
 
     vq = (
@@ -722,19 +618,10 @@ def pq_train(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        # same seed screen as kmeans_fit: a vector with a null ELEMENT
-        # never seeds (slice-of-non-null == non-null-of-slice, and the
-        # id ordering is content-independent, so the k seed ids are
-        # the ones every per-subspace run would pick)
-        cand = q.where(~F.exists("__v", lambda x: x.isNull()))
-        if seed == "md5":
-            order = [
-                F.md5(F.col("__id").cast("string")).asc(),
-                F.col("__id").asc(),
-            ]
-        else:
-            order = [F.col("__id").asc()]
-        init = cand.orderBy(*order).limit(k).collect()
+        # kmeans_fit's seed rule: slice-of-non-null == non-null-of-
+        # slice, and the id ordering is content-independent, so the k
+        # seed ids are the ones every per-subspace run would pick
+        init = _md5_seed_rows(q, k)
         if not init:
             # all-null-element corpus: every per-subspace kmeans_fit
             # would return an empty codebook
@@ -769,9 +656,7 @@ def pq_train(
             bc.unpersist()
             by_sub: dict[int, dict[int, list[int]]] = {}
             for r in sums:
-                by_sub.setdefault(r["sub"], {})[r["cid"]] = (
-                    list(r["mv"]) + [0] * sub_dim
-                )[:sub_dim]
+                by_sub.setdefault(r["sub"], {})[r["cid"]] = list(r["mv"])
             codebooks = [
                 [
                     (cid, by_sub.get(s, {}).get(cid, old))
@@ -822,9 +707,10 @@ def _pq_update_partials_arrow(q: DataFrame, bc, sub_dim: int) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            keep, V = _finite_int64_batch(np, pdf["__v"].tolist(), dim)
+            keep, V = _finite_rows(np, pdf["__v"].tolist(), dim)
             if not keep:
                 continue
+            V = V.astype(np.int64)
             subs, cids_o, pos_o, s_o, n_o = [], [], [], [], []
             for s, (cids, Cf, cn2, cmax) in enumerate(payload):
                 Vs = V[:, s * sub_dim:(s + 1) * sub_dim]
@@ -885,7 +771,6 @@ def pq_encode(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    seed: str = "md5",
     codebooks: list | None = None,
     sub_dim: int | None = None,
     pre_quantized: bool = False,
@@ -909,11 +794,11 @@ def pq_encode(
     """
     import numpy as np
 
-    from genie_spark.analytics.similarity import QUANT_SCALE, _cross_term
+    from genie_spark.analytics.similarity import QUANT_SCALE
 
     if codebooks is None:
         codebooks, sub_dim = pq_train(
-            df, id_col, vec_col, m=m, k=k, iters=iters, seed=seed,
+            df, id_col, vec_col, m=m, k=k, iters=iters,
             pre_quantized=pre_quantized,
         )
     assert sub_dim is not None
@@ -929,25 +814,14 @@ def pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            vals = pdf[vec_col].tolist()
-            keep = [
-                i for i, v in enumerate(vals)
-                if v is not None and len(v) == dim
-            ]
-            if not keep:
-                continue
-            raw = np.array([vals[i] for i in keep], dtype=np.float64)
-            finite = np.isfinite(raw).all(axis=1)
-            keep = [i for i, good in zip(keep, finite) if good]
+            keep, raw = _finite_rows(np, pdf[vec_col].tolist(), dim)
             if not keep:
                 continue
             pdf = pdf.iloc[keep]
             if pre_quantized:  # already exact integers (residuals)
-                V = raw[finite].astype(np.int64)
+                V = raw.astype(np.int64)
             else:
-                V = np.floor(raw[finite] * float(QUANT_SCALE) + 0.5).astype(
-                    np.int64
-                )
+                V = np.floor(raw * float(QUANT_SCALE) + 0.5).astype(np.int64)
             data = {"vid": pdf[id_col].to_numpy()}
             total = np.zeros(len(V), dtype=np.int64)
             for s, (cids, Cf, cn2, cmax) in enumerate(payload):
@@ -986,7 +860,6 @@ def pq_topk(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    seed: str = "md5",
     max_queries: int = 10_000,
 ) -> DataFrame:
     """X61 — asymmetric-distance (ADC) top-k over PQ codes: queries
@@ -1015,9 +888,7 @@ def pq_topk(
 
     from genie_spark.analytics.similarity import QUANT_SCALE
 
-    codebooks, sub_dim = pq_train(
-        df, id_col, vec_col, m=m, k=k, iters=iters, seed=seed
-    )
+    codebooks, sub_dim = pq_train(df, id_col, vec_col, m=m, k=k, iters=iters)
     codes = pq_encode(
         df, id_col, vec_col, m=m, codebooks=codebooks, sub_dim=sub_dim
     )
@@ -1119,7 +990,6 @@ def ivfpq_topk(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    seed: str = "md5",
     max_queries: int = 10_000,
     max_candidate_rows: int = 20_000_000,
 ) -> DataFrame:
@@ -1175,9 +1045,7 @@ def ivfpq_topk(
     qprobes = _ivf_probes_arrow(
         df.where(query_filter), id_col, vec_col, cent_rows, n_probe, bc=bc
     ).select(F.col("vid").alias("query_id"), F.col("cell"))
-    codebooks, sub_dim = pq_train(
-        df, id_col, vec_col, m=m, k=k, iters=iters, seed=seed
-    )
+    codebooks, sub_dim = pq_train(df, id_col, vec_col, m=m, k=k, iters=iters)
     codes = pq_encode(
         df, id_col, vec_col, m=m, codebooks=codebooks, sub_dim=sub_dim
     )
@@ -1241,7 +1109,6 @@ def ivfpq_residual_topk(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    seed: str = "md5",
     max_queries: int = 10_000,
     max_candidate_rows: int = 20_000_000,
 ) -> DataFrame:
@@ -1346,8 +1213,7 @@ def ivfpq_residual_topk(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     codebooks, sub_dim = pq_train(
-        resid, "vid", "rvec", m=m, k=k, iters=iters, seed=seed,
-        pre_quantized=True,
+        resid, "vid", "rvec", m=m, k=k, iters=iters, pre_quantized=True,
     )
     codes = pq_encode(
         resid, "vid", "rvec", m=m, codebooks=codebooks, sub_dim=sub_dim,
@@ -1365,17 +1231,11 @@ def ivfpq_residual_topk(
             f"ivfpq_residual_topk: query set exceeds max_queries="
             f"{max_queries}; the LUT side must stay broadcastable"
         )
+    keep, raw = _finite_rows(np, [r[vec_col] for r in q_rows], dim)
     qvecs = {}
-    for r in q_rows:
-        v = r[vec_col]
-        if v is None or len(v) != dim:
-            continue
-        raw = np.array(v, dtype=np.float64)
-        if not np.isfinite(raw).all():
-            continue
-        qvecs[int(r[id_col])] = np.floor(
-            raw * float(QUANT_SCALE) + 0.5
-        ).astype(np.int64)
+    if keep:
+        Q = np.floor(raw * float(QUANT_SCALE) + 0.5).astype(np.int64)
+        qvecs = {int(q_rows[i][id_col]): v for i, v in zip(keep, Q)}
     qprobes = _ivf_probes_arrow(
         qdf, id_col, vec_col, cent_rows, n_probe, bc=bc
     ).select(F.col("vid").alias("query_id"), F.col("cell"))

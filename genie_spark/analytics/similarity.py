@@ -9,6 +9,15 @@ Scale path: ``cosine_topk`` is the brute-force baseline (fine for a
 broadcastable query set); ``lsh_cosine_candidates`` buckets vectors by
 random-hyperplane signs so candidate generation is an equi-join, the
 same banding idea as MinHash — that is the 1000-executor shape.
+
+One engine per centroid operator: IVF cell assignment here, and
+k-means and PQ in ``clustering``, each run as ONE Arrow
+``mapInPandas`` scan of exact int64 matmuls (``_cross_term``) against
+a centroid matrix shipped as a Spark broadcast, so plan size and
+per-row cost are independent of the centroid count.  Those scans and
+``semantic_decontaminate`` share one degenerate-row screen
+(``_finite_rows``): null, wrong-length and non-finite vectors are
+omitted, never cast to integer garbage.
 """
 
 from __future__ import annotations
@@ -62,6 +71,26 @@ def _cross_term(np, V, Cf, cmax: float, dim: int):
     if float(dim) * vmax * cmax < 2.0**53:
         return (V.astype(np.float64) @ Cf.T).astype(np.int64)
     return V @ Cf.astype(np.int64).T
+
+
+def _finite_rows(np, vals: list, dim: int):
+    """The Arrow engines' one degenerate-row screen: keep only rows
+    that are non-null, exactly ``dim`` long AND all-finite.  A null
+    ELEMENT surfaces through Arrow as a float NaN, and NaN or ±Inf cast
+    to int64 is INT64_MIN garbage that poisons distances and centroid
+    sums — so the rows are built as float64 and screened before any
+    integer cast (isfinite, not just not-NaN).  Returns (kept row
+    indices, float64 matrix of those rows), or ``([], None)`` when no
+    row survives; each caller casts or quantizes the matrix itself."""
+    keep = [i for i, v in enumerate(vals) if v is not None and len(v) == dim]
+    if not keep:
+        return [], None
+    raw = np.array([vals[i] for i in keep], dtype=np.float64)
+    finite = np.isfinite(raw).all(axis=1)
+    keep = [i for i, good in zip(keep, finite) if good]
+    if not keep:
+        return [], None
+    return keep, raw[finite]
 
 
 def _with_norm(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
@@ -185,43 +214,6 @@ N_CENTROIDS = 16
 N_PROBE = 4
 
 
-def _centroid_literals_from(cent_rows: list) -> Column:
-    """Deterministic IVF "training" literal: the ``_centroid_rows``
-    set embedded as one array<struct(cid, v, n2)> so per-row cell
-    assignment is a PURE MAP inside whole-stage codegen — zero shuffle
-    over the corpus (the ``engine="expr"`` path ONLY; the Arrow engine
-    ships the same rows as a Spark broadcast variable instead, so its
-    plan size is independent of the centroid count — the expr literal
-    is the small-k fallback)."""
-    # ONE F.expr parse instead of n_centroids×(dim+2) nested F.lit
-    # Column objects — the per-literal Py4J round-trips dominate plan
-    # construction time (measured ~5 s at 32×64 before this change).
-    structs = []
-    for r in cent_rows:
-        vs = ",".join(str(int(x)) for x in r["v"])
-        n2 = sum(int(x) * int(x) for x in r["v"])
-        structs.append(
-            f"named_struct('cid', CAST({int(r['cid'])} AS BIGINT), "
-            f"'v', CAST(array({vs}) AS ARRAY<BIGINT>), "
-            f"'n2', CAST({n2} AS BIGINT))"
-        )
-    return F.expr("array(" + ",".join(structs) + ")")
-
-
-def _cell_scores(cent_arr: Column, vec: Column, n2: Column) -> Column:
-    """Per-centroid struct(cos, -cid, cid) array; array_max / reversed
-    array_sort order = (cosine desc, cid asc) — the oracle's
-    ORDER BY ccos DESC, cid."""
-    return F.transform(
-        cent_arr,
-        lambda c: F.struct(
-            F.try_divide(dot(vec, c["v"]), F.sqrt(n2) * F.sqrt(c["n2"])).alias("cos"),
-            (-c["cid"]).alias("negcid"),
-            c["cid"].alias("cid"),
-        ),
-    )
-
-
 def _centroid_rows(
     df: DataFrame, id_col: str, vec_col: str, n_centroids: int
 ) -> list:
@@ -238,8 +230,8 @@ def _centroid_rows(
     The md5 rule picks WHICH vectors are centroids; the returned rows
     are then re-sorted by cid, because the Arrow probe engine breaks
     cosine TIES by stable-argsort column position — equivalent to the
-    (cos DESC, cid ASC) rule the expr engine and the SQL oracles
-    apply only when centroid columns are in ascending-cid order
+    (cos DESC, cid ASC) rule the SQL oracles apply only when centroid
+    columns are in ascending-cid order
     (code-review r8: md5-ordered rows would probe tied cells in md5
     order and diverge on duplicate/zero-norm centroids).
 
@@ -292,17 +284,19 @@ def _ivf_probes_arrow(
     carry_vec: bool = False,
     bc=None,
 ) -> DataFrame:
-    """Per-vector top-``n_probe`` IVF cells, Arrow engine: one float64
-    cosine matrix per batch (exact int64 dot, then the IDENTICAL IEEE
-    op sequence ``dot / (sqrt(vn)·sqrt(cn))`` as ``_cell_scores``) and
-    a stable argsort — centroid columns are in ascending-cid order, so
-    stable sort on descending cosine reproduces the expression form's
-    (cos desc, cid asc) tie-break exactly.  A zero-norm side scores
-    −inf (the expression's null cosine also loses every comparison and
-    falls to the lowest-cid tail).  Emits (vid, cell[, v, n2]) with one
-    row per probed cell — pure map, no shuffle; per-row cost is one
-    matmul row instead of O(n_centroids·dim) interpreted fold steps,
-    which is what lets n_centroids follow its √n sizing rule at scale.
+    """Per-vector top-``n_probe`` IVF cells: one float64 cosine matrix
+    per batch (exact int64 dot, then the IDENTICAL IEEE op sequence
+    ``dot / (sqrt(vn)·sqrt(cn))`` as the SQL oracles) and a stable
+    argsort — centroid columns are in ascending-cid order, so stable
+    sort on descending cosine reproduces the oracles' (cos desc, cid
+    asc) tie-break exactly.  A zero-norm side scores −inf (the
+    oracles' null cosine also loses every comparison and falls to the
+    lowest-cid tail).  Emits (vid, cell[, v, n2]) with one row per
+    probed cell — pure map, no shuffle; per-row cost is one BLAS
+    matmul row, which is what lets n_centroids follow its √n sizing
+    rule at scale.
+    Degenerate rows are omitted (``_finite_rows``); embeddings are
+    non-null fixed-dim by contract.
 
     The centroid matrix rides a Spark BROADCAST variable, not a plan
     literal and not a task-closure capture: at the √n sizing rule the
@@ -331,29 +325,11 @@ def _ivf_probes_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            vals = pdf[vec_col].tolist()
-            # degenerate rows (null / length-mismatched / NaN-carrying
-            # vectors) are OMITTED rather than crashing the scan — the
-            # expression form emits them with null cosine; embeddings
-            # are non-null fixed-dim by contract
-            keep = [
-                i for i, v in enumerate(vals)
-                if v is not None and len(v) == dim
-            ]
-            if not keep:
-                continue
-            raw = np.array([vals[i] for i in keep], dtype=np.float64)
-            # isfinite, not just not-NaN: an Inf element would survive
-            # to the int64 cast as INT64_MIN garbage and poison the
-            # cell assignment (same policy as _finite_int64_batch)
-            finite = np.isfinite(raw).all(axis=1)
-            keep = [i for i, good in zip(keep, finite) if good]
+            keep, raw = _finite_rows(np, pdf[vec_col].tolist(), dim)
             if not keep:
                 continue
             pdf = pdf.iloc[keep]
-            V = np.floor(
-                raw[finite] * float(QUANT_SCALE) + 0.5
-            ).astype(np.int64)
+            V = np.floor(raw * float(QUANT_SCALE) + 0.5).astype(np.int64)
             vn2 = (V * V).sum(axis=1)
             den = np.sqrt(vn2.astype(np.float64))[:, None] * cn[None, :]
             d = _cross_term(np, V, Cf, cmax, dim).astype(np.float64)
@@ -380,15 +356,14 @@ def ivf_cell_pairs(
     vec_col: str = "embedding",
     n_centroids: int = 32,
     n_probe: int = 8,
-    engine: str = "arrow",
 ) -> DataFrame:
     """IVF cell co-membership candidate pairs — the scale-safe
     candidate generator for embedding near-dup dedup (the same
     candidates→verify shape ``minhash_dedup_pairs`` uses).
 
     Every vector is assigned its ``n_probe`` nearest of ``n_centroids``
-    deterministic centroid cells with a shuffle-free literal-array map
-    (see ``_centroid_literals_from`` / the Arrow engine); a pair is a candidate iff the two
+    deterministic centroid cells with a shuffle-free Arrow map (see
+    ``_ivf_probes_arrow``); a pair is a candidate iff the two
     vectors share at least one probed cell, which makes candidate
     generation an EQUI-JOIN on the cell id — never a cross join.
 
@@ -406,28 +381,7 @@ def ivf_cell_pairs(
     cent_rows = _centroid_rows(df, id_col, vec_col, n_centroids)
     if not cent_rows:
         return local_rows_df(df.sparkSession, [], "a long, b long")
-    if engine == "arrow":
-        # corpus-wide probe assignment is the hot loop — Arrow matmul
-        # (bit-identical ordering, see _ivf_probes_arrow) instead of
-        # O(n_centroids·dim) interpreted fold steps per row
-        probes = _ivf_probes_arrow(df, id_col, vec_col, cent_rows, n_probe)
-    else:
-        cent_arr = _centroid_literals_from(cent_rows)
-        vecs = _with_norm(df, id_col, vec_col, "x")
-        probes = vecs.select(
-            F.col("x").alias("vid"),
-            F.explode(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(
-                            _cell_scores(cent_arr, F.col("x_v"), F.col("x_n"))
-                        )
-                    ),
-                    1,
-                    n_probe,
-                )
-            ).alias("p"),
-        ).select("vid", F.col("p")["cid"].alias("cell"))
+    probes = _ivf_probes_arrow(df, id_col, vec_col, cent_rows, n_probe)
     a = probes.select(F.col("vid").alias("a"), "cell")
     b = probes.select(F.col("vid").alias("b"), "cell")
     # merge hint: probe-table self-join, both sides corpus-sized — a
@@ -488,7 +442,6 @@ def ivf_topk(
     n_probe: int = N_PROBE,
     k: int = 10,
     query_filter: Column | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """IVF-style ANN top-k: the scale path next to brute-force
     ``cosine_topk``.
@@ -497,22 +450,18 @@ def ivf_topk(
     the centroids (no RNG — reproducible across engines/rounds).  Each
     corpus vector is assigned to its nearest centroid (cosine argmax,
     ties → lowest centroid id) with a PURE MAP — the centroids are
-    collected (tiny) and closed over as one literal array<struct>, so
-    assignment is ``array_max(transform(...))`` inside whole-stage
-    codegen: zero shuffle over the corpus.  Queries probe their
-    ``n_probe`` nearest cells; candidates come from an equi-join on the
-    cell id with the (small) probe side broadcast, so the corpus is
+    collected (tiny) and shipped as one Spark broadcast to an Arrow
+    matmul scan (``_ivf_probes_arrow``): zero shuffle over the corpus.
+    Queries probe their ``n_probe`` nearest cells through the SAME
+    scan (same tie-break order); candidates come from an equi-join on
+    the cell id with the (small) probe side broadcast, so the corpus is
     never shuffled at all; only the candidate subset (~n·n_probe/
     n_centroids rows) hits the final top-k window.
 
-    At 100 TB you raise ``n_centroids`` (√n rule — viable because the
-    default ``engine="arrow"`` assigns corpus AND query cells with one
-    numpy matmul per batch, so per-row cost does not grow with the
-    centroid count, and the centroid matrix rides a Spark broadcast
-    variable, so the arrow plan carries NO k·dim literal — plan size
-    is independent of k; plan-pinned in tests/test_plans.py).  The
-    ``engine="expr"`` fallback keeps the literal form and is bounded
-    to small k.
+    At 100 TB you raise ``n_centroids`` (√n rule): per-row assignment
+    cost is one matmul row, independent of the centroid count, and the
+    plan carries NO k·dim literal — plan size is independent of k
+    (plan-pinned in tests/test_plans.py).
     """
     cent_rows = _centroid_rows(df, id_col, vec_col, n_centroids)
     if not cent_rows:
@@ -521,63 +470,24 @@ def ivf_topk(
             [], "query_id long, neighbor_id long, rank int, cosine double"
         )
     queries = df.where(query_filter) if query_filter is not None else df
-    if engine == "arrow":
-        # corpus cell assignment is the hot loop (n rows × C centroids);
-        # the query probe side goes through the SAME Arrow scan (same
-        # tie-break order, see _ivf_probes_arrow) so the arrow plan
-        # carries NO centroid literal at all — at the √n sizing rule
-        # the literal alone would break the plan (k·dim values)
-        shared_bc = _ivf_centroid_broadcast(df, cent_rows)
-        corpus = _ivf_probes_arrow(
-            df, id_col, vec_col, cent_rows, 1, carry_vec=True, bc=shared_bc
-        ).select(
-            F.col("vid").alias("neighbor_id"),
-            F.col("v").alias("n_v"),
-            F.col("n2").alias("n_n"),
-            "cell",
-        )
-        probes = _ivf_probes_arrow(
-            queries, id_col, vec_col, cent_rows, n_probe, carry_vec=True,
-            bc=shared_bc,
-        ).select(
-            F.col("vid").alias("query_id"),
-            F.col("v").alias("q_v"),
-            F.col("n2").alias("q_n"),
-            "cell",
-        )
-    else:
-        cent_arr = _centroid_literals_from(cent_rows)
-
-        def cell_scores(vec: Column, n2: Column) -> Column:
-            return _cell_scores(cent_arr, vec, n2)
-
-        vecs = _with_norm(df, id_col, vec_col, "x")
-        corpus = vecs.select(
-            F.col("x").alias("neighbor_id"),
-            F.col("x_v").alias("n_v"),
-            F.col("x_n").alias("n_n"),
-            F.array_max(cell_scores(F.col("x_v"), F.col("x_n")))["cid"].alias(
-                "cell"
-            ),
-        )
-        probes = (
-            _with_norm(queries, id_col, vec_col, "q")
-            .select(
-                F.col("q").alias("query_id"),
-                F.col("q_v"),
-                F.col("q_n"),
-                F.explode(
-                    F.slice(
-                        F.reverse(
-                            F.array_sort(cell_scores(F.col("q_v"), F.col("q_n")))
-                        ),
-                        1,
-                        n_probe,
-                    )
-                ).alias("p"),
-            )
-            .select("query_id", "q_v", "q_n", F.col("p")["cid"].alias("cell"))
-        )
+    shared_bc = _ivf_centroid_broadcast(df, cent_rows)
+    corpus = _ivf_probes_arrow(
+        df, id_col, vec_col, cent_rows, 1, carry_vec=True, bc=shared_bc
+    ).select(
+        F.col("vid").alias("neighbor_id"),
+        F.col("v").alias("n_v"),
+        F.col("n2").alias("n_n"),
+        "cell",
+    )
+    probes = _ivf_probes_arrow(
+        queries, id_col, vec_col, cent_rows, n_probe, carry_vec=True,
+        bc=shared_bc,
+    ).select(
+        F.col("vid").alias("query_id"),
+        F.col("v").alias("q_v"),
+        F.col("n2").alias("q_n"),
+        "cell",
+    )
     cos = F.try_divide(
         dot(F.col("q_v"), F.col("n_v")), F.sqrt(F.col("q_n")) * F.sqrt(F.col("n_n"))
     )
@@ -1085,25 +995,13 @@ def semantic_decontaminate(
         for pdf in batches:
             if not len(pdf):
                 continue
-            vals = pdf[vec_col].tolist()
-            # degenerate rows (null / length-mismatched / non-finite)
-            # are omitted — same policy as _ivf_probes_arrow; the
-            # embedding column is non-null fixed-dim by contract
-            keep = [
-                i for i, v in enumerate(vals)
-                if v is not None and len(v) == dim
-            ]
-            if not keep:
-                continue
-            raw = np.array([vals[i] for i in keep], dtype=np.float64)
-            finite = np.isfinite(raw).all(axis=1)
-            keep = [i for i, good in zip(keep, finite) if good]
+            # degenerate rows are omitted; the embedding column is
+            # non-null fixed-dim by contract
+            keep, raw = _finite_rows(np, pdf[vec_col].tolist(), dim)
             if not keep:
                 continue
             pdf = pdf.iloc[keep]
-            V = np.floor(raw[finite] * float(QUANT_SCALE) + 0.5).astype(
-                np.int64
-            )
+            V = np.floor(raw * float(QUANT_SCALE) + 0.5).astype(np.int64)
             vn2 = (V * V).sum(axis=1)
             valid = vn2 > 0
             den = np.sqrt(vn2.astype(np.float64))[:, None] * cn[None, :]

@@ -58,7 +58,7 @@ def _read_bronze(spark: SparkSession, warehouse: str, name: str) -> DataFrame | 
     present table that fails to READ (corrupt footer, permission
     failure) raises: swallowing it would let dashboard/release compute
     silently with missing inputs."""
-    from genie_spark.io.bronze import recover_bronze
+    from genie_spark.io.bronze import _read_target, recover_bronze
 
     path = _bronze(warehouse, name)
     # roll FORWARD any swap a crashed merge left half-done — readers
@@ -66,20 +66,7 @@ def _read_bronze(spark: SparkSession, warehouse: str, name: str) -> DataFrame | 
     # a manifest-less staging dir may be a LIVE writer's in-progress
     # output; only writers may delete it (io/bronze.py contract)
     recover_bronze(path, clean_leftovers=False)
-    if not os.path.isdir(path):
-        return None
-    has_part = any(
-        f.endswith(".parquet")
-        for root, dirs, files in os.walk(path)
-        if "_temporary" not in root
-        for f in files
-    )
-    if not has_part:
-        return None
-    # mergeSchema: a schema-evolving MERGE only rewrites the batch's
-    # partitions — the union read surfaces evolved columns (as nulls)
-    # on partitions still carrying the narrower on-disk schema
-    return spark.read.option("mergeSchema", "true").parquet(path)
+    return _read_target(spark, path)
 
 
 def _norm_assay_id(c: F.Column) -> F.Column:
@@ -298,6 +285,7 @@ def cmd_release(spark: SparkSession, args: argparse.Namespace) -> int:
         from genie_spark.release.oncotree import read_oncotree_json
 
         oncotree = read_oncotree_json(spark, args.oncotree_json)
+    assay_info = _read_bronze(spark, args.warehouse, "assayinfo")
     arts = run_release(
         clinical=clinical,
         maf=maf,
@@ -306,7 +294,7 @@ def cmd_release(spark: SparkSession, args: argparse.Namespace) -> int:
         seg=_read_bronze(spark, args.warehouse, "seg"),
         cna_long=_read_bronze(spark, args.warehouse, "cna_long"),
         oncotree=oncotree,
-        assay_info=_read_bronze(spark, args.warehouse, "assayinfo"),
+        assay_info=assay_info,
         mergecheck_flags=_read_bronze(spark, args.warehouse, "mutationsInCis"),
         whitelist=(
             read_known_somatic_sites(spark, args.whitelist)
@@ -365,7 +353,6 @@ def cmd_release(spark: SparkSession, args: argparse.Namespace) -> int:
     from genie_spark.release.pipeline import wes_panels
 
     study_id = getattr(args, "study_id", "genie_private")
-    assay_info = _read_bronze(spark, args.warehouse, "assayinfo")
     wes_ids = (
         {r[0] for r in wes_panels(assay_info).collect()}
         if assay_info is not None and "library_strategy" in assay_info.columns

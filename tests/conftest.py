@@ -130,7 +130,6 @@ SLOW_TESTS = {
     "test_kmeans_empty_cluster_keeps_centroid",
     "test_commit_hook_writes_checkpoint_and_reads_stay_green",
     "test_maf_rule_failures",
-    "test_kmeans_engine_parity_with_ties",
     "test_temperature_mix_flattens_head_upsamples_tail",
     "test_partition_scoped_merge",
     "test_kmeans_arrow_omits_nan_rows_without_poisoning",
@@ -149,7 +148,7 @@ SLOW_TESTS = {
     "test_semantic_dedup_greedy_witness_always_kept",
     "test_measured_plane_counts_bounds_volume_on_skewed_corpus",
     "test_sample_rule_failures",
-    "test_ivf_engine_parity_with_ties",
+    "test_ivf_probe_rule_matches_sequential_model_with_ties",
     "test_new_ops_empty_and_degenerate_inputs",
     "test_cluster_balanced_sample_bounds",
     "test_ivfpq_candidate_broadcast_guard_same_results",

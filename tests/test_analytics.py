@@ -833,7 +833,7 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
 
 def test_kmeans_arrow_omits_nan_rows_without_poisoning(spark):
     """A vector carrying a null ELEMENT (surfaces as NaN through
-    Arrow) must be OMITTED by the Arrow engine — not cast to INT64_MIN
+    Arrow) must be OMITTED by the Arrow scans — not cast to INT64_MIN
     garbage that poisons centroid sums and reassigns clean rows
     (ADVICE r6).  Clean rows' assignments must be identical with and
     without the degenerate row present."""
@@ -855,48 +855,32 @@ def test_kmeans_arrow_omits_nan_rows_without_poisoning(spark):
     )
     base = {
         (r["vec_id"], r["cluster_id"], r["d2"])
-        for r in kmeans_assign(clean, k=2, iters=2, engine="arrow").collect()
+        for r in kmeans_assign(clean, k=2, iters=2).collect()
     }
     got = {
         (r["vec_id"], r["cluster_id"], r["d2"])
-        for r in kmeans_assign(dirty, k=2, iters=2, engine="arrow").collect()
+        for r in kmeans_assign(dirty, k=2, iters=2).collect()
     }
     assert got == base  # degenerate rows omitted, clean rows untouched
 
 
-def test_kmeans_engine_parity_with_ties(spark):
-    """arrow and expr engines must produce bit-identical rows, even on
-    planted distance ties (duplicates + points equidistant between the
-    two seeds) — the docstring claims bit-identical output, so pin it
-    (ADVICE r6: the expr fallback could silently regress)."""
-    from genie_spark.analytics.clustering import kmeans_assign
+def test_ivf_probe_rule_matches_sequential_model_with_ties(spark):
+    """ivf_cell_pairs and ivf_topk equal a sequential Python model of
+    the probe rule over a corpus with planted cosine ties (duplicates
+    and scaled copies score cosine 1.0 against several centroids):
+    centroids are the n smallest (md5(id), id) vectors, each vector
+    probes its cells ordered by (cosine desc, cid asc), the corpus side
+    keeps its first cell, and top-k ranks by (cosine desc, neighbor
+    asc) among candidates sharing a probed cell."""
+    import hashlib
+    import math
 
-    rows = [
-        (0, [1.0, 0.0]),
-        (1, [-1.0, 0.0]),
-        (2, [1.0, 0.0]),     # duplicate of seed 0
-        (3, [-1.0, 0.0]),    # duplicate of seed 1
-        (4, [0.0, 0.0]),     # exactly equidistant between the seeds
-        (5, [0.0, 5.0]),     # equidistant, off-axis
-        (6, [0.5, 0.5]),
-        (7, [-0.5, -0.5]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = sorted(
-        tuple(r) for r in kmeans_assign(df, k=2, iters=3, engine="arrow").collect()
+    from genie_spark.analytics.similarity import (
+        _centroid_rows,
+        _ivf_probes_arrow,
+        ivf_cell_pairs,
+        ivf_topk,
     )
-    e = sorted(
-        tuple(r) for r in kmeans_assign(df, k=2, iters=3, engine="expr").collect()
-    )
-    assert a == e
-
-
-def test_ivf_engine_parity_with_ties(spark):
-    """ivf_cell_pairs and ivf_topk: arrow vs expr engines must emit
-    identical collected rows over a corpus with planted cosine ties
-    (duplicates and scaled copies score cosine 1.0 against several
-    centroids)."""
-    from genie_spark.analytics.similarity import ivf_cell_pairs, ivf_topk
 
     rows = []
     for i in range(12):
@@ -905,26 +889,69 @@ def test_ivf_engine_parity_with_ties(spark):
         rows.append((i, base))
         rows.append((100 + i, [2.0 * x for x in base]))   # cosine-tied copy
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    n_centroids, n_probe, k = 6, 3, 4
 
-    pa = sorted(
-        tuple(r)
-        for r in ivf_cell_pairs(df, n_centroids=6, n_probe=3, engine="arrow").collect()
-    )
-    pe = sorted(
-        tuple(r)
-        for r in ivf_cell_pairs(df, n_centroids=6, n_probe=3, engine="expr").collect()
-    )
-    assert pa == pe
+    q = {i: [int(math.floor(x * 1000.0 + 0.5)) for x in v] for i, v in rows}
 
-    ta = sorted(
-        tuple(r)
-        for r in ivf_topk(df, n_centroids=6, n_probe=3, k=4, engine="arrow").collect()
+    def dot(a, b):
+        return sum(x * y for x, y in zip(a, b))
+
+    def cosine(a, b):
+        den = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+        return dot(a, b) / den if den > 0 else None
+
+    cents = sorted(
+        q, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )[:n_centroids]
+
+    def probes(i, n):
+        scored = [(cosine(q[i], q[c]), c) for c in cents]
+        # a null cosine (zero norm) loses to every real score
+        scored.sort(key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+        return [c for _, c in scored[:n]]
+
+    cells = {i: probes(i, n_probe) for i in q}
+    home = {i: probes(i, 1)[0] for i in q}
+    # the probe rule itself: cell ids expose the tie-break that the
+    # pair and top-k outputs below can mask
+    cent_rows = _centroid_rows(df, "vec_id", "embedding", n_centroids)
+    for n, want in ((n_probe, cells), (1, {i: [c] for i, c in home.items()})):
+        got: dict[int, set] = {}
+        for r in _ivf_probes_arrow(
+            df, "vec_id", "embedding", cent_rows, n
+        ).collect():
+            got.setdefault(r["vid"], set()).add(r["cell"])
+        assert got == {i: set(c) for i, c in want.items()}, n
+
+    want_pairs = sorted(
+        (a, b) for a in q for b in q
+        if a < b and set(cells[a]) & set(cells[b])
     )
-    te = sorted(
+    got_pairs = sorted(
         tuple(r)
-        for r in ivf_topk(df, n_centroids=6, n_probe=3, k=4, engine="expr").collect()
+        for r in ivf_cell_pairs(
+            df, n_centroids=n_centroids, n_probe=n_probe
+        ).collect()
     )
-    assert ta == te
+    assert got_pairs == want_pairs
+
+    want_topk = []
+    for qi in q:
+        cand = sorted(
+            (-cosine(q[qi], q[n]), n)
+            for n in q
+            if n != qi and home[n] in cells[qi]
+        )
+        want_topk += [
+            (qi, n, r, -c) for r, (c, n) in enumerate(cand[:k], start=1)
+        ]
+    got_topk = sorted(
+        tuple(r)
+        for r in ivf_topk(
+            df, n_centroids=n_centroids, n_probe=n_probe, k=k
+        ).collect()
+    )
+    assert got_topk == sorted(want_topk)
 
 
 def test_passage_dedup_delimiter_mode(spark):
@@ -1601,13 +1628,13 @@ def test_ivf_arrow_omits_infinite_vectors(spark):
     )
     base = sorted(
         tuple(r)
-        for r in ivf_topk(clean, n_centroids=4, n_probe=2, k=3, engine="arrow")
+        for r in ivf_topk(clean, n_centroids=4, n_probe=2, k=3)
         .where("query_id < 90 and neighbor_id < 90")
         .collect()
     )
     got = sorted(
         tuple(r)
-        for r in ivf_topk(dirty, n_centroids=4, n_probe=2, k=3, engine="arrow")
+        for r in ivf_topk(dirty, n_centroids=4, n_probe=2, k=3)
         .where("query_id < 90 and neighbor_id < 90")
         .collect()
     )
@@ -1622,12 +1649,11 @@ def test_ivf_arrow_omits_infinite_vectors(spark):
 
 def test_kmeans_md5_seeding_beats_first_k_on_sorted_corpus(spark):
     """On an id-SORTED clustered corpus (ingest order correlates with
-    content) the legacy k-lowest-ids seeding puts every seed in the
-    first blob; the default (md5(id), id) seeding is content-
-    independent and must end with strictly lower total d2 after the
-    same fixed iteration count (VERDICT r7 item 5)."""
-    from pyspark.sql import functions as F
-
+    content) the k lowest ids all sit in the first blob, so lowest-id
+    seeding ends unbalanced after 2 iterations (40/20/40/60 members
+    here).  The (md5(id), id) seeding is content-independent: with
+    k=4 and iters=2 it must recover the four blobs exactly, 40 members
+    each (VERDICT r7 item 5)."""
     from genie_spark.analytics.clustering import kmeans_assign
 
     rows = []
@@ -1637,11 +1663,14 @@ def test_kmeans_md5_seeding_beats_first_k_on_sorted_corpus(spark):
             rows.append((blob * 40 + i, [cx + (i % 7) * 0.01, cx - (i % 5) * 0.01]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def total_d2(seed):
-        out = kmeans_assign(df, k=4, iters=2, seed=seed)
-        return out.agg(F.sum("d2").alias("s")).first()["s"]
-
-    assert total_d2("md5") < total_d2("first")
+    members: dict[int, set] = {}
+    for r in kmeans_assign(df, k=4, iters=2).collect():
+        members.setdefault(r["cluster_id"], set()).add(r["vec_id"])
+    assert sorted(len(m) for m in members.values()) == [40, 40, 40, 40]
+    # every cluster is exactly one blob
+    assert sorted({i // 40 for i in m} for m in members.values()) == [
+        {0}, {1}, {2}, {3}
+    ]
 
 
 def test_measured_plane_counts_masking_mechanics(spark):

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 try:
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 except ImportError:  # pragma: no cover
     pytest.skip("hypothesis not installed", allow_module_level=True)
@@ -295,6 +295,13 @@ vecs_st = st.lists(
 
 
 @given(vecs=vecs_st, k=st.sampled_from([2, 3]))
+# planted distance ties: duplicates of other points and points
+# equidistant between centroids (on-axis, off-axis, diagonal)
+@example(
+    vecs=[(1.0, 0.0), (-1.0, 0.0), (1.0, 0.0), (-1.0, 0.0),
+          (0.0, 0.0), (0.0, 5.0), (0.5, 0.5), (-0.5, -0.5)],
+    k=2,
+)
 @settings(**_SETTINGS)
 def test_kmeans_matches_sequential_lloyd(spark, vecs, k):
     """kmeans_assign equals a NumPy-free sequential Lloyd model with
