@@ -21,6 +21,12 @@ columns carry sentinels):
   * YEAR_CONTACT / YEAR_DEATH carrying ``<`` → ``"withheld"``
     (``_redact_ped_year`` lines 154-167).
 
+Numeric-typed columns (a double ``AGE_AT_SEQ_REPORT``, an integer
+``BIRTH_YEAR``) are redacted through their written text, integral
+doubles as integers (``scalars.as_written``, what the TSV sink writes):
+the sentinels are strings, and Spark 4 ANSI raises on a string branch
+of a numeric ``when``.
+
 Reference write order (later pandas ``.loc`` writes win) is encoded as
 ``when``-chain priority: pediatric ``<`` beats ``>`` on the interval
 column itself; for BIRTH_YEAR the interval-over rule beats the
@@ -31,6 +37,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from genie_spark.functions.scalars import as_written
 
 DAYS_89Y = 32485
 DAYS_18Y = 6570
@@ -68,6 +77,14 @@ def redact_phi(
     year_cols: tuple[str, ...] = ("YEAR_CONTACT", "YEAR_DEATH"),
 ) -> DataFrame:
     """Full redaction pass (genie/database_to_staging.py:192-233)."""
+    redacted = {*interval_cols, birth_year_col, *year_cols}
+    numeric = {
+        f.name: as_written(f.name, f.dataType)
+        for f in df.schema.fields
+        if f.name in redacted and not isinstance(f.dataType, T.StringType)
+    }
+    if numeric:
+        df = df.withColumns(numeric)
     present_intervals = [c for c in interval_cols if c in df.columns]
     over = None
     for c in present_intervals:
@@ -117,8 +134,10 @@ def age_days_to_release_years(col: str) -> Column:
     ``">32485"`` → ``">89"`` and ``"<6570"`` → ``"<18"``; anything else
     (``"withheld"``, free text) passes through.  Must run AFTER
     :func:`redact_phi` so a numeric year value can never exceed 89.
+    A numeric-typed column is read through its string cast, so the
+    sentinel comparisons never cast a sentinel to a number.
     """
-    c = F.col(col)
+    c = F.col(col).cast("string")
     n = c.try_cast("double")
     return (
         F.when(c == f">{DAYS_89Y}", F.lit(">89"))

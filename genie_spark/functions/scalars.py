@@ -14,6 +14,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Sentinels accepted in clinical "integer" columns
 # (genie_registry/clinical.py:933-962, 1122-1172).
@@ -118,6 +119,18 @@ def days_to_years(col: str | Column) -> Column:
     genie/database_to_staging.py:1290-1298): floor(days/365.25)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.floor(c.cast("double") / 365.25).cast("long")
+
+
+def as_written(col: str | Column, dtype: T.DataType) -> Column:
+    """The text a TSV sink writes for a ``dtype`` value (reference
+    ``removePandasDfFloat`` genie/process_functions.py:258-303): integral
+    doubles render as integers, everything else as its string cast."""
+    c = F.col(col) if isinstance(col, str) else col
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        return F.when(
+            c.isNotNull() & (c == F.floor(c)), c.cast("long").cast("string")
+        ).otherwise(c.cast("string"))
+    return c.cast("string")
 
 
 def concat_key(cols: Sequence[str], sep: str = " ") -> Column:

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from genie_spark.functions.scalars import as_written
+
 
 def strip_float_formatting(df: DataFrame) -> DataFrame:
     """'.0'-stripping on write (reference ``removePandasDfFloat``
@@ -26,12 +28,7 @@ def strip_float_formatting(df: DataFrame) -> DataFrame:
     exprs = []
     for f in df.schema.fields:
         if isinstance(f.dataType, (T.DoubleType, T.FloatType)):
-            c = F.col(f.name)
-            exprs.append(
-                F.when(c.isNotNull() & (c == F.floor(c)), c.cast("long").cast("string"))
-                .otherwise(c.cast("string"))
-                .alias(f.name)
-            )
+            exprs.append(as_written(f.name, f.dataType).alias(f.name))
         else:
             exprs.append(F.col(f.name))
     return df.select(*exprs)

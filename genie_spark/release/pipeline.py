@@ -4,8 +4,13 @@ genie/database_to_staging.py:1713-1956 + §3.3 of SURVEY.md).
 One lineage: bronze tables in → filter DAG → per-artifact DataFrames
 out.  The reference shells out to R twice (MAFinBED, mergeCheck) and to
 unix join for the CNA matrix; all three are native ops here, so the
-whole release plan is visible to Catalyst (filter pushdown through the
+whole filter DAG is visible to Catalyst (filter pushdown through the
 joins, broadcast for the dim-sized inputs, AQE for center skew).
+
+The filter DAG is computed once: ``run_release`` materializes the
+released clinical and MAF tables (``localCheckpoint``), like the
+reference, which filters once and then writes every file from the
+result.  Every sink reads the materialized tables.
 """
 
 from __future__ import annotations
@@ -133,15 +138,11 @@ def data_gene_matrix(
     return m.select(*cols)
 
 
-def run_release(
+def _filter_dag(
     clinical: DataFrame,
     maf: DataFrame,
     bed: DataFrame,
-    sv: DataFrame | None = None,
-    seg: DataFrame | None = None,
-    cna_long: DataFrame | None = None,
     oncotree: DataFrame | None = None,
-    assay_info: DataFrame | None = None,
     mergecheck_flags: DataFrame | None = None,
     whitelist: DataFrame | None = None,
     sample_retraction: DataFrame | None = None,
@@ -150,26 +151,12 @@ def run_release(
     consortium_cutoff_days: int = 184,
     pad: int = 10,
 ) -> ReleaseArtifacts:
-    """Consortium release (§3.3):
+    """The lazy release filter DAG, steps 1-5 of :func:`run_release`.
 
-    1. no-gene-panel filter on samples (P13);
-    2. MAF restricted to kept samples (J12) with SEQ_ASSAY_ID attached;
-    3. MAFinBED remove set (J3) + mutation-in-cis (W1): TOSS samples
-       removed from the release entirely, FLAG variants tagged
-       (reference run_genie_filters genie/database_to_staging.py:1074-1154);
-    4. configure_maf (germline-with-whitelist/annotation filters, count
-       algebra) — ``common_variant`` rows kept until the public stage;
-    5. clinical: oncotree broadcast join (J8), PHI redaction (§2.9),
-       then AGE days→years;
-    6. SV/SEG/CNA restricted to kept samples; SV germline rows dropped.
-
-    ``mergecheck_flags`` is the persisted mutationsInCis flag table
-    (MERGECHECK_KEY columns + ``Flag``).  Without one, every newly
-    detected cis pair defaults to TOSS (the reference's
-    ``uploadToTable`` insert mode, R/mergecheck_functions.R:19-77) and
-    those samples are removed.  ``whitelist`` is a known-somatic-sites
-    BED that overrides the germline filter.
-    """
+    ``clinical`` is the released clinical table; ``maf`` is the
+    configured MAF over the panel-kept samples, which
+    :func:`_released_maf` still restricts to the released clinical.
+    Nothing runs here."""
     clinical = apply_retractions(
         clinical, sample_retraction=sample_retraction,
         patient_retraction=patient_retraction,
@@ -230,19 +217,87 @@ def run_release(
             "AGE_AT_SEQ_REPORT_YEARS",
             age_days_to_release_years("AGE_AT_SEQ_REPORT"),
         )
-
-    keep_ids = clin.select("SAMPLE_ID")
-    arts = ReleaseArtifacts(
+    return ReleaseArtifacts(
         clinical=clin,
-        maf=release_maf.join(
-            keep_ids.withColumnRenamed("SAMPLE_ID", "Tumor_Sample_Barcode"),
-            "Tumor_Sample_Barcode",
-            "left_semi",
-        ),
+        maf=release_maf,
         removed_samples=removed,
         flagged_samples=toss_samples,
         removed_variants=removed_variants,
     )
+
+
+def _released_maf(maf: DataFrame, clinical: DataFrame) -> DataFrame:
+    """The MAF rows of released clinical samples."""
+    return maf.join(
+        clinical.select(F.col("SAMPLE_ID").alias("Tumor_Sample_Barcode")),
+        "Tumor_Sample_Barcode",
+        "left_semi",
+    )
+
+
+def run_release(
+    clinical: DataFrame,
+    maf: DataFrame,
+    bed: DataFrame,
+    sv: DataFrame | None = None,
+    seg: DataFrame | None = None,
+    cna_long: DataFrame | None = None,
+    oncotree: DataFrame | None = None,
+    assay_info: DataFrame | None = None,
+    mergecheck_flags: DataFrame | None = None,
+    whitelist: DataFrame | None = None,
+    sample_retraction: DataFrame | None = None,
+    patient_retraction: DataFrame | None = None,
+    processing_date: str | None = None,
+    consortium_cutoff_days: int = 184,
+    pad: int = 10,
+) -> ReleaseArtifacts:
+    """Consortium release (§3.3):
+
+    1. no-gene-panel filter on samples (P13);
+    2. MAF restricted to kept samples (J12) with SEQ_ASSAY_ID attached;
+    3. MAFinBED remove set (J3) + mutation-in-cis (W1): TOSS samples
+       removed from the release entirely, FLAG variants tagged
+       (reference run_genie_filters genie/database_to_staging.py:1074-1154);
+    4. configure_maf (germline-with-whitelist/annotation filters, count
+       algebra) — ``common_variant`` rows kept until the public stage;
+    5. clinical: oncotree broadcast join (J8), PHI redaction (§2.9),
+       then AGE days→years;
+    6. SV/SEG/CNA restricted to kept samples; SV germline rows dropped.
+
+    ``mergecheck_flags`` is the persisted mutationsInCis flag table
+    (MERGECHECK_KEY columns + ``Flag``).  Without one, every newly
+    detected cis pair defaults to TOSS (the reference's
+    ``uploadToTable`` insert mode, R/mergecheck_functions.R:19-77) and
+    those samples are removed.  ``whitelist`` is a known-somatic-sites
+    BED that overrides the germline filter.
+
+    This runs Spark jobs: the released clinical table, then the
+    released MAF (restricted to that clinical), are each computed once
+    with ``localCheckpoint(eager=True)``.  A release writes about
+    fifteen sinks from these two tables (clinical files, case lists,
+    counts, snapshots), and a lazy frame replays its whole filter DAG
+    from bronze for every one of them.  SV/SEG/CNA and the gene matrix
+    stay lazy over the checkpointed clinical.  The trade-off:
+    checkpoint blocks live on the executors without lineage, so losing
+    an executor fails the jobs that read them instead of recomputing.
+    ``removed_samples``, ``flagged_samples`` and ``removed_variants``
+    stay lazy; only the data guide reads them.
+    """
+    arts = _filter_dag(
+        clinical, maf, bed,
+        oncotree=oncotree,
+        mergecheck_flags=mergecheck_flags,
+        whitelist=whitelist,
+        sample_retraction=sample_retraction,
+        patient_retraction=patient_retraction,
+        processing_date=processing_date,
+        consortium_cutoff_days=consortium_cutoff_days,
+        pad=pad,
+    )
+    arts.clinical = arts.clinical.localCheckpoint(eager=True)
+    arts.maf = _released_maf(arts.maf, arts.clinical).localCheckpoint(eager=True)
+    keep_ids = arts.clinical.select("SAMPLE_ID")
     if sv is not None:
         arts.sv = germline_status_filter(sv).join(keep_ids, "SAMPLE_ID", "left_semi")
     if seg is not None:
@@ -253,7 +308,7 @@ def run_release(
         arts.cna_long = cna_long.join(keep_ids, "SAMPLE_ID", "left_semi")
     arts.bed = bed
     arts.gene_matrix = data_gene_matrix(
-        clin,
+        arts.clinical,
         wes_assay_ids=wes_panels(assay_info) if assay_info is not None else None,
         cna_samples=arts.cna_long.select("SAMPLE_ID").distinct()
         if arts.cna_long is not None

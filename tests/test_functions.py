@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from genie_spark.functions.redact import redact_phi
+from genie_spark.functions.redact import age_days_to_release_years, redact_phi
 from genie_spark.functions.scalars import (
     allele_ok,
     chromosome_ok,
@@ -93,6 +93,35 @@ def test_redact_phi_interval_and_birth_year(spark):
     assert got["p7"][:2] == ("withheld", "2010")
     assert got["p8"][1] == "withheld"
     assert got["p9"][2] == "withheld"
+
+
+def test_redact_numeric_interval_columns_as_written(spark):
+    """Numeric-typed interval and year columns redact through their
+    written text (integral doubles as integers) instead of raising an
+    ANSI cast error on the string sentinels."""
+    df = spark.createDataFrame(
+        [
+            ("p1", 10000.0, 1990, 2020),   # fine
+            ("p2", 40000.0, 1930, 2020),   # >89y → redact age + birth year
+            ("p3", 20000.5, 1920, 2015),   # year diff 95 > 89 → redact BY
+        ],
+        "PATIENT_ID string, AGE_AT_SEQ_REPORT double, BIRTH_YEAR long, "
+        "YEAR_CONTACT long",
+    )
+    out = redact_phi(df).withColumn(
+        "YEARS", age_days_to_release_years("AGE_AT_SEQ_REPORT")
+    )
+    got = {
+        r["PATIENT_ID"]: (r["AGE_AT_SEQ_REPORT"], r["BIRTH_YEAR"], r["YEARS"])
+        for r in out.collect()
+    }
+    assert got["p1"] == ("10000", "1990", "27")
+    assert got["p2"] == (">32485", "cannotReleaseHIPAA", ">89")
+    assert got["p3"] == ("20000.5", "cannotReleaseHIPAA", "54")
+    direct = df.select(
+        "PATIENT_ID", age_days_to_release_years("AGE_AT_SEQ_REPORT").alias("y")
+    ).collect()
+    assert {r["PATIENT_ID"]: r["y"] for r in direct}["p1"] == "27"
 
 
 def test_rank_bounded_order_and_max_rows_guard(spark):

@@ -109,12 +109,7 @@ def test_latest_per_key_reduces_before_exchange(spark):
     assert "WindowGroupLimit" in partial and "Partial" in partial, plan
 
 
-def test_release_pipeline_plan_shape(spark):
-    """The composite release plan must stay scale-safe: oncotree joins
-    via BroadcastHashJoin, keep-filters as LeftSemi/LeftAnti, and no
-    CartesianProduct anywhere in the MAF path."""
-    from genie_spark.release.pipeline import run_release
-
+def _release_inputs(spark):
     clinical = spark.createDataFrame(
         [("GENIE-SAGE-1-1", "GENIE-SAGE-1", "SAGE", "PANEL-1", "UNKNOWN", 10000.0)],
         "SAMPLE_ID string, PATIENT_ID string, CENTER string, "
@@ -137,14 +132,53 @@ def test_release_pipeline_plan_shape(spark):
         "ONCOTREE_CODE string, CANCER_TYPE string, CANCER_TYPE_DETAILED "
         "string, ONCOTREE_PRIMARY_NODE string, ONCOTREE_SECONDARY_NODE string",
     )
-    arts = run_release(clinical=clinical, maf=maf, bed=bed, oncotree=oncotree)
-    for df in (arts.clinical, arts.maf):
+    return clinical, maf, bed, oncotree
+
+
+def test_release_pipeline_plan_shape(spark):
+    """The release filter DAG (the plan ``run_release``'s checkpoint
+    jobs execute) must stay scale-safe: oncotree joins via
+    BroadcastHashJoin, keep-filters as LeftSemi/LeftAnti, and no
+    CartesianProduct anywhere in the MAF path."""
+    from genie_spark.release.pipeline import _filter_dag, _released_maf
+
+    clinical, maf, bed, oncotree = _release_inputs(spark)
+    dag = _filter_dag(clinical, maf, bed, oncotree=oncotree)
+    dag_maf = _released_maf(dag.maf, dag.clinical)
+    for df in (dag.clinical, dag_maf):
         plan = plan_of(df)
         assert "CartesianProduct" not in plan, plan
-    clin_plan = plan_of(arts.clinical)
+    clin_plan = plan_of(dag.clinical)
     assert "BroadcastHashJoin" in clin_plan, clin_plan
-    maf_plan = plan_of(arts.maf)
+    maf_plan = plan_of(dag_maf)
     assert "LeftSemi" in maf_plan or "LeftAnti" in maf_plan, maf_plan
+
+
+def test_release_materializes_clinical_and_maf(spark, tmp_path):
+    """``run_release`` computes the filter DAG once: the released
+    clinical and MAF its ~15 sinks read are checkpoints (no file scan,
+    no join left to replay), with the lazy DAG's exact schemas, nullability
+    included — also when every sample is retracted and the checkpoint
+    is empty."""
+    from genie_spark.release.pipeline import _filter_dag, _released_maf, run_release
+
+    inputs = []
+    for name, df in zip(("clinical", "maf", "bed", "oncotree"), _release_inputs(spark)):
+        path = str(tmp_path / name)
+        df.write.parquet(path)
+        inputs.append(spark.read.parquet(path))
+    clinical, maf, bed, oncotree = inputs
+    everyone = spark.createDataFrame([("GENIE-SAGE-1",)], "geniePatientId string")
+    for retraction, n_released in ((None, 1), (everyone, 0)):
+        kwargs = dict(oncotree=oncotree, patient_retraction=retraction)
+        arts = run_release(clinical, maf, bed, **kwargs)
+        dag = _filter_dag(clinical, maf, bed, **kwargs)
+        lazy = {"clinical": dag.clinical, "maf": _released_maf(dag.maf, dag.clinical)}
+        for name, df in (("clinical", arts.clinical), ("maf", arts.maf)):
+            plan = plan_of(df)
+            assert "FileScan" not in plan and "Join" not in plan, plan
+            assert df.schema == lazy[name].schema, (name, df.schema, lazy[name].schema)
+            assert df.count() == n_released, name
 
 
 def test_dedup_components_no_cartesian(spark):
