@@ -224,10 +224,15 @@ def _seg_transform(df: DataFrame) -> DataFrame:
 
 def _clinical_rules(center: str) -> RuleSet:
     # merged-file validation = sample rules + patient rules (the
-    # reference validates the merged frame, clinical.py:800-1298)
+    # reference validates the merged frame, clinical.py:800-1298).
+    # The patient-key duplicate check stays out: sample⋈patient has one
+    # row per SAMPLE, so a patient with two samples repeats its
+    # PATIENT_ID there; a duplicated patient row fans out into
+    # duplicated SAMPLE_IDs, which clinical_sample.duplicate_keys catches.
     s = sample_rules(center)
-    p = patient_rules(center)
-    return RuleSet("clinical", list(s.rules) + list(p.rules))
+    p = [r for r in patient_rules(center).rules
+         if r.rule_id != "clinical_patient.duplicate_keys"]
+    return RuleSet("clinical", list(s.rules) + p)
 
 
 FORMATS: list[FileFormat] = [

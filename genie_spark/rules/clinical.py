@@ -4,11 +4,14 @@ pass)."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from genie_spark.functions.scalars import genie_id_ok, is_integer_string
 from genie_spark.rules.engine import (
+    AggRule,
     FrameRule,
     RowRule,
     RuleSet,
@@ -46,108 +49,63 @@ def _year_ok(col: str, sentinels: list[str]) -> Column:
     )
 
 
-def median_age_check(age_col: str = "AGE_AT_SEQ_REPORT") -> FrameRule:
+def median_age_check(age_col: str = "AGE_AT_SEQ_REPORT") -> AggRule:
     """median(AGE) < 100 ⇒ the center uploaded years instead of days
     (genie_registry/clinical.py:953-961)."""
-
-    def check(df: DataFrame) -> list[ValidationMessage]:
-        if age_col not in df.columns:
-            return []
-        med = df.select(
-            F.expr(f"percentile(try_cast({age_col} AS DOUBLE), 0.5)").alias("m")
-        ).collect()[0]["m"]
-        if med is not None and med < 100:
-            return [
-                ValidationMessage(
-                    "clinical.age_median",
-                    "error",
-                    "Patient Clinical File: median AGE_AT_SEQ_REPORT < 100 — "
-                    "the column must be in DAYS, not years.",
-                )
-            ]
-        return []
-
-    return FrameRule("clinical.age_median", check)
+    return AggRule(
+        "clinical.age_median", "error",
+        (F.percentile(F.col(age_col).try_cast("double"), 0.5) < 100).cast("int"),
+        "Patient Clinical File: median AGE_AT_SEQ_REPORT < 100 — "
+        "the column must be in DAYS, not years.",
+        required_cols=[age_col],
+    )
 
 
-def patient_ids_cover_samples() -> FrameRule:
+def patient_ids_cover_samples() -> RowRule:
     """Every sample's PATIENT_ID must appear in the patient data and be
     a substring of its SAMPLE_ID (clinical.py:891-918)."""
-
-    def check(df: DataFrame) -> list[ValidationMessage]:
-        if "SAMPLE_ID" not in df.columns or "PATIENT_ID" not in df.columns:
-            return []
-        bad = df.where(
-            ~F.col("SAMPLE_ID").contains(F.col("PATIENT_ID"))
-            & F.col("PATIENT_ID").isNotNull()
-        ).count()
-        if bad:
-            return [
-                ValidationMessage(
-                    "clinical.patient_in_sample",
-                    "error",
-                    f"Sample Clinical File: {bad} SAMPLE_ID(s) do not contain "
-                    "their PATIENT_ID.",
-                    n_violations=bad,
-                )
-            ]
-        return []
-
-    return FrameRule("clinical.patient_in_sample", check)
+    return RowRule(
+        "clinical.patient_in_sample", "error",
+        ~F.col("SAMPLE_ID").contains(F.col("PATIENT_ID"))
+        & F.col("PATIENT_ID").isNotNull(),
+        "Sample Clinical File: {n} SAMPLE_ID(s) do not contain their "
+        "PATIENT_ID.",
+        required_cols=["SAMPLE_ID", "PATIENT_ID"],
+    )
 
 
 MALE_ONCO_PRIMARY = ("TESTIS", "PROSTATE", "PENIS")
 FEMALE_ONCO_PRIMARY = ("CERVIX", "VULVA", "UTERUS", "OVARY")
 
 
-def sex_oncotree_consistency(oncotree: DataFrame) -> FrameRule:
+def sex_oncotree_consistency(oncotree: DataFrame) -> RowRule:
     """SEX must agree with sex-specific oncotree primary nodes
     (reference genie_registry/clinical.py:967-1024): male-only codes
     (TESTIS/PROSTATE/PENIS) need SEX=1, female-only
     (CERVIX/VULVA/UTERUS/OVARY) need SEX=2; a missing/blank SEX also
     flags, like the reference's NaN comparison.  Warning severity —
-    the reference writes these to the warning stream."""
-
-    def check(df: DataFrame) -> list[ValidationMessage]:
-        if not {"SEX", "ONCOTREE_CODE", "SAMPLE_ID"} <= set(df.columns):
-            return []
-        if "ONCOTREE_PRIMARY_NODE" not in oncotree.columns:
-            return []
-        dim = oncotree.select(
-            F.upper(F.col("ONCOTREE_CODE")).alias("__code"),
-            F.upper(F.col("ONCOTREE_PRIMARY_NODE")).alias("__primary"),
-        ).distinct()
-        j = df.join(
-            F.broadcast(dim),
-            F.upper(F.col("ONCOTREE_CODE")) == F.col("__code"),
-            "inner",
-        )
-        sex = F.col("SEX").try_cast("double")
-        bad = j.where(
-            (
-                F.col("__primary").isin(list(MALE_ONCO_PRIMARY))
-                & (sex.isNull() | (sex != 1.0))
-            )
-            | (
-                F.col("__primary").isin(list(FEMALE_ONCO_PRIMARY))
-                & (sex.isNull() | (sex != 2.0))
-            )
-        )
-        examples = [r["SAMPLE_ID"] for r in bad.select("SAMPLE_ID").limit(5).collect()]
-        if examples:
-            n = bad.count()
-            return [
-                ValidationMessage(
-                    "clinical.sex_oncotree", "warning",
-                    f"Sample Clinical File: {n} SAMPLE_ID(s) have conflicting "
-                    f"SEX and ONCOTREE_CODES: {', '.join(examples)}",
-                    n_violations=n,
-                    examples=examples,
-                )
-            ]
-        return []
-
-    return FrameRule("clinical.sex_oncotree", check)
+    the reference writes these to the warning stream.  The sex-specific
+    codes are collected once, here, so the check is a row predicate."""
+    male, female = [], []
+    if "ONCOTREE_PRIMARY_NODE" in oncotree.columns:
+        primary = F.upper(F.col("ONCOTREE_PRIMARY_NODE"))
+        for r in (
+            oncotree.where(primary.isin(*MALE_ONCO_PRIMARY, *FEMALE_ONCO_PRIMARY))
+            .select(F.upper(F.col("ONCOTREE_CODE")).alias("c"), primary.alias("p"))
+            .distinct()
+            .collect()
+        ):
+            (male if r["p"] in MALE_ONCO_PRIMARY else female).append(r["c"])
+    code = F.upper(F.col("ONCOTREE_CODE"))
+    sex = F.col("SEX").try_cast("double")
+    return RowRule(
+        "clinical.sex_oncotree", "warning",
+        (code.isin(male) & (sex.isNull() | (sex != 1.0)))
+        | (code.isin(female) & (sex.isNull() | (sex != 2.0))),
+        "Sample Clinical File: {n} SAMPLE_ID(s) have conflicting SEX and "
+        "ONCOTREE_CODES: {examples}",
+        example_col="SAMPLE_ID", required_cols=["SEX", "ONCOTREE_CODE", "SAMPLE_ID"],
+    )
 
 
 def sample_type_domain_rule(codes: list) -> RowRule:
@@ -271,23 +229,17 @@ def sample_rules(center: str, oncotree_codes: list[str] | None = None) -> RuleSe
     rules.append(FrameRule("clinical.seq_date_deprecated", no_seq_date))
 
     # no fully-empty rows (reference genie_registry/clinical.py:820-825)
-    def no_empty_rows(df: DataFrame) -> list[ValidationMessage]:
-        cond = None
-        for c in df.columns:
-            x = F.col(c).isNull() | (F.col(c).cast("string") == "")
-            cond = x if cond is None else (cond & x)
-        if cond is None:
+    def no_empty_rows(df: DataFrame) -> list[RowRule]:
+        if not df.columns:
             return []
-        n = df.where(cond).count()
-        if n:
-            return [
-                ValidationMessage(
-                    "clinical.empty_rows", "error",
-                    "Clinical file(s): No empty rows allowed.",
-                    n_violations=n,
-                )
-            ]
-        return []
+        empty = [F.col(c).isNull() | (F.col(c).cast("string") == "") for c in df.columns]
+        return [
+            RowRule(
+                "clinical.empty_rows", "error",
+                reduce(lambda a, b: a & b, empty),
+                "Clinical file(s): No empty rows allowed.",
+            )
+        ]
 
     rules.append(FrameRule("clinical.empty_rows", no_empty_rows))
 

@@ -3,16 +3,26 @@
 The reference's main "query workload" is per-format ``_validate``
 methods: imperative pandas code accumulating error/warning strings
 (genie/example_filetype_format.py:223-271, ValidationResults at 17-50).
-Here a format's rule set is data: a list of
+Here a format's rule set is data, and ``RuleSet.validate`` issues
+exactly ONE Spark query per upload: one projection of every rule's
+violation flag, then one ``agg()`` computing every violation count
+(and capped example values) — one scan at 100 TB instead of one scan
+per rule.  The rule kinds:
 
-  * ``RowRule`` — a boolean violation predicate (a Column expression)
-    plus a message template.  ALL row rules of a format are evaluated
-    in ONE Spark job: a single ``agg()`` computes every rule's
-    violation count (and capped example values) simultaneously —
-    one scan at 100 TB instead of one scan per rule.
-  * ``FrameRule`` — driver-side structural checks (required columns,
-    header order) or checks needing their own aggregation shape
-    (duplicate keys, median sanity); each returns messages directly.
+  * ``RowRule`` — a boolean violation predicate (a Column expression,
+    window expressions included — duplicate keys are
+    ``count(1) over (partition by keys) > 1``) plus a message template.
+  * ``AggRule`` — a whole-frame check that is an aggregate, not a row
+    predicate (median sanity, the TSA1 convention): an aggregate Column
+    giving the violation count, evaluated in the same ``agg()``.
+  * ``FrameRule`` — reads only the upload's schema (``df.columns``)
+    and returns messages (required columns, header order) and/or
+    RowRules built from the schema (empty rows, VCF sample columns).
+    It runs no Spark action.
+
+The one exception is the cross-file builders ``ids_subset_of`` and
+``concat_key_subset_of``: they need a second table, so each runs its
+own anti-join.
 
 The report mirrors ``ValidationResults`` semantics: errors block
 processing, warnings don't.
@@ -23,7 +33,7 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from genie_spark.session import local_rows_df
@@ -88,85 +98,111 @@ class ValidationReport:
 @dataclass
 class RowRule:
     """Row-level rule: ``violation`` is a boolean Column (True = bad
-    row); ``message`` may contain {n} and {examples} placeholders.
-    ``example_col`` (optional) names the column whose offending values
+    row), a window expression allowed; ``message`` may contain {n} and
+    {examples} placeholders.  ``example_col`` (optional) names the
+    column — or gives the Column expression — whose offending values
     are sampled into the message."""
 
     rule_id: str
     severity: str
     violation: Column
     message: str
-    example_col: str | None = None
+    example_col: str | Column | None = None
+    required_cols: Sequence[str] = ()
+
+
+@dataclass
+class AggRule:
+    """Whole-frame aggregate rule: ``n`` is an aggregate Column giving
+    the violation count (null or 0 = pass); ``message`` may contain
+    {n}."""
+
+    rule_id: str
+    severity: str
+    n: Column
+    message: str
     required_cols: Sequence[str] = ()
 
 
 @dataclass
 class FrameRule:
-    """Whole-frame rule: ``check(df)`` returns a list of
-    ValidationMessage (empty = pass)."""
+    """Schema rule: ``check(df)`` reads only ``df.columns`` and returns
+    ValidationMessages and/or RowRules built from the schema (empty =
+    pass).  It runs no Spark action — only the cross-file builders
+    below (``ids_subset_of``, ``concat_key_subset_of``) query, because
+    they need a second table."""
 
     rule_id: str
-    check: Callable[[DataFrame], list[ValidationMessage]]
+    check: Callable[[DataFrame], list[ValidationMessage | RowRule]]
 
 
 class RuleSet:
-    def __init__(self, file_type: str, rules: Sequence[RowRule | FrameRule]):
+    def __init__(self, file_type: str, rules: Sequence[RowRule | AggRule | FrameRule]):
         self.file_type = file_type
         self.rules = list(rules)
 
     def validate(self, df: DataFrame) -> ValidationReport:
         report = ValidationReport(self.file_type)
-
-        row_rules: list[RowRule] = []
+        fused: list[RowRule | AggRule] = []
         for r in self.rules:
-            if isinstance(r, FrameRule):
-                report.messages.extend(r.check(df))
-            else:
-                missing = [c for c in r.required_cols if c not in df.columns]
-                if not missing:  # rules on absent optional columns skip
-                    row_rules.append(r)
-
-        if row_rules:
-            aggs = []
-            for i, r in enumerate(row_rules):
-                v = r.violation
-                aggs.append(F.sum(F.when(v, 1).otherwise(0)).alias(f"n_{i}"))
-                if r.example_col:
-                    # capped example sample; the slice bounds driver
-                    # memory, collect_set dedups (bounded-domain columns
-                    # only — high-cardinality columns should pass
-                    # example_col=None)
-                    aggs.append(
-                        F.slice(
-                            F.array_sort(
-                                F.collect_set(
-                                    F.when(v, qcol(r.example_col).cast("string"))
-                                )
-                            ),
-                            1,
-                            MAX_EXAMPLES,
-                        ).alias(f"ex_{i}")
-                    )
-            # ONE job evaluates every row rule
-            row = df.agg(*aggs).collect()[0]
-            for i, r in enumerate(row_rules):
-                n = row[f"n_{i}"] or 0
-                if n > 0:
-                    examples = list(row[f"ex_{i}"]) if r.example_col else []
-                    report.messages.append(
-                        ValidationMessage(
-                            r.rule_id,
-                            r.severity,
-                            r.message.format(n=n, examples=", ".join(examples)),
-                            n_violations=n,
-                            examples=examples,
-                        )
-                    )
+            for x in r.check(df) if isinstance(r, FrameRule) else [r]:
+                if isinstance(x, ValidationMessage):
+                    report.messages.append(x)
+                elif all(c in df.columns for c in x.required_cols):
+                    fused.append(x)  # rules on absent optional columns skip
+        if fused:
+            report.messages.extend(_evaluate(df, fused))
         return report
 
 
+def _evaluate(df: DataFrame, rules: list[RowRule | AggRule]) -> list[ValidationMessage]:
+    """ONE query evaluates every row and aggregate rule: the violation
+    flags are projected first (a window expression cannot sit inside
+    an aggregate), then one ``agg()`` counts them."""
+    flagged = df.select(
+        "*",
+        *[r.violation.alias(f"__gs_v{i}")
+          for i, r in enumerate(rules) if isinstance(r, RowRule)],
+    )
+    aggs = []
+    for i, r in enumerate(rules):
+        if isinstance(r, AggRule):
+            aggs.append(F.coalesce(r.n, F.lit(0)).alias(f"n_{i}"))
+            continue
+        v = F.col(f"__gs_v{i}")
+        aggs.append(F.count(F.when(v, 1)).alias(f"n_{i}"))
+        if r.example_col is not None:
+            ex = qcol(r.example_col) if isinstance(r.example_col, str) else r.example_col
+            # capped example sample; the slice bounds driver memory,
+            # collect_set dedups (bounded-domain columns only —
+            # high-cardinality columns should pass example_col=None)
+            aggs.append(
+                F.slice(
+                    F.array_sort(F.collect_set(F.when(v, ex.cast("string")))),
+                    1,
+                    MAX_EXAMPLES,
+                ).alias(f"ex_{i}")
+            )
+    row = flagged.agg(*aggs).collect()[0].asDict()
+    out = []
+    for i, r in enumerate(rules):
+        n = row[f"n_{i}"]
+        if n > 0:
+            examples = list(row.get(f"ex_{i}", []))
+            out.append(
+                ValidationMessage(
+                    r.rule_id,
+                    r.severity,
+                    r.message.format(n=n, examples=", ".join(examples)),
+                    n_violations=n,
+                    examples=examples,
+                )
+            )
+    return out
+
+
 # --------------------------------------------------------------------------
-# shared FrameRule builders
+# shared rule builders
 # --------------------------------------------------------------------------
 
 def required_columns(file_type: str, required: Sequence[str]) -> FrameRule:
@@ -189,32 +225,36 @@ def required_columns(file_type: str, required: Sequence[str]) -> FrameRule:
     return FrameRule(f"{file_type}.required_columns", check)
 
 
+def duplicated(keys: Sequence[str]) -> Column:
+    """True on every row whose (keys...) tuple occurs more than once —
+    a window count, so it joins the rule set's one query."""
+    return F.count(F.lit(1)).over(Window.partitionBy(*[qcol(k) for k in keys])) > 1
+
+
 def no_duplicate_keys(
     file_type: str, keys: Sequence[str], severity: str = "error",
     description: str | None = None,
-) -> FrameRule:
+) -> RowRule:
     """Duplicate-key check (MAF 5-col variant key maf.py:274-299,
-    clinical SAMPLE_ID clinical.py:855-861, SV whole row)."""
-
-    def check(df: DataFrame) -> list[ValidationMessage]:
-        if any(k not in df.columns for k in keys):
-            return []
-        total = (
-            df.groupBy(*keys).count().where(F.col("count") > 1).count()
+    clinical SAMPLE_ID clinical.py:855-861).  Counts the rows in a
+    duplicated group and samples the duplicated key values."""
+    if len(keys) == 1:
+        example = keys[0]
+    else:
+        example = F.concat(
+            F.lit("("),
+            F.concat_ws(", ", *[F.coalesce(qcol(k).cast("string"), F.lit("null")) for k in keys]),
+            F.lit(")"),
         )
-        if total:
-            what = description or ", ".join(keys)
-            return [
-                ValidationMessage(
-                    f"{file_type}.duplicate_keys",
-                    severity,
-                    f"{file_type}: found {total} duplicated value(s) for ({what}).",
-                    n_violations=total,
-                )
-            ]
-        return []
-
-    return FrameRule(f"{file_type}.duplicate_keys", check)
+    return RowRule(
+        f"{file_type}.duplicate_keys",
+        severity,
+        duplicated(keys),
+        f"{file_type}: {{n}} row(s) share a duplicated "
+        f"({description or ', '.join(keys)}); duplicated value(s): {{examples}}.",
+        example_col=example,
+        required_cols=list(keys),
+    )
 
 
 def concat_key_subset_of(

@@ -13,11 +13,14 @@ from genie_spark.functions.scalars import (
     is_integer_string,
 )
 from genie_spark.rules.engine import (
+    AggRule,
     FrameRule,
     RowRule,
     RuleSet,
     ValidationMessage,
+    duplicated,
     no_duplicate_keys,
+    qcol,
     required_columns,
 )
 from genie_spark.schemas import (
@@ -45,6 +48,7 @@ MAF_VARIANT_KEY = [
 
 def maf_rules(center: str) -> RuleSet:
     num = lambda c: F.col(c).isNotNull() & F.col(c).try_cast("double").isNull()  # noqa: E731
+    tsa1 = F.col("TUMOR_SEQ_ALLELE1")
 
     def depth_or_ref_required(df: DataFrame) -> list[ValidationMessage]:
         # t_depth or t_ref_count must be present (maf.py:301-304)
@@ -53,34 +57,6 @@ def maf_rules(center: str) -> RuleSet:
                 ValidationMessage(
                     "maf.depth_or_ref", "error",
                     "Mutation File: must contain T_DEPTH or T_REF_COUNT.",
-                )
-            ]
-        return []
-
-    def tsa1_consistency(df: DataFrame) -> list[ValidationMessage]:
-        # global TSA1 convention check (genie_registry/maf.py:14-112):
-        # when all three allele columns exist, EVERY TSA1 must equal REF
-        # or EVERY TSA1 must equal TSA2 (Genome Nexus uses TSA1 when the
-        # variant is ambiguous, so a mixed convention is unannotatable).
-        # One aggregate job: count the violations of each convention.
-        cols = {"TUMOR_SEQ_ALLELE1", "TUMOR_SEQ_ALLELE2", "REFERENCE_ALLELE"}
-        if not cols <= set(df.columns):
-            return []
-        row = df.agg(
-            F.count(F.when(~F.col("TUMOR_SEQ_ALLELE1").eqNullSafe(
-                F.col("REFERENCE_ALLELE")), 1)).alias("ne_ref"),
-            F.count(F.when(~F.col("TUMOR_SEQ_ALLELE1").eqNullSafe(
-                F.col("TUMOR_SEQ_ALLELE2")), 1)).alias("ne_tsa2"),
-        ).collect()[0]
-        if row["ne_ref"] > 0 and row["ne_tsa2"] > 0:
-            return [
-                ValidationMessage(
-                    "maf.tsa1_convention", "error",
-                    "Mutation File: contains both TUMOR_SEQ_ALLELE1 and "
-                    "TUMOR_SEQ_ALLELE2 columns; all TUMOR_SEQ_ALLELE1 values "
-                    "must match REFERENCE_ALLELE or all must match "
-                    "TUMOR_SEQ_ALLELE2.",
-                    n_violations=min(row["ne_ref"], row["ne_tsa2"]),
                 )
             ]
         return []
@@ -119,7 +95,23 @@ def maf_rules(center: str) -> RuleSet:
         required_columns("maf", MAF_REQUIRED),
         no_duplicate_keys("maf", MAF_VARIANT_KEY, description="variant key"),
         FrameRule("maf.depth_or_ref", depth_or_ref_required),
-        FrameRule("maf.tsa1_convention", tsa1_consistency),
+        # global TSA1 convention check (genie_registry/maf.py:14-112):
+        # when all three allele columns exist, EVERY TSA1 must equal REF
+        # or EVERY TSA1 must equal TSA2 (Genome Nexus uses TSA1 when the
+        # variant is ambiguous, so a mixed convention is unannotatable).
+        # n = the smaller of the two conventions' violation counts.
+        AggRule(
+            "maf.tsa1_convention", "error",
+            F.least(
+                F.count(F.when(~tsa1.eqNullSafe(F.col("REFERENCE_ALLELE")), 1)),
+                F.count(F.when(~tsa1.eqNullSafe(F.col("TUMOR_SEQ_ALLELE2")), 1)),
+            ),
+            "Mutation File: contains both TUMOR_SEQ_ALLELE1 and "
+            "TUMOR_SEQ_ALLELE2 columns; all TUMOR_SEQ_ALLELE1 values "
+            "must match REFERENCE_ALLELE or all must match "
+            "TUMOR_SEQ_ALLELE2.",
+            required_cols=["TUMOR_SEQ_ALLELE1", "TUMOR_SEQ_ALLELE2", "REFERENCE_ALLELE"],
+        ),
         FrameRule("maf.first_column", first_column_check),
         FrameRule("maf.optional_headers", optional_headers_check),
         RowRule(
@@ -202,8 +194,6 @@ def mutations_in_cis_rules(center: str) -> RuleSet:
     GENIE-identifier barcodes.  The rows-must-exist-in-DB check needs
     the warehouse mergecheck table and is added by the CLI as a
     ``concat_key_subset_of`` cross-file rule on MUTATIONS_IN_CIS_KEY."""
-    from genie_spark.functions.scalars import genie_id_ok
-
     return RuleSet(
         "mutationsInCis",
         [
@@ -218,25 +208,6 @@ def mutations_in_cis_rules(center: str) -> RuleSet:
             ),
         ],
     )
-
-
-def maf_cross_validate(maf: DataFrame, clinical_samples: DataFrame) -> list[ValidationMessage]:
-    """MAF barcodes ⊆ clinical SAMPLE_ID (maf.py:429-467)."""
-    missing = (
-        maf.select(F.col("TUMOR_SAMPLE_BARCODE").alias("SAMPLE_ID"))
-        .distinct()
-        .join(clinical_samples.select("SAMPLE_ID"), "SAMPLE_ID", "left_anti")
-    ).count()
-    if missing:
-        return [
-            ValidationMessage(
-                "maf.cross.barcodes_in_clinical", "error",
-                f"Mutation File: {missing} TUMOR_SAMPLE_BARCODE(s) not present "
-                "in the clinical sample file.",
-                n_violations=missing,
-            )
-        ]
-    return []
 
 
 # ---------------------------------------------------------------------------
@@ -258,13 +229,13 @@ def vcf_sample_columns(center: str | None = None) -> FrameRule:
     missing values.  Identifier checks mirror
     genie/process_functions.py:199-222 (GENIE-{center} prefix, <50
     chars).  Column-count logic is metadata-only; the null scan is one
-    filter-count job per sample column."""
+    RowRule per sample column."""
 
-    def check(df: DataFrame) -> list[ValidationMessage]:
-        msgs: list[ValidationMessage] = []
+    def check(df: DataFrame) -> list[ValidationMessage | RowRule]:
+        out: list[ValidationMessage | RowRule] = []
 
-        def err(rid, text, n=1):
-            msgs.append(ValidationMessage(rid, "error", text, n_violations=n))
+        def err(rid, text):
+            out.append(ValidationMessage(rid, "error", text, n_violations=1))
 
         def check_identifier(c: str, role: str) -> None:
             if center is None:
@@ -298,13 +269,15 @@ def vcf_sample_columns(center: str | None = None) -> FrameRule:
                 "vcf: Must have at least 10 columns (missing the tumor "
                 "sample column, or both tumor and normal sample columns).")
         for c in sample_cols:
-            if c in df.columns:
-                n = df.where(F.col(c).isNull() | (F.col(c) == "")).count()
-                if n:
-                    err("vcf.sample_column_nulls",
-                        f"vcf: Must not have missing values in {c} column.",
-                        n)
-        return msgs
+            name = c.replace("{", "{{").replace("}", "}}")
+            out.append(
+                RowRule(
+                    "vcf.sample_column_nulls", "error",
+                    qcol(c).isNull() | (qcol(c) == ""),
+                    f"vcf: Must not have missing values in {name} column.",
+                )
+            )
+        return out
 
     return FrameRule("vcf.sample_columns", check)
 
@@ -434,8 +407,6 @@ def cna_rules(center: str) -> RuleSet:
 # ---------------------------------------------------------------------------
 
 def seg_rules(center: str) -> RuleSet:
-    from genie_spark.rules.engine import qcol
-
     any_null = None
     for c in SEG_REQUIRED:
         n = qcol(c).isNull()
@@ -533,22 +504,19 @@ def sv_rules(center: str) -> RuleSet:
                 required_cols=[c],
             )
         )
-    rules.append(FrameRule("sv.duplicate_rows", sv_no_duplicate_rows))
+    # no fully-duplicated rows (structural_variant.py:87-88)
+    rules.append(
+        FrameRule(
+            "sv.duplicate_rows",
+            lambda df: [
+                RowRule(
+                    "sv.duplicate_rows", "error", duplicated(df.columns),
+                    "Structural Variant File: {n} row(s) are fully duplicated.",
+                )
+            ],
+        )
+    )
     return RuleSet("sv", rules)
-
-
-def sv_no_duplicate_rows(sv: DataFrame) -> list[ValidationMessage]:
-    """No fully-duplicated rows (structural_variant.py:87-88)."""
-    dup = sv.groupBy(*sv.columns).count().where(F.col("count") > 1).count()
-    if dup:
-        return [
-            ValidationMessage(
-                "sv.duplicate_rows", "error",
-                f"Structural Variant File: {dup} fully duplicated row(s).",
-                n_violations=dup,
-            )
-        ]
-    return []
 
 
 # ---------------------------------------------------------------------------
@@ -690,12 +658,6 @@ def assay_rules(
                 "Assay_information.yaml: {n} platform value(s) outside the GDC "
                 "domain: {examples}",
                 example_col="platform", required_cols=["platform"],
-            ),
-            RowRule(
-                "assay.read_length_int", "error",
-                F.col("read_length").isNotNull() & ~is_integer_string("read_length"),
-                "Assay_information.yaml: {n} non-integer read_length value(s).",
-                required_cols=["read_length"],
             ),
         ],
     )

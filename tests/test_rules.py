@@ -3,11 +3,12 @@ frames, per-rule failure cases; tests/test_clinical.py, test_maf.py)."""
 
 from __future__ import annotations
 
+import pytest
+
 from genie_spark.rules.clinical import patient_rules, sample_rules
 from genie_spark.rules.genomic import (
     bed_rules,
     cna_rules,
-    maf_cross_validate,
     maf_rules,
     seg_rules,
     sv_rules,
@@ -213,9 +214,11 @@ def _lit(v):
 
 
 def test_maf_cross_validate(spark):
+    from genie_spark.rules.engine import ids_subset_of
+
     maf = _valid_maf(spark)
     clinical = spark.createDataFrame([("GENIE-SAGE-1-1",)], ["SAMPLE_ID"])
-    msgs = maf_cross_validate(maf, clinical)
+    msgs = ids_subset_of("maf", "TUMOR_SAMPLE_BARCODE", clinical, "SAMPLE_ID").check(maf)
     assert msgs and msgs[0].n_violations == 1  # barcode 2-1 missing
 
 
@@ -473,3 +476,182 @@ def test_row_rules_evaluate_in_one_job(spark):
     # and the fused pass still produced correct counts
     by_id = {m.rule_id: m.n_violations for m in report.messages}
     assert by_id == {"r.even": 500, "r.mod": 334, "r.s": 143}
+
+
+def _write_clinical_pair(tmp_path, samples, patients):
+    sp = tmp_path / f"data_clinical_supp_sample_{CENTER}.txt"
+    pp = tmp_path / f"data_clinical_supp_patient_{CENTER}.txt"
+    sp.write_text(
+        "SAMPLE_ID\tPATIENT_ID\tAGE_AT_SEQ_REPORT\tONCOTREE_CODE\tSAMPLE_TYPE\t"
+        "SEQ_ASSAY_ID\tSAMPLE_CLASS\n"
+        + "".join(
+            f"GENIE-{CENTER}-{s}\tGENIE-{CENTER}-{s.split('-')[0]}\t36500\tUNKNOWN\t1\t"
+            f"{CENTER}-PANEL-1\tTumor\n"
+            for s in samples
+        )
+    )
+    pp.write_text(
+        "PATIENT_ID\tSEX\tPRIMARY_RACE\tETHNICITY\tBIRTH_YEAR\n"
+        + "".join(f"GENIE-{CENTER}-{p}\t1\t1\t1\t1950\n" for p in patients)
+    )
+    return [str(sp), str(pp)]
+
+
+def test_merged_clinical_two_sample_patient(spark, tmp_path):
+    """The merged clinical pair has one row per SAMPLE: a patient with
+    two samples repeats its PATIENT_ID there and is valid, while a
+    duplicated patient row fans out into duplicated SAMPLE_IDs and is
+    still an error."""
+    from genie_spark.formats import BY_NAME
+
+    fmt = BY_NAME["clinical"]
+    two = fmt.read(spark, _write_clinical_pair(tmp_path, ["1-1", "1-2", "2-1"], ["1", "2"]))
+    report = fmt.rules(CENTER).validate(two)
+    assert report.is_valid, report.render()
+
+    paths = _write_clinical_pair(tmp_path, ["1-1", "2-1"], ["1", "2", "2"])
+    ids = rule_ids(fmt.rules(CENTER).validate(fmt.read(spark, paths)))
+    assert "clinical_sample.duplicate_keys" in ids
+    # the patient file on its own keeps its key check
+    patients = spark.read.option("sep", "\t").option("header", "true").csv(paths[1])
+    assert "clinical_patient.duplicate_keys" in rule_ids(patient_rules(CENTER).validate(patients))
+
+
+def test_duplicate_keys_message_names_the_key(spark):
+    df = spark.createDataFrame(
+        [
+            ("1", "100", "A", "GENIE-SAGE-1-1", "T"),
+            ("1", "100", "A", "GENIE-SAGE-1-1", "T"),
+            ("2", "200", "G", "GENIE-SAGE-2-1", "C"),
+        ],
+        ["CHROMOSOME", "START_POSITION", "REFERENCE_ALLELE",
+         "TUMOR_SAMPLE_BARCODE", "TUMOR_SEQ_ALLELE2"],
+    )
+    by_id = {m.rule_id: m for m in maf_rules(CENTER).validate(df).messages}
+    m = by_id["maf.duplicate_keys"]
+    assert m.severity == "error"
+    assert m.n_violations == 2  # rows in the duplicated group
+    assert "row(s)" in m.message
+    assert "GENIE-SAGE-1-1" in m.message and "GENIE-SAGE-2-1" not in m.message
+
+    single = sample_rules(CENTER).validate(
+        _valid_sample(spark).unionByName(_valid_sample(spark).limit(1))
+    )
+    dup = {m.rule_id: m for m in single.messages}["clinical_sample.duplicate_keys"]
+    assert dup.examples == ["GENIE-SAGE-1-1"]
+    assert "GENIE-SAGE-1-1" in dup.message
+
+
+def test_maf_tsa1_convention_count(spark):
+    """n = min(#TSA1≠REF, #TSA1≠TSA2): rows 3,4 break the REF
+    convention, rows 1,2,4 the TSA2 one → 2."""
+    df = spark.createDataFrame(
+        [
+            ("1", "100", "100", "C", "C", "A", f"GENIE-{CENTER}-1-1"),
+            ("1", "200", "200", "G", "G", "T", f"GENIE-{CENTER}-1-1"),
+            ("1", "300", "300", "C", "A", "A", f"GENIE-{CENTER}-1-1"),
+            ("1", "400", "400", "C", "G", "A", f"GENIE-{CENTER}-1-1"),
+        ],
+        ["CHROMOSOME", "START_POSITION", "END_POSITION", "REFERENCE_ALLELE",
+         "TUMOR_SEQ_ALLELE1", "TUMOR_SEQ_ALLELE2", "TUMOR_SAMPLE_BARCODE"],
+    )
+    by_id = {m.rule_id: m for m in maf_rules(CENTER).validate(df).messages}
+    assert by_id["maf.tsa1_convention"].severity == "error"
+    assert by_id["maf.tsa1_convention"].n_violations == 2
+
+
+def test_age_median_years_vs_days(spark):
+    days = _valid_sample(spark)
+    years = days.withColumn("AGE_AT_SEQ_REPORT", _lit("65"))
+    assert "clinical.age_median" not in rule_ids(sample_rules(CENTER).validate(days))
+    assert "clinical.age_median" in rule_ids(sample_rules(CENTER).validate(years))
+
+
+def _execution_id(spark) -> int:
+    """Id of the newest SQL execution in the status store (ids grow by
+    one per query; the store evicts only the oldest)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+_VCF_FIXED_COLS = ["#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO", "FORMAT"]
+
+
+def _pin_cases(spark):
+    """(rule set, upload) per package rule set, each upload tripping
+    its frame checks."""
+    from genie_spark.formats import BY_NAME
+    from genie_spark.rules.genomic import assay_rules
+
+    clinical = spark.createDataFrame(
+        [
+            # a two-sample patient, a duplicated sample, ages in years
+            ("GENIE-SAGE-1-1", "GENIE-SAGE-1", "50", "LUAD", "1", "SAGE-P", "Tumor", "Jan-2017",
+             "1", "1", "1", "1950"),
+            ("GENIE-SAGE-1-2", "GENIE-SAGE-1", "60", "LUAD", "1", "SAGE-P", "Tumor", "Jan-2017",
+             "1", "1", "1", "1950"),
+            ("GENIE-SAGE-1-2", "GENIE-SAGE-1", "60", "LUAD", "1", "SAGE-P", "Tumor", "Jan-2017",
+             "1", "1", "1", "1950"),
+            ("", None, None, None, None, None, None, None, None, None, None, None),
+        ],
+        "SAMPLE_ID string, PATIENT_ID string, AGE_AT_SEQ_REPORT string, "
+        "ONCOTREE_CODE string, SAMPLE_TYPE string, SEQ_ASSAY_ID string, "
+        "SAMPLE_CLASS string, SEQ_DATE string, SEX string, PRIMARY_RACE string, "
+        "ETHNICITY string, BIRTH_YEAR string",
+    )
+    base = _valid_maf(spark)
+    maf = base.unionByName(base.limit(1)).select(
+        "T_DEPTH", *[c for c in base.columns if c != "T_DEPTH"]
+    )
+    vcf10 = spark.createDataFrame(
+        [("1", "100", ".", "A", "T", ".", "PASS", "DP=10", "GT", None)] * 2,
+        "`#CHROM` string, POS string, ID string, REF string, ALT string, QUAL string, "
+        "FILTER string, INFO string, FORMAT string, `NOT-AN-ID` string",
+    )
+    vcf11 = vcf10.withColumn("NORMAL", _lit(""))
+    bed = spark.createDataFrame(
+        [("99", "a", "200", "+", "yes")],
+        ["Chromosome", "Start_Position", "End_Position", "Hugo_Symbol", "includeInPanel"],
+    )
+    cna = spark.createDataFrame(
+        [("KRAS", "GENIE-SAGE-1-1", "1"), ("KRAS", "GENIE-SAGE-1-1", "0")],
+        ["Hugo_Symbol", "SAMPLE_ID", "value"],
+    )
+    seg = spark.createDataFrame(
+        [("BAD-1", "chr1", 100, 200, 5, None)],
+        "ID string, CHROM string, `LOC.START` long, `LOC.END` long, "
+        "`NUM.MARK` long, `SEG.MEAN` double",
+    )
+    sv = spark.createDataFrame(
+        [("GENIE-SAGE-1-1", "SOMATIC", "x")] * 2, ["SAMPLE_ID", "SV_STATUS", "SV_LENGTH"]
+    )
+    assay = spark.createDataFrame(
+        [("OTHER-PANEL", "maybe", "WGS")], ["SEQ_ASSAY_ID", "is_paired_end", "library_strategy"]
+    )
+    return {
+        "clinical": (BY_NAME["clinical"].rules(CENTER), clinical),
+        "maf": (maf_rules(CENTER), maf),
+        "vcf10": (vcf_rules(CENTER), vcf10),
+        "vcf11": (vcf_rules(CENTER), vcf11),
+        "bed": (bed_rules(), bed),
+        "cna": (cna_rules(CENTER), cna),
+        "seg": (seg_rules(CENTER), seg),
+        "sv": (sv_rules(CENTER), sv),
+        "assay": (assay_rules(CENTER), assay),
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["clinical", "maf", "vcf10", "vcf11", "bed", "cna", "seg", "sv", "assay"]
+)
+def test_rule_set_runs_one_query(spark, case):
+    """RuleSet.validate issues exactly ONE Spark query per upload: every
+    row, window and aggregate rule joins the fused agg, and FrameRules
+    read only the schema."""
+    ruleset, df = _pin_cases(spark)[case]
+    before = _execution_id(spark)
+    report = ruleset.validate(df)
+    assert _execution_id(spark) - before == 1
+    assert report.errors, "the fixture must trip rules"
