@@ -61,21 +61,36 @@ cBioPortal ingestion depends on:
   cases_sequenced sample with a panel-backed assay has a matrix row
   (WES-exempt, mirroring the panel-file exemption).
 
-Set-containment checks over data-sized artifacts (clinical, maf) run
-as Spark anti-joins; only KB-scale driver-rendered texts (case lists,
-panel headers) are parsed on the driver.
+One query per released file: each data-sized artifact (the merged and
+split-sample clinical files, MAF, SV, gene matrix, CNA, SEG) is read
+once and validated by exactly ONE ``RuleSet.validate`` query, and the
+driver-parsed id lists (case-list ids, CNA header samples, panel
+``gene_list``s) by one more, over a ``local_rows_df`` table of
+(source file, id) pairs.  A cross-file containment check is a row
+predicate of the child's query: an EXISTS subquery on the parent's key,
+which Spark runs as an existence join — a left join whose marker column
+is false on every child row with no parent match, with no distinct
+parent projection and no fan-out.  ``genomic_information.txt`` is only
+ever such a parent.  Data-sized tables stay distributed; the driver
+reads only headers and KB-scale texts ('#' rows, case-list keys, panel
+headers, meta files), and this module runs no Spark action of its own.
 """
 
 from __future__ import annotations
 
+import csv
 import glob
 import os
 import re
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from genie_spark.rules.engine import ValidationMessage, ValidationReport
+from genie_spark.rules.engine import (
+    AggRule, RowRule, RuleSet, ValidationMessage, ValidationReport, duplicated, qcol,
+)
 from genie_spark.session import local_rows_df
 
 _CASE_LIST_KEYS = (
@@ -160,10 +175,38 @@ _META_GAT_DATATYPES = frozenset(
 )
 
 
+def _header(path: str, comment: str | None) -> list[str]:
+    """The header Spark's CSV reader takes: the first line that is
+    neither blank nor a comment, parsed with its quoting rules."""
+    with open(path) as fh:
+        for line in fh:
+            if line.strip() and not (comment and line.startswith(comment)):
+                return next(csv.reader([line.rstrip("\r\n")], delimiter="\t"))
+    return []
+
+
+def _safe_header(names: list[str]) -> list[str]:
+    """Spark's CSV header sanitizing (identifiers case-insensitive): a
+    blank name becomes ``_c<i>``, a name repeated in any case gets its
+    index appended."""
+    seen = Counter(n.lower() for n in names)
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if seen[n.lower()] > 1 else n
+        for i, n in enumerate(names)
+    ]
+
+
 def _read_release_tsv(
     spark: SparkSession, path: str, comment: str | None = "#"
 ) -> DataFrame:
-    reader = spark.read.option("sep", "\t").option("header", "true")
+    """All-string read of a released TSV.  The schema comes from the
+    header line, so the read runs no schema-inference job."""
+    names = _safe_header(_header(path, comment))
+    reader = (
+        spark.read.schema(StructType([StructField(n, StringType()) for n in names]))
+        .option("sep", "\t")
+        .option("header", "true")
+    )
     if comment:
         reader = reader.option("comment", comment)
     return reader.csv(path)
@@ -190,22 +233,53 @@ def _parse_kv_text(path: str) -> dict[str, str]:
     return out
 
 
-def _id_df(spark: SparkSession, ids, col: str = "SAMPLE_ID") -> DataFrame:
-    """Driver-side ids (KB-scale) as a one-column string table."""
-    return local_rows_df(spark, [(i,) for i in ids], f"`{col}` string")
+def _literal(text: str) -> str:
+    """``text`` inside a rule message template."""
+    return text.replace("{", "{{").replace("}", "}}")
 
 
-def _missing_from(
-    spark: SparkSession, ids: list[str], reference: DataFrame, col: str
-) -> list[str]:
-    """ids (driver-side, KB-scale) not present in reference[col]
-    (data-sized, stays distributed)."""
-    if not ids:
-        return []
-    probe = _id_df(spark, ids, col)
-    return sorted(
-        r[0]
-        for r in probe.join(reference, col, "left_anti").collect()
+# alias of every frame a release RuleSet validates: subqueries name the
+# child's columns through it, so a parent column of the same name (the
+# SAMPLE_ID of clinical and of the gene matrix) cannot capture them
+_CHILD = "__gs_child"
+
+
+def _outer(name: str) -> Column:
+    """The validated file's column ``name``, inside a subquery."""
+    return F.col(f"{_CHILD}.`{name}`").outer()
+
+
+def _has(parent: DataFrame, key: Column, child: str) -> Column:
+    """True on the child rows whose column ``child`` holds some
+    ``parent`` row's ``key`` (a null never matches).  An EXISTS
+    subquery: Spark runs it inside the child's query as an existence
+    join — a left join whose marker column needs no distinct parent
+    projection, so no child row fans out."""
+    return parent.where(key == _outer(child)).exists()
+
+
+def _n_distinct(c: Column) -> Column:
+    """Distinct non-null values of ``c``, counted in the one aggregation
+    (``count_distinct`` would plan a second one)."""
+    return F.size(F.collect_set(c))
+
+
+def _absent(rule_id: str, child: str, found: Column, message: str) -> AggRule:
+    """Distinct ``child`` ids that ``found`` misses (a null id counts as
+    one)."""
+    missing = F.when(~found, F.coalesce(qcol(child), F.lit("")))
+    return AggRule(rule_id, "error", _n_distinct(missing), message)
+
+
+def _build(c: Column) -> Column:
+    """Normalized reference build (37/hg19 → GRCh37, 38/hg38 →
+    GRCh38); null for blank and NA."""
+    up = F.upper(F.trim(c))
+    return (
+        F.when(c.isNull() | up.isin("", "NA"), None)
+        .when(up.isin("37", "GRCH37", "HG19"), F.lit("GRCh37"))
+        .when(up.isin("38", "GRCH38", "HG38"), F.lit("GRCh38"))
+        .otherwise(F.trim(c))
     )
 
 
@@ -323,9 +397,14 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         err("release.clinical_sample_id",
             "release: data_clinical.txt has no SAMPLE_ID column")
         return ValidationReport("release", msgs)
-    clin_ids = clinical.select(
-        F.col(clin_sid).alias("SAMPLE_ID")
-    ).distinct()
+    clin_assay = _resolve(clinical, "SEQ_ASSAY_ID")
+
+    def in_clinical(child: str) -> Column:
+        return _has(clinical, qcol(clin_sid), child)
+
+    # (file, frame, rules): one RuleSet query each, run at the end
+    checks: list[tuple[str, DataFrame, list[RowRule | AggRule]]] = []
+
 
     # id columns must LEAD the header (cBioPortal clinical validator /
     # the reference's addClinicalHeaders mapping order — the writer
@@ -365,49 +444,26 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     # the types from addClinicalHeaders,
     # genie/process_functions.py:391-399, but never re-checks a
     # hand-edited release).  Sentinel-aware: blank and NA cells are
-    # missing values, not domain violations.  ONE aggregation pass
-    # over the clinical table covers every typed column.
-    typed_checks = []
+    # missing values, not domain violations.  Every typed column is a
+    # row rule of the clinical query.
+    clin_rules: list[RowRule | AggRule] = []
     for col in clinical.columns:
         t = declared_types.get(col)
         if t not in ("NUMBER", "BOOLEAN"):
             continue
-        v = F.col(col)
+        v = qcol(col)
         not_na = v.isNotNull() & ~v.isin("", "NA")
         if t == "NUMBER":
+            rid, domain = "release.clinical_datatype_number", "parse numeric"
             bad = not_na & v.try_cast("double").isNull()
         else:
+            rid, domain = "release.clinical_datatype_boolean", "be TRUE/FALSE"
             bad = not_na & ~v.isin("TRUE", "FALSE")
-        typed_checks.append((col, t, bad, v))
-    if typed_checks:
-        aggs = []
-        for i, (_, _, bad, v) in enumerate(typed_checks):
-            aggs.append(F.sum(bad.cast("long")).alias(f"n_{i}"))
-            aggs.append(
-                F.slice(
-                    F.collect_set(F.when(bad, v)), 1, 5
-                ).alias(f"ex_{i}")
-            )
-        row = clinical.agg(*aggs).first()
-        for i, (col, t, _, _) in enumerate(typed_checks):
-            n_bad = int(row[f"n_{i}"] or 0)
-            if n_bad:
-                rid = (
-                    "release.clinical_datatype_number"
-                    if t == "NUMBER"
-                    else "release.clinical_datatype_boolean"
-                )
-                domain = (
-                    "parse numeric" if t == "NUMBER" else "be TRUE/FALSE"
-                )
-                err(
-                    rid,
-                    f"release: data_clinical.txt column {col} is "
-                    f"declared {t} but {n_bad} value(s) do not {domain} "
-                    "(NA/blank excluded)",
-                    n=n_bad,
-                    examples=sorted(row[f"ex_{i}"]),
-                )
+        clin_rules.append(RowRule(
+            rid, "error", bad,
+            f"release: data_clinical.txt column {_literal(col)} is declared "
+            f"{t} but {{n}} value(s) do not {domain} (NA/blank excluded)",
+            example_col=col))
 
     # --- split clinical pair (data_clinical_patient/_sample.txt) ------
     # cBioPortal validates the split files harder than the merged one
@@ -523,84 +579,47 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         split_df = _read_release_tsv(spark, smp_path)
         split_sid = _resolve(split_df, "SAMPLE_ID")
         if split_sid is not None:
-            extra_df = (
-                split_df.select(F.col(split_sid).alias("SAMPLE_ID"))
-                .distinct()
-                .join(clin_ids, "SAMPLE_ID", "left_anti")
-            )
-            extra = [r[0] for r in extra_df.limit(6).collect()]
-            if extra:
-                err(
-                    "release.clinical_split_samples",
-                    "release: data_clinical_sample.txt samples absent "
-                    "from data_clinical.txt",
-                    n=len(extra),
-                    examples=extra[:5],
-                )
+            checks.append(("data_clinical_sample.txt", split_df, [RowRule(
+                "release.clinical_split_samples", "error",
+                ~in_clinical(split_sid),
+                "release: data_clinical_sample.txt has {n} row(s) whose "
+                "SAMPLE_ID is absent from data_clinical.txt: {examples}",
+                example_col=split_sid)]))
 
     # per-column catalog (cBioPortal validateData.py clinical checks):
     # duplicated sample rows and blank patient ids both fail import
-    n_dup = (
-        clinical.groupBy(F.col(clin_sid)).count().where(F.col("count") > 1).count()
-    )
-    if n_dup:
-        err(
-            "release.clinical_dup_sample",
-            "release: data_clinical.txt has duplicated SAMPLE_ID rows",
-            n=n_dup,
-        )
-    clin_pid = _resolve(clinical, "PATIENT_ID")
-    if clin_pid is not None:
-        n_blank = clinical.where(
-            F.col(clin_pid).isNull() | (F.trim(F.col(clin_pid)) == "")
-        ).count()
-        if n_blank:
-            err(
-                "release.clinical_patient_blank",
-                "release: data_clinical.txt has blank PATIENT_ID values",
-                n=n_blank,
-            )
+    clin_rules.append(RowRule(
+        "release.clinical_dup_sample", "error", duplicated([clin_sid]),
+        "release: data_clinical.txt has {n} row(s) sharing a duplicated "
+        "SAMPLE_ID: {examples}", example_col=clin_sid))
+    if clin_pid_col is not None:
+        pid = qcol(clin_pid_col)
+        clin_rules.append(RowRule(
+            "release.clinical_patient_blank", "error",
+            pid.isNull() | (F.trim(pid) == ""),
+            "release: data_clinical.txt has {n} blank PATIENT_ID value(s)"))
 
     # clinical enum domains vs the remap tables (reference
     # genie_registry/clinical.py:321-382 ``remap_clinical_values``
     # applied at release QC time): a RELEASED SEX / PRIMARY_RACE /
     # ETHNICITY column must carry the remapped LABELS — a raw integer
     # code means the remap step was skipped for that file.  Release
-    # sentinels and null/blank are allowed.  ONE fused agg job prices
-    # every present enum column.
+    # sentinels and null/blank are allowed.
     from genie_spark.transform import DEFAULT_CLINICAL_MAPPINGS
 
     _ENUM_SENTINELS = ["Unknown", "Not Collected", "Not Applicable",
                        "Not Released", ""]
-    enum_aggs: list[tuple[str, object]] = []
     for logical, mapping in sorted(DEFAULT_CLINICAL_MAPPINGS.items()):
         actual = _resolve(clinical, logical)
         if actual is None:
             continue
         allowed = sorted(set(mapping.values())) + _ENUM_SENTINELS
-        enum_aggs.append(
-            (
-                logical,
-                F.sum(
-                    F.when(
-                        F.col(actual).isNotNull()
-                        & ~F.trim(F.col(actual)).isin(allowed),
-                        1,
-                    ).otherwise(0)
-                ).alias(f"__bad_{logical}"),
-            )
-        )
-    if enum_aggs:
-        counts = clinical.agg(*[a for _, a in enum_aggs]).first()
-        for (logical, _), n_bad in zip(enum_aggs, counts):
-            if n_bad:
-                err(
-                    "release.clinical_enum_domain",
-                    f"release: data_clinical.txt {logical} has values "
-                    "outside the remap-table label domain (raw codes "
-                    "mean the remap step was skipped)",
-                    n=int(n_bad),
-                )
+        clin_rules.append(RowRule(
+            "release.clinical_enum_domain", "error",
+            qcol(actual).isNotNull() & ~F.trim(qcol(actual)).isin(allowed),
+            f"release: data_clinical.txt {logical} has {{n}} value(s) outside "
+            "the remap-table label domain (raw codes mean the remap step "
+            "was skipped): {examples}", example_col=actual))
 
     # --- case lists ------------------------------------------------------
     case_dir = os.path.join(release_dir, "case_lists")
@@ -609,23 +628,19 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         err("release.case_list_all", "release: case_lists/cases_all.txt missing")
     case_study_ids: dict[str, list[str]] = {}
     case_stable_ids: dict[str, list[str]] = {}
-    sequenced_ids: list[str] | None = None
-    cases_all_ids: list[str] | None = None
-    cna_case_ids: set[str] | None = None
-    sv_case_ids: set[str] | None = None
+    # case_list_ids per case-list file; (source file, id) rows of every
+    # driver-parsed list, checked by the lists query at the end
+    case_ids: dict[str, list[str]] = {}
+    list_rows: set[tuple[str, str]] = set()
+    checked_lists: list[str] = []
     for p in case_files:
         name = os.path.basename(p)
         kv = _parse_kv_text(p)
         if kv.get("stable_id"):
             case_stable_ids.setdefault(kv["stable_id"], []).append(name)
-        if name == "cases_sequenced.txt" and "case_list_ids" in kv:
-            sequenced_ids = [s for s in kv["case_list_ids"].split("\t") if s]
-        if name == "cases_all.txt" and "case_list_ids" in kv:
-            cases_all_ids = [s for s in kv["case_list_ids"].split("\t") if s]
-        if name == "cases_cna.txt" and "case_list_ids" in kv:
-            cna_case_ids = {s for s in kv["case_list_ids"].split("\t") if s}
-        if name == "cases_sv.txt" and "case_list_ids" in kv:
-            sv_case_ids = {s for s in kv["case_list_ids"].split("\t") if s}
+        if "case_list_ids" in kv:
+            case_ids[name] = [s for s in kv["case_list_ids"].split("\t") if s]
+            list_rows.update((name, s) for s in case_ids[name])
         missing_keys = [k for k in _CASE_LIST_KEYS if k not in kv]
         if missing_keys:
             err(
@@ -654,16 +669,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
                 f"release: {name} case_list_category {category!r} is "
                 "outside cBioPortal's accepted domain",
             )
-        ids = [s for s in kv["case_list_ids"].split("\t") if s]
-        stray = _missing_from(spark, ids, clin_ids, "SAMPLE_ID")
-        if stray:
-            err(
-                "release.case_list_samples",
-                f"release: {name} lists samples absent from "
-                f"data_clinical.txt",
-                n=len(stray),
-                examples=stray[:5],
-            )
+        checked_lists.append(name)
     # stable_id uniqueness ACROSS the release (cBioPortal validateData:
     # two case lists sharing a stable_id overwrite each other at
     # import — the per-file stem rule above can't see the collision)
@@ -689,25 +695,6 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
                 for sid, files in sorted(case_study_ids.items())
             ),
         )
-    # containment in the OTHER direction (cBioPortal validateData:
-    # the all_cases_in_study list must cover every study sample —
-    # a clinical sample missing from cases_all.txt is silently
-    # excluded from study-wide views after import).  Forward
-    # containment (ids ⊆ clinical) ran per file above; this is the
-    # clinical ⊆ cases_all anti-join, distributed like the rest.
-    if cases_all_ids is not None:
-        all_probe = _id_df(spark, cases_all_ids)
-        n = clin_ids.join(
-            F.broadcast(all_probe), "SAMPLE_ID", "left_anti"
-        ).count()
-        if n:
-            err(
-                "release.case_list_all_coverage",
-                "release: data_clinical.txt samples missing from "
-                "case_lists/cases_all.txt (all_cases_in_study must "
-                "cover the study)",
-                n=n,
-            )
 
     # profile ↔ case-list cross-reference (cBioPortal validateData:
     # a study with mutation / CNA / SV data MUST ship the matching
@@ -736,360 +723,14 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
             n=len(missing_cl),
         )
 
-    # --- maf -------------------------------------------------------------
-    maf_path = os.path.join(release_dir, "data_mutations_extended.txt")
-    if os.path.isfile(maf_path):
-        maf = _read_release_tsv(spark, maf_path, comment=None)
-        tsb = _resolve(maf, "Tumor_Sample_Barcode")
-        if tsb is not None:
-            n = (
-                maf.select(F.col(tsb).alias("SAMPLE_ID"))
-                .distinct()
-                .join(clin_ids, "SAMPLE_ID", "left_anti")
-                .count()
-            )
-            if n:
-                err(
-                    "release.maf_samples",
-                    "release: data_mutations_extended.txt has samples "
-                    "absent from data_clinical.txt",
-                    n=n,
-                )
-            # gene-matrix↔case-list cross-check (cBioPortal
-            # validateData: a sample in the mutation profile must be
-            # in the _sequenced case list, or the importer drops its
-            # mutations from analysis views; reference writes
-            # _sequenced = all released samples,
-            # genie/create_case_lists.py:128-147)
-            if sequenced_ids is not None:
-                seq_df = _id_df(spark, sequenced_ids)
-                n = (
-                    maf.select(F.col(tsb).alias("SAMPLE_ID"))
-                    .distinct()
-                    .join(F.broadcast(seq_df), "SAMPLE_ID", "left_anti")
-                    .count()
-                )
-                if n:
-                    err(
-                        "release.cases_sequenced_coverage",
-                        "release: data_mutations_extended.txt has "
-                        "samples missing from cases_sequenced.txt",
-                        n=n,
-                    )
-        else:
-            err("release.maf_barcode",
-                "release: data_mutations_extended.txt has no "
-                "Tumor_Sample_Barcode column")
-        # per-column catalog (validateData.py mutation checks):
-        # chromosome domain and integer positions fail import
-        chrom_col = _resolve(maf, "Chromosome")
-        if chrom_col is not None:
-            valid_chroms = [str(i) for i in range(1, 23)] + ["X", "Y", "MT"]
-            n_bad = maf.where(
-                F.col(chrom_col).isNotNull()
-                & ~F.col(chrom_col).isin(valid_chroms)
-            ).count()
-            if n_bad:
-                err(
-                    "release.maf_chromosome",
-                    "release: data_mutations_extended.txt has Chromosome "
-                    "values outside 1-22/X/Y/MT",
-                    n=n_bad,
-                )
-        start_col = _resolve(maf, "Start_Position")
-        if start_col is not None:
-            # try_cast, not cast: ANSI mode makes cast THROW on garbage
-            n_bad = maf.where(
-                F.col(start_col).isNotNull()
-                & F.expr(f"try_cast(`{start_col}` as bigint)").isNull()
-            ).count()
-            if n_bad:
-                err(
-                    "release.maf_start_position",
-                    "release: data_mutations_extended.txt has non-integer "
-                    "Start_Position values",
-                    n=n_bad,
-                )
-        # Variant_Classification domain (cBioPortal validateData's
-        # MutationsExtendedValidator catalog): values outside the
-        # accepted set break oncoprint/annotation rendering.  Null is
-        # allowed (the column is optional in several importers).
-        vc = _resolve(maf, "Variant_Classification")
-        if vc is not None:
-            n_bad = maf.where(
-                F.col(vc).isNotNull()
-                & ~F.col(vc).isin(sorted(_VARIANT_CLASSIFICATIONS))
-            ).count()
-            if n_bad:
-                err(
-                    "release.maf_variant_classification",
-                    "release: data_mutations_extended.txt has "
-                    "Variant_Classification values outside the cBioPortal "
-                    "accepted set",
-                    n=n_bad,
-                )
-        # allele charset (genie/validate.py:426-480
-        # get_invalid_allele_rows + genie_registry/maf.py:157-159,
-        # 409-416): bases from {A,T,C,G,N} in combination, or a pure
-        # "-" run.  The reference calls it with ignore_case=True
-        # (lowercase acgt is VALID) and allow_na=False (str.match with
-        # na=False → a null allele IS a violation) — mirror both.
-        allele_ok = r"(?i)^([ATCGN]+|-+)$"
-        for logical in (
-            "Reference_Allele", "Tumor_Seq_Allele1", "Tumor_Seq_Allele2"
-        ):
-            acol = _resolve(maf, logical)
-            if acol is None:
-                continue
-            n_bad = maf.where(
-                F.col(acol).isNull() | ~F.col(acol).rlike(allele_ok)
-            ).count()
-            if n_bad:
-                err(
-                    "release.maf_allele_charset",
-                    f"release: data_mutations_extended.txt has {logical} "
-                    "values outside A/T/C/G/N (or '-'), or null",
-                    n=n_bad,
-                )
-
-    # --- NCBI build: SV domain + MAF↔SV consistency -----------------------
-    # The reference's SV validator restricts NCBI_BUILD to
-    # GRCh37/GRCh38 with NA allowed
-    # (genie_registry/structural_variant.py:209-217
-    # check_col_and_values); and a release whose MAF and SV disagree on
-    # the normalized build imports coordinates from two genomes into
-    # one cBioPortal study (the meta declares ONE reference_genome).
-    def _norm_build(c):
-        up = F.upper(F.trim(c))
-        return (
-            F.when(up.isin("37", "GRCH37", "HG19"), F.lit("GRCh37"))
-            .when(up.isin("38", "GRCH38", "HG38"), F.lit("GRCh38"))
-            .otherwise(F.trim(c))
-        )
-
-    builds_by_file: dict[str, set[str]] = {}
-
-    def _collect_builds(df: DataFrame, col: str, fname: str) -> None:
-        vals = {
-            r[0]
-            for r in df.where(
-                F.col(col).isNotNull() & (F.trim(F.col(col)) != "")
-                & (F.upper(F.trim(F.col(col))) != "NA")
-            )
-            .select(_norm_build(F.col(col)))
-            .distinct()
-            .collect()
-        }
-        if vals:
-            builds_by_file[fname] = vals
-
-    if os.path.isfile(maf_path):
-        maf_nb = _resolve(maf, "NCBI_Build")
-        if maf_nb is not None:
-            _collect_builds(maf, maf_nb, "data_mutations_extended.txt")
-    sv_path = os.path.join(release_dir, "data_sv.txt")
-    if os.path.isfile(sv_path):
-        sv = _read_release_tsv(spark, sv_path, comment=None)
-        sv_nb = _resolve(sv, "NCBI_BUILD")
-        if sv_nb is not None:
-            n_bad = sv.where(
-                F.col(sv_nb).isNotNull()
-                & (F.trim(F.col(sv_nb)) != "")
-                & (F.upper(F.trim(F.col(sv_nb))) != "NA")
-                & ~F.trim(F.col(sv_nb)).isin("GRCh37", "GRCh38")
-            ).count()
-            if n_bad:
-                err(
-                    "release.sv_ncbi_build",
-                    "release: data_sv.txt has NCBI_BUILD values outside "
-                    "GRCh37/GRCh38",
-                    n=n_bad,
-                )
-            _collect_builds(sv, sv_nb, "data_sv.txt")
-        # profile ⊆ its case list (the cases_sequenced analogue for
-        # the SV profile); data-sized SV table stays distributed
-        sv_sid = _resolve(sv, "SAMPLE_ID")
-        if sv_case_ids is not None and sv_sid is not None:
-            probe = _id_df(spark, sorted(sv_case_ids))
-            n = (
-                sv.select(F.col(sv_sid).alias("SAMPLE_ID"))
-                .distinct()
-                .join(F.broadcast(probe), "SAMPLE_ID", "left_anti")
-                .count()
-            )
-            if n:
-                err(
-                    "release.sv_case_list",
-                    "release: data_sv.txt samples missing from "
-                    "case_lists/cases_sv.txt",
-                    n=n,
-                )
-    all_builds = set().union(*builds_by_file.values()) if builds_by_file else set()
-    if len(all_builds) > 1:
-        err(
-            "release.ncbi_build_consistency",
-            "release: MAF/SV artifacts disagree on the reference "
-            "genome build: "
-            + "; ".join(
-                f"{f}={sorted(v)}" for f, v in sorted(builds_by_file.items())
-            ),
-        )
-
-    # --- gene matrix ↔ gene panel files ---------------------------------
+    # --- gene panel headers ----------------------------------------------
+    # (each non-empty gene_list ⊆ genomic_information.txt's Hugo_Symbols
+    # is a rule of the lists query)
     panel_files = {
         os.path.basename(p): p
         for p in glob.glob(os.path.join(release_dir, "data_gene_panel_*.txt"))
     }
-    # bed (genomic_information.txt) is read ahead of the matrix check:
-    # its SEQ_ASSAY_ID set drives the WES exemption below, its
-    # Hugo_Symbol set the per-panel gene check further down
-    bed_path = os.path.join(release_dir, "genomic_information.txt")
-    bed_symbols = None
-    bed_assay_ids: set[str] | None = None
-    if os.path.isfile(bed_path):
-        bed = _read_release_tsv(spark, bed_path, comment=None)
-        hugo = _resolve(bed, "Hugo_Symbol")
-        if hugo is not None:
-            bed_symbols = bed.select(
-                F.col(hugo).alias("Hugo_Symbol")
-            ).distinct()
-        bed_assay = _resolve(bed, "SEQ_ASSAY_ID")
-        if bed_assay is not None:
-            bed_assay_ids = {
-                r[0] for r in bed.select(bed_assay).distinct().collect()
-                if r[0] not in (None, "", "NA")
-            }
-            # all-blank assay column = no usable exemption basis: treat
-            # like an absent bed (flag every missing panel) instead of
-            # silently exempting them all through the empty set
-            if not bed_assay_ids:
-                bed_assay_ids = None
-    matrix_path = os.path.join(release_dir, "data_gene_matrix.txt")
-    if os.path.isfile(matrix_path):
-        matrix = _read_release_tsv(spark, matrix_path, comment=None)
-        gm_sid = _resolve(matrix, "SAMPLE_ID")
-        if gm_sid is not None:
-            n = (
-                matrix.select(F.col(gm_sid).alias("SAMPLE_ID")).distinct()
-                .join(clin_ids, "SAMPLE_ID", "left_anti").count()
-            )
-            if n:
-                err("release.gene_matrix_samples",
-                    "release: data_gene_matrix.txt has samples absent "
-                    "from data_clinical.txt", n=n)
-        gm_mut = _resolve(matrix, "mutations")
-        if gm_mut is not None:
-            panels = [
-                r[0]
-                for r in matrix.select(gm_mut).distinct().collect()
-                if r[0] not in (None, "", "NA")
-            ]
-            missing = [
-                p for p in panels
-                if f"data_gene_panel_{p}.txt" not in panel_files
-            ]
-            # WES panels are intentionally not written as panel files
-            # (store_gene_panel_files skips them); they are still valid
-            # matrix entries, so only flag when NO panel file AND the
-            # panel is referenced by the bed release file — a matrix
-            # assay id absent from genomic_information.txt's
-            # SEQ_ASSAY_IDs is exempt (no bed file → no exemption
-            # basis, flag everything missing)
-            if missing and bed_assay_ids is not None:
-                missing = [p for p in missing if p in bed_assay_ids]
-            if missing:
-                err(
-                    "release.gene_panel_files",
-                    "release: data_gene_matrix.txt references panels "
-                    "with no data_gene_panel_<id>.txt on disk",
-                    n=len(missing),
-                    examples=missing[:5],
-                )
-        # duplicate matrix rows: the reference build dedups on
-        # SAMPLE_ID before writing (database_to_staging.py:1628
-        # drop_duplicates) — two rows for one sample give the importer
-        # two panel claims and is a malformed release
-        if gm_sid is not None:
-            n_dup = (
-                matrix.groupBy(F.col(gm_sid)).count()
-                .where(F.col("count") > 1).count()
-            )
-            if n_dup:
-                err(
-                    "release.gene_matrix_dup_sample",
-                    "release: data_gene_matrix.txt has samples with "
-                    "multiple rows (the reference dedups on SAMPLE_ID "
-                    "before writing)",
-                    n=n_dup,
-                )
-        # matrix ↔ clinical assay agreement: the matrix IS clinical's
-        # (SAMPLE_ID, SEQ_ASSAY_ID) projection renamed to `mutations`
-        # (database_to_staging.py:1622-1626), so a matrix row whose
-        # panel disagrees with the sample's clinical assay id means
-        # the two artifacts were built from different snapshots
-        clin_assay = _resolve(clinical, "SEQ_ASSAY_ID")
-        if gm_sid is not None and gm_mut is not None and clin_assay is not None:
-            n_mismatch = (
-                matrix.select(
-                    F.col(gm_sid).alias("SAMPLE_ID"),
-                    F.col(gm_mut).alias("__panel"),
-                )
-                .join(
-                    clinical.select(
-                        F.col(clin_sid).alias("SAMPLE_ID"),
-                        F.col(clin_assay).alias("__assay"),
-                    ),
-                    "SAMPLE_ID",
-                )
-                .where(
-                    F.col("__assay").isNotNull()
-                    & (F.col("__panel") != F.col("__assay"))
-                )
-                .count()
-            )
-            if n_mismatch:
-                err(
-                    "release.gene_matrix_assay_mismatch",
-                    "release: data_gene_matrix.txt `mutations` disagrees "
-                    "with the sample's clinical SEQ_ASSAY_ID (the matrix "
-                    "is built from that column)",
-                    n=n_mismatch,
-                )
-        # gene-matrix ↔ case-list cross-check (cBioPortal validateData:
-        # a _sequenced sample with no matrix row has no panel the
-        # importer can attribute its profile to).  WES samples are
-        # exempt when a bed file gives an exemption basis — the
-        # reference REMOVES WES rows from the matrix on purpose
-        # (database_to_staging.py:1631-1632), mirroring the
-        # gene_panel_files exemption above.
-        if gm_sid is not None and sequenced_ids is not None:
-            seq_df = _id_df(spark, sequenced_ids)
-            missing_df = seq_df.join(
-                matrix.select(F.col(gm_sid).alias("SAMPLE_ID")).distinct(),
-                "SAMPLE_ID",
-                "left_anti",
-            )
-            if bed_assay_ids is not None and clin_assay is not None:
-                missing_df = missing_df.join(
-                    clinical.select(
-                        F.col(clin_sid).alias("SAMPLE_ID"),
-                        F.col(clin_assay).alias("__assay"),
-                    ),
-                    "SAMPLE_ID",
-                    "left",
-                ).where(F.col("__assay").isin(sorted(bed_assay_ids)))
-            n = missing_df.count()
-            if n:
-                err(
-                    "release.gene_matrix_cases_sequenced",
-                    "release: cases_sequenced.txt lists samples with no "
-                    "data_gene_matrix.txt row (and a panel-backed assay "
-                    "— not WES-exempt)",
-                    n=n,
-                )
-
-    # --- gene panels ↔ genomic information ------------------------------
-    # (bed_symbols read above, next to the bed assay-id set)
+    panel_genes: list[str] = []
     for name, p in sorted(panel_files.items()):
         kv = _parse_kv_text(p)
         missing_keys = [
@@ -1103,16 +744,9 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         if not genes:
             err("release.gene_panel_empty", f"release: {name} has an "
                 "empty gene_list")
-        elif bed_symbols is not None:
-            stray = _missing_from(spark, genes, bed_symbols, "Hugo_Symbol")
-            if stray:
-                err(
-                    "release.gene_panel_genes",
-                    f"release: {name} lists genes absent from "
-                    f"genomic_information.txt",
-                    n=len(stray),
-                    examples=stray[:5],
-                )
+        else:
+            panel_genes.append(name)
+            list_rows.update((name, g) for g in genes)
 
     # --- cBioPortal meta files ------------------------------------------
     # every data artifact needs its meta, and each meta's data_filename
@@ -1265,25 +899,18 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         )
 
     # --- CNA matrix headers ---------------------------------------------
+    # (sample columns ⊆ clinical is a rule of the lists query)
     cna_path = os.path.join(release_dir, "data_CNA.txt")
     if os.path.isfile(cna_path):
         with open(cna_path) as fh:
             header = fh.readline().rstrip("\n").split("\t")
         samples = [c for c in header if c.lower() != "hugo_symbol"]
-        stray = _missing_from(spark, samples, clin_ids, "SAMPLE_ID")
-        if stray:
-            err(
-                "release.cna_samples",
-                "release: data_CNA.txt has sample columns absent from "
-                "data_clinical.txt",
-                n=len(stray),
-                examples=stray[:5],
-            )
+        list_rows.update(("data_CNA.txt", s) for s in samples)
         # profile ⊆ its case list (validateData: a profiled sample
         # missing from cases_cna is invisible in CNA views) — both
         # sides KB-scale driver lists, a set diff suffices
-        if cna_case_ids is not None:
-            not_listed = sorted(set(samples) - cna_case_ids)
+        if "cases_cna.txt" in case_ids:
+            not_listed = sorted(set(samples) - set(case_ids["cases_cna.txt"]))
             if not_listed:
                 err(
                     "release.cna_case_list",
@@ -1292,9 +919,246 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
                     n=len(not_listed),
                     examples=not_listed[:5],
                 )
-        # discrete CNA value domain (validateData.py: GISTIC-style
-        # calls must be -2/-1.5/-1/0/1/2 or NA); one distributed pass
-        # over an array of all sample columns, no per-column jobs
+
+    # ====================================================================
+    # data checks: ONE RuleSet query per data-sized released file, plus
+    # one over the driver-parsed lists
+    # ====================================================================
+    lists = local_rows_df(spark, sorted(list_rows), "source string, id string")
+
+    def listed(name: str, child: str) -> Column:
+        """True where ``child`` is one of case list ``name``'s ids."""
+        return _has(lists.where(F.col("source") == name), F.col("id"), child)
+
+    # containment in the OTHER direction (cBioPortal validateData:
+    # the all_cases_in_study list must cover every study sample —
+    # a clinical sample missing from cases_all.txt is silently
+    # excluded from study-wide views after import).  Forward
+    # containment (ids ⊆ clinical) is a rule of the lists query.
+    if "cases_all.txt" in case_ids:
+        clin_rules.append(_absent(
+            "release.case_list_all_coverage", clin_sid,
+            listed("cases_all.txt", clin_sid),
+            "release: {n} data_clinical.txt sample(s) missing from "
+            "case_lists/cases_all.txt (all_cases_in_study must cover the study)"))
+    checks.append(("data_clinical.txt", clinical, clin_rules))
+
+    # genomic_information.txt is only ever a parent inside other
+    # files' queries: its Hugo_Symbols back the panel gene check, its
+    # SEQ_ASSAY_IDs the WES exemption
+    bed_path = os.path.join(release_dir, "genomic_information.txt")
+    bed = bed_gene = bed_assays = None
+    if os.path.isfile(bed_path):
+        bed = _read_release_tsv(spark, bed_path, comment=None)
+        bed_gene = _resolve(bed, "Hugo_Symbol")
+        bed_assay = _resolve(bed, "SEQ_ASSAY_ID")
+        if bed_assay is not None:
+            a = qcol(bed_assay)
+            bed_assays = bed.where(a.isNotNull() & ~a.isin("", "NA")).select(
+                a.alias("__gs_assay"))
+
+    def panel_backed(parent: DataFrame, key: Column, child: str) -> Column:
+        """``_has`` under the WES exemption: WES panels are intentionally
+        not written as panel files (store_gene_panel_files skips them),
+        so only assays in genomic_information.txt's SEQ_ASSAY_IDs count
+        as panel-backed.  An all-blank assay column gives no exemption
+        basis: every assay counts, as with no bed file at all."""
+        return _has(parent, key, child) | ~bed_assays.exists()
+
+    # --- maf -------------------------------------------------------------
+    maf_path = os.path.join(release_dir, "data_mutations_extended.txt")
+    maf = maf_nb = None
+    if os.path.isfile(maf_path):
+        maf = _read_release_tsv(spark, maf_path, comment=None)
+        maf_rules = []
+        tsb = _resolve(maf, "Tumor_Sample_Barcode")
+        if tsb is None:
+            err("release.maf_barcode",
+                "release: data_mutations_extended.txt has no "
+                "Tumor_Sample_Barcode column")
+        else:
+            maf_rules.append(_absent(
+                "release.maf_samples", tsb, in_clinical(tsb),
+                "release: data_mutations_extended.txt has {n} sample(s) "
+                "absent from data_clinical.txt"))
+            # gene-matrix↔case-list cross-check (cBioPortal
+            # validateData: a sample in the mutation profile must be
+            # in the _sequenced case list, or the importer drops its
+            # mutations from analysis views; reference writes
+            # _sequenced = all released samples,
+            # genie/create_case_lists.py:128-147)
+            if "cases_sequenced.txt" in case_ids:
+                maf_rules.append(_absent(
+                    "release.cases_sequenced_coverage", tsb,
+                    listed("cases_sequenced.txt", tsb),
+                    "release: data_mutations_extended.txt has {n} sample(s) "
+                    "missing from cases_sequenced.txt"))
+        # per-column catalog (validateData.py mutation checks):
+        # chromosome domain and integer positions fail import
+        chrom_col = _resolve(maf, "Chromosome")
+        if chrom_col is not None:
+            valid_chroms = [str(i) for i in range(1, 23)] + ["X", "Y", "MT"]
+            c = qcol(chrom_col)
+            maf_rules.append(RowRule(
+                "release.maf_chromosome", "error",
+                c.isNotNull() & ~c.isin(valid_chroms),
+                "release: data_mutations_extended.txt has {n} Chromosome "
+                "value(s) outside 1-22/X/Y/MT: {examples}", example_col=chrom_col))
+        start_col = _resolve(maf, "Start_Position")
+        if start_col is not None:
+            # try_cast, not cast: ANSI mode makes cast THROW on garbage
+            s = qcol(start_col)
+            maf_rules.append(RowRule(
+                "release.maf_start_position", "error",
+                s.isNotNull() & s.try_cast("bigint").isNull(),
+                "release: data_mutations_extended.txt has {n} non-integer "
+                "Start_Position value(s)"))
+        # Variant_Classification domain (cBioPortal validateData's
+        # MutationsExtendedValidator catalog): values outside the
+        # accepted set break oncoprint/annotation rendering.  Null is
+        # allowed (the column is optional in several importers).
+        vc = _resolve(maf, "Variant_Classification")
+        if vc is not None:
+            maf_rules.append(RowRule(
+                "release.maf_variant_classification", "error",
+                qcol(vc).isNotNull() & ~qcol(vc).isin(sorted(_VARIANT_CLASSIFICATIONS)),
+                "release: data_mutations_extended.txt has {n} "
+                "Variant_Classification value(s) outside the cBioPortal "
+                "accepted set: {examples}", example_col=vc))
+        # allele charset (genie/validate.py:426-480
+        # get_invalid_allele_rows + genie_registry/maf.py:157-159,
+        # 409-416): bases from {A,T,C,G,N} in combination, or a pure
+        # "-" run.  The reference calls it with ignore_case=True
+        # (lowercase acgt is VALID) and allow_na=False (str.match with
+        # na=False → a null allele IS a violation) — mirror both.
+        allele_ok = r"(?i)^([ATCGN]+|-+)$"
+        for logical in (
+            "Reference_Allele", "Tumor_Seq_Allele1", "Tumor_Seq_Allele2"
+        ):
+            acol = _resolve(maf, logical)
+            if acol is not None:
+                maf_rules.append(RowRule(
+                    "release.maf_allele_charset", "error",
+                    qcol(acol).isNull() | ~qcol(acol).rlike(allele_ok),
+                    f"release: data_mutations_extended.txt has {{n}} {logical} "
+                    "value(s) outside A/T/C/G/N (or '-'), or null"))
+        # one normalized reference build in the MAF (its agreement with
+        # the SV file is the SV query's)
+        maf_nb = _resolve(maf, "NCBI_Build")
+        if maf_nb is not None:
+            n_builds = _n_distinct(_build(qcol(maf_nb)))
+            maf_rules.append(AggRule(
+                "release.ncbi_build_consistency", "error",
+                F.when(n_builds > 1, n_builds),
+                "release: data_mutations_extended.txt carries {n} normalized "
+                "NCBI_Build values; a study declares one reference genome"))
+        checks.append(("data_mutations_extended.txt", maf, maf_rules))
+
+    # --- NCBI build: SV domain + MAF↔SV consistency -----------------------
+    # The reference's SV validator restricts NCBI_BUILD to
+    # GRCh37/GRCh38 with NA allowed
+    # (genie_registry/structural_variant.py:209-217
+    # check_col_and_values); and a release whose MAF and SV disagree on
+    # the normalized build imports coordinates from two genomes into
+    # one cBioPortal study (the meta declares ONE reference_genome).
+    sv_path = os.path.join(release_dir, "data_sv.txt")
+    if os.path.isfile(sv_path):
+        sv = _read_release_tsv(spark, sv_path, comment=None)
+        sv_rules = []
+        sv_nb = _resolve(sv, "NCBI_BUILD")
+        if sv_nb is not None:
+            b = qcol(sv_nb)
+            sv_rules.append(RowRule(
+                "release.sv_ncbi_build", "error",
+                _build(b).isNotNull() & ~F.trim(b).isin("GRCh37", "GRCh38"),
+                "release: data_sv.txt has {n} NCBI_BUILD value(s) outside "
+                "GRCh37/GRCh38: {examples}", example_col=sv_nb))
+            # the MAF's distinct builds enter as one scalar subquery; a
+            # MAF that disagrees with itself is the MAF query's message
+            maf_builds = F.array().cast("array<string>")
+            if maf_nb is not None:
+                maf_builds = maf.agg(F.collect_set(_build(qcol(maf_nb)))).scalar()
+            n_builds = F.size(F.array_union(F.collect_set(_build(b)), maf_builds))
+            sv_rules.append(AggRule(
+                "release.ncbi_build_consistency", "error",
+                F.when((n_builds > 1) & (F.size(maf_builds) <= 1), n_builds),
+                "release: data_sv.txt and data_mutations_extended.txt carry "
+                "{n} normalized reference builds between them; a study "
+                "declares one reference genome"))
+        sv_sid = _resolve(sv, "SAMPLE_ID")
+        if sv_sid is not None:
+            sv_rules.append(_absent(
+                "release.sv_samples", sv_sid, in_clinical(sv_sid),
+                "release: data_sv.txt has {n} sample(s) absent from "
+                "data_clinical.txt"))
+            # profile ⊆ its case list (the cases_sequenced analogue for
+            # the SV profile)
+            if "cases_sv.txt" in case_ids:
+                sv_rules.append(_absent(
+                    "release.sv_case_list", sv_sid,
+                    listed("cases_sv.txt", sv_sid),
+                    "release: data_sv.txt has {n} sample(s) missing from "
+                    "case_lists/cases_sv.txt"))
+        checks.append(("data_sv.txt", sv, sv_rules))
+
+    # --- gene matrix ↔ clinical and gene panel files ---------------------
+    matrix_path = os.path.join(release_dir, "data_gene_matrix.txt")
+    matrix = gm_sid = None
+    if os.path.isfile(matrix_path):
+        matrix = _read_release_tsv(spark, matrix_path, comment=None)
+        gm_rules = []
+        gm_sid = _resolve(matrix, "SAMPLE_ID")
+        gm_mut = _resolve(matrix, "mutations")
+        if gm_sid is not None:
+            gm_rules.append(_absent(
+                "release.gene_matrix_samples", gm_sid, in_clinical(gm_sid),
+                "release: data_gene_matrix.txt has {n} sample(s) absent from "
+                "data_clinical.txt"))
+            # duplicate matrix rows: the reference build dedups on
+            # SAMPLE_ID before writing (database_to_staging.py:1628
+            # drop_duplicates) — two rows for one sample give the
+            # importer two panel claims and is a malformed release
+            gm_rules.append(RowRule(
+                "release.gene_matrix_dup_sample", "error", duplicated([gm_sid]),
+                "release: data_gene_matrix.txt has {n} row(s) sharing a "
+                "duplicated SAMPLE_ID (the reference dedups on SAMPLE_ID "
+                "before writing): {examples}", example_col=gm_sid))
+        if gm_mut is not None:
+            # every referenced panel has a data_gene_panel_<id>.txt on
+            # disk (genie/database_to_staging.py:809-859
+            # store_gene_panel_files), WES assays exempt
+            mut = qcol(gm_mut)
+            panels = [n[len("data_gene_panel_"):-len(".txt")] for n in panel_files]
+            no_file = mut.isNotNull() & ~mut.isin("", "NA", *sorted(panels))
+            if bed_assays is not None:
+                no_file &= panel_backed(bed_assays, F.col("__gs_assay"), gm_mut)
+            gm_rules.append(RowRule(
+                "release.gene_panel_files", "error", no_file,
+                "release: {n} data_gene_matrix.txt row(s) reference panels "
+                "with no data_gene_panel_<id>.txt on disk: {examples}",
+                example_col=gm_mut))
+            # matrix ↔ clinical assay agreement: the matrix IS
+            # clinical's (SAMPLE_ID, SEQ_ASSAY_ID) projection renamed to
+            # `mutations` (database_to_staging.py:1622-1626), so a
+            # matrix row whose panel disagrees with the sample's
+            # clinical assay id means the two artifacts were built from
+            # different snapshots
+            if gm_sid is not None and clin_assay is not None:
+                assay = qcol(clin_assay)
+                other_assay = clinical.where(
+                    assay.isNotNull() & (assay != _outer(gm_mut)))
+                gm_rules.append(RowRule(
+                    "release.gene_matrix_assay_mismatch", "error",
+                    _has(other_assay, qcol(clin_sid), gm_sid),
+                    "release: data_gene_matrix.txt has {n} row(s) whose "
+                    "`mutations` disagrees with the sample's clinical "
+                    "SEQ_ASSAY_ID (the matrix is built from that column)"))
+        checks.append(("data_gene_matrix.txt", matrix, gm_rules))
+
+    # --- discrete CNA value domain --------------------------------------
+    # (validateData.py: GISTIC-style calls must be -2/-1.5/-1/0/1/2 or
+    # NA); one array over all sample columns, no per-column pass
+    if os.path.isfile(cna_path):
         cna = _read_release_tsv(spark, cna_path, comment=None)
         cna_samples = [c for c in cna.columns if c.lower() != "hugo_symbol"]
         if cna_samples:
@@ -1302,62 +1166,84 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
             # renderings — cBioPortal parses either
             allowed = ["-2", "-1.5", "-1", "0", "1", "2", "NA", "",
                        "-2.0", "-1.0", "0.0", "1.0", "2.0"]
-            vals = F.array(
-                *[F.coalesce(cna[c].cast("string"), F.lit("NA")) for c in cna_samples]
-            )
-            n_bad = (
-                cna.select(
-                    F.size(
-                        F.filter(vals, lambda x: ~x.isin(allowed))
-                    ).alias("bad")
-                )
-                .agg(F.sum("bad"))
-                .first()[0]
-            )
-            if n_bad:
-                err(
-                    "release.cna_values",
-                    "release: data_CNA.txt has values outside the "
-                    "discrete -2/-1.5/-1/0/1/2/NA domain",
-                    n=int(n_bad),
-                )
+            vals = F.array(*[F.coalesce(qcol(c), F.lit("NA")) for c in cna_samples])
+            checks.append(("data_CNA.txt", cna, [AggRule(
+                "release.cna_values", "error",
+                F.sum(F.size(F.filter(vals, lambda x: ~x.isin(allowed)))),
+                "release: data_CNA.txt has {n} value(s) outside the "
+                "discrete -2/-1.5/-1/0/1/2/NA domain")]))
 
     # --- seg numeric columns --------------------------------------------
     seg_path = os.path.join(release_dir, "genie_data_cna_hg19.seg")
     if os.path.isfile(seg_path):
         seg = _read_release_tsv(spark, seg_path, comment=None)
+        seg_rules = []
         for col_name in ("loc.start", "loc.end", "num.mark", "seg.mean"):
             actual = _resolve(seg, col_name)
-            if actual is None:
-                continue
-            n_bad = seg.where(
-                F.col(f"`{actual}`").isNotNull()
-                & F.expr(f"try_cast(`{actual}` as double)").isNull()
-            ).count()
-            if n_bad:
-                err(
-                    "release.seg_numeric",
-                    f"release: genie_data_cna_hg19.seg has non-numeric "
-                    f"{col_name} values",
-                    n=n_bad,
-                )
+            if actual is not None:
+                v = qcol(actual)
+                seg_rules.append(RowRule(
+                    "release.seg_numeric", "error",
+                    v.isNotNull() & v.try_cast("double").isNull(),
+                    f"release: genie_data_cna_hg19.seg has {{n}} non-numeric "
+                    f"{col_name} value(s)"))
         # coordinate sanity (reference genie_registry/seg.py validates
         # loc.start/loc.end as integer positions): a segment whose end
         # precedes its start, or with a non-positive coordinate, is
         # structurally impossible and poisons downstream interval joins
         s_col, e_col = _resolve(seg, "loc.start"), _resolve(seg, "loc.end")
         if s_col is not None and e_col is not None:
-            s = F.expr(f"try_cast(`{s_col}` as bigint)")
-            e = F.expr(f"try_cast(`{e_col}` as bigint)")
-            n_bad = seg.where(
-                s.isNotNull() & e.isNotNull() & ((s > e) | (s <= 0) | (e <= 0))
-            ).count()
-            if n_bad:
-                err(
-                    "release.seg_coordinates",
-                    "release: genie_data_cna_hg19.seg has segments with "
-                    "loc.start > loc.end or non-positive coordinates",
-                    n=n_bad,
-                )
+            s = qcol(s_col).try_cast("bigint")
+            e = qcol(e_col).try_cast("bigint")
+            seg_rules.append(RowRule(
+                "release.seg_coordinates", "error",
+                s.isNotNull() & e.isNotNull() & ((s > e) | (s <= 0) | (e <= 0)),
+                "release: genie_data_cna_hg19.seg has {n} segment(s) with "
+                "loc.start > loc.end or non-positive coordinates"))
+        checks.append(("genie_data_cna_hg19.seg", seg, seg_rules))
 
+    # --- driver-parsed lists ⊆ their data-sized parents -----------------
+    def absent_from(rule_id: str, name: str, found: Column, what: str) -> RowRule:
+        return RowRule(
+            rule_id, "error", (F.col("source") == name) & ~found,
+            f"release: {_literal(name)} lists {{n}} {what}: {{examples}}",
+            example_col="id")
+
+    list_rules = [
+        absent_from("release.case_list_samples", name, in_clinical("id"),
+                    "sample(s) absent from data_clinical.txt")
+        for name in checked_lists
+    ]
+    if os.path.isfile(cna_path):
+        list_rules.append(absent_from(
+            "release.cna_samples", "data_CNA.txt", in_clinical("id"),
+            "sample column(s) absent from data_clinical.txt"))
+    if bed_gene is not None:
+        list_rules += [
+            absent_from("release.gene_panel_genes", name,
+                        _has(bed, qcol(bed_gene), "id"),
+                        "gene(s) absent from genomic_information.txt")
+            for name in panel_genes
+        ]
+    # gene-matrix ↔ case-list cross-check (cBioPortal validateData: a
+    # _sequenced sample with no matrix row has no panel the importer
+    # can attribute its profile to).  WES samples are exempt — the
+    # reference REMOVES WES rows from the matrix on purpose
+    # (database_to_staging.py:1631-1632), mirroring the
+    # gene_panel_files exemption.
+    if gm_sid is not None and "cases_sequenced.txt" in case_ids:
+        rule = absent_from(
+            "release.gene_matrix_cases_sequenced", "cases_sequenced.txt",
+            _has(matrix, qcol(gm_sid), "id"),
+            "sample(s) with no data_gene_matrix.txt row (and a panel-backed "
+            "assay — not WES-exempt)")
+        if clin_assay is not None and bed_assays is not None:
+            backed = clinical.join(
+                bed_assays, qcol(clin_assay) == F.col("__gs_assay"), "left_semi")
+            rule.violation &= panel_backed(backed, qcol(clin_sid), "id")
+        list_rules.append(rule)
+    checks.append(("driver-parsed lists", lists, list_rules))
+
+    for fname, df, rules in checks:
+        msgs.extend(RuleSet(fname, rules).validate(df.alias(_CHILD)).messages)
     return ValidationReport("release", msgs)

@@ -2196,6 +2196,13 @@ def _meta_study_missing_description(out):
         f.writelines(kept)
 
 
+def _sv_stray_sample(out):
+    with open(os.path.join(out, "data_sv.txt"), "w") as f:
+        f.write(
+            "SAMPLE_ID\tNCBI_BUILD\nGENIE-SAGE-1-1\tGRCh37\nGENIE-X-9-9\tGRCh37\n"
+        )
+
+
 @pytest.mark.parametrize(
     "mutate,rule_id",
     [
@@ -2214,6 +2221,7 @@ def _meta_study_missing_description(out):
         (_maf_hg38_alias_disagrees, "release.ncbi_build_consistency"),
         (_cases_sequenced_misses_maf_sample, "release.cases_sequenced_coverage"),
         (_meta_study_missing_description, "release.meta_study_fields"),
+        (_sv_stray_sample, "release.sv_samples"),
     ],
     ids=lambda p: p if isinstance(p, str) else p.__name__,
 )
@@ -2225,6 +2233,108 @@ def test_release_qc_full_rule_matrix(spark, tmp_path, mutate, rule_id):
     mutate(out)
     ids = {m.rule_id for m in validate_release(spark, out).errors}
     assert rule_id in ids, ids
+
+
+def _newest_execution_id(spark) -> int:
+    """Id of the newest SQL execution in the status store (ids grow by
+    one per query; the store evicts only the oldest)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def test_release_qc_one_query_per_file(spark, tmp_path):
+    """validate_release issues ONE Spark query per data-sized released
+    file (clinical, MAF, SV, gene matrix here) plus one over the
+    driver-parsed lists, and release/qc.py runs no action of its own."""
+    from genie_spark.release import qc
+
+    out = _build_clean_release(spark, tmp_path / "rel")
+    before = _newest_execution_id(spark)
+    assert qc.validate_release(spark, out).errors == []
+    assert _newest_execution_id(spark) - before == 5
+    with open(qc.__file__) as f:
+        src = f.read()
+    for action in (".count(", ".collect(", ".first(", ".take("):
+        assert action not in src, action
+
+
+def test_release_qc_punctuated_clinical_attribute(spark, tmp_path):
+    """A clinical attribute id containing '.' (or a message-template
+    brace) is a charset violation, not a crash of the NUMBER-typed
+    value check."""
+    from genie_spark.release.qc import validate_release
+
+    out = _build_clean_release(spark, tmp_path / "rel")
+    with open(os.path.join(out, "data_clinical.txt"), "w") as f:
+        f.write(
+            "#Sample Id\tPatient Id\tAge\tStage\n#d\td\td\td\n"
+            "#STRING\tSTRING\tNUMBER\tNUMBER\n#1\t1\t1\t1\n"
+            "SAMPLE_ID\tPATIENT_ID\tAGE.AT\tSTAGE{N}\n"
+            "GENIE-SAGE-1-1\tGENIE-SAGE-1\tsixty\ttwo\n"
+        )
+    msgs = validate_release(spark, out).errors
+    (charset,) = [m for m in msgs if m.rule_id == "release.clinical_attr_charset"]
+    assert charset.examples == ["AGE.AT", "STAGE{N}"]
+    typed = sorted(
+        (m.message.split(" is declared")[0], m.examples)
+        for m in msgs if m.rule_id == "release.clinical_datatype_number"
+    )
+    assert typed == [
+        ("release: data_clinical.txt column AGE.AT", ["sixty"]),
+        ("release: data_clinical.txt column STAGE{N}", ["two"]),
+    ]
+
+
+def test_release_qc_split_samples_true_count(spark, tmp_path):
+    """release.clinical_split_samples counts every stray split sample
+    (not a capped sample of them) and keeps five examples."""
+    from genie_spark.io.writers import cbio_meta_texts
+    from genie_spark.release.qc import validate_release
+
+    out = _build_clean_release(spark, tmp_path / "rel")
+    stray = "".join(f"GENIE-SAGE-9\tGENIE-SAGE-9-{i}\n" for i in range(9))
+    with open(os.path.join(out, "data_clinical_sample.txt"), "w") as f:
+        f.write(
+            "#Patient Id\tSample Id\n#d\td\n#STRING\tSTRING\n#1\t1\n"
+            "PATIENT_ID\tSAMPLE_ID\nGENIE-SAGE-1\tGENIE-SAGE-1-1\n" + stray
+        )
+    present = {n for n in os.listdir(out) if os.path.isfile(os.path.join(out, n))}
+    for name, text in cbio_meta_texts("s", "1.0", present).items():
+        with open(os.path.join(out, name), "w") as f:
+            f.write(text)
+    (m,) = [
+        m for m in validate_release(spark, out).errors
+        if m.rule_id == "release.clinical_split_samples"
+    ]
+    assert m.n_violations == 9
+    assert m.examples == [f"GENIE-SAGE-9-{i}" for i in range(5)]
+
+
+def test_read_release_tsv_header_sanitizing(spark, tmp_path):
+    """Released TSVs read with a schema built from the header line: the
+    same columns and rows as Spark's header inference, and no job."""
+    from genie_spark.release.qc import _read_release_tsv
+
+    path = tmp_path / "t.txt"
+    path.write_text(
+        '#comment\nSAMPLE_ID\tX\tsample_id\t""\tX\na\tb\tc\td\te\nf\t\th\ti\tj\n'
+    )
+    def newest_job():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    before = newest_job()
+    df = _read_release_tsv(spark, str(path))
+    assert df.columns == ["SAMPLE_ID0", "X1", "sample_id2", "_c3", "X4"]
+    assert newest_job() == before
+    inferred = (
+        spark.read.option("sep", "\t").option("header", "true")
+        .option("comment", "#").csv(str(path))
+    )
+    assert inferred.columns == df.columns
+    assert sorted(df.collect()) == sorted(inferred.collect())
 
 
 def test_corpus_dedup_command(spark, tmp_path):
