@@ -643,6 +643,7 @@ def cmd_public(spark: SparkSession, args: argparse.Namespace) -> int:
     panel/bed reference files are carried through unchanged."""
     import shutil
 
+    from genie_spark.io.readers import read_delimited
     from genie_spark.io.writers import (
         case_list_texts,
         write_cbio_clinical,
@@ -650,25 +651,24 @@ def cmd_public(spark: SparkSession, args: argparse.Namespace) -> int:
     )
     from genie_spark.release.pipeline import ReleaseArtifacts, consortium_to_public
 
-    def read_tsv(name, comment=None):
-        path = os.path.join(args.release_dir, name)
-        if not os.path.isfile(path):
-            return None
-        reader = spark.read.option("sep", "\t").option("header", "true")
-        if comment:
-            reader = reader.option("comment", comment)
-        return reader.csv(path)
-
-    clin = read_tsv("data_clinical.txt", comment="#")
-    maf = read_tsv("data_mutations_extended.txt")
-    arts = ReleaseArtifacts(clinical=clin, maf=maf)
-    arts.sv = read_tsv("data_sv.txt")
-    arts.seg = read_tsv("genie_data_cna_hg19.seg")
+    # released data files carry no '#' rows, except data_clinical.txt
+    released = {
+        n: read_delimited(spark, os.path.join(args.release_dir, n), comment=None)
+        for n in (
+            "data_mutations_extended.txt", "data_sv.txt",
+            "genie_data_cna_hg19.seg", "data_CNA.txt", "data_gene_matrix.txt",
+        )
+        if os.path.isfile(os.path.join(args.release_dir, n))
+    }
+    clin = read_delimited(spark, os.path.join(args.release_dir, "data_clinical.txt"))
+    arts = ReleaseArtifacts(clinical=clin, maf=released.get("data_mutations_extended.txt"))
+    arts.sv = released.get("data_sv.txt")
+    arts.seg = released.get("genie_data_cna_hg19.seg")
     keep = clin.select("SAMPLE_ID")
     if args.keep_samples:
-        keep = spark.read.option("header", "false").csv(args.keep_samples).toDF(
-            "SAMPLE_ID"
-        )
+        keep = read_delimited(
+            spark, args.keep_samples, sep=",", header=False, comment=None
+        ).toDF("SAMPLE_ID")
     pub = consortium_to_public(
         arts, keep, private_columns=args.private_columns.split(",") if args.private_columns else []
     )
@@ -693,9 +693,8 @@ def cmd_public(spark: SparkSession, args: argparse.Namespace) -> int:
 
     # CNA: keep only public sample columns (the reference parses the
     # header and subsets columns, consortium_to_public.py:290-309)
-    cna_path = os.path.join(args.release_dir, "data_CNA.txt")
-    if os.path.isfile(cna_path):
-        cna = read_tsv("data_CNA.txt")
+    cna = released.get("data_CNA.txt")
+    if cna is not None:
         keep_cols = ["Hugo_Symbol"] + [
             c for c in cna.columns if c in public_ids
         ]
@@ -706,7 +705,7 @@ def cmd_public(spark: SparkSession, args: argparse.Namespace) -> int:
         )
 
     # gene matrix: drop non-public rows (consortium_to_public.py:115-171)
-    gm = read_tsv("data_gene_matrix.txt")
+    gm = released.get("data_gene_matrix.txt")
     if gm is not None and "SAMPLE_ID" in gm.columns:
         write_tsv(
             gm.join(keep.select("SAMPLE_ID"), "SAMPLE_ID", "left_semi"),
@@ -743,10 +742,7 @@ def cmd_public(spark: SparkSession, args: argparse.Namespace) -> int:
     ):
         from genie_spark.io.writers import case_list_alteration_texts
 
-        assay_info = (
-            spark.read.option("sep", "\t").option("header", "true")
-            .csv(assay_txt)
-        )
+        assay_info = read_delimited(spark, assay_txt, comment=None)
         if "alteration_types" in assay_info.columns:
             cl_texts.update(
                 case_list_alteration_texts(pub_clin_cl, assay_info, study_id)
@@ -852,14 +848,11 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
     cur_dir = getattr(args, "release_dir", None)
     prev_dir = getattr(args, "prev_release_dir", None)
     if cur_dir and prev_dir:
+        from genie_spark.io.readers import read_delimited
         from genie_spark.operators.aggregations import value_count_decreases
 
         def read_clin(d):
-            df = (
-                spark.read.option("sep", "\t").option("header", "true")
-                .option("comment", "#")
-                .csv(os.path.join(d, "data_clinical.txt"))
-            )
+            df = read_delimited(spark, os.path.join(d, "data_clinical.txt"))
             if "CENTER" not in df.columns:
                 # the reference derives CENTER from the GENIE-{center}-…
                 # identifier (dashboard_table_updater.py:736-744)
@@ -1167,11 +1160,10 @@ def data_guide_html(
     dim-sized results cross the driver boundary."""
     import html as _html
 
-    from genie_spark.release.qc import _read_release_tsv, _resolve
+    from genie_spark.io.readers import read_delimited
+    from genie_spark.release.qc import _resolve
 
-    clin = _read_release_tsv(
-        spark, os.path.join(release_dir, "data_clinical.txt")
-    )
+    clin = read_delimited(spark, os.path.join(release_dir, "data_clinical.txt"))
     sid = _resolve(clin, "SAMPLE_ID")
     pid = _resolve(clin, "PATIENT_ID")
     assay = _resolve(clin, "SEQ_ASSAY_ID")

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from genie_spark.io import readers
 from genie_spark.rules.clinical import patient_rules, sample_rules
-from genie_spark.rules.engine import RuleSet
+from genie_spark.rules.engine import RuleSet, qcol
 from genie_spark.rules.genomic import (
     assay_rules,
     bed_rules,
@@ -75,8 +75,7 @@ def _read_clinical(spark: SparkSession, paths: list[str]) -> DataFrame:
         patient_path = next(p for p in paths if "patient" in os.path.basename(p))
         _, _, merged = readers.read_clinical_pair(spark, sample_path, patient_path)
         return merged
-    df = readers.read_tsv(spark, paths[0])
-    return df.toDF(*[c.upper() for c in df.columns])
+    return readers.read_delimited(spark, paths[0], upper=True)
 
 
 def _read_bed(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -118,7 +117,7 @@ def _maf_transform(df: DataFrame) -> DataFrame:
 def _read_cna(spark: SparkSession, paths: list[str]) -> DataFrame:
     """CNA matrix scan: the upload is WIDE (first column Hugo_Symbol,
     one column per sample — genie_registry/cna.py:192-233); the engine
-    keeps CNA long (SURVEY §1.1), so melt at read with ``stack``.
+    keeps CNA long (SURVEY §1.1), so melt at read with ``unpivot``.
     Values stay strings here; the value-domain rule validates them and
     the release pivots back to wide at write (io.writers.write_cna_wide).
 
@@ -133,15 +132,14 @@ def _read_cna(spark: SparkSession, paths: list[str]) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    wide = readers.read_tsv(spark, paths[0])
-    first = wide.columns[0]
-    samples = [c for c in wide.columns[1:]]
-    pairs = ", ".join(f"'{s}', `{s}`" for s in samples)
+    wide = readers.read_delimited(spark, paths[0])
+    first, *samples = wide.columns
     return (
-        wide.withColumnRenamed(first, "Hugo_Symbol")
-        .select(
-            "Hugo_Symbol",
-            F.expr(f"stack({len(samples)}, {pairs}) AS (SAMPLE_ID, value)"),
+        wide.unpivot(
+            [qcol(first).alias("Hugo_Symbol")],
+            [qcol(s) for s in samples],
+            "SAMPLE_ID",
+            "value",
         )
         .where(F.col("value").isNotNull() & (F.col("value") != "NA"))
     )
@@ -178,22 +176,12 @@ def _clinical_transform(df: DataFrame) -> DataFrame:
     return remap_clinical_values(update_clinical_values(df))
 
 
-def _read_sv(spark: SparkSession, paths: list[str]) -> DataFrame:
+def _read_upper(spark: SparkSession, paths: list[str]) -> DataFrame:
     # the reference uppercases SV headers before both validate and
-    # process (genie_registry/structural_variant.py:30,67)
-    from pyspark.sql import functions as F
-
-    df = readers.read_tsv(spark, paths[0])
-    return df.select(*[F.col(f"`{c}`").alias(c.upper()) for c in df.columns])
-
-
-def _read_seg(spark: SparkSession, paths: list[str]) -> DataFrame:
-    # the reference uppercases seg headers before validation
-    # (genie_registry/seg.py:56: ``segDF.columns = upper``)
-    from pyspark.sql import functions as F
-
-    df = readers.read_tsv(spark, paths[0])
-    return df.select(*[F.col(f"`{c}`").alias(c.upper()) for c in df.columns])
+    # process (genie_registry/structural_variant.py:30,67) and seg
+    # headers before validation (genie_registry/seg.py:56:
+    # ``segDF.columns = upper``)
+    return readers.read_delimited(spark, paths[0], upper=True)
 
 
 def _seg_transform(df: DataFrame) -> DataFrame:
@@ -210,7 +198,7 @@ def _seg_transform(df: DataFrame) -> DataFrame:
     cols = []
     for c in df.columns:
         up = c.upper()
-        cols.append(F.col(f"`{c}`").alias(rename.get(up, up)))
+        cols.append(qcol(c).alias(rename.get(up, up)))
     out = df.select(*cols).dropDuplicates()
     if "CHROM" in out.columns:
         out = out.withColumn(
@@ -279,7 +267,7 @@ FORMATS: list[FileFormat] = [
     FileFormat(
         name="seg",
         matches=lambda names, c: names == [f"genie_data_cna_hg19_{c}.seg"],
-        read=_read_seg,
+        read=_read_upper,
         rules=seg_rules,
         keys=("ID", "CHROM", "LOCSTART", "LOCEND"),
         transform=_seg_transform,
@@ -296,7 +284,7 @@ FORMATS: list[FileFormat] = [
     FileFormat(
         name="sv",
         matches=lambda names, c: names == [f"data_sv_{c}.txt"],
-        read=_read_sv,
+        read=_read_upper,
         rules=sv_rules,
         keys=(),
     ),

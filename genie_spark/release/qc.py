@@ -63,10 +63,10 @@ cBioPortal ingestion depends on:
 
 One query per released file: each data-sized artifact (the merged and
 split-sample clinical files, MAF, SV, gene matrix, CNA, SEG) is read
-once and validated by exactly ONE ``RuleSet.validate`` query, and the
-driver-parsed id lists (case-list ids, CNA header samples, panel
-``gene_list``s) by one more, over a ``local_rows_df`` table of
-(source file, id) pairs.  A cross-file containment check is a row
+once, through ``io.readers.read_delimited``, and validated by exactly
+ONE ``RuleSet.validate`` query, and the driver-parsed id lists
+(case-list ids, CNA header samples, panel ``gene_list``s) by one more,
+over a ``local_rows_df`` table of (source file, id) pairs.  A cross-file containment check is a row
 predicate of the child's query: an EXISTS subquery on the parent's key,
 which Spark runs as an existence join — a left join whose marker column
 is false on every child row with no parent match, with no distinct
@@ -78,16 +78,14 @@ headers, meta files), and this module runs no Spark action of its own.
 
 from __future__ import annotations
 
-import csv
 import glob
 import os
 import re
-from collections import Counter
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
+from genie_spark.io.readers import read_delimited
 from genie_spark.rules.engine import (
     AggRule, RowRule, RuleSet, ValidationMessage, ValidationReport, duplicated, qcol,
 )
@@ -173,43 +171,6 @@ _META_GAT_DATATYPES = frozenset(
         ("GENE_PANEL_MATRIX", "GENE_PANEL_MATRIX"),
     }
 )
-
-
-def _header(path: str, comment: str | None) -> list[str]:
-    """The header Spark's CSV reader takes: the first line that is
-    neither blank nor a comment, parsed with its quoting rules."""
-    with open(path) as fh:
-        for line in fh:
-            if line.strip() and not (comment and line.startswith(comment)):
-                return next(csv.reader([line.rstrip("\r\n")], delimiter="\t"))
-    return []
-
-
-def _safe_header(names: list[str]) -> list[str]:
-    """Spark's CSV header sanitizing (identifiers case-insensitive): a
-    blank name becomes ``_c<i>``, a name repeated in any case gets its
-    index appended."""
-    seen = Counter(n.lower() for n in names)
-    return [
-        f"_c{i}" if not n else f"{n}{i}" if seen[n.lower()] > 1 else n
-        for i, n in enumerate(names)
-    ]
-
-
-def _read_release_tsv(
-    spark: SparkSession, path: str, comment: str | None = "#"
-) -> DataFrame:
-    """All-string read of a released TSV.  The schema comes from the
-    header line, so the read runs no schema-inference job."""
-    names = _safe_header(_header(path, comment))
-    reader = (
-        spark.read.schema(StructType([StructField(n, StringType()) for n in names]))
-        .option("sep", "\t")
-        .option("header", "true")
-    )
-    if comment:
-        reader = reader.option("comment", comment)
-    return reader.csv(path)
 
 
 def _resolve(df: DataFrame, name: str) -> str | None:
@@ -391,7 +352,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
                     "identifiers must stay visible",
                 )
 
-    clinical = _read_release_tsv(spark, clin_path)
+    clinical = read_delimited(spark, clin_path)
     clin_sid = _resolve(clinical, "SAMPLE_ID")
     if clin_sid is None:
         err("release.clinical_sample_id",
@@ -576,7 +537,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
         # split sample ids must match the merged file (a regenerated
         # split from a different snapshot breaks profile case lists)
         smp_path = os.path.join(release_dir, "data_clinical_sample.txt")
-        split_df = _read_release_tsv(spark, smp_path)
+        split_df = read_delimited(spark, smp_path)
         split_sid = _resolve(split_df, "SAMPLE_ID")
         if split_sid is not None:
             checks.append(("data_clinical_sample.txt", split_df, [RowRule(
@@ -949,7 +910,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     bed_path = os.path.join(release_dir, "genomic_information.txt")
     bed = bed_gene = bed_assays = None
     if os.path.isfile(bed_path):
-        bed = _read_release_tsv(spark, bed_path, comment=None)
+        bed = read_delimited(spark, bed_path, comment=None)
         bed_gene = _resolve(bed, "Hugo_Symbol")
         bed_assay = _resolve(bed, "SEQ_ASSAY_ID")
         if bed_assay is not None:
@@ -969,7 +930,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     maf_path = os.path.join(release_dir, "data_mutations_extended.txt")
     maf = maf_nb = None
     if os.path.isfile(maf_path):
-        maf = _read_release_tsv(spark, maf_path, comment=None)
+        maf = read_delimited(spark, maf_path, comment=None)
         maf_rules = []
         tsb = _resolve(maf, "Tumor_Sample_Barcode")
         if tsb is None:
@@ -1063,7 +1024,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     # one cBioPortal study (the meta declares ONE reference_genome).
     sv_path = os.path.join(release_dir, "data_sv.txt")
     if os.path.isfile(sv_path):
-        sv = _read_release_tsv(spark, sv_path, comment=None)
+        sv = read_delimited(spark, sv_path, comment=None)
         sv_rules = []
         sv_nb = _resolve(sv, "NCBI_BUILD")
         if sv_nb is not None:
@@ -1105,7 +1066,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     matrix_path = os.path.join(release_dir, "data_gene_matrix.txt")
     matrix = gm_sid = None
     if os.path.isfile(matrix_path):
-        matrix = _read_release_tsv(spark, matrix_path, comment=None)
+        matrix = read_delimited(spark, matrix_path, comment=None)
         gm_rules = []
         gm_sid = _resolve(matrix, "SAMPLE_ID")
         gm_mut = _resolve(matrix, "mutations")
@@ -1159,7 +1120,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     # (validateData.py: GISTIC-style calls must be -2/-1.5/-1/0/1/2 or
     # NA); one array over all sample columns, no per-column pass
     if os.path.isfile(cna_path):
-        cna = _read_release_tsv(spark, cna_path, comment=None)
+        cna = read_delimited(spark, cna_path, comment=None)
         cna_samples = [c for c in cna.columns if c.lower() != "hugo_symbol"]
         if cna_samples:
             # accept both float-stripped ("-1") and plain-float ("-1.0")
@@ -1176,7 +1137,7 @@ def validate_release(spark: SparkSession, release_dir: str) -> ValidationReport:
     # --- seg numeric columns --------------------------------------------
     seg_path = os.path.join(release_dir, "genie_data_cna_hg19.seg")
     if os.path.isfile(seg_path):
-        seg = _read_release_tsv(spark, seg_path, comment=None)
+        seg = read_delimited(spark, seg_path, comment=None)
         seg_rules = []
         for col_name in ("loc.start", "loc.end", "num.mark", "seg.mean"):
             actual = _resolve(seg, col_name)

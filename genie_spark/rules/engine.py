@@ -42,8 +42,9 @@ MAX_EXAMPLES = 5
 
 
 def qcol(name: str) -> Column:
-    """Column reference that survives dotted names (SEG's LOC.START)."""
-    return F.col(f"`{name}`")
+    """Column reference that survives any name: dotted (SEG's
+    LOC.START), quoted, or holding a backtick (escaped by doubling)."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 @dataclass

@@ -2260,6 +2260,21 @@ def test_release_qc_one_query_per_file(spark, tmp_path):
         assert action not in src, action
 
 
+def test_release_qc_reads_bom_led_files(spark, tmp_path):
+    """A released file that starts with a UTF-8 BOM (a spreadsheet
+    round-trip) keeps its first column name: a MAF led by
+    Tumor_Sample_Barcode still has that column, and QC stays clean."""
+    from genie_spark.release.qc import validate_release
+
+    out = _build_clean_release(spark, tmp_path / "rel")
+    with open(os.path.join(out, "data_mutations_extended.txt"), "wb") as f:
+        f.write(
+            b"\xef\xbb\xbfTumor_Sample_Barcode\tHugo_Symbol\tNCBI_Build\n"
+            b"GENIE-SAGE-1-1\tTP53\tGRCh37\n"
+        )
+    assert validate_release(spark, out).errors == []
+
+
 def test_release_qc_punctuated_clinical_attribute(spark, tmp_path):
     """A clinical attribute id containing '.' (or a message-template
     brace) is a charset violation, not a crash of the NUMBER-typed
@@ -2310,31 +2325,6 @@ def test_release_qc_split_samples_true_count(spark, tmp_path):
     ]
     assert m.n_violations == 9
     assert m.examples == [f"GENIE-SAGE-9-{i}" for i in range(5)]
-
-
-def test_read_release_tsv_header_sanitizing(spark, tmp_path):
-    """Released TSVs read with a schema built from the header line: the
-    same columns and rows as Spark's header inference, and no job."""
-    from genie_spark.release.qc import _read_release_tsv
-
-    path = tmp_path / "t.txt"
-    path.write_text(
-        '#comment\nSAMPLE_ID\tX\tsample_id\t""\tX\na\tb\tc\td\te\nf\t\th\ti\tj\n'
-    )
-    def newest_job():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
-
-    before = newest_job()
-    df = _read_release_tsv(spark, str(path))
-    assert df.columns == ["SAMPLE_ID0", "X1", "sample_id2", "_c3", "X4"]
-    assert newest_job() == before
-    inferred = (
-        spark.read.option("sep", "\t").option("header", "true")
-        .option("comment", "#").csv(str(path))
-    )
-    assert inferred.columns == df.columns
-    assert sorted(df.collect()) == sorted(inferred.collect())
 
 
 def test_corpus_dedup_command(spark, tmp_path):

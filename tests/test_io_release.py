@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from genie_spark.io.readers import (
@@ -68,6 +70,134 @@ def test_read_bed_headerless(spark, tmp_path):
     df = read_bed(spark, str(p))
     assert df.columns[:4] == ["Chromosome", "Start_Position", "End_Position", "Hugo_Symbol"]
     assert df.count() == 2
+
+
+def _newest_job(spark) -> int:
+    """Id of the newest Spark job (ids grow by one per job)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+# (file bytes, read options, expected columns): every case is also read
+# by Spark's header inference with the same options, which must agree
+_DELIMITED_CASES = {
+    "sanitized_header": (
+        b'#comment\nSAMPLE_ID\tX\tsample_id\t""\tX\na\tb\tc\td\te\nf\t\th\ti\tj\n',
+        {},
+        ["SAMPLE_ID0", "X1", "sample_id2", "_c3", "X4"],
+    ),
+    "bom": (
+        b"\xef\xbb\xbfSAMPLE_ID\tAGE\nGENIE-SAGE-1-1\t60\n",
+        {},
+        ["SAMPLE_ID", "AGE"],
+    ),
+    "quoted_tab_in_header": (
+        b'"SAMPLE\tID"\tAGE\n"GENIE\t1"\t60\n',
+        {},
+        ["SAMPLE\tID", "AGE"],
+    ),
+    "comment_and_blank_before_header": (
+        b"#version 1\n\nSAMPLE_ID\tAGE\nGENIE-SAGE-1-1\t60\n\nGENIE-SAGE-2-1\t\n",
+        {},
+        ["SAMPLE_ID", "AGE"],
+    ),
+    "headerless_bed": (
+        b"chr1\t100\t200\tTP53\tTrue\n#c\n1\t300\t400\tEGFR\tFalse\n",
+        {"header": False},
+        ["_c0", "_c1", "_c2", "_c3", "_c4"],
+    ),
+    "maf_unquoted": (
+        b'Hugo_Symbol\tReference_Allele\tHGVSp\nTP53\t"\tp.R175H\nKRAS\tNA\t"p.G12D\t\n',
+        {"quote": ""},
+        ["Hugo_Symbol", "Reference_Allele", "HGVSp"],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DELIMITED_CASES))
+def test_read_delimited_matches_inference(spark, tmp_path, case):
+    """The header-built read runs no Spark job and yields the columns
+    and rows of Spark's inferring read with the same options."""
+    from genie_spark.io.readers import read_delimited
+
+    data, opts, expected = _DELIMITED_CASES[case]
+    path = tmp_path / "t.txt"
+    path.write_bytes(data)
+    before = _newest_job(spark)
+    df = read_delimited(spark, str(path), **opts)
+    assert df.columns == expected
+    assert _newest_job(spark) == before
+    inferred = (
+        spark.read.option("sep", "\t")
+        .option("header", opts.get("header", True))
+        .option("comment", "#")
+        .option("quote", opts.get("quote", '"'))
+        .csv(str(path))
+    )
+    assert inferred.columns == df.columns
+    assert sorted(df.collect()) == sorted(inferred.collect())
+
+
+_UPLOADS = {
+    "clinical": {
+        "data_clinical_supp_sample_SAGE.txt": "#c\nSAMPLE_ID\tPATIENT_ID\nGENIE-SAGE-1-1\tGENIE-SAGE-1\n",
+        "data_clinical_supp_patient_SAGE.txt": "PATIENT_ID\tSEX\nGENIE-SAGE-1\t1\n",
+    },
+    "clinical_single": {
+        "data_clinical_supp_SAGE.txt": "sample_id\tpatient_id\nGENIE-SAGE-1-1\tGENIE-SAGE-1\n",
+    },
+    "maf": {
+        "data_mutations_extended_SAGE.txt": "Hugo_Symbol\tTumor_Sample_Barcode\nTP53\tGENIE-SAGE-1-1\n",
+    },
+    "bed": {"SAGE-PANEL-1.bed": "1\t100\t200\tTP53\tTrue\n"},
+    "cna_long": {"data_CNA_SAGE.txt": "Hugo_Symbol\tGENIE-SAGE-1-1\nTP53\t1\n"},
+    "seg": {
+        "genie_data_cna_hg19_SAGE.seg": "ID\tchrom\tloc.start\tloc.end\tnum.mark\tseg.mean\n"
+        "GENIE-SAGE-1-1\t1\t1\t100\t5\t0.1\n",
+    },
+    "sv": {"data_sv_SAGE.txt": "Sample_Id\tSV_Status\nGENIE-SAGE-1-1\tSOMATIC\n"},
+    "vcf": {
+        "GENIE-SAGE-1-1.vcf": "##fileformat=VCFv4.2\n"
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n1\t100\t.\tA\tT\t.\tPASS\t.\n",
+    },
+    "sampleRetraction": {"sampleRetraction.csv": "GENIE-SAGE-1-1\n"},
+    "patientRetraction": {"patientRetraction.csv": "GENIE-SAGE-1\n"},
+    "mutationsInCis": {
+        "mutationsInCis_filtered_samples.csv": "Tumor_Sample_Barcode,Flag\nGENIE-SAGE-1-1,TRUE\n",
+    },
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UPLOADS))
+def test_upload_read_runs_no_job(spark, tmp_path, case):
+    """Every text-reading upload format resolves its columns without a
+    Spark job: the schema comes from the header line on the driver."""
+    from genie_spark.formats import determine_filetype
+
+    paths = []
+    for name, text in _UPLOADS[case].items():
+        paths.append(str(tmp_path / name))
+        (tmp_path / name).write_text(text)
+    fmt = determine_filetype(paths, "SAGE")
+    assert fmt is not None and fmt.name == case.removesuffix("_single")
+    before = _newest_job(spark)
+    assert fmt.read(spark, paths).columns
+    assert _newest_job(spark) == before
+
+
+def test_cna_read_with_quote_and_backtick_sample_ids(spark, tmp_path):
+    """A CNA sample column named with ' or ` melts like any other — it
+    reaches the validator instead of crashing the read."""
+    from genie_spark.formats import BY_NAME
+
+    for name in ("GENIE-SAGE-O'2", "GENIE-SAGE-O`2"):
+        path = tmp_path / "data_CNA_SAGE.txt"
+        path.write_text(f"Hugo_Symbol\tGENIE-SAGE-1\t{name}\nTP53\t1\t-1\nKRAS\tNA\t2\n")
+        df = BY_NAME["cna_long"].read(spark, [str(path)])
+        assert df.columns == ["Hugo_Symbol", "SAMPLE_ID", "value"]
+        assert sorted(map(tuple, df.collect())) == [
+            ("KRAS", name, "2"), ("TP53", "GENIE-SAGE-1", "1"), ("TP53", name, "-1"),
+        ]
 
 
 def test_assay_yaml_explode(spark):

@@ -529,6 +529,46 @@ def test_no_create_dataframe_outside_session():
     assert not offenders, offenders
 
 
+def test_delimited_reads_only_in_readers():
+    """Repo policy (io/readers.read_delimited): every delimited file is
+    read through the readers module, which builds its schema from the
+    header line and runs no Spark job.  No ``spark.read`` CSV or text
+    chain may appear in cli.py, formats.py or release/ — except the
+    workflow document (``.md``), which is stored as text."""
+    import ast
+    import glob as _glob
+    import os as _os
+
+    pkg = _os.path.join(_os.path.dirname(__file__), "..", "genie_spark")
+    files = [_os.path.join(pkg, "cli.py"), _os.path.join(pkg, "formats.py")]
+    files += _glob.glob(_os.path.join(pkg, "release", "*.py"))
+    exempt = "read=lambda spark, paths: spark.read.text(paths[0]),"
+    offenders = []
+    for path in files:
+        with open(path) as f:
+            src = f.read()
+        lines = src.splitlines()
+        for node in ast.walk(ast.parse(src)):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("csv", "text")
+            ):
+                continue
+            # walk the builder chain to its root; a stream source or a
+            # writer is not a batch read (a builder held in a variable,
+            # ``reader.csv(path)``, is)
+            attrs, cur = set(), node.func.value
+            while isinstance(cur, (ast.Call, ast.Attribute)):
+                if isinstance(cur, ast.Attribute):
+                    attrs.add(cur.attr)
+                cur = cur.func if isinstance(cur, ast.Call) else cur.value
+            line = lines[node.lineno - 1].strip()
+            if not attrs & {"readStream", "write", "writeStream"} and line != exempt:
+                offenders.append(f"{_os.path.relpath(path, pkg)}:{node.lineno}: {line}")
+    assert not offenders, offenders
+
+
 def test_slow_tests_names_are_live():
     """tests/conftest.py::SLOW_TESTS marks tests by bare name, so a
     renamed or deleted test leaves a stale entry that silently marks

@@ -576,6 +576,16 @@ def _execution_id(spark) -> int:
     return store.executionsList(n - 1, 1).head().executionId() if n else -1
 
 
+def test_qcol_escapes_backticks(spark):
+    """qcol names any column: dotted, quoted or holding a backtick."""
+    from genie_spark.rules.engine import qcol
+
+    names = ["LOC.START", "O'2", "O`2", "a``b"]
+    df = spark.range(1).select(*[_lit(i).alias(n) for i, n in enumerate(names)])
+    assert df.select(*[qcol(n) for n in names]).columns == names
+    assert df.select(*[qcol(n) for n in names]).first() == tuple(range(len(names)))
+
+
 _VCF_FIXED_COLS = ["#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO", "FORMAT"]
 
 
