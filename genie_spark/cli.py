@@ -271,8 +271,16 @@ def _retract_from_clinical_bronze(spark: SparkSession, warehouse: str) -> None:
 
 def cmd_release(spark: SparkSession, args: argparse.Namespace) -> int:
     from genie_spark.io.readers import read_known_somatic_sites
-    from genie_spark.io.writers import write_cbio_clinical, write_cna_wide, write_tsv
-    from genie_spark.release.pipeline import run_release
+    from genie_spark.io.writers import (
+        assay_rows,
+        gene_panel_text,
+        panel_genes,
+        study_samples,
+        write_study,
+        write_texts,
+        write_tsv,
+    )
+    from genie_spark.release.pipeline import WES_LIBRARY_STRATEGY, run_release
 
     clinical = _read_bronze(spark, args.warehouse, "clinical")
     maf = _read_bronze(spark, args.warehouse, "maf")
@@ -307,121 +315,51 @@ def cmd_release(spark: SparkSession, args: argparse.Namespace) -> int:
         consortium_cutoff_days=getattr(args, "seq_date_cutoff", 184),
         pad=args.pad,
     )
-    os.makedirs(args.output, exist_ok=True)
-    write_cbio_clinical(
-        arts.clinical, os.path.join(args.output, "data_clinical.txt")
-    )
-    # split clinical pair the reference stores alongside the merged
-    # file (database_to_staging.py:1361-1368 via addClinicalHeaders)
-    from genie_spark.io.writers import write_cbio_clinical_split
+    study_id = getattr(args, "study_id", "genie_private")
+    # the driver-side lists: one collect of the released clinical's
+    # sample rows, one of the (dim-sized) assay information
+    samples = study_samples(arts.clinical)
+    assays = assay_rows(assay_info)
+    write_study(args.output, arts, study_id, args.version, samples, assays)
 
-    if {"SAMPLE_ID", "PATIENT_ID"} <= set(arts.clinical.columns):
-        write_cbio_clinical_split(
-            arts.clinical,
-            os.path.join(args.output, "data_clinical_sample.txt"),
-            os.path.join(args.output, "data_clinical_patient.txt"),
-        )
-    write_tsv(arts.maf, os.path.join(args.output, "data_mutations_extended.txt"))
-    if arts.sv is not None:
-        write_tsv(arts.sv, os.path.join(args.output, "data_sv.txt"))
-    if arts.seg is not None:
-        write_tsv(arts.seg, os.path.join(args.output, "genie_data_cna_hg19.seg"))
-    if arts.cna_long is not None:
-        write_cna_wide(arts.cna_long, os.path.join(args.output, "data_CNA.txt"))
-    if arts.gene_matrix is not None:
-        write_tsv(arts.gene_matrix, os.path.join(args.output, "data_gene_matrix.txt"))
-
-    # released assay ids drive the bed file, gene panels, and case lists
-    # (dim-sized collect: one row per SEQ_ASSAY_ID)
-    assay_ids = sorted(
-        r[0]
-        for r in arts.clinical.select("SEQ_ASSAY_ID").distinct().collect()
-        if r[0] is not None
-    )
+    # released assay ids drive the bed file, gene panels and assay
+    # information
+    assay_ids = sorted({r["SEQ_ASSAY_ID"] for r in samples} - {None})
 
     # combined bed release file, filtered to released assays (reference
     # store_bed_files genie/database_to_staging.py:1657-1709)
-    if arts.bed is not None:
-        released_bed = arts.bed.where(F.col("SEQ_ASSAY_ID").isin(assay_ids))
-        write_tsv(
-            released_bed, os.path.join(args.output, "genomic_information.txt")
-        )
+    write_tsv(
+        arts.bed.where(F.col("SEQ_ASSAY_ID").isin(assay_ids)),
+        os.path.join(args.output, "genomic_information.txt"),
+    )
 
     # per-panel gene panel files, WES panels excluded (reference
     # store_gene_panel_files genie/database_to_staging.py:809-859)
-    from genie_spark.io.writers import case_list_alteration_texts, case_list_texts, gene_panel_text
-    from genie_spark.release.pipeline import wes_panels
-
-    study_id = getattr(args, "study_id", "genie_private")
-    wes_ids = (
-        {r[0] for r in wes_panels(assay_info).collect()}
-        if assay_info is not None and "library_strategy" in assay_info.columns
-        else set()
-    )
-    if arts.bed is not None:
-        for assay_id in assay_ids:
-            if assay_id in wes_ids:
-                continue
-            text = gene_panel_text(arts.bed, assay_id)
-            with open(
-                os.path.join(args.output, f"data_gene_panel_{assay_id}.txt"), "w"
-            ) as f:
-                f.write(text)
-
-    # case lists on disk: per CANCER_TYPE + all + sequenced + cna/sv
-    # (reference genie/create_case_lists.py:44-199)
-    case_dir = os.path.join(args.output, "case_lists")
-    os.makedirs(case_dir, exist_ok=True)
-    texts = {}
-    if "CANCER_TYPE" in arts.clinical.columns:
-        texts.update(case_list_texts(arts.clinical, study_id=study_id))
-    else:
-        texts.update(
-            case_list_texts(
-                arts.clinical.withColumn("CANCER_TYPE", F.lit(None).cast("string")),
-                study_id=study_id,
-            )
-        )
-    if assay_info is not None:
-        texts.update(
-            case_list_alteration_texts(arts.clinical, assay_info, study_id)
-        )
-    for name, text in texts.items():
-        with open(os.path.join(case_dir, name), "w") as f:
-            f.write(text)
+    wes_ids = {
+        a["SEQ_ASSAY_ID"] for a in assays
+        if a["library_strategy"] == WES_LIBRARY_STRATEGY
+    }
+    panel_ids = [a for a in assay_ids if a not in wes_ids]
+    genes = panel_genes(arts.bed, panel_ids)
+    write_texts(args.output, {
+        f"data_gene_panel_{a}.txt": gene_panel_text(genes.get(a, []), a)
+        for a in panel_ids
+    })
 
     # assay information for the released assays (reference
     # store_assay_info_files, genie/database_to_staging.py:1158-1196)
     if assay_info is not None and "SEQ_ASSAY_ID" in assay_info.columns:
-        from genie_spark.io.writers import write_tsv as _write_tsv
-
-        _write_tsv(
+        write_tsv(
             assay_info.where(F.col("SEQ_ASSAY_ID").isin(assay_ids)),
             os.path.join(args.output, "assay_information.txt"),
         )
-
-    # cBioPortal meta files — generated, where the reference revises
-    # pre-existing ones (revise_metadata_files,
-    # genie/database_to_staging.py:1960-2009)
-    from genie_spark.io.writers import cbio_meta_texts
-
-    present = {
-        n for n in os.listdir(args.output)
-        if os.path.isfile(os.path.join(args.output, n))
-    }
-    for name, text in cbio_meta_texts(study_id, args.version, present).items():
-        with open(os.path.join(args.output, name), "w") as f:
-            f.write(text)
 
     # per-center count snapshot for the dashboard's release-over-release
     # diff (reference cumulativeSampleCount feeding
     # update_sample_difference_table, dashboard_table_updater.py:398-483)
     _append_release_snapshot(spark, args.warehouse, args.version, arts)
 
-    counts = {
-        "clinical": arts.clinical.count(),
-        "maf": arts.maf.count(),
-    }
+    counts = {"clinical": len(samples), "maf": arts.maf.count()}
     # post-write QC over the assembled directory (the reference runs the
     # cBioPortal validator here, bin/database_to_staging.py:310-332;
     # like the reference's `; exit 0` it reports but does not abort)
@@ -640,27 +578,29 @@ def cmd_public(spark: SparkSession, args: argparse.Namespace) -> int:
     artifact is re-filtered to the public sample set, the CNA matrix
     keeps only public sample columns, the gene matrix drops non-public
     rows, case lists are regenerated from the public clinical, and the
-    panel/bed reference files are carried through unchanged."""
+    panel/bed reference files are carried through unchanged.  The
+    study files the release also writes come from the same
+    ``write_study``."""
     import shutil
 
     from genie_spark.io.readers import read_delimited
-    from genie_spark.io.writers import (
-        case_list_texts,
-        write_cbio_clinical,
-        write_tsv,
-    )
+    from genie_spark.io.writers import assay_rows, study_samples, write_study
     from genie_spark.release.pipeline import ReleaseArtifacts, consortium_to_public
+
+    def release_file(name: str) -> str:
+        return os.path.join(args.release_dir, name)
 
     # released data files carry no '#' rows, except data_clinical.txt
     released = {
-        n: read_delimited(spark, os.path.join(args.release_dir, n), comment=None)
+        n: read_delimited(spark, release_file(n), comment=None)
         for n in (
             "data_mutations_extended.txt", "data_sv.txt",
             "genie_data_cna_hg19.seg", "data_CNA.txt", "data_gene_matrix.txt",
+            "assay_information.txt",
         )
-        if os.path.isfile(os.path.join(args.release_dir, n))
+        if os.path.isfile(release_file(n))
     }
-    clin = read_delimited(spark, os.path.join(args.release_dir, "data_clinical.txt"))
+    clin = read_delimited(spark, release_file("data_clinical.txt"))
     arts = ReleaseArtifacts(clinical=clin, maf=released.get("data_mutations_extended.txt"))
     arts.sv = released.get("data_sv.txt")
     arts.seg = released.get("genie_data_cna_hg19.seg")
@@ -672,96 +612,37 @@ def cmd_public(spark: SparkSession, args: argparse.Namespace) -> int:
     pub = consortium_to_public(
         arts, keep, private_columns=args.private_columns.split(",") if args.private_columns else []
     )
-    os.makedirs(args.output, exist_ok=True)
-    write_cbio_clinical(pub.clinical, os.path.join(args.output, "data_clinical.txt"))
-    if {"SAMPLE_ID", "PATIENT_ID"} <= set(pub.clinical.columns):
-        from genie_spark.io.writers import write_cbio_clinical_split
-
-        write_cbio_clinical_split(
-            pub.clinical,
-            os.path.join(args.output, "data_clinical_sample.txt"),
-            os.path.join(args.output, "data_clinical_patient.txt"),
-        )
-    write_tsv(pub.maf, os.path.join(args.output, "data_mutations_extended.txt"))
-    if pub.sv is not None:
-        write_tsv(pub.sv, os.path.join(args.output, "data_sv.txt"))
-    if pub.seg is not None:
-        write_tsv(pub.seg, os.path.join(args.output, "genie_data_cna_hg19.seg"))
-
     # public sample set, driver-side (bounded: released samples)
-    public_ids = {r["SAMPLE_ID"] for r in pub.clinical.select("SAMPLE_ID").collect()}
+    samples = study_samples(pub.clinical)
+    public_ids = {r["SAMPLE_ID"] for r in samples}
 
     # CNA: keep only public sample columns (the reference parses the
     # header and subsets columns, consortium_to_public.py:290-309)
     cna = released.get("data_CNA.txt")
     if cna is not None:
-        keep_cols = ["Hugo_Symbol"] + [
-            c for c in cna.columns if c in public_ids
-        ]
-        write_tsv(
-            cna.select(*keep_cols).orderBy("Hugo_Symbol"),
-            os.path.join(args.output, "data_CNA.txt"),
-            na_rep="NA",
-        )
-
+        cna = cna.select(
+            "Hugo_Symbol", *[c for c in cna.columns if c in public_ids]
+        ).orderBy("Hugo_Symbol")
     # gene matrix: drop non-public rows (consortium_to_public.py:115-171)
     gm = released.get("data_gene_matrix.txt")
     if gm is not None and "SAMPLE_ID" in gm.columns:
-        write_tsv(
-            gm.join(keep.select("SAMPLE_ID"), "SAMPLE_ID", "left_semi"),
-            os.path.join(args.output, "data_gene_matrix.txt"),
-        )
+        pub.gene_matrix = gm.join(keep.select("SAMPLE_ID"), "SAMPLE_ID", "left_semi")
+
+    # case lists regenerated from the public clinical, the alteration
+    # lists from the released assay information
+    # (consortium_to_public.py:181-198 create_case_lists.main)
+    write_study(
+        args.output, pub,
+        getattr(args, "study_id", "genie_public"),
+        getattr(args, "version", "TESTING"),
+        samples, assay_rows(released.get("assay_information.txt")),
+        cna_wide=cna,
+    )
 
     # panel/bed reference files pass through unchanged
     for name in sorted(os.listdir(args.release_dir)):
         if name.startswith("data_gene_panel_") or name == "genomic_information.txt":
-            shutil.copyfile(
-                os.path.join(args.release_dir, name),
-                os.path.join(args.output, name),
-            )
-
-    # case lists regenerated from the public clinical
-    # (consortium_to_public.py:181-198 create_case_lists.main)
-    case_dir = os.path.join(args.output, "case_lists")
-    os.makedirs(case_dir, exist_ok=True)
-    study_id = getattr(args, "study_id", "genie_public")
-    pub_clin_cl = pub.clinical
-    if "CANCER_TYPE" not in pub_clin_cl.columns:
-        pub_clin_cl = pub_clin_cl.withColumn(
-            "CANCER_TYPE", F.lit(None).cast("string")
-        )
-    cl_texts = dict(case_list_texts(pub_clin_cl, study_id=study_id))
-    # alteration case lists too (reference create_case_lists.main
-    # takes the assay-information file alongside the clinical): read
-    # the released assay_information.txt so cases_cna / cases_sv stay
-    # consistent with the CNA/SV data the public dir carries
-    assay_txt = os.path.join(args.release_dir, "assay_information.txt")
-    if (
-        os.path.isfile(assay_txt)
-        and "SEQ_ASSAY_ID" in pub_clin_cl.columns
-    ):
-        from genie_spark.io.writers import case_list_alteration_texts
-
-        assay_info = read_delimited(spark, assay_txt, comment=None)
-        if "alteration_types" in assay_info.columns:
-            cl_texts.update(
-                case_list_alteration_texts(pub_clin_cl, assay_info, study_id)
-            )
-    for name, text in cl_texts.items():
-        with open(os.path.join(case_dir, name), "w") as f:
-            f.write(text)
-
-    # public dir carries its own generated cBioPortal meta files
-    from genie_spark.io.writers import cbio_meta_texts
-
-    present = {
-        n for n in os.listdir(args.output)
-        if os.path.isfile(os.path.join(args.output, n))
-    }
-    version = getattr(args, "version", "TESTING")
-    for name, text in cbio_meta_texts(study_id, version, present).items():
-        with open(os.path.join(args.output, name), "w") as f:
-            f.write(text)
+            shutil.copyfile(release_file(name), os.path.join(args.output, name))
 
     print(f"public release → {args.output}")
     return 0

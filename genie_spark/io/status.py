@@ -29,10 +29,10 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from genie_spark.io.bronze import DEFAULT_COMMIT
 from genie_spark.session import local_rows_df
 
 STATUS_TABLE = "validation_status"
@@ -65,11 +65,14 @@ _SCHEMAS = {STATUS_TABLE: STATUS_SCHEMA, ERROR_TABLE: ERROR_SCHEMA}
 
 def _read(spark: SparkSession, warehouse: str, table: str) -> DataFrame | None:
     """The table read with its declared schema (no inference job), or
-    None when its directory is absent.  A present table that cannot be
-    read raises when the result is used — an unreadable table is never
-    mistaken for an absent one, whose first upsert would overwrite
-    every other file's row."""
+    None when its directory is absent.  A commit that a kill
+    interrupted is rolled forward first, so a table caught between its
+    old and new directory reads as the new one, never as absent.  A
+    present table that cannot be read raises when the result is used —
+    an unreadable table is never mistaken for an absent one, whose
+    first upsert would overwrite every other file's row."""
     path = os.path.join(warehouse, table)
+    DEFAULT_COMMIT.recover(path, clean_leftovers=False)
     if not os.path.isdir(path):
         return None
     return spark.read.schema(_SCHEMAS[table]).parquet(path)
@@ -182,7 +185,8 @@ def _upsert_small(
         out = existing.where(~_key(existing, center, name)).unionByName(new)
     else:
         out = new
-    staging = target + ".staging"
+    # journaled whole-table swap (io.bronze): a kill at any step leaves
+    # either the old table or a commit that the next _read completes
+    staging = DEFAULT_COMMIT.staging_path(target)
     out.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.move(staging, target)
+    DEFAULT_COMMIT.commit_whole(staging, target)

@@ -1,10 +1,19 @@
-"""Release-artifact writers (SURVEY.md §2.1 S13-S18).
+"""cBioPortal study writers (SURVEY.md §2.1 S13-S18).
 
-The reference writes single TSV/text files per artifact.  Here each
-writer has two modes: ``parts`` (df.write.csv — the 100 TB path, many
-files) and ``single`` (assemble one file on the driver from the part
-files — what cBioPortal ingestion expects; release artifacts are
-GB-scale, bounded).
+cBioPortal ingests one text file per artifact, so every data sink
+writes Spark's part files to a scratch directory and assembles the one
+file on the driver (release artifacts are GB-scale, bounded).
+
+``write_study`` writes the file set that the consortium release and
+the public release share: the clinical files, MAF, SV, SEG, CNA and
+gene matrices, the case lists and the meta files.  The case lists come
+from driver-side lists: one collect of the clinical's
+``(SAMPLE_ID, CANCER_TYPE, SEQ_ASSAY_ID)`` rows (``study_samples``)
+and one of the assay information (``assay_rows``).  Gene panels come
+from one grouped query over the BED (``panel_genes``).  The text
+renderers (``case_list_texts``, ``case_list_alteration_texts``,
+``gene_panel_text``, ``cbio_meta_texts``) run no Spark job, so the
+list work does not grow with the number of panels or cancer types.
 """
 
 from __future__ import annotations
@@ -12,13 +21,17 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from genie_spark.functions.scalars import as_written
+
+if TYPE_CHECKING:
+    from genie_spark.release.pipeline import ReleaseArtifacts
 
 
 def strip_float_formatting(df: DataFrame) -> DataFrame:
@@ -37,12 +50,11 @@ def strip_float_formatting(df: DataFrame) -> DataFrame:
 def write_tsv(
     df: DataFrame,
     path: str,
-    single: bool = True,
     na_rep: str = "",
     header_lines: Sequence[str] = (),
 ) -> None:
-    """TSV sink with float-strip (S13) and optional prepended comment
-    header lines (the cBioPortal 5-line clinical header,
+    """One TSV file with float-strip (S13) and optional prepended
+    comment header lines (the cBioPortal clinical header,
     genie/process_functions.py:356-403)."""
     out = strip_float_formatting(df)
     tmp = path + ".__parts__"
@@ -55,46 +67,41 @@ def write_tsv(
         .option("nullValue", na_rep)
         .csv(tmp)
     )
-    if single:
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        with open(path, "w") as outfh:
-            for line in header_lines:
-                outfh.write(line + "\n")
-            wrote_header = False
-            for p in parts:
-                with open(p) as fh:
-                    header = fh.readline()
-                    if not wrote_header:
-                        outfh.write(header)
-                        wrote_header = True
-                    shutil.copyfileobj(fh, outfh)
-        shutil.rmtree(tmp)
-    else:
-        os.rename(tmp, path)
+    parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
+    with open(path, "w") as outfh:
+        for line in header_lines:
+            outfh.write(line + "\n")
+        wrote_header = False
+        for p in parts:
+            with open(p) as fh:
+                header = fh.readline()
+                if not wrote_header:
+                    outfh.write(header)
+                    wrote_header = True
+                shutil.copyfileobj(fh, outfh)
+    shutil.rmtree(tmp)
 
 
-def cbio_clinical_headers(
-    columns: Sequence[str],
-    display_names: dict[str, str] | None = None,
-    descriptions: dict[str, str] | None = None,
-    datatypes: dict[str, str] | None = None,
-    priorities: dict[str, int] | None = None,
-) -> list[str]:
+def write_texts(out_dir: str, texts: Mapping[str, str]) -> None:
+    """Driver-rendered text files (case lists, panels, meta files)."""
+    for name, text in texts.items():
+        with open(os.path.join(out_dir, name), "w") as f:
+            f.write(text)
+
+
+def cbio_clinical_headers(columns: Sequence[str]) -> list[str]:
     """The 4 '#' metadata lines cBioPortal expects above the header
     (reference ``addClinicalHeaders``)."""
-    dn = display_names or {}
-    ds = descriptions or {}
-    dt = datatypes or {}
-    pr = priorities or {}
+    names = [c.replace("_", " ").title() for c in columns]
     return [
-        "#" + "\t".join(dn.get(c, c.replace("_", " ").title()) for c in columns),
-        "#" + "\t".join(ds.get(c, dn.get(c, c.replace("_", " ").title())) for c in columns),
-        "#" + "\t".join(dt.get(c, "STRING") for c in columns),
-        "#" + "\t".join(str(pr.get(c, 1)) for c in columns),
+        "#" + "\t".join(names),
+        "#" + "\t".join(names),
+        "#" + "\t".join("STRING" for _ in columns),
+        "#" + "\t".join("1" for _ in columns),
     ]
 
 
-def write_cbio_clinical(df: DataFrame, path: str, **header_kwargs) -> None:
+def write_cbio_clinical(df: DataFrame, path: str) -> None:
     """Clinical release file: 4 metadata lines + header + data.
 
     ID columns LEAD the header (SAMPLE_ID, then PATIENT_ID, then the
@@ -106,10 +113,7 @@ def write_cbio_clinical(df: DataFrame, path: str, **header_kwargs) -> None:
     id_cols = [c for c in ("SAMPLE_ID", "PATIENT_ID") if c in df.columns]
     rest = [c for c in df.columns if c not in id_cols]
     df = df.select(*id_cols, *rest)
-    write_tsv(
-        df, path, single=True,
-        header_lines=cbio_clinical_headers(df.columns, **header_kwargs),
-    )
+    write_tsv(df, path, header_lines=cbio_clinical_headers(df.columns))
 
 
 # GENIE clinical attribute levels (reference: the clinical tier
@@ -138,11 +142,7 @@ PATIENT_LEVEL_ATTRS = frozenset(
 
 
 def write_cbio_clinical_split(
-    df: DataFrame,
-    sample_path: str,
-    patient_path: str,
-    patient_cols: Sequence[str] | None = None,
-    **header_kwargs,
+    df: DataFrame, sample_path: str, patient_path: str
 ) -> None:
     """The SPLIT clinical release pair the reference stores alongside
     data_clinical.txt (genie/process_functions.py:356-403
@@ -156,18 +156,15 @@ def write_cbio_clinical_split(
       requires the patient id BEFORE the sample id — the 'patient
       before sample' ordering validateData enforces).
 
-    Both carry the 4 '#' metadata lines.  ``patient_cols`` overrides
-    the level classification (defaults to the GENIE dictionary in
-    ``PATIENT_LEVEL_ATTRS``; unknown attributes go to the sample
-    file).  One row per id via a deterministic min-struct collapse —
-    the reference's pandas ``drop_duplicates`` keeps an arbitrary
-    first row; a distributed engine must pick a stable one.
+    Both carry the 4 '#' metadata lines.  The level classification is
+    the GENIE dictionary in ``PATIENT_LEVEL_ATTRS``; unknown attributes
+    go to the sample file.  One row per id via a deterministic
+    min-struct collapse — the reference's pandas ``drop_duplicates``
+    keeps an arbitrary first row; a distributed engine must pick a
+    stable one.
     """
-    plevel = set(
-        patient_cols if patient_cols is not None else PATIENT_LEVEL_ATTRS
-    )
-    pat_attrs = [c for c in df.columns if c in plevel]
-    smp_attrs = [c for c in df.columns if c not in plevel]
+    pat_attrs = [c for c in df.columns if c in PATIENT_LEVEL_ATTRS]
+    smp_attrs = [c for c in df.columns if c not in PATIENT_LEVEL_ATTRS]
     if "PATIENT_ID" in df.columns:
         pat_order = ["PATIENT_ID"] + [c for c in pat_attrs if c != "PATIENT_ID"]
         smp_order = ["PATIENT_ID", "SAMPLE_ID"] + [
@@ -190,126 +187,153 @@ def write_cbio_clinical_split(
         write_tsv(
             one_per("PATIENT_ID", pat_order).select(*pat_order),
             patient_path,
-            single=True,
-            header_lines=cbio_clinical_headers(pat_order, **header_kwargs),
+            header_lines=cbio_clinical_headers(pat_order),
         )
     write_tsv(
         one_per("SAMPLE_ID", smp_order).select(*smp_order),
         sample_path,
-        single=True,
-        header_lines=cbio_clinical_headers(smp_order, **header_kwargs),
+        header_lines=cbio_clinical_headers(smp_order),
     )
 
 
-def write_cna_wide(
-    cna_long: DataFrame,
-    path: str,
-    sample_ids: Sequence[str] | None = None,
-    na_rep: str = "NA",
-) -> None:
+def write_cna_wide(cna_long: DataFrame, path: str, na_rep: str = "NA") -> None:
     """CNA matrix sink: long (gene, sample, value) → wide pivot at
     write time only (SURVEY.md §1.1 — the reference assembles this with
     outer merges + unix ``join``, genie/database_to_staging.py:1426-1518;
-    a pivot is the native Spark equivalent).  Blank cells render as NA
-    (S16, genie_registry/cna.py:166-172)."""
+    a pivot is the native Spark equivalent).  Sample columns are the
+    sorted distinct sample ids.  Blank cells render as NA (S16,
+    genie_registry/cna.py:166-172)."""
     pivoted = (
         cna_long.groupBy("Hugo_Symbol")
-        .pivot("SAMPLE_ID", list(sample_ids) if sample_ids else None)
+        .pivot("SAMPLE_ID")
         .agg(F.first("value"))
         .orderBy("Hugo_Symbol")
     )
-    write_tsv(pivoted, path, single=True, na_rep=na_rep)
+    write_tsv(pivoted, path, na_rep=na_rep)
 
 
-def case_list_texts(
-    clinical: DataFrame,
-    study_id: str,
-    by: str = "CANCER_TYPE",
-    sample_col: str = "SAMPLE_ID",
-) -> dict[str, str]:
-    """cBioPortal case-list files (S17, genie/create_case_lists.py:
-    18-271): one text blob per group with tab-joined sample ids.
-    groupBy+collect_list computes the groups distributed; rendering the
-    KB-scale texts happens on the driver."""
-    groups = (
-        clinical.where(F.col(by).isNotNull())
-        .groupBy(by)
-        .agg(F.array_sort(F.collect_set(sample_col)).alias("samples"))
+def _columns_or_null(df: DataFrame, cols: Sequence[str]) -> list:
+    return [
+        (F.col(c) if c in df.columns else F.lit(None).cast("string")).alias(c)
+        for c in cols
+    ]
+
+
+def study_samples(clinical: DataFrame) -> list[Row]:
+    """The clinical's ``(SAMPLE_ID, CANCER_TYPE, SEQ_ASSAY_ID)`` rows,
+    in one collect (a missing column reads as null).  These rows feed
+    every case list and the commands' assay ids, sample sets and
+    clinical row counts."""
+    return clinical.select(
+        *_columns_or_null(clinical, ("SAMPLE_ID", "CANCER_TYPE", "SEQ_ASSAY_ID"))
+    ).collect()
+
+
+def assay_rows(assay_info: DataFrame | None) -> list[Row]:
+    """The assay information's ``(SEQ_ASSAY_ID, library_strategy,
+    alteration_types)`` rows, in one dim-sized collect; empty without
+    assay information."""
+    if assay_info is None or "SEQ_ASSAY_ID" not in assay_info.columns:
+        return []
+    return assay_info.select(
+        *_columns_or_null(
+            assay_info, ("SEQ_ASSAY_ID", "library_strategy", "alteration_types")
+        )
+    ).collect()
+
+
+def panel_genes(bed: DataFrame, assay_ids: Sequence[str]) -> dict[str, list[str]]:
+    """Each assay's panel genes (S18, genie_registry/bed.py:444-497):
+    the symbols of its included exon regions, from one grouped query
+    over all ``assay_ids``."""
+    if not assay_ids:
+        return {}
+    cond = F.col("SEQ_ASSAY_ID").isin(list(assay_ids)) & F.col(
+        "includeInPanel"
+    ).cast("boolean")
+    if "Feature_Type" in bed.columns:
+        cond = cond & (F.coalesce(F.col("Feature_Type"), F.lit("exon")) == "exon")
+    rows = (
+        bed.where(cond & F.col("Hugo_Symbol").isNotNull())
+        .groupBy("SEQ_ASSAY_ID")
+        .agg(F.collect_set("Hugo_Symbol").alias("genes"))
         .collect()
     )
-    out = {}
-    for row in groups:
-        value = row[by]
-        key = value.lower().replace(" ", "_").replace("/", "_")
-        ids = "\t".join(row["samples"])
-        out[f"cases_{key}.txt"] = (
-            f"cancer_study_identifier: {study_id}\n"
-            f"stable_id: {study_id}_{key}\n"
-            f"case_list_name: Tumor Type: {value}\n"
-            f"case_list_description: All tumors with cancer type {value}\n"
-            f"case_list_ids: {ids}\n"
-        )
-    all_ids = "\t".join(
-        r[0]
-        for r in clinical.select(sample_col).distinct().orderBy(sample_col).collect()
+    return {r["SEQ_ASSAY_ID"]: r["genes"] for r in rows}
+
+
+def gene_panel_text(genes: Sequence[str], seq_assay_id: str) -> str:
+    """Gene panel file (S18, genie_registry/bed.py:444-497) listing the
+    unique panel genes."""
+    genes = sorted(set(genes))
+    gene_list = "\t".join(genes)
+    stable = seq_assay_id.replace("_", "-").upper()
+    return (
+        f"stable_id: {stable}\n"
+        f"description: {stable}, Number of Genes - {len(genes)}\n"
+        f"gene_list: {gene_list}\n"
     )
-    out["cases_all.txt"] = (
+
+
+def _case_list(
+    study_id: str, suffix: str, name: str, description: str, ids: Sequence[str]
+) -> str:
+    id_list = "\t".join(ids)
+    return (
         f"cancer_study_identifier: {study_id}\n"
-        f"stable_id: {study_id}_all\n"
-        "case_list_name: All samples\n"
-        "case_list_description: All samples\n"
-        f"case_list_ids: {all_ids}\n"
+        f"stable_id: {study_id}_{suffix}\n"
+        f"case_list_name: {name}\n"
+        f"case_list_description: {description}\n"
+        f"case_list_ids: {id_list}\n"
+    )
+
+
+def case_list_texts(samples: Sequence[Mapping], study_id: str) -> dict[str, str]:
+    """cBioPortal case-list files (S17, genie/create_case_lists.py:
+    18-271) from ``study_samples`` rows: one per CANCER_TYPE, plus the
+    all and sequenced lists, each with its sorted sample ids."""
+    by_type: dict[str, set[str]] = {}
+    for r in samples:
+        if r["CANCER_TYPE"] is not None:
+            by_type.setdefault(r["CANCER_TYPE"], set()).add(r["SAMPLE_ID"])
+    out = {}
+    for value, ids in sorted(by_type.items()):
+        key = value.lower().replace(" ", "_").replace("/", "_")
+        out[f"cases_{key}.txt"] = _case_list(
+            study_id, key, f"Tumor Type: {value}",
+            f"All tumors with cancer type {value}", sorted(ids),
+        )
+    all_ids = sorted({r["SAMPLE_ID"] for r in samples})
+    out["cases_all.txt"] = _case_list(
+        study_id, "all", "All samples", "All samples", all_ids
     )
     # every released sample is sequenced, so _sequenced == _all
     # (genie/create_case_lists.py:128-147 write_case_list_sequenced)
-    out["cases_sequenced.txt"] = (
-        f"cancer_study_identifier: {study_id}\n"
-        f"stable_id: {study_id}_sequenced\n"
-        "case_list_name: Sequenced Tumors\n"
-        "case_list_description: All sequenced samples\n"
-        f"case_list_ids: {all_ids}\n"
+    out["cases_sequenced.txt"] = _case_list(
+        study_id, "sequenced", "Sequenced Tumors", "All sequenced samples", all_ids
     )
     return out
 
 
 def case_list_alteration_texts(
-    clinical: DataFrame,
-    assay_info: DataFrame,
-    study_id: str,
-    sample_col: str = "SAMPLE_ID",
+    samples: Sequence[Mapping], assays: Sequence[Mapping], study_id: str
 ) -> dict[str, str]:
     """cases_cna.txt / cases_sv.txt: samples whose SEQ_ASSAY_ID's assay
     information declares the alteration type (reference
     genie/create_case_lists.py:103-126 ``create_sequenced_samples`` +
-    write_case_list_cna/sv).  The per-SEQ_ASSAY_ID sample grouping runs
-    distributed; the assay dim is broadcast."""
+    write_case_list_cna/sv), from ``study_samples`` and ``assay_rows``
+    rows.  A list with no sample is not written."""
     out = {}
-    if "alteration_types" not in assay_info.columns:
-        return out
     for suffix, token, name in (
         ("cna", "cna", "Samples with CNA"),
         ("sv", "structural_variants", "Samples with SV"),
     ):
-        assays = assay_info.where(
-            F.col("alteration_types").contains(token)
-        ).select("SEQ_ASSAY_ID").distinct()
-        rows = (
-            clinical.join(F.broadcast(assays), "SEQ_ASSAY_ID", "left_semi")
-            .select(sample_col)
-            .distinct()
-            .orderBy(sample_col)
-            .collect()
-        )
-        if not rows:
-            continue
-        ids = "\t".join(r[0] for r in rows)
-        out[f"cases_{suffix}.txt"] = (
-            f"cancer_study_identifier: {study_id}\n"
-            f"stable_id: {study_id}_{suffix}\n"
-            f"case_list_name: {name}\n"
-            f"case_list_description: {name}\n"
-            f"case_list_ids: {ids}\n"
-        )
+        panels = {
+            a["SEQ_ASSAY_ID"] for a in assays if token in (a["alteration_types"] or "")
+        } - {None}
+        ids = sorted({r["SAMPLE_ID"] for r in samples if r["SEQ_ASSAY_ID"] in panels})
+        if ids:
+            out[f"cases_{suffix}.txt"] = _case_list(study_id, suffix, name, name, ids)
     return out
 
 
@@ -412,30 +436,58 @@ def cbio_meta_texts(
     return out
 
 
-def gene_panel_text(
-    bed: DataFrame,
-    seq_assay_id: str,
-    symbol_col: str = "Hugo_Symbol",
-) -> str:
-    """Gene panel file (S18, genie_registry/bed.py:444-497): unique
-    exon-region panel genes."""
-    cond = (F.col("SEQ_ASSAY_ID") == seq_assay_id) & F.col(
-        "includeInPanel"
-    ).cast("boolean")
-    if "Feature_Type" in bed.columns:
-        cond = cond & (F.coalesce(F.col("Feature_Type"), F.lit("exon")) == "exon")
-    symbols = (
-        bed.where(cond)
-        .select(symbol_col)
-        .where(F.col(symbol_col).isNotNull())
-        .distinct()
-        .orderBy(symbol_col)
-        .collect()
-    )
-    genes = "\t".join(r[symbol_col] for r in symbols)
-    stable = seq_assay_id.replace("_", "-").upper()
-    return (
-        f"stable_id: {stable}\n"
-        f"description: {stable}, Number of Genes - {len(symbols)}\n"
-        f"gene_list: {genes}\n"
-    )
+def write_study(
+    out_dir: str,
+    arts: ReleaseArtifacts,
+    study_id: str,
+    version: str,
+    samples: Sequence[Mapping],
+    assays: Sequence[Mapping],
+    cna_wide: DataFrame | None = None,
+) -> None:
+    """Write the cBioPortal study files the consortium and public
+    releases share (reference database_to_staging.py store_* +
+    create_case_lists; consortium_to_public.py:41-359 regenerates the
+    same set): the merged and split clinical files, MAF, SV, SEG, CNA
+    and gene matrices, ``case_lists/`` and the meta files of the data
+    files written here.
+
+    ``samples`` are the ``study_samples`` rows of ``arts.clinical`` and
+    ``assays`` the ``assay_rows``.  The CNA matrix is pivoted from
+    ``arts.cna_long``, or written as given by ``cna_wide`` (the public
+    release subsets the released matrix's columns)."""
+    case_dir = os.path.join(out_dir, "case_lists")
+    os.makedirs(case_dir, exist_ok=True)
+
+    def at(name: str) -> str:
+        return os.path.join(out_dir, name)
+
+    write_cbio_clinical(arts.clinical, at("data_clinical.txt"))
+    written = {"data_clinical.txt"}
+    if {"SAMPLE_ID", "PATIENT_ID"} <= set(arts.clinical.columns):
+        write_cbio_clinical_split(
+            arts.clinical, at("data_clinical_sample.txt"),
+            at("data_clinical_patient.txt"),
+        )
+        written |= {"data_clinical_sample.txt", "data_clinical_patient.txt"}
+    for name, df in (
+        ("data_mutations_extended.txt", arts.maf),
+        ("data_sv.txt", arts.sv),
+        ("genie_data_cna_hg19.seg", arts.seg),
+        ("data_gene_matrix.txt", arts.gene_matrix),
+    ):
+        if df is not None:
+            write_tsv(df, at(name))
+            written.add(name)
+    if arts.cna_long is not None:
+        write_cna_wide(arts.cna_long, at("data_CNA.txt"))
+        written.add("data_CNA.txt")
+    elif cna_wide is not None:
+        write_tsv(cna_wide, at("data_CNA.txt"), na_rep="NA")
+        written.add("data_CNA.txt")
+
+    write_texts(case_dir, {
+        **case_list_texts(samples, study_id),
+        **case_list_alteration_texts(samples, assays, study_id),
+    })
+    write_texts(out_dir, cbio_meta_texts(study_id, version, written))

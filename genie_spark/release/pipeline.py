@@ -81,12 +81,16 @@ def apply_retractions(
     return out
 
 
+# library_strategy of a whole-exome assay (reference
+# ``store_assay_info_files`` genie/database_to_staging.py:1191-1193)
+WES_LIBRARY_STRATEGY = "WXS"
+
+
 def wes_panels(assay_info: DataFrame) -> DataFrame:
-    """Whole-exome SEQ_ASSAY_IDs (reference ``store_assay_info_files``
-    genie/database_to_staging.py:1191-1193: library_strategy == WXS)."""
-    return assay_info.where(F.col("library_strategy") == "WXS").select(
-        "SEQ_ASSAY_ID"
-    )
+    """Whole-exome SEQ_ASSAY_IDs."""
+    return assay_info.where(
+        F.col("library_strategy") == WES_LIBRARY_STRATEGY
+    ).select("SEQ_ASSAY_ID")
 
 
 def data_gene_matrix(

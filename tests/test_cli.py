@@ -118,11 +118,8 @@ def test_validate_bad_file(spark, tmp_path):
     assert rc == 1
 
 
-def test_ingest_release_dashboard(spark, tmp_path):
-    wh = str(tmp_path / "warehouse")
-    out = str(tmp_path / "release")
-    dash = str(tmp_path / "dash")
-
+def _ingest_fixture(spark, tmp_path, wh):
+    """Ingest the clinical pair, MAF, BED, CNA and assay uploads."""
     for paths, ft in [
         (_write_clinical_pair(tmp_path), None),
         (_write_maf(tmp_path), None),
@@ -135,6 +132,14 @@ def test_ingest_release_dashboard(spark, tmp_path):
             _ns(paths=paths, center=CENTER, warehouse=wh, filetype=ft, force=True),
         )
         assert rc == 0, f"ingest failed for {paths}"
+
+
+def test_ingest_release_dashboard(spark, tmp_path):
+    wh = str(tmp_path / "warehouse")
+    out = str(tmp_path / "release")
+    dash = str(tmp_path / "dash")
+
+    _ingest_fixture(spark, tmp_path, wh)
 
     # bed bronze needs SEQ_ASSAY_ID for the release no-genepanel filter
     bed = spark.read.parquet(os.path.join(wh, "bed"))
@@ -261,6 +266,44 @@ def test_ingest_release_dashboard(spark, tmp_path):
     assert rows["PRIMARY_X"]["Total"] == 2
     onc_matrix = spark.read.parquet(os.path.join(dash, "oncotree_matrix"))
     assert "Total" in onc_matrix.columns
+
+
+def _tree_bytes(root):
+    """Relative path → bytes of every file under ``root``."""
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_public_full_sample_set_matches_release(spark, tmp_path):
+    """cmd_public over every released sample, with no private column
+    and the release's study id and version, writes each file it shares
+    with the release byte for byte: both write their study files
+    through one writer."""
+    wh = str(tmp_path / "warehouse")
+    out = str(tmp_path / "release")
+    pub = str(tmp_path / "public")
+    _ingest_fixture(spark, tmp_path, wh)
+    rc = cmd_release(
+        spark,
+        _ns(warehouse=wh, output=out, version="TEST", pad=10, whitelist=None,
+            skip_qc=True),
+    )
+    assert rc == 0
+    rc = cmd_public(
+        spark,
+        _ns(release_dir=out, output=pub, keep_samples=None, private_columns=None,
+            study_id="genie_private", version="TEST"),
+    )
+    assert rc == 0
+    released, public = _tree_bytes(out), _tree_bytes(pub)
+    # the assay information is the one release-only file
+    assert set(public) == set(released) - {"assay_information.txt"}
+    assert len(public) == 19
+    assert [n for n in sorted(public) if public[n] != released[n]] == []
 
 
 def test_retraction_e2e(spark, tmp_path):
@@ -1799,6 +1842,41 @@ def test_record_status_raises_on_unreadable_status_table(spark, tmp_path):
             spark, wh, CENTER, "c.txt", "m3", "VALIDATED", "/in/c.txt"
         )
     assert _files(table) == before
+
+
+def test_record_status_survives_kill_mid_commit(spark, tmp_path, monkeypatch):
+    """A kill after the old status table moved out and before the new
+    one moved in loses no row: the next update completes the
+    interrupted commit instead of starting a one-row table in its
+    place."""
+    from genie_spark.io.status import STATUS_TABLE, record_status
+
+    class Killed(BaseException):
+        pass
+
+    wh = str(tmp_path / "warehouse")
+    table = os.path.join(wh, STATUS_TABLE)
+    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    rename = os.rename
+
+    def killed_on_install(src, dst):
+        if dst == table:
+            raise Killed
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", killed_on_install)
+    with pytest.raises(Killed):
+        record_status(spark, wh, CENTER, "b.txt", "m2", "VALIDATED", "/in/b.txt")
+    monkeypatch.undo()
+    assert not os.path.isdir(table)
+
+    record_status(spark, wh, CENTER, "c.txt", "m3", "INVALID", "/in/c.txt",
+                  errors="ERROR [maf.cols]: missing")
+    status = {
+        r["name"]: r["status"]
+        for r in spark.read.parquet(table).collect()
+    }
+    assert status == {"a.txt": "VALIDATED", "b.txt": "VALIDATED", "c.txt": "INVALID"}
 
 
 def test_record_status_rewrites_error_tracker_only_on_change(spark, tmp_path):

@@ -17,8 +17,10 @@ from genie_spark.io.readers import (
     read_vcf,
 )
 from genie_spark.io.writers import (
+    case_list_alteration_texts,
     case_list_texts,
     gene_panel_text,
+    panel_genes,
     strip_float_formatting,
     write_cna_wide,
     write_tsv,
@@ -234,26 +236,36 @@ def test_write_cna_wide(spark, tmp_path):
         ["Hugo_Symbol", "SAMPLE_ID", "value"],
     )
     path = str(tmp_path / "cna.tsv")
-    write_cna_wide(long, path, sample_ids=["S1", "S2"])
+    write_cna_wide(long, path)
     lines = open(path).read().strip().split("\n")
     assert lines[0] == "Hugo_Symbol\tS1\tS2"
     assert "EGFR\t2\tNA" in lines and "TP53\t-1\t0" in lines
 
 
 def test_case_lists_and_gene_panel(spark):
-    clin = spark.createDataFrame(
-        [("S1", "Lung Cancer"), ("S2", "Lung Cancer"), ("S3", "Breast Cancer")],
-        ["SAMPLE_ID", "CANCER_TYPE"],
-    )
+    clin = [
+        {"SAMPLE_ID": "S1", "CANCER_TYPE": "Lung Cancer", "SEQ_ASSAY_ID": "SAGE-1"},
+        {"SAMPLE_ID": "S2", "CANCER_TYPE": "Lung Cancer", "SEQ_ASSAY_ID": "SAGE-2"},
+        {"SAMPLE_ID": "S3", "CANCER_TYPE": "Breast Cancer", "SEQ_ASSAY_ID": "SAGE-1"},
+    ]
     texts = case_list_texts(clin, "genie_test")
     assert "cases_lung_cancer.txt" in texts and "cases_all.txt" in texts
     assert "S1\tS2" in texts["cases_lung_cancer.txt"]
+    assays = [
+        {"SEQ_ASSAY_ID": "SAGE-1", "alteration_types": "snv;gene_level_cna"},
+        {"SEQ_ASSAY_ID": "SAGE-2", "alteration_types": None},
+    ]
+    alt = case_list_alteration_texts(clin, assays, "genie_test")
+    assert list(alt) == ["cases_cna.txt"]
+    assert "case_list_ids: S1\tS3\n" in alt["cases_cna.txt"]
     bed = spark.createDataFrame(
         [("SAGE-1", "TP53", "True", "exon"), ("SAGE-1", "EGFR", "True", "exon"),
          ("SAGE-1", "SKIP", "False", "exon"), ("SAGE-2", "OTHER", "True", "exon")],
         ["SEQ_ASSAY_ID", "Hugo_Symbol", "includeInPanel", "Feature_Type"],
     )
-    text = gene_panel_text(bed, "SAGE-1")
+    genes = panel_genes(bed, ["SAGE-1"])
+    assert list(genes) == ["SAGE-1"]
+    text = gene_panel_text(genes["SAGE-1"], "SAGE-1")
     assert "EGFR\tTP53" in text and "Number of Genes - 2" in text
 
 
@@ -402,6 +414,76 @@ def test_release_mergecheck_flag_mode_and_public_common_variant(spark):
         ),
     )
     assert {r["Start_Position"] for r in pub.maf.collect()} == {150, 300, 302}
+
+
+def _release_warehouse(spark, wh, n_panels):
+    """Bronze tables for four samples on ``n_panels`` panels, each panel
+    with its own cancer type."""
+    panel = [f"SAGE-PANEL-{i % n_panels + 1}" for i in range(4)]
+    codes = ["LUAD", "BRCA", "COAD"]
+    tables = {
+        "clinical": spark.createDataFrame(
+            [(f"GENIE-SAGE-{i}-1", f"GENIE-SAGE-{i}", panel[i],
+              codes[i % n_panels], "20000", "1970", "2020") for i in range(4)],
+            "SAMPLE_ID string, PATIENT_ID string, SEQ_ASSAY_ID string, "
+            "ONCOTREE_CODE string, AGE_AT_SEQ_REPORT string, BIRTH_YEAR string, "
+            "YEAR_CONTACT string",
+        ),
+        "maf": spark.createDataFrame(
+            [(f"GENIE-SAGE-{i}-1", "1", 150, 150, "A", "T", 100.0, 10.0, 90.0,
+              "PASS", "SUCCESS", 0.0001) for i in range(4)],
+            "Tumor_Sample_Barcode string, Chromosome string, Start_Position long, "
+            "End_Position long, Reference_Allele string, Tumor_Seq_Allele2 string, "
+            "t_depth double, t_alt_count double, t_ref_count double, FILTER string, "
+            "Annotation_Status string, gnomAD_AFR_AF double",
+        ),
+        "bed": spark.createDataFrame(
+            [(f"SAGE-PANEL-{p}", "1", 100, 400, g, "True")
+             for p in range(1, n_panels + 1) for g in ("TP53", "EGFR")],
+            "SEQ_ASSAY_ID string, Chromosome string, Start_Position long, "
+            "End_Position long, Hugo_Symbol string, includeInPanel string",
+        ),
+        "assayinfo": spark.createDataFrame(
+            [(f"SAGE-PANEL-{p}", "Targeted Sequencing", "snv;gene_level_cna")
+             for p in range(1, n_panels + 1)],
+            "SEQ_ASSAY_ID string, library_strategy string, alteration_types string",
+        ),
+        "oncotree": spark.createDataFrame(
+            [("LUAD", "Non-Small Cell Lung Cancer", "Lung Adenocarcinoma"),
+             ("BRCA", "Breast Cancer", "Breast Invasive Ductal Carcinoma"),
+             ("COAD", "Colorectal Cancer", "Colon Adenocarcinoma")],
+            "ONCOTREE_CODE string, CANCER_TYPE string, CANCER_TYPE_DETAILED string",
+        ),
+    }
+    for name, df in tables.items():
+        df.write.parquet(os.path.join(wh, name))
+
+
+def test_release_jobs_independent_of_panels_and_cancer_types(spark, tmp_path):
+    """The release's case lists, gene panels and assay ids come from one
+    clinical collect, one assay collect and one grouped panel query, so
+    a release over three panels and three cancer types runs as many
+    Spark jobs as one over a single panel and cancer type."""
+    import argparse
+
+    from genie_spark.cli import cmd_release
+
+    jobs = {}
+    for n in (1, 3):
+        wh, out = str(tmp_path / f"wh{n}"), str(tmp_path / f"release{n}")
+        _release_warehouse(spark, wh, n)
+        before = _newest_job(spark)
+        rc = cmd_release(spark, argparse.Namespace(
+            warehouse=wh, output=out, version="v1", pad=10, whitelist=None,
+            skip_qc=True,
+        ))
+        jobs[n] = _newest_job(spark) - before
+        assert rc == 0
+        panels = sorted(f for f in os.listdir(out) if f.startswith("data_gene_panel_"))
+        assert len(panels) == n
+        cases = os.listdir(os.path.join(out, "case_lists"))
+        assert len([f for f in cases if f.startswith("cases_")]) == n + 3
+    assert jobs[3] == jobs[1]
 
 
 def test_oncotree_json_flatten(spark, tmp_path):

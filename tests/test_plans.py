@@ -1150,3 +1150,24 @@ def test_j5_empty_bin_is_intergenic(spark):
     assert kinds <= {"exon", "intron", "intergenic"}, kinds
     assert all(r["feature_type"] is not None for r in rows)
     assert "intergenic" in kinds, kinds
+
+
+def test_layertrace_wrapped_names_resolve():
+    """Every ``(module, function)`` the traced benchmark wraps
+    (perfbench/layertrace.py ``WRAPPED``) exists: a rename or deletion
+    fails here instead of crashing the traced run on its ``getattr``."""
+    import importlib
+    import importlib.util
+    import os as _os
+
+    path = _os.path.join(_os.path.dirname(__file__), "..", "perfbench", "layertrace.py")
+    spec = importlib.util.spec_from_file_location("_layertrace", path)
+    layertrace = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layertrace)
+    missing = [
+        f"{mod}.{attr}"
+        for pairs in layertrace.WRAPPED.values()
+        for mod, attr in pairs
+        if not callable(getattr(importlib.import_module(mod), attr, None))
+    ]
+    assert missing == []
