@@ -191,7 +191,7 @@ def cmd_ingest(spark: SparkSession, args: argparse.Namespace) -> int:
     ``processfiles``, genie/input_to_database.py:383-442), with the
     reference's per-file status bookkeeping: duplicate filenames are
     rejected, an unchanged (name, md5) skips revalidation, and the
-    status/error tables record every outcome
+    validation-status table records every outcome with its error text
     (input_to_database.py:54-113,479-644)."""
     from genie_spark.io.status import (
         duplicate_basenames,
@@ -217,13 +217,13 @@ def cmd_ingest(spark: SparkSession, args: argparse.Namespace) -> int:
     upload_md5 = hashlib_md5_of(args.paths)
     df = fmt.read(spark, args.paths).withColumn("CENTER", F.lit(args.center))
     ruleset = fmt.rules(args.center)
-    known = prior_status(spark, args.warehouse, args.center, upload_name, upload_md5)
+    known = prior_status(args.warehouse, args.center, upload_name, upload_md5)
     if known == "VALIDATED":
         print(f"{upload_name}: unchanged (md5 match), skipping revalidation")
     elif ruleset is not None:
         report = ruleset.validate(df)
         record_status(
-            spark, args.warehouse, args.center, upload_name, upload_md5,
+            args.warehouse, args.center, upload_name, upload_md5,
             "VALIDATED" if report.is_valid else "INVALID",
             path=args.paths[0],
             errors="" if report.is_valid else report.render(),
@@ -234,7 +234,7 @@ def cmd_ingest(spark: SparkSession, args: argparse.Namespace) -> int:
                 return 1
     else:
         record_status(
-            spark, args.warehouse, args.center, upload_name, upload_md5,
+            args.warehouse, args.center, upload_name, upload_md5,
             "VALIDATED", path=args.paths[0],
         )
     if fmt.transform is not None:
@@ -1136,12 +1136,12 @@ def cmd_process_mutation(spark: SparkSession, args: argparse.Namespace) -> int:
 
 
 def cmd_invalid_reasons(spark: SparkSession, args: argparse.Namespace) -> int:
-    """Per-center validation-error reports from the error tracker
-    (reference genie/write_invalid_reasons.py)."""
+    """Per-center validation-error reports from the validation-status
+    table's error text (reference genie/write_invalid_reasons.py)."""
     from genie_spark.io.status import write_invalid_reasons
 
     centers = args.centers.split(",") if args.centers else None
-    written = write_invalid_reasons(spark, args.warehouse, args.output, centers)
+    written = write_invalid_reasons(args.warehouse, args.output, centers)
     print(f"wrote {len(written)} report(s) → {args.output}")
     return 0
 
@@ -1725,7 +1725,8 @@ def cmd_events_report(spark: SparkSession, args: argparse.Namespace) -> int:
 def cmd_ingest_correlate(spark: SparkSession, args: argparse.Namespace) -> int:
     """Correlate a center-upload event stream with a validation-result
     stream per (center, name) — the streaming analog of the batch
-    ``validation_status`` table (io/status.py; reference
+    ``validation_status`` table (io/status.py: one driver-side row per
+    (center, name) with its md5, status and error text; reference
     genie/input_to_database.py:519-603 tracks the same pairing as
     Synapse-table upserts).  Each upload pairs with the verdict that
     lands within ``--max-delay-seconds`` of it

@@ -1,4 +1,4 @@
-"""Validation-status and error-tracker tables.
+"""Validation-status table.
 
 The reference keeps two Synapse tables per center
 (genie/input_to_database.py:54-113 ``check_existing_file_status``,
@@ -8,40 +8,40 @@ skips revalidation, and an error tracker holding the report text of
 invalid files.  Duplicate filenames within one upload batch are
 rejected outright.
 
-Here both live as small parquet tables in the warehouse
-(``validation_status`` / ``error_tracker``), one row per (center,
-name), and the md5 is computed driver-side over the upload file,
-exactly where the reference reads the Synapse entity md5.  They are
-dim-sized — one row per uploaded file — but each update is still a
-Spark read-modify-write, so its cost is per job, not per row.
-Measured in one traced GENIE night (4-core host, PySpark 4.1.2): a
-status update cost ~1.3 s while its one-row table came from the
-pickle ``createDataFrame`` path (Python worker tasks re-run in every
-consuming job) and every read ran a schema-inference job.  So the
-new row enters as an Arrow ``LocalRelation`` (``local_rows_df``),
-both tables are read with their declared schemas, and the error
-tracker is rewritten only when an update changes it: the same night's
-status work fell from 48 Spark jobs and 12.0 task-seconds to 25 jobs
-and 1.4 task-seconds.
+Here both are ONE parquet table in the warehouse, ``validation_status``
+with the columns ``(center, name, md5, status, path, errors)``: one row
+per (center, name), whose ``errors`` holds the report text of an
+invalid file and is empty otherwise.  The md5 is computed driver-side
+over the upload file, exactly where the reference reads the Synapse
+entity md5.
+
+The table is bookkeeping, one row per uploaded file, so it lives on
+the driver: it is read with ``pyarrow.parquet`` and rewritten as one
+parquet file, and no status check or update runs a Spark job.  A
+Spark read-modify-write of a ten-row table pays a query's fixed cost
+(planning, job submission, task launch) for every update.  Each
+rewrite is staged and installed by the bronze tables' journaled
+whole-table swap (``DEFAULT_COMMIT.commit_whole``); a read first rolls
+an interrupted swap forward, so a kill mid-commit loses no row, and a
+table that cannot be read raises instead of reading as empty.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from genie_spark.io.bronze import DEFAULT_COMMIT
-from genie_spark.session import local_rows_df
 
 STATUS_TABLE = "validation_status"
-ERROR_TABLE = "error_tracker"
 
-STATUS_SCHEMA = (
-    "center string, name string, md5 string, status string, path string"
+STATUS_SCHEMA = pa.schema(
+    [(c, pa.string()) for c in ("center", "name", "md5", "status", "path", "errors")]
 )
-ERROR_SCHEMA = "center string, name string, errors string"
 
 
 def file_md5(path: str) -> str:
@@ -60,47 +60,31 @@ def duplicate_basenames(paths: list[str]) -> list[str]:
     return sorted({n for n in names if names.count(n) > 1})
 
 
-_SCHEMAS = {STATUS_TABLE: STATUS_SCHEMA, ERROR_TABLE: ERROR_SCHEMA}
-
-
-def _read(spark: SparkSession, warehouse: str, table: str) -> DataFrame | None:
-    """The table read with its declared schema (no inference job), or
-    None when its directory is absent.  A commit that a kill
-    interrupted is rolled forward first, so a table caught between its
-    old and new directory reads as the new one, never as absent.  A
-    present table that cannot be read raises when the result is used —
-    an unreadable table is never mistaken for an absent one, whose
-    first upsert would overwrite every other file's row."""
-    path = os.path.join(warehouse, table)
+def _read(warehouse: str) -> list[dict]:
+    """The table's rows, or none when its directory is absent.  A
+    commit that a kill interrupted is rolled forward first, so a table
+    caught between its old and new directory reads as the new one,
+    never as absent.  A present table that cannot be read raises — an
+    unreadable table is never mistaken for an absent one, whose first
+    update would overwrite every other file's row."""
+    path = os.path.join(warehouse, STATUS_TABLE)
     DEFAULT_COMMIT.recover(path, clean_leftovers=False)
     if not os.path.isdir(path):
-        return None
-    return spark.read.schema(_SCHEMAS[table]).parquet(path)
+        return []
+    return pq.read_table(path, schema=STATUS_SCHEMA).to_pylist()
 
 
-def _key(df: DataFrame, center: str, name: str):
-    return (df.center == center) & (df.name == name)
-
-
-def prior_status(
-    spark: SparkSession, warehouse: str, center: str, name: str, md5: str
-) -> str | None:
+def prior_status(warehouse: str, center: str, name: str, md5: str) -> str | None:
     """The stored status when (name, md5) is unchanged — meaning
     revalidation can be skipped (check_existing_file_status: a changed
     md5 or name forces ``to_validate``)."""
-    df = _read(spark, warehouse, STATUS_TABLE)
-    if df is None:
-        return None
-    rows = (
-        df.where(_key(df, center, name) & (df.md5 == md5))
-        .select("status")
-        .collect()
-    )
-    return rows[0]["status"] if rows else None
+    for r in _read(warehouse):
+        if (r["center"], r["name"], r["md5"]) == (center, name, md5):
+            return r["status"]
+    return None
 
 
 def record_status(
-    spark: SparkSession,
     warehouse: str,
     center: str,
     name: str,
@@ -109,58 +93,49 @@ def record_status(
     path: str,
     errors: str = "",
 ) -> None:
-    """Upsert the (center, name) status row and mirror the error text
-    into the error tracker (cleared when the file turns valid).  The
-    tracker is created on the first update and afterwards rewritten
-    only when the update adds an error row or clears one."""
-    new = local_rows_df(spark, [(center, name, md5, status, path)], STATUS_SCHEMA)
-    _upsert_small(spark, warehouse, STATUS_TABLE, new, center, name)
-    tracker = _read(spark, warehouse, ERROR_TABLE)
-    if (
-        not errors
-        and tracker is not None
-        and not tracker.where(_key(tracker, center, name)).limit(1).collect()
-    ):
-        return
-    err = local_rows_df(
-        spark, [(center, name, errors)] if errors else [], ERROR_SCHEMA
+    """Upsert the (center, name) row; ``errors`` is the file's report
+    text, empty when it is valid."""
+    rows = [r for r in _read(warehouse) if (r["center"], r["name"]) != (center, name)]
+    rows.append(
+        dict(center=center, name=name, md5=md5, status=status, path=path, errors=errors)
     )
-    _upsert_small(spark, warehouse, ERROR_TABLE, err, center, name)
+    target = os.path.join(warehouse, STATUS_TABLE)
+    staging = DEFAULT_COMMIT.staging_path(target)
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=STATUS_SCHEMA),
+        os.path.join(staging, "part-00000.parquet"),
+    )
+    DEFAULT_COMMIT.commit_whole(staging, target)
 
 
 def invalid_reason_texts(
-    error_tracker: DataFrame, centers: list[str] | None = None
+    rows: list[dict], centers: list[str] | None = None
 ) -> dict[str, str]:
     """Per-center validation-error report text (reference
-    genie/write_invalid_reasons.py:49-90): each invalid file renders
-    as ``\\t{name}:\\n\\n{errors}\\n\\n`` with the ``|`` separators
-    restored to newlines; a center with no invalid files gets
-    ``"No errors!"``.  The tracker is dim-sized (one row per invalid
-    file) so the collect is bounded."""
-    rows = error_tracker.orderBy("center", "name").collect()
+    genie/write_invalid_reasons.py:49-90) from status rows: each file
+    with error text renders as ``\\t{name}:\\n\\n{errors}\\n\\n`` with
+    the ``|`` separators restored to newlines; a center with no
+    invalid files gets ``"No errors!"``."""
     by_center: dict[str, str] = {}
-    for r in rows:
-        text = f"\t{r['name']}:\n\n{(r['errors'] or '').replace('|', chr(10))}\n\n"
-        by_center[r["center"]] = by_center.get(r["center"], "") + text
+    for r in sorted(rows, key=lambda r: (r["center"], r["name"])):
+        if r["errors"]:
+            text = f"\t{r['name']}:\n\n{r['errors'].replace('|', chr(10))}\n\n"
+            by_center[r["center"]] = by_center.get(r["center"], "") + text
     for c in centers or []:
         by_center.setdefault(c, "No errors!")
     return by_center
 
 
 def write_invalid_reasons(
-    spark: SparkSession,
-    warehouse: str,
-    out_dir: str,
-    centers: list[str] | None = None,
+    warehouse: str, out_dir: str, centers: list[str] | None = None
 ) -> list[str]:
     """Write ``{center}_validation_errors.txt`` per center from the
-    error tracker (reference genie/write_invalid_reasons.py:14-45,
-    minus the Synapse upload).  Returns the written paths."""
-    tracker = _read(spark, warehouse, ERROR_TABLE)
-    if tracker is None:
-        texts = {c: "No errors!" for c in centers or []}
-    else:
-        texts = invalid_reason_texts(tracker, centers)
+    status table's error text (reference
+    genie/write_invalid_reasons.py:14-45, minus the Synapse upload).
+    Returns the written paths."""
+    texts = invalid_reason_texts(_read(warehouse), centers)
     os.makedirs(out_dir, exist_ok=True)
     written = []
     for center, text in sorted(texts.items()):
@@ -169,24 +144,3 @@ def write_invalid_reasons(
             f.write(text)
         written.append(path)
     return written
-
-
-def _upsert_small(
-    spark: SparkSession,
-    warehouse: str,
-    table: str,
-    new: DataFrame,
-    center: str,
-    name: str,
-) -> None:
-    target = os.path.join(warehouse, table)
-    existing = _read(spark, warehouse, table)
-    if existing is not None:
-        out = existing.where(~_key(existing, center, name)).unionByName(new)
-    else:
-        out = new
-    # journaled whole-table swap (io.bronze): a kill at any step leaves
-    # either the old table or a commit that the next _read completes
-    staging = DEFAULT_COMMIT.staging_path(target)
-    out.write.mode("overwrite").parquet(staging)
-    DEFAULT_COMMIT.commit_whole(staging, target)

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _external_master_present(builder: SparkSession.Builder) -> bool:
     """True when a launcher already owns the master setting, in which
@@ -83,12 +85,13 @@ def get_spark(
             shuffle_partitions = 32
 
     builder = SparkSession.builder
+    launched = _external_master_present(builder)
     # precedence: explicit SPARK_GRAFT_MASTER, then a master already
     # provided by spark-submit / a shared builder conf, then local[cpus]
     env_master = os.environ.get("SPARK_GRAFT_MASTER")
     if env_master:
         builder = builder.master(env_master)
-    elif not _external_master_present(builder):
+    elif not launched:
         builder = builder.master(f"local[{cpus}]")
 
     builder = (
@@ -130,7 +133,14 @@ def get_spark(
         # JVM already runs.
         .config("spark.driver.memory", _default_driver_mem())
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if not launched:
+        # Python workers import genie_spark from the package's parent
+        # directory, whatever their working directory; a PYTHONPATH in
+        # extra_conf is kept after it.  A launcher's conf is left alone.
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (_PACKAGE_PARENT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

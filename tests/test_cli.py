@@ -1804,7 +1804,8 @@ def test_validation_status_workflow(spark, tmp_path, capsys):
                    filetype="maf", force=False),
     )
     assert rc == 1
-    errs = spark.read.parquet(os.path.join(wh, "error_tracker")).collect()
+    status = spark.read.parquet(os.path.join(wh, "validation_status"))
+    errs = [r for r in status.collect() if r["status"] == "INVALID"]
     assert len(errs) == 1 and "must at least have" in errs[0]["errors"]
 
 
@@ -1830,17 +1831,15 @@ def test_record_status_raises_on_unreadable_status_table(spark, tmp_path):
     from genie_spark.io.status import STATUS_TABLE, record_status
 
     wh = str(tmp_path / "warehouse")
-    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
-    record_status(spark, wh, CENTER, "b.txt", "m2", "VALIDATED", "/in/b.txt")
+    record_status(wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    record_status(wh, CENTER, "b.txt", "m2", "VALIDATED", "/in/b.txt")
     table = os.path.join(wh, STATUS_TABLE)
     part = next(f for f in sorted(os.listdir(table)) if f.endswith(".parquet"))
     with open(os.path.join(table, part), "wb") as f:
         f.write(b"not a parquet file")
     before = _files(table)
     with pytest.raises(Exception, match="(?i)parquet"):
-        record_status(
-            spark, wh, CENTER, "c.txt", "m3", "VALIDATED", "/in/c.txt"
-        )
+        record_status(wh, CENTER, "c.txt", "m3", "VALIDATED", "/in/c.txt")
     assert _files(table) == before
 
 
@@ -1856,7 +1855,7 @@ def test_record_status_survives_kill_mid_commit(spark, tmp_path, monkeypatch):
 
     wh = str(tmp_path / "warehouse")
     table = os.path.join(wh, STATUS_TABLE)
-    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    record_status(wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
     rename = os.rename
 
     def killed_on_install(src, dst):
@@ -1866,11 +1865,11 @@ def test_record_status_survives_kill_mid_commit(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(os, "rename", killed_on_install)
     with pytest.raises(Killed):
-        record_status(spark, wh, CENTER, "b.txt", "m2", "VALIDATED", "/in/b.txt")
+        record_status(wh, CENTER, "b.txt", "m2", "VALIDATED", "/in/b.txt")
     monkeypatch.undo()
     assert not os.path.isdir(table)
 
-    record_status(spark, wh, CENTER, "c.txt", "m3", "INVALID", "/in/c.txt",
+    record_status(wh, CENTER, "c.txt", "m3", "INVALID", "/in/c.txt",
                   errors="ERROR [maf.cols]: missing")
     status = {
         r["name"]: r["status"]
@@ -1879,36 +1878,38 @@ def test_record_status_survives_kill_mid_commit(spark, tmp_path, monkeypatch):
     assert status == {"a.txt": "VALIDATED", "b.txt": "VALIDATED", "c.txt": "INVALID"}
 
 
-def test_record_status_rewrites_error_tracker_only_on_change(spark, tmp_path):
-    """The error tracker is created on the first update, left untouched
-    by an update that neither adds nor clears an error row, and
-    rewritten when a file turns INVALID or back to VALIDATED."""
-    from genie_spark.io.status import ERROR_TABLE, STATUS_TABLE, record_status
+def test_record_status_error_text_lifecycle(spark, tmp_path):
+    """The status table is created with empty error text on the first
+    update; a file's error text is set when it turns INVALID and
+    cleared when it turns back to VALIDATED."""
+    from genie_spark.io.status import STATUS_TABLE, record_status
 
     wh = str(tmp_path / "warehouse")
-    tracker = os.path.join(wh, ERROR_TABLE)
-    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
-    assert os.path.isdir(tracker)
-    assert spark.read.parquet(tracker).count() == 0
+    table = os.path.join(wh, STATUS_TABLE)
 
-    before = _files(tracker)
-    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
-    assert _files(tracker) == before
+    def errors():
+        return {r["name"]: r["errors"] for r in spark.read.parquet(table).collect()}
+
+    record_status(wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    assert os.path.isdir(table)
+    assert errors() == {"a.txt": ""}
+
+    record_status(wh, CENTER, "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    assert errors() == {"a.txt": ""}
 
     record_status(
-        spark, wh, CENTER, "b.txt", "m2", "INVALID", "/in/b.txt",
+        wh, CENTER, "b.txt", "m2", "INVALID", "/in/b.txt",
         errors="ERROR [maf.cols]: missing",
     )
-    assert [tuple(r) for r in spark.read.parquet(tracker).collect()] == [
-        (CENTER, "b.txt", "ERROR [maf.cols]: missing")
-    ]
-    record_status(spark, wh, CENTER, "b.txt", "m3", "VALIDATED", "/in/b.txt")
-    assert spark.read.parquet(tracker).count() == 0
+    assert errors() == {"a.txt": "", "b.txt": "ERROR [maf.cols]: missing"}
+    record_status(wh, CENTER, "b.txt", "m3", "VALIDATED", "/in/b.txt")
+    assert errors() == {"a.txt": "", "b.txt": ""}
     status = {
         r["name"]: (r["md5"], r["status"])
-        for r in spark.read.parquet(os.path.join(wh, STATUS_TABLE)).collect()
+        for r in spark.read.parquet(table).collect()
     }
     assert status == {"a.txt": ("m1", "VALIDATED"), "b.txt": ("m3", "VALIDATED")}
+    assert not os.path.exists(os.path.join(wh, "error_tracker"))
 
 
 def test_workflow_format_and_mutations_in_cis_rules(spark, tmp_path):
@@ -1991,7 +1992,7 @@ def test_process_mutation_and_invalid_reasons(spark, tmp_path):
 
     wh = str(tmp_path / "wh")
     record_status(
-        spark, wh, CENTER, "bad.maf", "d41d8", "invalid", "/x/bad.maf",
+        wh, CENTER, "bad.maf", "d41d8", "invalid", "/x/bad.maf",
         errors="line 1 bad|line 2 bad",
     )
     reports = str(tmp_path / "reports")

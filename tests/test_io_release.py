@@ -187,6 +187,31 @@ def test_upload_read_runs_no_job(spark, tmp_path, case):
     assert _newest_job(spark) == before
 
 
+def test_upload_status_runs_no_job(spark, tmp_path):
+    """Status checks and updates are driver-side: a check, three
+    updates (valid, invalid with error text, valid again) and the
+    invalid-reasons reports run no Spark job."""
+    from genie_spark.io.status import (
+        prior_status,
+        record_status,
+        write_invalid_reasons,
+    )
+
+    wh = str(tmp_path / "warehouse")
+    before = _newest_job(spark)
+    assert prior_status(wh, "SAGE", "a.txt", "m1") is None
+    record_status(wh, "SAGE", "a.txt", "m1", "VALIDATED", "/in/a.txt")
+    record_status(
+        wh, "SAGE", "a.txt", "m2", "INVALID", "/in/a.txt",
+        errors="ERROR [maf.cols]: missing",
+    )
+    record_status(wh, "SAGE", "a.txt", "m3", "VALIDATED", "/in/a.txt")
+    assert prior_status(wh, "SAGE", "a.txt", "m3") == "VALIDATED"
+    (path,) = write_invalid_reasons(wh, str(tmp_path / "reports"), ["SAGE"])
+    assert open(path).read() == "No errors!"
+    assert _newest_job(spark) == before
+
+
 def test_cna_read_with_quote_and_backtick_sample_ids(spark, tmp_path):
     """A CNA sample column named with ' or ` melts like any other — it
     reaches the validator instead of crashing the read."""

@@ -569,6 +569,28 @@ def test_delimited_reads_only_in_readers():
     assert not offenders, offenders
 
 
+def test_status_imports_no_pyspark():
+    """Repo policy (io/status): the validation-status table is read and
+    written on the driver with pyarrow, so a status check or update
+    runs no Spark job — the module imports nothing from ``pyspark``."""
+    import ast
+    import os as _os
+
+    path = _os.path.join(
+        _os.path.dirname(__file__), "..", "genie_spark", "io", "status.py"
+    )
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    imported = [
+        alias.name for node in ast.walk(tree) if isinstance(node, ast.Import)
+        for alias in node.names
+    ] + [
+        node.module or "" for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+    ]
+    assert not [m for m in imported if m.split(".")[0] == "pyspark"], imported
+
+
 def test_slow_tests_names_are_live():
     """tests/conftest.py::SLOW_TESTS marks tests by bare name, so a
     renamed or deleted test leaves a stale entry that silently marks

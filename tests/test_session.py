@@ -1,12 +1,18 @@
-"""Session-factory behavior: cluster-master passthrough.
+"""Session-factory behavior: cluster-master passthrough and the Python
+workers' import path.
 
 The factory must not pin ``local[n]`` over a master provided by
 spark-submit (``--master`` in PYSPARK_SUBMIT_ARGS), a builder conf, or
 ``SPARK_GRAFT_MASTER`` — otherwise the "cluster-safe" entry points
 would fight the cluster manager.  These tests exercise the decision
-logic without starting a second SparkSession (getOrCreate would just
-reuse the test session anyway).
+logic without starting a second SparkSession in this process
+(getOrCreate would just reuse the test session anyway); the import-path
+test starts its session in a subprocess.
 """
+
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import SparkSession
@@ -48,6 +54,36 @@ def test_get_spark_local_default_unchanged(spark):
     assert spark.sparkContext.master.startswith("local[")
 
 
+def test_workers_import_package_from_any_working_directory(tmp_path):
+    """A package query that runs Python workers (k-means' Arrow scan)
+    works from a working directory outside the repo with the repo only
+    on the driver's ``sys.path``: get_spark puts the package's parent
+    directory on the workers' PYTHONPATH."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from genie_spark.analytics.clustering import kmeans_assign
+from genie_spark.session import get_spark, local_rows_df
+
+spark = get_spark("cwd_probe", shuffle_partitions=2)
+rows = [(i, [float(i % 4), float(i % 3)]) for i in range(12)]
+df = local_rows_df(spark, rows, "vec_id long, embedding array<float>")
+print(kmeans_assign(df, k=2, iters=1).count())
+"""
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT")
+    }
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-1] == "12"
+
+
 def test_session_scale_confs(spark):
     """The factory's scale-critical confs survive into the session:
     AQE on, and the ObjectHashAggregate sort-fallback raised so
@@ -71,7 +107,6 @@ def test_local_rows_df_plans_local_relation_and_matches_pickle_path(spark):
     per downstream job for a 16-row table vs 0.18 s via Arrow)."""
     from pyspark.sql import types as T
 
-    from genie_spark.io.status import ERROR_SCHEMA, STATUS_SCHEMA
     from genie_spark.release.oncotree import ONCOTREE_COLUMNS
     from genie_spark.session import local_rows_df
 
@@ -83,11 +118,11 @@ def test_local_rows_df_plans_local_relation_and_matches_pickle_path(spark):
         ([(1, "ab"), (2, None)], "k long, s string"),
         ([(0.5,), (0.25,)], "q double"),
         ([(1, 2, 3, 4, 5)], "query_id long, cell long, s int, cid long, d2 long"),
-        # io/status: one status row, one error row
+        # all-string rows: a 5-column one, one with '|' line separators
         ([("SAGE", "a.txt;b.txt", "0f" * 16, "VALIDATED", "/in/a.txt")],
-         STATUS_SCHEMA),
+         "center string, name string, md5 string, status string, path string"),
         ([("SAGE", "m.txt", "ERROR [maf.cols]: missing|two lines")],
-         ERROR_SCHEMA),
+         "center string, name string, errors string"),
         # release/oncotree: a row with None strings
         ([("BRCA", None, "", "BREAST", ""), ("X", "Other", None, None, None)],
          ", ".join(f"{c} string" for c in ONCOTREE_COLUMNS)),
