@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from genie_spark.formats import BY_NAME, determine_filetype
-from genie_spark.io.bronze import merge_into_bronze, rewrite_bronze
+from genie_spark.io.bronze import merge_into_bronze, read_table, rewrite_bronze
 
 
 def _bronze(warehouse: str, name: str) -> str:
@@ -51,22 +51,9 @@ def hashlib_md5_of(paths: list[str]) -> str:
 
 
 def _read_bronze(spark: SparkSession, warehouse: str, name: str) -> DataFrame | None:
-    """None means "table not ingested yet" — the absent directory, and
-    a directory with no committed parquet part (an ingest that died
-    before its first commit leaves an empty dir or only _temporary
-    droppings; that is a not-ingested state, not a corrupt table).  A
-    present table that fails to READ (corrupt footer, permission
-    failure) raises: swallowing it would let dashboard/release compute
-    silently with missing inputs."""
-    from genie_spark.io.bronze import _read_target, recover_bronze
-
-    path = _bronze(warehouse, name)
-    # roll FORWARD any swap a crashed merge left half-done — readers
-    # must never see a half-old/half-new table.  clean_leftovers=False:
-    # a manifest-less staging dir may be a LIVE writer's in-progress
-    # output; only writers may delete it (io/bronze.py contract)
-    recover_bronze(path, clean_leftovers=False)
-    return _read_target(spark, path)
+    """A warehouse table, or None iff not ingested yet; a present
+    table that fails to read raises (``io.bronze.read_table``)."""
+    return read_table(spark, _bronze(warehouse, name))
 
 
 def _norm_assay_id(c: F.Column) -> F.Column:
@@ -536,15 +523,12 @@ def _append_release_snapshot(
     # release-over-release lag orders by this stamp instead
     path = _bronze(warehouse, "release_counts")
     seq = 0
-    # Explicit path check instead of a bare try/except: a genuine read
-    # failure (corrupt footer, permissions) must propagate, not silently
-    # reset the sequence to 0 (which would stamp a duplicate ReleaseSeq
-    # and corrupt the dashboard's lag ordering).
-    if os.path.isdir(path):
-        # mergeSchema: legacy snapshots predate the ReleaseSeq column; a
-        # single-footer read could nondeterministically drop the column
-        # (or the legacy rows) from a mixed-schema log
-        existing = spark.read.option("mergeSchema", "true").parquet(path)
+    # a genuine read failure (corrupt footer, permissions) propagates
+    # instead of resetting the sequence to 0, which would stamp a
+    # duplicate ReleaseSeq and corrupt the dashboard's lag ordering;
+    # legacy snapshots predate ReleaseSeq, so it may read as null
+    existing = read_table(spark, path)
+    if existing is not None:
         if "ReleaseSeq" in existing.columns:
             mx = existing.agg(F.max("ReleaseSeq")).first()[0]
             # all-legacy log (column merged in but every row null):
@@ -721,8 +705,6 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
                 .agg(F.count(F.lit(1)).alias("Failed_Annotations"))
                 .orderBy(*group)
             )
-    # mergeSchema: the snapshot log may mix legacy (no ReleaseSeq) and
-    # current files; a single-footer read could silently drop the column
     # per-column clinical value-distribution decrease flags between two
     # written releases (reference print_clinical_values_difference_table,
     # dashboard_table_updater.py:675-807)
@@ -749,9 +731,8 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
     # update_samples_in_release_table, dashboard_table_updater.py:53-110):
     # 1 = sample in that release, 0 = not; release columns ordered by
     # their monotonic ingest sequence
-    rs_path = _bronze(args.warehouse, "release_samples")
-    if os.path.isdir(rs_path):
-        rs = spark.read.option("mergeSchema", "true").parquet(rs_path)
+    rs = read_table(spark, _bronze(args.warehouse, "release_samples"))
+    if rs is not None:
         releases = list(
             dict.fromkeys(
                 r["Release"]
@@ -768,12 +749,7 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
             .na.fill(0)
         )
 
-    rc_path = _bronze(args.warehouse, "release_counts")
-    release_counts = (
-        spark.read.option("mergeSchema", "true").parquet(rc_path)
-        if os.path.isdir(rc_path)
-        else None
-    )
+    release_counts = read_table(spark, _bronze(args.warehouse, "release_counts"))
     if release_counts is not None:
         from pyspark.sql import Window
 
@@ -986,7 +962,7 @@ def dashboard_html(
         "<h1>genie_spark dashboard</h1>",
     ]
     for name, path in tables.items():
-        df = spark.read.option("mergeSchema", "true").parquet(path)
+        df = read_table(spark, path)
         cols = df.columns
         # sort + limit stay IN Spark — sample-level tables are
         # release-sized, so collecting everything to the driver just to

@@ -31,12 +31,20 @@ via tmp-file + ``os.rename``) records the staging dir and the exact
 per-partition file listing BEFORE the first move; every move is a
 same-filesystem ``os.rename`` (atomic per entry); the manifest is
 removed only after the last move and cleanup.  ``recover_bronze``
-(called by every merge/compact/rewrite entry point and by the CLI
-read path) rolls an interrupted swap FORWARD from the manifest —
+(called by every merge/compact/rewrite entry point and by
+``read_table``) rolls an interrupted swap FORWARD from the manifest —
 staging holds complete replacement partitions, so resuming the move
 loop always converges to the fully-new state — and rolls BACK
 (deletes) staging dirs that have no manifest, which are pre-commit
 writes the crash abandoned.
+
+Reads: ``read_table`` (``TableCommit.read``, and the CLI's warehouse,
+snapshot-log and dashboard reads) takes the schema from the data
+files' parquet footers on the driver (``parquet_schema``) and runs no
+Spark job.  The reference's table schema is Synapse metadata, never a
+scan (genie/load.py:129-296); here the footers are the metadata, and
+their union is the table schema a schema-evolving partition MERGE
+needs, since partitions it did not touch keep the narrower schema.
 """
 
 from __future__ import annotations
@@ -51,6 +59,7 @@ import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from genie_spark.operators.upsert import apply_upsert
 
@@ -59,6 +68,9 @@ PARTITION_COL = "CENTER"
 MANIFEST_SUFFIX = ".swap.json"
 
 LOCK_SUFFIX = ".swap.lock"
+
+# footer key under which Spark's parquet writer stores the table schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @contextlib.contextmanager
@@ -89,30 +101,57 @@ def _swap_lock(target_path: str):
         os.close(fd)
 
 
-def _read_target(spark, target_path: str) -> DataFrame | None:
-    """The existing bronze table, or None iff it is genuinely ABSENT
-    (no directory, or no committed parquet part).  A present table
-    that fails to READ raises: mapping a corrupt footer (or a
-    mergeSchema type conflict from foreign files) to None would make
-    ``merge_into_bronze`` take its first-write path and _swap_whole
-    the batch OVER every other center's data."""
-    if not os.path.isdir(target_path):
+def part_files(root: str):
+    """Yield (path, rel_dir) for every committed data file under
+    ``root``, ``rel_dir`` being its ``k=v`` partition segments.  Names
+    starting with ``_`` or ``.`` are skipped, as Spark's file index
+    skips them: ``_temporary`` writer droppings, ``_txn_log``, staging
+    and ``.<entry>.incoming`` claim dirs are never table data."""
+    for dirpath, dirnames, files in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
+        rel = "" if dirpath == root else os.path.relpath(dirpath, root)
+        for f in sorted(files):
+            if not f.startswith((".", "_")) and (
+                f.endswith(".parquet") or f.startswith("part-")
+            ):
+                yield os.path.join(dirpath, f), rel
+
+
+def parquet_schema(files) -> StructType:
+    """The union of the Spark schemas in the footers of ``files``, read
+    on the driver: fields nullable, in first-seen order over the files
+    sorted by path, names matched case-insensitively (Spark's merge
+    default).  A column whose type differs between two footers raises
+    ``ValueError``, as Spark's schema merge fails; so does a footer
+    without Spark's schema (a file Spark did not write)."""
+    import pyarrow.parquet as pq
+
+    fields: dict[str, StructField] = {}
+    for path in sorted(files):
+        meta = pq.read_schema(path).metadata or {}
+        if SPARK_SCHEMA_KEY not in meta:
+            raise ValueError(f"{path}: parquet footer has no Spark schema")
+        for f in StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY])):
+            seen = fields.setdefault(f.name.lower(), StructField(f.name, f.dataType))
+            # simpleString ignores nested nullability, as Spark's merge does
+            a, b = seen.dataType.simpleString(), f.dataType.simpleString()
+            if a != b:
+                raise ValueError(f"column {f.name!r} is {a} in one file, {b} in {path}")
+    return StructType(list(fields.values()))
+
+
+def read_table(spark, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None iff ABSENT: no directory
+    or no committed data file (an ingest that died before its first
+    commit leaves only ``_temporary`` droppings).  Rolls an interrupted
+    swap forward first, never back (a staging dir may be a live
+    writer's).  A table that fails to read raises: as None it would
+    make ``merge_into_bronze`` swap the batch OVER every other center."""
+    recover_bronze(path, clean_leftovers=False)
+    files = [p for p, _rel in part_files(path)]
+    if not files:
         return None
-    has_part = any(
-        f.endswith(".parquet") or f.startswith("part-")
-        for root, _dirs, files in os.walk(target_path)
-        if "_temporary" not in root
-        for f in files
-        if not f.startswith((".", "_"))
-    )
-    if not has_part:
-        return None
-    # mergeSchema: after a schema-evolving partition-scoped MERGE,
-    # partitions the batch did not touch still carry the narrower
-    # schema on disk — the union read surfaces evolved columns as
-    # nulls there (on Delta/Iceberg the table schema does this; a
-    # metastore would avoid the footer scan at very large n_files)
-    return spark.read.option("mergeSchema", "true").parquet(target_path)
+    return spark.read.schema(parquet_schema(files)).parquet(path)
 
 
 def _align_schemas(
@@ -326,7 +365,7 @@ def recover_bronze(target_path: str, clean_leftovers: bool = True) -> dict:
 
     Returns {"action": "rolled_forward" | "rolled_back" | "clean"}.
     Called automatically by merge/compact/rewrite (leftover-cleaning)
-    and the CLI read path (forward-only), and safe to call any time.
+    and ``read_table`` (forward-only), and safe to call any time.
     """
     manifest_path = target_path + MANIFEST_SUFFIX
     if os.path.exists(manifest_path):
@@ -419,8 +458,12 @@ class TableCommit:
     # merge/compact drivers must ask the backend, never the directory.
 
     def read(self, spark, target_path: str) -> DataFrame | None:
-        """The current table as a DataFrame, or None iff absent."""
-        return _read_target(spark, target_path)
+        """The current table as a DataFrame, or None iff absent.  The
+        schema is the union of its data files' footers, read on the
+        driver with no Spark job: the footers are this format's table
+        metadata, and after a schema-evolving partition MERGE evolved
+        columns read as nulls in partitions it did not touch."""
+        return read_table(spark, target_path)
 
     def is_partitioned(self, target_path: str, partition_col: str) -> bool:
         return _is_partitioned_layout(target_path, partition_col)
@@ -439,13 +482,7 @@ class TableCommit:
         self, target_path: str, partition_col: str, value: str
     ) -> list[str]:
         part_dir = os.path.join(target_path, f"{partition_col}={value}")
-        if not os.path.isdir(part_dir):
-            return []
-        return sorted(
-            os.path.join(part_dir, f)
-            for f in os.listdir(part_dir)
-            if f.endswith(".parquet") or f.startswith("part-")
-        )
+        return sorted(p for p, _rel in part_files(part_dir))
 
 
 class DirectorySwapCommit(TableCommit):
@@ -625,7 +662,8 @@ def compact_bronze(
             continue
         staging = commit.staging_path(target_path, f"compact.{value}")
         (
-            spark.read.parquet(*files)
+            spark.read.schema(parquet_schema(files))
+            .parquet(*files)
             .coalesce(n_target)
             .write.mode("overwrite")
             .parquet(os.path.join(staging, entry))

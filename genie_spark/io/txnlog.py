@@ -38,7 +38,9 @@ table-format seam a Delta/Iceberg deployment would occupy):
   caller re-runs its merge from a fresh snapshot, classic
   write-write-conflict semantics).
 - **Snapshot isolation & time travel**: ``read_snapshot(spark, table,
-  version=...)`` resolves the file list at any retained version; a
+  version=...)`` resolves the file list at any retained version and
+  reads it with the union schema of those files' footers, taken on
+  the driver (``io.bronze.parquet_schema``: no Spark job); a
   commit never unlinks data, so running scans and old-version reads
   stay valid until ``vacuum`` (which deletes only files live in NO
   retained version).
@@ -82,7 +84,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from genie_spark.io.bronze import TableCommit
+from genie_spark.io.bronze import TableCommit, parquet_schema, part_files
 
 LOG_DIR = "_txn_log"
 
@@ -274,20 +276,6 @@ def _file_stats(path: str, stat_cols: list[str] | None = None) -> dict:
     return {"rows": md.num_rows, "stats": stats}
 
 
-def _iter_part_files(root: str):
-    """Yield (abs_path, rel_dir) for every parquet part under root,
-    rel_dir being the k=v partition segments relative to root."""
-    for dirpath, dirnames, files in os.walk(root):
-        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
-        rel = os.path.relpath(dirpath, root)
-        rel = "" if rel == "." else rel
-        for f in sorted(files):
-            if f.startswith((".", "_")):
-                continue
-            if f.endswith(".parquet") or f.startswith("part-"):
-                yield os.path.join(dirpath, f), rel
-
-
 def _partition_of(rel_dir: str) -> dict[str, str]:
     """{col: value} from 'CENTER=A/...' path segments."""
     out: dict[str, str] = {}
@@ -365,7 +353,7 @@ class LogCommit(TableCommit):
             if os.path.isdir(_log_dir(target_path)):
                 live = set(snapshot_actions(target_path))
                 ever = self._ever_referenced(target_path)
-                for abs_path, rel_dir in _iter_part_files(target_path):
+                for abs_path, rel_dir in part_files(target_path):
                     rel = os.path.relpath(abs_path, target_path)
                     if rel not in live and rel not in ever and expired(abs_path):
                         os.unlink(abs_path)
@@ -381,10 +369,7 @@ class LogCommit(TableCommit):
     def read(self, spark: SparkSession, target_path: str) -> DataFrame | None:
         v = self._pin(target_path)
         if v is None:
-            has_data = os.path.isdir(target_path) and any(
-                True for _ in _iter_part_files(target_path)
-            )
-            if has_data:
+            if any(part_files(target_path)):
                 raise ValueError(
                     f"{target_path} holds parquet data but no {LOG_DIR} — it is "
                     "not a log-format table.  Treating it as absent would "
@@ -484,7 +469,7 @@ class LogCommit(TableCommit):
                 "is older than the vacuum retention"
             )
         return (
-            spark.read.option("mergeSchema", "true")
+            spark.read.schema(parquet_schema(paths))
             .option("basePath", table)
             .parquet(*paths)
         )
@@ -511,7 +496,7 @@ class LogCommit(TableCommit):
         moved: list[tuple[str, dict]] = []  # (rel path, add action)
         touched: set[str] = set()
         i = 0
-        for src, rel_dir in _iter_part_files(staging):
+        for src, rel_dir in part_files(staging):
             dest_dir = os.path.join(target_path, rel_dir) if rel_dir else target_path
             os.makedirs(dest_dir, exist_ok=True)
             name = f"c{cid}-{i:05d}.parquet"
@@ -752,7 +737,7 @@ def vacuum(table: str, retain_versions: int = 2, grace_s: float = 3600.0) -> dic
         keep.update(snapshot_actions(table, v))
     now = time.time()
     deleted = 0
-    for abs_path, _rel_dir in list(_iter_part_files(table)):
+    for abs_path, _rel_dir in list(part_files(table)):
         rel = os.path.relpath(abs_path, table)
         if rel in keep:
             continue
@@ -777,7 +762,7 @@ def convert_to_log_table(
     if current_version(table) is not None:
         raise ValueError(f"{table} already has a {LOG_DIR}")
     actions = []
-    for abs_path, rel_dir in _iter_part_files(table):
+    for abs_path, rel_dir in part_files(table):
         meta = _file_stats(abs_path, stat_cols)
         actions.append(
             {

@@ -2082,14 +2082,17 @@ def test_sv_ingest_uppercases_headers(spark, tmp_path):
 def test_read_bronze_absent_vs_corrupt(spark, tmp_path):
     """None strictly means "not ingested": an absent dir is None, a
     present-but-corrupt table raises instead of silently vanishing
-    from dashboard/release inputs."""
+    from dashboard/release inputs.  Footers whose schemas conflict,
+    or that carry no Spark schema, raise naming the column or file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     import pytest
 
-    from genie_spark.cli import _read_bronze
+    from genie_spark.io.bronze import read_table
 
     wh = str(tmp_path / "warehouse")
     os.makedirs(wh)
-    assert _read_bronze(spark, wh, "clinical") is None
+    assert read_table(spark, os.path.join(wh, "clinical")) is None
 
     # an ingest that died before its first commit (empty dir, or only
     # _temporary droppings) is a NOT-INGESTED state, not a corrupt one
@@ -2097,16 +2100,35 @@ def test_read_bronze_absent_vs_corrupt(spark, tmp_path):
     os.makedirs(os.path.join(empty, "_temporary"))
     with open(os.path.join(empty, "_temporary", "x.parquet"), "wb") as f:
         f.write(b"partial")
-    assert _read_bronze(spark, wh, "maf") is None
+    assert read_table(spark, empty) is None
 
     corrupt = os.path.join(wh, "clinical")
     os.makedirs(corrupt)
     with open(os.path.join(corrupt, "part-00000.parquet"), "wb") as f:
         f.write(b"this is not a parquet footer")
     with pytest.raises(Exception):
-        df = _read_bronze(spark, wh, "clinical")
+        df = read_table(spark, corrupt)
         assert df is not None
         df.collect()
+
+    # AGE is int in one partition and string in the other
+    mixed = os.path.join(wh, "mixed")
+    spark.range(1).selectExpr("CAST(id AS INT) AS AGE").write.parquet(
+        os.path.join(mixed, "CENTER=A")
+    )
+    spark.range(1).selectExpr("CAST(id AS STRING) AS AGE").write.parquet(
+        os.path.join(mixed, "CENTER=B")
+    )
+    with pytest.raises(ValueError, match="'AGE'"):
+        read_table(spark, mixed)
+
+    # a part file pyarrow wrote has no Spark schema in its footer
+    foreign = os.path.join(wh, "foreign")
+    os.makedirs(foreign)
+    part = os.path.join(foreign, "part-00000.parquet")
+    pq.write_table(pa.table({"AGE": [1]}), part)
+    with pytest.raises(ValueError, match=part):
+        read_table(spark, foreign)
 
 
 def _build_clean_release(spark, root):

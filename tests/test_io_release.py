@@ -212,6 +212,81 @@ def test_upload_status_runs_no_job(spark, tmp_path):
     assert _newest_job(spark) == before
 
 
+def _merged(spark):
+    """Spark's own schema-merging read, the reference for table reads."""
+    return spark.read.option("mergeSchema", "true")
+
+
+def _evolved_table(spark, tgt):
+    """Schema-evolved partitioned table: SAGE wide, GOLD narrow."""
+    from genie_spark.io.bronze import DEFAULT_COMMIT, merge_into_bronze
+
+    merge_into_bronze(
+        spark.createDataFrame(
+            [("S1", "SAGE", 30), ("G1", "GOLD", 40)],
+            "SAMPLE_ID string, CENTER string, AGE int",
+        ),
+        tgt, keys=["SAMPLE_ID"],
+    )
+    merge_into_bronze(
+        spark.createDataFrame(
+            [("S2", "SAGE", 35, "x")],
+            "SAMPLE_ID string, CENTER string, AGE int, NEW_COL string",
+        ),
+        tgt, keys=["SAMPLE_ID"],
+    )
+    return lambda: DEFAULT_COMMIT.read(spark, tgt), _merged(spark).parquet(tgt)
+
+
+def _unpartitioned_table(spark, tgt):
+    from genie_spark.io.bronze import merge_into_bronze, read_table
+
+    merge_into_bronze(
+        spark.createDataFrame([("S1", 1.5), ("S2", None)], "SAMPLE_ID string, X double"),
+        tgt, keys=["SAMPLE_ID"],
+    )
+    return lambda: read_table(spark, tgt), _merged(spark).parquet(tgt)
+
+
+def _log_table(spark, tgt):
+    """LogCommit table with an integer partition column."""
+    from genie_spark.io.bronze import merge_into_bronze
+    from genie_spark.io.txnlog import LogCommit, read_snapshot, snapshot_files
+
+    merge_into_bronze(
+        spark.createDataFrame(
+            [("S1", 0, "a"), ("S2", 1, None), ("S3", 2, "c")],
+            "SAMPLE_ID string, B int, V string",
+        ),
+        tgt, keys=["SAMPLE_ID"], partition_col="B", commit=LogCommit(),
+    )
+    files = [os.path.join(tgt, r) for r in snapshot_files(tgt)]
+    return (
+        lambda: read_snapshot(spark, tgt),
+        _merged(spark).option("basePath", tgt).parquet(*files),
+    )
+
+
+@pytest.mark.parametrize(
+    "make",
+    [_evolved_table, _unpartitioned_table, _log_table],
+    ids=["evolved_partitioned", "unpartitioned", "log_int_partition"],
+)
+def test_table_read_runs_no_job(spark, tmp_path, make):
+    """A table the package committed is read with its schema taken from
+    the parquet footers on the driver: no Spark job, and the same
+    columns, types and rows as Spark's own schema-merging read."""
+    read, merged = make(spark, str(tmp_path / "table"))
+    before = _newest_job(spark)
+    got = read()
+    schema = got.schema
+    assert _newest_job(spark) == before
+    assert [(f.name, f.dataType) for f in schema] == [
+        (f.name, f.dataType) for f in merged.schema
+    ]
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, merged.collect()))
+
+
 def test_cna_read_with_quote_and_backtick_sample_ids(spark, tmp_path):
     """A CNA sample column named with ' or ` melts like any other — it
     reaches the validator instead of crashing the read."""

@@ -569,6 +569,40 @@ def test_delimited_reads_only_in_readers():
     assert not offenders, offenders
 
 
+def test_no_merge_schema_reads():
+    """Repo policy (io/bronze.read_table): a table the package wrote is
+    read with its schema from the parquet footers on the driver, never
+    by Spark's schema-merging inference job — no ``mergeSchema`` option
+    anywhere in the package, and cli.py reaches the reader through its
+    public name only."""
+    import ast
+    import glob as _glob
+    import os as _os
+
+    pkg = _os.path.join(_os.path.dirname(__file__), "..", "genie_spark")
+    offenders = []
+    for path in _glob.glob(_os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        offenders += [
+            f"{_os.path.relpath(path, pkg)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value.lower() == "mergeschema"
+        ]
+        if _os.path.relpath(path, pkg) == "cli.py":
+            offenders += [
+                f"cli.py:{node.lineno}: {alias.name}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom)
+                and node.module == "genie_spark.io.bronze"
+                for alias in node.names
+                if alias.name.startswith("_")
+            ]
+    assert not offenders, offenders
+
+
 def test_status_imports_no_pyspark():
     """Repo policy (io/status): the validation-status table is read and
     written on the driver with pyarrow, so a status check or update
