@@ -227,9 +227,10 @@ def cmd_ingest(spark: SparkSession, args: argparse.Namespace) -> int:
     if fmt.transform is not None:
         df = fmt.transform(df)
     target = _bronze(args.warehouse, fmt.name)
-    # CENTER-partitioned MERGE: one center's upload only reads and
-    # rewrites that center's partition (io/bronze.py)
-    merge_into_bronze(df, target, list(fmt.keys) if fmt.keys else None)
+    # CENTER-partitioned MERGE that names its center: one center's
+    # upload only reads and rewrites that center's partition (io/bronze.py)
+    keys = list(fmt.keys) if fmt.keys else None
+    merge_into_bronze(df, target, keys, partition_values=[args.center])
     print(f"ingested {fmt.name} → {target}")
     if fmt.name in ("sampleRetraction", "patientRetraction"):
         _retract_from_clinical_bronze(spark, args.warehouse)

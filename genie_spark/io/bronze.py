@@ -8,8 +8,8 @@ for every batch; at 100 TB that makes one center's 10 GB upload rewrite
 every other center's terabytes.  Here the bronze layout is partitioned
 by CENTER and a MERGE:
 
-  1. prunes the existing side to the batch's partitions (Catalyst
-     partition pruning — other centers' files are never read);
+  1. prunes the existing side to the partitions the caller names
+     (Catalyst partition pruning — other centers' files are never read);
   2. runs the join-diff upsert against that subset only;
   3. writes the merged partitions to a staging dir and swaps just those
      ``CENTER=<c>`` directories into the target.
@@ -56,6 +56,7 @@ import hashlib
 import json
 import os
 import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -550,77 +551,73 @@ def merge_into_bronze(
     batch: DataFrame,
     target_path: str,
     keys: list[str] | None,
+    partition_values: list[str] | None = None,
     partition_col: str = PARTITION_COL,
     commit: TableCommit = DEFAULT_COMMIT,
 ) -> None:
     """MERGE ``batch`` into the bronze table at ``target_path``.
 
     With ``keys``: join-diff upsert (operators.upsert.apply_upsert);
-    without: append.  When both sides carry ``partition_col`` the merge
-    touches only the batch's partitions.  A legacy unpartitioned target
-    (or a batch without the partition column) falls back to the full
-    two-phase rewrite, migrating to the partitioned layout when
-    possible.  All prepare/commit/recover steps go through ``commit``
+    without: append.  ``partition_values`` names the partitions the
+    batch replaces, as Delta's ``replaceWhere`` does (``cmd_ingest``
+    names its center): on a partitioned target only they are read and
+    rewritten, and a batch row outside them raises ``ValueError``
+    before the commit.  Unnamed, the MERGE rewrites the whole table,
+    partitioned when both sides carry ``partition_col`` (a legacy flat
+    table migrates).  The write is the only Spark action; every
+    prepare/commit/recover step goes through ``commit``
     (``TableCommit``) — swap in a Delta/Iceberg backend there.
     """
     spark = batch.sparkSession
     commit.recover(target_path)
     existing = commit.read(spark, target_path)
-    partitioned = (
-        partition_col in batch.columns
-        and (existing is None or partition_col in existing.columns)
+    partitioned = partition_col in batch.columns and (
+        existing is None or partition_col in existing.columns
     )
-    staging = commit.staging_path(target_path)
-
-    if existing is None:
-        out = batch
-    elif (
-        partitioned
+    scoped = (
+        partition_values is not None
+        and existing is not None
         and commit.is_partitioned(target_path, partition_col)
-    ):
-        # partition-scoped path: existing side pruned to the batch's
-        # centers (center count is dim-sized by contract; the collect
-        # carries only distinct partition values, never data rows)
-        values = [
-            r[0] for r in batch.select(partition_col).distinct().collect()
-        ]
-        centers = [v for v in values if v is not None]
-        pred = F.col(partition_col).isin(centers)
-        if len(centers) != len(values):
-            # batch carries null-partition rows: they land in the
-            # __HIVE_DEFAULT_PARTITION__ staging dir, which the swap
-            # moves over the target's null partition — so the existing
-            # null-partition rows must participate in the merge or
-            # they'd be silently discarded.
-            pred = pred | F.col(partition_col).isNull()
-        subset, batch_aligned = _align_schemas(existing.where(pred), batch)
-        if keys:
-            out = apply_upsert(batch_aligned, subset, list(keys))
-        else:
-            out = subset.unionByName(batch_aligned)
+    )
+    out = batch
+    if existing is not None:
+        if scoped:
+            # partition pruning: other partitions' files are never read
+            existing = existing.where(F.col(partition_col).isin(list(partition_values)))
+        existing, batch = _align_schemas(existing, batch)
         if keys:
             # key-sorted row groups: parquet min/max stats then prune
             # row groups on key lookups, and sorted columns compress
             # better — free data-skipping at 100 TB
-            out = out.sortWithinPartitions(*keys)
-        out.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-        commit.commit_partitions(staging, target_path, partition_col)
-        return
-    else:
-        # legacy full rewrite (also the one-time migration to the
-        # partitioned layout)
-        existing_aligned, batch_aligned = _align_schemas(existing, batch)
-        if keys:
-            out = apply_upsert(batch_aligned, existing_aligned, list(keys))
+            out = apply_upsert(batch, existing, list(keys))
             out = out.sortWithinPartitions(*keys)
         else:
-            out = existing_aligned.unionByName(batch_aligned)
-
+            out = existing.unionByName(batch)
+    staging = commit.staging_path(target_path)
     writer = out.write.mode("overwrite")
-    if partitioned:
+    # scoped writes always split by partition: a batch without the
+    # column then stages in the default partition, which the check refuses
+    if scoped or partitioned:
         writer = writer.partitionBy(partition_col)
     writer.parquet(staging)
-    commit.commit_whole(staging, target_path)
+    if not scoped:
+        commit.commit_whole(staging, target_path)
+        return
+    # a staged partition the caller did not name would replace that
+    # partition's data.  The listing runs no Spark job; a null value
+    # stages as Hive's default partition, which no named value matches.
+    prefix, named = f"{partition_col}=", {str(v) for v in partition_values}
+    stray = sorted(
+        e
+        for e in os.listdir(staging)
+        if e.startswith(prefix) and unquote(e[len(prefix):]) not in named
+    )
+    if stray:
+        raise ValueError(
+            f"bronze merge into {target_path}: batch rows in {stray}, "
+            f"outside the named partitions {sorted(named)}"
+        )
+    commit.commit_partitions(staging, target_path, partition_col)
 
 
 def compact_bronze(

@@ -48,10 +48,9 @@ def upsert_batch_writer(
     transform=None,
 ):
     """foreachBatch callback: transform (validation/normalization) then
-    MERGE into the parquet target by primary key.  The merge is
-    partition-scoped when the batch carries CENTER (io/bronze.py): a
-    micro-batch from one center reads and rewrites only that center's
-    partition — the Delta ``MERGE INTO`` shape on plain parquet."""
+    MERGE into the parquet target by primary key.  A micro-batch may
+    hold any centers' rows, so the merge names no partitions and
+    rewrites the whole table (io/bronze.py)."""
     from genie_spark.io.bronze import merge_into_bronze
 
     def write(batch: DataFrame, batch_id: int) -> None:

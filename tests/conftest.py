@@ -164,3 +164,20 @@ def pytest_collection_modifyitems(config, items):
         base = getattr(item, "originalname", None) or item.name
         if base in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    # the default run leaves the slow set out (pytest.ini addopts); say
+    # so at the end, where a reader looks for what did not run
+    if config.getoption("markexpr") != "not slow":
+        return
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow") is not None
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f'{len(slow)} slow tests not run (pytest.ini default -m "not slow"); '
+            'run the full suite with: pytest tests/ -m ""'
+        )

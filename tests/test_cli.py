@@ -1418,7 +1418,7 @@ def test_compact_bronze(spark, tmp_path):
     other = spark.createDataFrame(
         [("GENIE-GOLD-1", "GOLD")], "SAMPLE_ID string, CENTER string"
     )
-    merge_into_bronze(other, tgt, keys=["SAMPLE_ID"])
+    merge_into_bronze(other, tgt, keys=["SAMPLE_ID"], partition_values=["GOLD"])
 
     sage_dir = os.path.join(tgt, "CENTER=SAGE")
     gold_dir = os.path.join(tgt, "CENTER=GOLD")
@@ -1451,11 +1451,9 @@ def test_compact_bronze(spark, tmp_path):
 
 
 def test_merge_preserves_null_center_partition(spark, tmp_path):
-    """A batch carrying null-CENTER rows writes the
-    __HIVE_DEFAULT_PARTITION__ staging dir, which the swap moves over
-    the target's null partition — existing null-CENTER rows must
-    survive the merge (they participate via the null-inclusive subset
-    predicate)."""
+    """A batch carrying null-CENTER rows names no partition, so its
+    MERGE rewrites the whole table — existing null-CENTER rows must
+    survive it in the __HIVE_DEFAULT_PARTITION__ directory."""
     from genie_spark.io.bronze import merge_into_bronze
 
     tgt = str(tmp_path / "bronze_null")
@@ -1514,7 +1512,9 @@ def test_merge_partition_swap_crash_recovers(spark, tmp_path, monkeypatch):
     with monkeypatch.context() as m:
         m.setattr(os, "rename", flaky)
         with pytest.raises(OSError, match="injected crash"):
-            bronze.merge_into_bronze(batch, tgt, keys=["SAMPLE_ID"])
+            bronze.merge_into_bronze(
+                batch, tgt, keys=["SAMPLE_ID"], partition_values=["SAGE", "GOLD"]
+            )
 
     # half-swapped (GOLD installed; SAGE cleared, its replacement
     # claimed at the hidden .incoming path) — the journal records the
@@ -1571,6 +1571,46 @@ def test_directory_swap_commits_explicit_empty_partition(spark, tmp_path):
     assert not os.path.isdir(os.path.join(tgt, "CENTER=GOLD"))
     rows = {r["ID"] for r in spark.read.parquet(tgt).collect()}
     assert rows == {"a"}
+
+
+def test_merge_refuses_rows_outside_named_partitions(spark, tmp_path):
+    """A MERGE scoped to SAGE whose batch also holds a GOLD row would
+    swap the batch's GOLD rows over GOLD's data: it raises before the
+    commit, and the table is as it was."""
+    from genie_spark.io import bronze
+
+    tgt = str(tmp_path / "bronze_scope")
+    base = spark.createDataFrame(
+        [("GENIE-SAGE-1", "old", "SAGE"), ("GENIE-GOLD-1", "old", "GOLD")],
+        "SAMPLE_ID string, VAL string, CENTER string",
+    )
+    bronze.merge_into_bronze(base, tgt, keys=["SAMPLE_ID"])
+    gold_dir = os.path.join(tgt, "CENTER=GOLD")
+    gold_mtimes = {
+        f: os.path.getmtime(os.path.join(gold_dir, f)) for f in os.listdir(gold_dir)
+    }
+    rows = sorted(map(tuple, spark.read.parquet(tgt).collect()))
+
+    batch = spark.createDataFrame(
+        [("GENIE-SAGE-1", "new", "SAGE"), ("GENIE-GOLD-2", "new", "GOLD")],
+        "SAMPLE_ID string, VAL string, CENTER string",
+    )
+    with pytest.raises(ValueError, match="CENTER=GOLD"):
+        bronze.merge_into_bronze(
+            batch, tgt, keys=["SAMPLE_ID"], partition_values=["SAGE"]
+        )
+    assert not os.path.exists(tgt + bronze.MANIFEST_SUFFIX)
+    assert sorted(map(tuple, spark.read.parquet(tgt).collect())) == rows
+    assert gold_mtimes == {
+        f: os.path.getmtime(os.path.join(gold_dir, f)) for f in os.listdir(gold_dir)
+    }
+    # named values are compared with the staged directory names unescaped
+    odd = spark.createDataFrame(
+        [("GENIE-X-1", "new", "X/1")], "SAMPLE_ID string, VAL string, CENTER string"
+    )
+    bronze.merge_into_bronze(odd, tgt, keys=["SAMPLE_ID"], partition_values=["X/1"])
+    assert os.path.isdir(os.path.join(tgt, "CENTER=X%2F1"))
+    assert len(spark.read.parquet(tgt).collect()) == len(rows) + 1
 
 
 def test_merge_whole_swap_crash_recovers(spark, tmp_path, monkeypatch):
@@ -1647,7 +1687,9 @@ def _crashed_partition_swap(spark, tmp_path, monkeypatch, name):
     with monkeypatch.context() as m:
         m.setattr(os, "rename", flaky)
         with pytest.raises(OSError, match="injected crash"):
-            bronze.merge_into_bronze(batch, tgt, keys=["SAMPLE_ID"])
+            bronze.merge_into_bronze(
+                batch, tgt, keys=["SAMPLE_ID"], partition_values=["SAGE", "GOLD"]
+            )
     assert os.path.exists(tgt + bronze.MANIFEST_SUFFIX)
     return tgt
 
@@ -2875,7 +2917,9 @@ def test_table_commit_seam_is_the_only_commit_path(spark, tmp_path):
     batch = spark.createDataFrame(
         [("GENIE-SAGE-0", "SAGE")], "SAMPLE_ID string, CENTER string"
     )
-    bronze.merge_into_bronze(batch, tgt, keys=["SAMPLE_ID"], commit=rec)
+    bronze.merge_into_bronze(
+        batch, tgt, keys=["SAMPLE_ID"], partition_values=["SAGE"], commit=rec
+    )
     assert calls == [
         ("recover",),
         ("staging_path", "staging"),

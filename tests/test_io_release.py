@@ -233,7 +233,7 @@ def _evolved_table(spark, tgt):
             [("S2", "SAGE", 35, "x")],
             "SAMPLE_ID string, CENTER string, AGE int, NEW_COL string",
         ),
-        tgt, keys=["SAMPLE_ID"],
+        tgt, keys=["SAMPLE_ID"], partition_values=["SAGE"],
     )
     return lambda: DEFAULT_COMMIT.read(spark, tgt), _merged(spark).parquet(tgt)
 

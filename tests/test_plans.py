@@ -625,6 +625,30 @@ def test_status_imports_no_pyspark():
     assert not [m for m in imported if m.split(".")[0] == "pyspark"], imported
 
 
+def test_bronze_runs_no_driver_action():
+    """Repo policy (io/bronze.merge_into_bronze): a MERGE's only Spark
+    action is its write.  The caller names the partitions it replaces
+    and the scope check lists the staging directory, so bronze.py
+    calls no driver action at all."""
+    import ast
+    import os as _os
+
+    path = _os.path.join(
+        _os.path.dirname(__file__), "..", "genie_spark", "io", "bronze.py"
+    )
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    actions = {"collect", "first", "take", "head", "count", "toPandas", "toLocalIterator"}
+    offenders = [
+        f"bronze.py:{node.lineno}: {node.func.attr}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in actions
+    ]
+    assert not offenders, offenders
+
+
 def test_slow_tests_names_are_live():
     """tests/conftest.py::SLOW_TESTS marks tests by bare name, so a
     renamed or deleted test leaves a stale entry that silently marks

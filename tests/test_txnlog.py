@@ -61,7 +61,7 @@ def test_merge_versions_and_upsert(spark, tmp_path):
     files_b_v1 = lc.partition_files(tgt, "CENTER", "B")
     merge_into_bronze(
         _clin(spark, [("s1", "A", 9), ("s3", "A", 3)]), tgt,
-        keys=["SAMPLE_ID"], commit=lc,
+        keys=["SAMPLE_ID"], partition_values=["A"], commit=lc,
     )
     assert current_version(tgt) == 2
     assert _collect(spark, tgt) == {("s1", "A", 9), ("s2", "B", 2), ("s3", "A", 3)}
@@ -144,11 +144,17 @@ def test_version_race_disjoint_partitions_retries(spark, tmp_path):
     # simulate an interleaved foreign commit on partition B: pin the
     # writer's base at v1, then install a B-only v2 under its feet
     lc_b = _lc()
-    merge_into_bronze(_clin(spark, [("s2", "B", 5)]), tgt, keys=["SAMPLE_ID"], commit=lc_b)
+    merge_into_bronze(
+        _clin(spark, [("s2", "B", 5)]), tgt,
+        keys=["SAMPLE_ID"], partition_values=["B"], commit=lc_b,
+    )
     assert current_version(tgt) == 2
     # writer lc's base is still 1 from ITS last commit; a new merge on
     # partition A re-pins via recover → no conflict, lands at v3
-    merge_into_bronze(_clin(spark, [("s1", "A", 8)]), tgt, keys=["SAMPLE_ID"], commit=lc)
+    merge_into_bronze(
+        _clin(spark, [("s1", "A", 8)]), tgt,
+        keys=["SAMPLE_ID"], partition_values=["A"], commit=lc,
+    )
     assert current_version(tgt) == 3
     assert _collect(spark, tgt) == {("s1", "A", 8), ("s2", "B", 5)}
 
@@ -175,14 +181,15 @@ def test_overlapping_commit_conflicts(spark, tmp_path, monkeypatch):
             other = LogCommit()
             bronze.merge_into_bronze(
                 _clin(spark, [("s1", "A", 4)]), target_path,
-                keys=["SAMPLE_ID"], commit=other,
+                keys=["SAMPLE_ID"], partition_values=["A"], commit=other,
             )
         return real_commit_partitions(self, staging, target_path, partition_col)
 
     monkeypatch.setattr(LogCommit, "commit_partitions", hostile)
     with pytest.raises(ConcurrentWriteError, match="overlapping"):
         merge_into_bronze(
-            _clin(spark, [("s1", "A", 9)]), tgt, keys=["SAMPLE_ID"], commit=lc
+            _clin(spark, [("s1", "A", 9)]), tgt,
+            keys=["SAMPLE_ID"], partition_values=["A"], commit=lc,
         )
     monkeypatch.setattr(LogCommit, "commit_partitions", real_commit_partitions)
     # the hostile writer's value won; the loser's files are not live
@@ -209,7 +216,8 @@ def test_recover_gc_of_live_staging_fails_loudly(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(LogCommit, "commit_partitions", eat_staging)
     with pytest.raises(RuntimeError, match="staging dir .* vanished"):
         merge_into_bronze(
-            _clin(spark, [("s1", "A", 9)]), tgt, keys=["SAMPLE_ID"], commit=lc
+            _clin(spark, [("s1", "A", 9)]), tgt,
+            keys=["SAMPLE_ID"], partition_values=["A"], commit=lc,
         )
     monkeypatch.setattr(LogCommit, "commit_partitions", real)
     assert current_version(tgt) == 1
