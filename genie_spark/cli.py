@@ -24,12 +24,15 @@ import argparse
 import json
 import os
 import sys
+from html import escape
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from genie_spark.formats import BY_NAME, determine_filetype
-from genie_spark.io.bronze import merge_into_bronze, read_table, rewrite_bronze
+from genie_spark.io.bronze import merge_into_bronze, part_files, read_table, rewrite_bronze
+from genie_spark.rules.engine import qcol
 
 
 def _bronze(warehouse: str, name: str) -> str:
@@ -785,24 +788,33 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
     for name, df in outputs.items():
         df.write.mode("overwrite").parquet(os.path.join(args.output, name))
     render_path = getattr(args, "render", None)
+    html_path = getattr(args, "html", None)
+    # both renderings document what was STORED (same re-read philosophy
+    # as release/qc.py), from one driver-side read of each table
+    if render_path or html_path:
+        shown = {n: _shown_table(spark, os.path.join(args.output, n)) for n in sorted(outputs)}
     if render_path:
+        tables = dict(shown)
+        if "samples_in_release" in outputs:
+            # the Rmd's samplesPerReleaseDf: one agg over the stored
+            # matrix, releases in its (ReleaseSeq) column order
+            m = read_table(spark, os.path.join(args.output, "samples_in_release"))
+            rel_cols = [c for c in m.columns if c != "SAMPLE_ID"]
+            sums = m.agg(*[F.sum(qcol(c)).cast("long").alias(c) for c in rel_cols]).first()
+            tables["samples_per_release"] = ShownTable(
+                ["Release", "Number of samples"],
+                [[c, str(sums[c])] for c in rel_cols],
+                len(rel_cols),
+            )
         text = dashboard_markdown(
-            outputs, release=getattr(args, "release_label", None) or "release"
+            tables, release=getattr(args, "release_label", None) or "release"
         )
         with open(render_path, "w") as f:
             f.write(text)
         print(f"dashboard markdown → {render_path}")
-    html_path = getattr(args, "html", None)
     if html_path:
-        # render from the STORED parquet, not the in-memory frames —
-        # the artifact documents what was written (same re-read
-        # philosophy as release/qc.py)
-        text = dashboard_html(
-            spark,
-            {n: os.path.join(args.output, n) for n in sorted(outputs)},
-        )
         with open(html_path, "w") as f:
-            f.write(text)
+            f.write(dashboard_html(shown))
         print(f"dashboard html → {html_path}")
     print(f"dashboard tables → {args.output}: {sorted(outputs)}")
     return 0
@@ -811,42 +823,51 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
 # sample-level tables are release-sized; the human-facing artifact
 # shows the first rows and says so (the aggregate tables are dim-sized
 # and render whole)
-_DASHBOARD_HTML_CAP = 200
+_DASHBOARD_CAP = 200
 
 
-def _md_table(df, cap: int = _DASHBOARD_HTML_CAP, headers=None) -> list[str]:
-    """One GitHub-markdown table from a DataFrame: stringified cells,
-    rows sorted by their values (deterministic artifact), pipes
-    escaped, sample-level tables capped with an explicit note — the
-    dashboard_html row discipline in markdown."""
+class ShownTable(NamedTuple):
+    """A stored table as the dashboard renderers show it."""
+
+    columns: list[str]
+    rows: list[list[str]]  # the first rows, stringified, sorted by value
+    total: int  # the stored table's row count
+
+
+def _shown_table(spark: SparkSession, path: str) -> ShownTable:
+    """One driver-side read of a stored dashboard table: sort + limit
+    stay in Spark, so only the first ``_DASHBOARD_CAP`` rows cross to
+    the driver (the one Spark job); the row count is summed from the
+    parquet footers, which runs no job."""
+    import pyarrow.parquet as pq
+
+    df = read_table(spark, path)
     cols = df.columns
-    sdf = df.select(
-        *[
-            F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c)
-            for c in cols
-        ]
+    rows = (
+        df.select(*[F.coalesce(qcol(c).cast("string"), F.lit("")).alias(c) for c in cols])
+        .orderBy(*[qcol(c) for c in cols])
+        .limit(_DASHBOARD_CAP)
+        .collect()
     )
-    total = sdf.count()
-    rows = [
-        [r[c].replace("|", "\\|") for c in cols]
-        for r in sdf.orderBy(*cols).limit(cap).collect()
-    ]
-    names = headers if headers is not None else cols
+    total = sum(pq.read_metadata(p).num_rows for p, _rel in part_files(path))
+    return ShownTable(cols, [list(r) for r in rows], total)
+
+
+def _md_table(t: ShownTable, headers=None) -> list[str]:
+    """One GitHub-markdown table, pipes escaped; a table shown in part
+    says so."""
+    names = headers if headers is not None else t.columns
     out = [
         "| " + " | ".join(n.replace("|", "\\|") for n in names) + " |",
         "|" + "|".join(" --- " for _ in names) + "|",
+        *("| " + " | ".join(v.replace("|", "\\|") for v in r) + " |" for r in t.rows),
     ]
-    out += ["| " + " | ".join(r) + " |" for r in rows]
-    if total > cap:
-        out.append("")
-        out.append(f"_first {cap} of {total} rows_")
-    out.append("")
-    return out
+    if t.total > len(t.rows):
+        out += ["", f"_first {len(t.rows)} of {t.total} rows_"]
+    return out + [""]
 
 
-def dashboard_markdown(
-    outputs: dict, release: str = "release", cap: int = _DASHBOARD_HTML_CAP
-) -> str:
+def dashboard_markdown(tables: dict[str, ShownTable], release: str = "release") -> str:
     """Markdown dashboard document — the counterpart of the
     reference's Rmd-rendered release dashboard
     (R/dashboard_markdown_generator.R renders
@@ -855,8 +876,9 @@ def dashboard_markdown(
     samples per release, release-over-release differences with
     decrease flags, the Genome Nexus failed-annotation summary (the
     Rmd's exact kable column names), and the clinical-attribute
-    distribution tables — rendered driver-side from the SAME
-    DataFrames the dashboard command stores, stdlib templating only.
+    distribution tables — rendered from the STORED dashboard tables
+    as ``_shown_table`` reads them, plus ``samples_per_release`` (one
+    row per release with its sample count), stdlib templating only.
     Sections whose inputs are absent from the warehouse are omitted,
     like the Rmd's conditional chunks."""
     lines = [f"# GENIE dashboard — {release}", ""]
@@ -866,49 +888,32 @@ def dashboard_markdown(
         lines.append("")
 
     def emit(name: str, caption: str | None = None, headers=None) -> None:
-        df = outputs.get(name)
-        if df is None:
+        t = tables.get(name)
+        if t is None:
             return
         if caption:
             lines.append(f"**{caption}**")
             lines.append("")
-        lines.extend(_md_table(df, cap, headers=headers))
+        lines.extend(_md_table(t, headers=headers))
 
-    if "sample_counts" in outputs or "distinct_samples" in outputs:
+    if "sample_counts" in tables or "distinct_samples" in tables:
         # templates/dashboardTemplate.Rmd "Sample and Variant Count
         # per center" (kable of per-center counts)
         section("Sample and Variant Count per center")
         emit("sample_counts", "Rows per center (with Total)")
         emit("distinct_samples", "Distinct samples per center")
-    if "samples_in_release" in outputs:
-        # the Rmd's samplesPerReleaseDf kable: one row per release
-        # with its sample count, derived from the membership matrix
+    if "samples_per_release" in tables:
+        # the Rmd's samplesPerReleaseDf kable
         section("Samples per release")
-        m = outputs["samples_in_release"]
-        rel_cols = [c for c in m.columns if c != "SAMPLE_ID"]
-        if rel_cols:
-            sums = m.agg(
-                *[F.sum(F.col(c)).cast("long").alias(c) for c in rel_cols]
-            ).first()
-            lines.extend(
-                [
-                    "| Release | Number of samples |",
-                    "| --- | --- |",
-                    *[
-                        f"| {c} | {sums[c]} |"
-                        for c in sorted(rel_cols)
-                    ],
-                    "",
-                ]
-            )
-    if "sample_diff" in outputs or "decrease_check" in outputs:
+        emit("samples_per_release")
+    if "sample_diff" in tables or "decrease_check" in tables:
         # dashboard_table_updater.py:398-483 update_sample_difference_
         # table — the Rmd renders the release-over-release deltas and
         # flags decreases (the retraction-policy watch signal)
         section("Release-over-release differences")
         emit("sample_diff", "Per-center deltas vs previous release")
         emit("decrease_check", "Centers with a count DECREASE")
-    if "failed_annotations" in outputs:
+    if "failed_annotations" in tables:
         # the Rmd's exact kable: col.names = c("Center", "Number of
         # failed annotations")
         section("Genome nexus failed annotations summary", level=3)
@@ -924,7 +929,7 @@ def dashboard_markdown(
             "primary_code_matrix",
             "clinical_value_decreases",
         )
-        if n in outputs
+        if n in tables
     ]
     if clin:
         section("Distribution of Clinical Attributes")
@@ -938,65 +943,54 @@ def dashboard_markdown(
     return "\n".join(lines)
 
 
-def dashboard_html(
-    spark: SparkSession, tables: dict[str, str], cap: int = _DASHBOARD_HTML_CAP
-) -> str:
-    """One static HTML page of the dashboard tables — the counterpart
-    of the reference's Rmd-rendered dashboard
-    (bin/consortium_to_public.py:23-40, templates/dashboardTemplate.Rmd),
-    built with the stdlib only: the engine computes the numbers, this
-    renders what landed in parquet.  Rows render sorted by their
-    stringified values so the artifact is deterministic; tables longer
-    than ``cap`` rows show the first ``cap`` with an explicit note
-    (dim-sized aggregates render whole; sample-level matrices get the
-    head + count)."""
-    import html as _html
+def dashboard_html(tables: dict[str, ShownTable]) -> str:
+    """One static HTML page of the stored dashboard tables, as
+    ``_shown_table`` reads them — the counterpart of the reference's
+    Rmd-rendered dashboard (bin/consortium_to_public.py:23-40,
+    templates/dashboardTemplate.Rmd), built with the stdlib only: the
+    engine computes the numbers, this renders what landed in parquet.
+    A table shown in part says so in its caption (dim-sized aggregates
+    render whole; sample-level matrices get the head + count)."""
+    body = ["<h1>genie_spark dashboard</h1>"]
+    for name, t in tables.items():
+        note = f" (first {len(t.rows)} of {t.total} rows)" if t.total > len(t.rows) else ""
+        body += _html_table(name + note, t.columns, t.rows)
+    return _html_page("genie_spark dashboard", body)
 
-    parts = [
-        "<!DOCTYPE html><html><head><meta charset='utf-8'>",
-        "<title>genie_spark dashboard</title>",
-        "<style>body{font-family:sans-serif;margin:2em;}"
-        "table{border-collapse:collapse;margin:1em 0 2em;}"
-        "th,td{border:1px solid #999;padding:4px 8px;text-align:left;}"
-        "th{background:#eee;}caption{font-weight:bold;text-align:left;"
-        "padding:4px 0;}</style></head><body>",
-        "<h1>genie_spark dashboard</h1>",
-    ]
-    for name, path in tables.items():
-        df = read_table(spark, path)
-        cols = df.columns
-        # sort + limit stay IN Spark — sample-level tables are
-        # release-sized, so collecting everything to the driver just to
-        # render the first ``cap`` rows would be unbounded driver
-        # memory; only count() and the capped head cross the boundary
-        sdf = df.select(
-            *[
-                F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c)
-                for c in cols
-            ]
-        )
-        total = sdf.count()
-        shown = [
-            [r[c] for c in cols]
-            for r in sdf.orderBy(*cols).limit(cap).collect()
+
+def _html_page(title: str, body: list[str]) -> str:
+    """The one static HTML page head and style the dashboard and the
+    data guide share."""
+    return "\n".join(
+        [
+            "<!DOCTYPE html><html><head><meta charset='utf-8'>",
+            f"<title>{escape(title)}</title>",
+            "<style>body{font-family:sans-serif;margin:2em;}"
+            "table{border-collapse:collapse;margin:1em 0 2em;}"
+            "th,td{border:1px solid #999;padding:4px 8px;text-align:left;}"
+            "th{background:#eee;}caption{font-weight:bold;text-align:left;"
+            "padding:4px 0;}</style></head><body>",
+            *body,
+            "</body></html>",
         ]
-        parts.append("<table>")
-        note = (
-            f" (first {cap} of {total} rows)" if total > cap else ""
-        )
-        parts.append(
-            f"<caption>{_html.escape(name)}{note}</caption>"
-        )
-        parts.append(
-            "<tr>" + "".join(f"<th>{_html.escape(c)}</th>" for c in cols) + "</tr>"
-        )
-        for r in shown:
-            parts.append(
-                "<tr>" + "".join(f"<td>{_html.escape(v)}</td>" for v in r) + "</tr>"
-            )
-        parts.append("</table>")
-    parts.append("</body></html>")
-    return "\n".join(parts)
+    )
+
+
+def _html_table(caption: str, columns: list[str], rows) -> list[str]:
+    """One captioned ``<table>``; a None cell renders empty."""
+
+    def tr(tag: str, values) -> str:
+        return "<tr>" + "".join(
+            f"<{tag}>{escape('' if v is None else str(v))}</{tag}>" for v in values
+        ) + "</tr>"
+
+    return [
+        "<table>",
+        f"<caption>{escape(caption)}</caption>",
+        tr("th", columns),
+        *(tr("td", r) for r in rows),
+        "</table>",
+    ]
 
 
 def data_guide_html(
@@ -1013,11 +1007,10 @@ def data_guide_html(
     sample/patient counts, per-center sequencing panels, and the
     filter-provenance counts (how many samples/variants each release
     filter removed).  Rendered from the files ON DISK (data_clinical
-    re-read — the same re-read philosophy as release/qc.py), stdlib
-    templating only; the per-center aggregations run in Spark and only
-    dim-sized results cross the driver boundary."""
-    import html as _html
-
+    re-read — the same re-read philosophy as release/qc.py) with the
+    page head and ``<table>`` builder of ``dashboard_html``; the
+    per-center aggregations run in Spark and only dim-sized results
+    cross the driver boundary."""
     from genie_spark.io.readers import read_delimited
     from genie_spark.release.qc import _resolve
 
@@ -1031,70 +1024,24 @@ def data_guide_html(
         # GENIE-<CENTER>-<patient>-<sample> barcode convention
         else F.split(F.col(sid), "-")[1]
     ).alias("center")
-
-    parts = [
-        "<!DOCTYPE html><html><head><meta charset='utf-8'>",
-        f"<title>{_html.escape(study_id)} data guide</title>",
-        "<style>body{font-family:sans-serif;margin:2em;}"
-        "table{border-collapse:collapse;margin:1em 0 2em;}"
-        "th,td{border:1px solid #999;padding:4px 8px;text-align:left;}"
-        "th{background:#eee;}caption{font-weight:bold;text-align:left;"
-        "padding:4px 0;}</style></head><body>",
-        f"<h1>Data guide — {_html.escape(study_id)}</h1>",
-        f"<p>Release <b>{_html.escape(version)}</b></p>",
+    body = [
+        f"<h1>Data guide — {escape(study_id)}</h1>",
+        f"<p>Release <b>{escape(version)}</b></p>",
     ]
-
-    def table(caption: str, cols: list[str], rows: list[list]) -> None:
-        parts.append("<table>")
-        parts.append(f"<caption>{_html.escape(caption)}</caption>")
-        parts.append(
-            "<tr>"
-            + "".join(f"<th>{_html.escape(c)}</th>" for c in cols)
-            + "</tr>"
-        )
-        for r in rows:
-            parts.append(
-                "<tr>"
-                + "".join(
-                    f"<td>{_html.escape('' if v is None else str(v))}</td>"
-                    for v in r
-                )
-                + "</tr>"
-            )
-        parts.append("</table>")
-
     aggs = [F.count(F.lit(1)).alias("n_samples")]
     if pid:
         aggs.append(F.count_distinct(F.col(pid)).alias("n_patients"))
-    per_center = clin.groupBy(center).agg(*aggs).orderBy("center").collect()
-    table(
-        "Samples per center",
-        ["center", "n_samples"] + (["n_patients"] if pid else []),
-        [
-            [r["center"], r["n_samples"]]
-            + ([r["n_patients"]] if pid else [])
-            for r in per_center
-        ],
-    )
+    per_center = clin.groupBy(center).agg(*aggs).orderBy("center")
+    body += _html_table("Samples per center", per_center.columns, per_center.collect())
     if assay:
         panels = (
             clin.groupBy(center, F.col(assay).alias("seq_assay_id"))
             .agg(F.count(F.lit(1)).alias("n_samples"))
             .orderBy("center", "seq_assay_id")
-            .collect()
         )
-        table(
-            "Sequencing panels per center",
-            ["center", "seq_assay_id", "n_samples"],
-            [[r["center"], r["seq_assay_id"], r["n_samples"]] for r in panels],
-        )
-    table(
-        "Filter provenance",
-        ["filter", "rows"],
-        [[k, v] for k, v in provenance.items()],
-    )
-    parts.append("</body></html>")
-    return "\n".join(parts)
+        body += _html_table("Sequencing panels per center", panels.columns, panels.collect())
+    body += _html_table("Filter provenance", ["filter", "rows"], provenance.items())
+    return _html_page(f"{study_id} data guide", body)
 
 
 def cmd_process_mutation(spark: SparkSession, args: argparse.Namespace) -> int:

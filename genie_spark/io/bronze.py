@@ -640,33 +640,36 @@ def compact_bronze(
     compaction never corrupts the target.
 
     On Delta/Iceberg this is ``OPTIMIZE``; the directory swap is the
-    dependency-free parquet equivalent (seam: ``commit``).  Returns
-    per-partition {files_before, files_after} for observability.
+    dependency-free parquet equivalent (seam: ``commit``).  ``centers``
+    and the returned per-partition {files_before, files_after} name
+    partition values unescaped (``"X/1"``, not ``X%2F1``).
     """
     commit.recover(target_path)
     if not commit.is_partitioned(target_path, partition_col):
         raise ValueError(f"{target_path} is not a {partition_col}-partitioned layout")
     report: dict = {}
-    for value in commit.partition_values(target_path, partition_col):
+    for escaped in commit.partition_values(target_path, partition_col):
+        # Spark path-escapes the directory suffix (CENTER=X%2F1 holds
+        # "X/1"); callers and the report name the value itself
+        value = unquote(escaped)
         if centers is not None and value not in centers:
             continue
-        entry = f"{partition_col}={value}"
-        files = commit.partition_files(target_path, partition_col, value)
+        files = commit.partition_files(target_path, partition_col, escaped)
         size = sum(os.path.getsize(f) for f in files)
         n_target = max(1, -(-size // target_file_bytes))
         if len(files) <= n_target:
             report[value] = {"files_before": len(files), "files_after": len(files)}
             continue
-        staging = commit.staging_path(target_path, f"compact.{value}")
+        staging = commit.staging_path(target_path, f"compact.{escaped}")
         (
             spark.read.schema(parquet_schema(files))
             .parquet(*files)
             .coalesce(n_target)
             .write.mode("overwrite")
-            .parquet(os.path.join(staging, entry))
+            .parquet(os.path.join(staging, f"{partition_col}={escaped}"))
         )
         commit.commit_partitions(staging, target_path, partition_col)
-        after = len(commit.partition_files(target_path, partition_col, value))
+        after = len(commit.partition_files(target_path, partition_col, escaped))
         report[value] = {"files_before": len(files), "files_after": after}
     return report
 

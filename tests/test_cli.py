@@ -1450,6 +1450,39 @@ def test_compact_bronze(spark, tmp_path):
     } == before_rows
 
 
+def test_compact_bronze_escaped_center(spark, tmp_path, capsys):
+    """A center Spark path-escapes on disk (``X/1`` is stored as
+    ``CENTER=X%2F1``) is selected and reported by its own name, by the
+    library call and by ``compact --centers``."""
+    import json
+
+    from genie_spark.cli import cmd_compact
+    from genie_spark.io.bronze import compact_bronze, merge_into_bronze
+
+    wh = str(tmp_path / "wh")
+    batch = spark.createDataFrame(
+        [(f"GENIE-X-{i}", "X/1") for i in range(6)], "SAMPLE_ID string, CENTER string"
+    ).repartition(6)
+    for table in ("maf", "clinical"):
+        merge_into_bronze(batch, os.path.join(wh, table), keys=["SAMPLE_ID"])
+    part_dir = os.path.join(wh, "maf", "CENTER=X%2F1")
+    assert len([f for f in os.listdir(part_dir) if f.startswith("part-")]) > 1
+
+    report = compact_bronze(spark, os.path.join(wh, "maf"), centers=["X/1"])
+    assert list(report) == ["X/1"] and report["X/1"]["files_after"] == 1
+    assert len([f for f in os.listdir(part_dir) if f.startswith("part-")]) == 1
+
+    capsys.readouterr()
+    rc = cmd_compact(
+        spark, _ns(warehouse=wh, table="clinical", centers="X/1", target_file_mb=128)
+    )
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert list(out["partitions"]) == ["X/1"]
+    assert out["partitions"]["X/1"]["files_after"] == 1
+    assert spark.read.parquet(os.path.join(wh, "clinical")).count() == 6
+
+
 def test_merge_preserves_null_center_partition(spark, tmp_path):
     """A batch carrying null-CENTER rows names no partition, so its
     MERGE rewrites the whole table — existing null-CENTER rows must
@@ -3425,38 +3458,31 @@ def test_dashboard_markdown_golden(spark, tmp_path):
         assert got.read() == want.read()
 
 
-def test_dashboard_markdown_sections_and_caps(spark, tmp_path):
+def test_dashboard_markdown_sections_and_caps():
     """The renderer emits the reference Rmd's conditional sections —
     failed-annotation summary with the Rmd's exact kable column names,
-    release-over-release diffs, samples-per-release totals — and caps
-    sample-level tables with an explicit note."""
-    from genie_spark.cli import dashboard_markdown
+    release-over-release diffs, samples-per-release totals — and notes
+    a table shown in part.  It renders driver-side tables, no Spark."""
+    from genie_spark.cli import ShownTable, dashboard_markdown
 
-    clin = spark.createDataFrame(
-        [(f"GENIE-SAGE-{i}", "SAGE") for i in range(5)],
-        "SAMPLE_ID string, CENTER string",
-    )
-    failed = spark.createDataFrame(
-        [("SAGE", 3), ("DFCI", 1)], "Center string, Failed_Annotations long"
-    )
-    diff = spark.createDataFrame(
-        [(f"C{i:03d}", "v2", -2) for i in range(300)],
-        "Center string, Release string, samples long",
-    )
-    matrix = spark.createDataFrame(
-        [(f"GENIE-SAGE-{i}", 1, 1 if i % 2 else 0) for i in range(300)],
-        "SAMPLE_ID string, v1 int, v2 int",
+    diff = ShownTable(
+        ["Center", "Release", "samples"],
+        [[f"C{i:03d}", "v2", "-2"] for i in range(100)],
+        300,
     )
     text = dashboard_markdown(
         {
-            "sample_counts": clin.groupBy("CENTER").count(),
-            "failed_annotations": failed,
+            "sample_counts": ShownTable(["CENTER", "count"], [["SAGE", "5"]], 1),
+            "failed_annotations": ShownTable(
+                ["Center", "Failed_Annotations"], [["DFCI", "1"], ["SAGE", "3"]], 2
+            ),
             "sample_diff": diff,
             "decrease_check": diff,
-            "samples_in_release": matrix,
+            "samples_per_release": ShownTable(
+                ["Release", "Number of samples"], [["v1", "300"], ["v2", "150"]], 2
+            ),
         },
         release="9.9-consortium",
-        cap=100,
     )
     assert text.startswith("# GENIE dashboard — 9.9-consortium")
     assert "## Sample and Variant Count per center" in text
@@ -3466,6 +3492,67 @@ def test_dashboard_markdown_sections_and_caps(spark, tmp_path):
     assert "## Samples per release" in text
     assert "| v1 | 300 |" in text and "| v2 | 150 |" in text
     assert "_first 100 of 300 rows_" in text
+
+
+def _snapshot_warehouse(spark, wh, releases):
+    """A warehouse holding a clinical bronze table and one release
+    snapshot per name in ``releases``, release i holding i+1 samples."""
+    import types
+
+    from genie_spark.cli import _append_release_snapshot
+
+    os.makedirs(wh)
+    spark.createDataFrame(
+        [(f"S{i}", CENTER) for i in range(3)], "SAMPLE_ID string, CENTER string"
+    ).write.parquet(os.path.join(wh, "clinical"))
+    for i, name in enumerate(releases):
+        clin = spark.createDataFrame(
+            [(f"S{j}", CENTER) for j in range(i + 1)], ["SAMPLE_ID", "CENTER"]
+        )
+        _append_release_snapshot(
+            spark, wh, name,
+            types.SimpleNamespace(clinical=clin, maf=None, cna_long=None, seg=None, sv=None),
+        )
+
+
+def test_dashboard_render_reads_each_stored_table_once(spark, tmp_path):
+    """--render and --html share one driver-side read of each stored
+    table (its capped head; the row count comes from the footers), plus
+    one agg for the per-release sample totals."""
+    from genie_spark.cli import cmd_dashboard
+    from test_rules import _execution_id
+
+    wh = str(tmp_path / "warehouse")
+    _snapshot_warehouse(spark, wh, ["v1", "v2"])
+
+    def executions(out, **render):
+        before = _execution_id(spark)
+        assert cmd_dashboard(spark, _ns(warehouse=wh, output=out, **render)) == 0
+        return _execution_id(spark) - before
+
+    plain = executions(str(tmp_path / "plain"))
+    dash = str(tmp_path / "dash")
+    rendered = executions(
+        dash, render=str(tmp_path / "d.md"), html=str(tmp_path / "d.html")
+    )
+    stored = os.listdir(dash)
+    assert "samples_in_release" in stored
+    assert rendered - plain == len(stored) + 1
+
+
+def test_dashboard_markdown_release_order(spark, tmp_path):
+    """"Samples per release" lists releases in the stored matrix's
+    ReleaseSeq order: v9 before v10, not lexicographically."""
+    from genie_spark.cli import cmd_dashboard
+
+    wh = str(tmp_path / "warehouse")
+    _snapshot_warehouse(spark, wh, ["v9", "v10"])
+    md = str(tmp_path / "d.md")
+    assert cmd_dashboard(spark, _ns(warehouse=wh, output=str(tmp_path / "dash"), render=md)) == 0
+    with open(md) as f:
+        text = f.read()
+    section = text.split("## Samples per release\n")[1].split("##")[0]
+    assert "| v9 | 1 |\n| v10 | 2 |" in section, section
 
 
 def test_dashboard_markdown_two_release_golden(spark, tmp_path):

@@ -649,6 +649,45 @@ def test_bronze_runs_no_driver_action():
     assert not offenders, offenders
 
 
+def test_dashboard_renderers_run_no_spark():
+    """Repo policy (cli dashboard): each stored dashboard table is read
+    once on the driver (``cli._shown_table``), so the markdown and HTML
+    renderers and the HTML builders they share with the data guide take
+    no ``spark`` parameter, name neither ``spark`` nor ``F``, and call
+    no Spark action."""
+    import ast
+    import os as _os
+
+    path = _os.path.join(_os.path.dirname(__file__), "..", "genie_spark", "cli.py")
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    renderers = {"dashboard_markdown", "dashboard_html", "_md_table", "_html_page", "_html_table"}
+    funcs = [
+        node for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name in renderers
+    ]
+    assert {fn.name for fn in funcs} == renderers
+    actions = {"collect", "first", "take", "head", "count", "toPandas", "toLocalIterator", "show", "write"}
+    offenders = []
+    for fn in funcs:
+        a = fn.args
+        offenders += [
+            f"{fn.name}: parameter {arg.arg}"
+            for arg in a.posonlyargs + a.args + a.kwonlyargs
+            if arg.arg == "spark" or "SparkSession" in ast.unparse(arg.annotation or ast.Constant(""))
+        ]
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Name) and node.id in ("spark", "F"):
+                offenders.append(f"cli.py:{node.lineno}: {fn.name} names {node.id}")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in actions
+            ):
+                offenders.append(f"cli.py:{node.lineno}: {fn.name} calls {node.func.attr}")
+    assert not offenders, offenders
+
+
 def test_slow_tests_names_are_live():
     """tests/conftest.py::SLOW_TESTS marks tests by bare name, so a
     renamed or deleted test leaves a stale entry that silently marks
