@@ -24,9 +24,12 @@ import argparse
 import json
 import os
 import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from html import escape
 from typing import NamedTuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -399,7 +402,25 @@ def cmd_nightly(spark: SparkSession, args: argparse.Namespace) -> int:
     (``<input>/<CENTER>/<upload files>``); clinical sample/patient
     files ingest as a pair, every other recognized file ingests on its
     own.  Unrecognized files are reported and skipped, like the
-    reference's validation-status tracking of invalid uploads."""
+    reference's validation-status tracking of invalid uploads.
+
+    Each batch's work is mostly fixed per-query driver cost on small
+    uploads, so the sweep overlaps them on the one session.  The
+    batches are grouped into one lane per bronze table, in sweep order;
+    the lanes run concurrently in a thread pool at most as wide as the
+    driver's CPU count, and each lane runs its batches one after
+    another.  So one table has one writer at a time and sees the same
+    writes in the same order as a one-at-a-time sweep: its first
+    writer's header order, which the union schema and the released
+    clinical columns follow, does not depend on thread timing.  Each
+    lane inherits the caller's Spark local properties (job group,
+    description, scheduler pool).  The status table is shared and
+    locked (``io.status``).  The sampleRetraction / patientRetraction
+    batches run after every lane, one at a time in sweep order,
+    because their cascade rewrites the whole clinical table.  If a
+    batch raises, no lane starts another batch, running ones finish,
+    and the exception propagates before any retraction, release or
+    dashboard runs."""
     input_dir = args.input_dir
     centers = (
         [c for c in args.centers.split(",") if c]
@@ -410,8 +431,9 @@ def cmd_nightly(spark: SparkSession, args: argparse.Namespace) -> int:
             if os.path.isdir(os.path.join(input_dir, d))
         )
     )
+    lanes: dict[str, list[tuple[str, list[str]]]] = {}
+    retractions: list[tuple[str, list[str]]] = []
     skipped: list[str] = []
-    rc_total = 0
     for center in centers:
         cdir = os.path.join(input_dir, center)
         files = sorted(
@@ -419,31 +441,57 @@ def cmd_nightly(spark: SparkSession, args: argparse.Namespace) -> int:
             for f in os.listdir(cdir)
             if os.path.isfile(os.path.join(cdir, f))
         )
+        kinds = {p: determine_filetype([p], center) for p in files}
         clinical_bundle = [
-            p
-            for p in files
-            if determine_filetype([p], center)
-            and determine_filetype([p], center).name == "clinical"
+            p for p in files if kinds[p] is not None and kinds[p].name == "clinical"
         ]
-        batches: list[list[str]] = []
         if clinical_bundle:
-            batches.append(clinical_bundle)
+            lanes.setdefault("clinical", []).append((center, clinical_bundle))
         for p in files:
-            if p in clinical_bundle:
-                continue
-            if determine_filetype([p], center) is None:
+            if kinds[p] is None:
                 skipped.append(p)
-                continue
-            batches.append([p])
-        for paths in batches:
-            rc = cmd_ingest(
-                spark,
-                argparse.Namespace(
-                    paths=paths, center=center, warehouse=args.warehouse,
-                    filetype=None, force=args.force,
-                ),
-            )
-            rc_total = max(rc_total, rc)
+            elif kinds[p].name in ("sampleRetraction", "patientRetraction"):
+                retractions.append((center, [p]))
+            elif kinds[p].name != "clinical":
+                lanes.setdefault(kinds[p].name, []).append((center, [p]))
+
+    def ingest(center: str, paths: list[str]) -> int:
+        return cmd_ingest(
+            spark,
+            argparse.Namespace(
+                paths=paths, center=center, warehouse=args.warehouse,
+                filetype=None, force=args.force,
+            ),
+        )
+
+    failed = threading.Event()
+
+    def run_lane(lane: list[tuple[str, list[str]]]) -> int:
+        rc = 0
+        for center, paths in lane:
+            if failed.is_set():
+                break
+            try:
+                rc = max(rc, ingest(center, paths))
+            except BaseException:
+                failed.set()
+                raise
+        return rc
+
+    rc_total = 0
+    if lanes:
+        with ThreadPoolExecutor(min(len(lanes), os.cpu_count() or 1)) as pool:
+            # wrapped one lane at a time: each gets its own copy of the
+            # caller's local properties (a shared copy would carry one
+            # lane's SQL execution id into another's jobs)
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(run_lane), lane)
+                for lane in lanes.values()
+            ]
+        # re-raises the first failed lane's exception, in sweep order
+        rc_total = max(f.result() for f in futures)
+    for center, paths in retractions:
+        rc_total = max(rc_total, ingest(center, paths))
     for p in skipped:
         print(f"nightly: unrecognized upload skipped: {p}", file=sys.stderr)
     if args.output:

@@ -56,6 +56,7 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
@@ -100,6 +101,30 @@ def _swap_lock(target_path: str):
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
+
+
+_WRITER_LOCKS: dict[str, threading.RLock] = {}
+_WRITER_LOCKS_GUARD = threading.Lock()
+
+
+@contextlib.contextmanager
+def _writer_lock(target_path: str):
+    """In-process lock held by a table's writer from its leftover-cleaning
+    recover to its commit.  Every writer of a table stages at
+    ``<target>.staging``, and a writer's ``recover`` deletes staging
+    leftovers, so a second thread writing the same table would delete
+    the first one's staging mid-write.  Keyed by the table's absolute
+    path; writers of different tables do not wait on each other.  It
+    separates threads only: a writer its own commit calls back into, in
+    the same thread (a ``TableCommit`` hook), passes, as it did before
+    the lock.  The ``flock`` of ``_swap_lock`` is taken inside it, at
+    the commit, and still serializes swap application across
+    processes."""
+    key = os.path.abspath(target_path)
+    with _WRITER_LOCKS_GUARD:
+        lock = _WRITER_LOCKS.setdefault(key, threading.RLock())
+    with lock:
+        yield
 
 
 def part_files(root: str):
@@ -357,9 +382,15 @@ def recover_bronze(target_path: str, clean_leftovers: bool = True) -> dict:
     entry, where they are about to overwrite the staging path anyway.
     Concurrency contract: ONE writer per bronze table at a time (the
     same assumption the staging-path naming already makes); readers
-    may run concurrently.  All swap APPLICATION — a writer committing
-    its own swap and any reader rolling a manifested swap forward —
-    is serialized by a per-table ``flock`` (``_swap_lock``), so a
+    may run concurrently.  Within one process the writers
+    (merge/compact/rewrite) hold ``_writer_lock``, an in-process lock
+    keyed by the table's absolute path, from this recover to their
+    commit, so threads writing one table run one after another; across
+    processes the one-writer rule is the caller's.  All swap
+    APPLICATION — a writer committing its own swap and any reader
+    rolling a manifested swap forward — is serialized by a per-table
+    ``flock`` (``_swap_lock``; a writer takes it inside
+    ``_writer_lock``), so a
     reader that observes a live writer's manifest blocks until the
     writer finishes and then finds nothing to do, and two concurrent
     recoveries can never interleave renames over the same partition.
@@ -568,56 +599,57 @@ def merge_into_bronze(
     prepare/commit/recover step goes through ``commit``
     (``TableCommit``) — swap in a Delta/Iceberg backend there.
     """
-    spark = batch.sparkSession
-    commit.recover(target_path)
-    existing = commit.read(spark, target_path)
-    partitioned = partition_col in batch.columns and (
-        existing is None or partition_col in existing.columns
-    )
-    scoped = (
-        partition_values is not None
-        and existing is not None
-        and commit.is_partitioned(target_path, partition_col)
-    )
-    out = batch
-    if existing is not None:
-        if scoped:
-            # partition pruning: other partitions' files are never read
-            existing = existing.where(F.col(partition_col).isin(list(partition_values)))
-        existing, batch = _align_schemas(existing, batch)
-        if keys:
-            # key-sorted row groups: parquet min/max stats then prune
-            # row groups on key lookups, and sorted columns compress
-            # better — free data-skipping at 100 TB
-            out = apply_upsert(batch, existing, list(keys))
-            out = out.sortWithinPartitions(*keys)
-        else:
-            out = existing.unionByName(batch)
-    staging = commit.staging_path(target_path)
-    writer = out.write.mode("overwrite")
-    # scoped writes always split by partition: a batch without the
-    # column then stages in the default partition, which the check refuses
-    if scoped or partitioned:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(staging)
-    if not scoped:
-        commit.commit_whole(staging, target_path)
-        return
-    # a staged partition the caller did not name would replace that
-    # partition's data.  The listing runs no Spark job; a null value
-    # stages as Hive's default partition, which no named value matches.
-    prefix, named = f"{partition_col}=", {str(v) for v in partition_values}
-    stray = sorted(
-        e
-        for e in os.listdir(staging)
-        if e.startswith(prefix) and unquote(e[len(prefix):]) not in named
-    )
-    if stray:
-        raise ValueError(
-            f"bronze merge into {target_path}: batch rows in {stray}, "
-            f"outside the named partitions {sorted(named)}"
+    with _writer_lock(target_path):
+        spark = batch.sparkSession
+        commit.recover(target_path)
+        existing = commit.read(spark, target_path)
+        partitioned = partition_col in batch.columns and (
+            existing is None or partition_col in existing.columns
         )
-    commit.commit_partitions(staging, target_path, partition_col)
+        scoped = (
+            partition_values is not None
+            and existing is not None
+            and commit.is_partitioned(target_path, partition_col)
+        )
+        out = batch
+        if existing is not None:
+            if scoped:
+                # partition pruning: other partitions' files are never read
+                existing = existing.where(F.col(partition_col).isin(list(partition_values)))
+            existing, batch = _align_schemas(existing, batch)
+            if keys:
+                # key-sorted row groups: parquet min/max stats then prune
+                # row groups on key lookups, and sorted columns compress
+                # better — free data-skipping at 100 TB
+                out = apply_upsert(batch, existing, list(keys))
+                out = out.sortWithinPartitions(*keys)
+            else:
+                out = existing.unionByName(batch)
+        staging = commit.staging_path(target_path)
+        writer = out.write.mode("overwrite")
+        # scoped writes always split by partition: a batch without the
+        # column then stages in the default partition, which the check refuses
+        if scoped or partitioned:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(staging)
+        if not scoped:
+            commit.commit_whole(staging, target_path)
+            return
+        # a staged partition the caller did not name would replace that
+        # partition's data.  The listing runs no Spark job; a null value
+        # stages as Hive's default partition, which no named value matches.
+        prefix, named = f"{partition_col}=", {str(v) for v in partition_values}
+        stray = sorted(
+            e
+            for e in os.listdir(staging)
+            if e.startswith(prefix) and unquote(e[len(prefix):]) not in named
+        )
+        if stray:
+            raise ValueError(
+                f"bronze merge into {target_path}: batch rows in {stray}, "
+                f"outside the named partitions {sorted(named)}"
+            )
+        commit.commit_partitions(staging, target_path, partition_col)
 
 
 def compact_bronze(
@@ -644,34 +676,35 @@ def compact_bronze(
     and the returned per-partition {files_before, files_after} name
     partition values unescaped (``"X/1"``, not ``X%2F1``).
     """
-    commit.recover(target_path)
-    if not commit.is_partitioned(target_path, partition_col):
-        raise ValueError(f"{target_path} is not a {partition_col}-partitioned layout")
-    report: dict = {}
-    for escaped in commit.partition_values(target_path, partition_col):
-        # Spark path-escapes the directory suffix (CENTER=X%2F1 holds
-        # "X/1"); callers and the report name the value itself
-        value = unquote(escaped)
-        if centers is not None and value not in centers:
-            continue
-        files = commit.partition_files(target_path, partition_col, escaped)
-        size = sum(os.path.getsize(f) for f in files)
-        n_target = max(1, -(-size // target_file_bytes))
-        if len(files) <= n_target:
-            report[value] = {"files_before": len(files), "files_after": len(files)}
-            continue
-        staging = commit.staging_path(target_path, f"compact.{escaped}")
-        (
-            spark.read.schema(parquet_schema(files))
-            .parquet(*files)
-            .coalesce(n_target)
-            .write.mode("overwrite")
-            .parquet(os.path.join(staging, f"{partition_col}={escaped}"))
-        )
-        commit.commit_partitions(staging, target_path, partition_col)
-        after = len(commit.partition_files(target_path, partition_col, escaped))
-        report[value] = {"files_before": len(files), "files_after": after}
-    return report
+    with _writer_lock(target_path):
+        commit.recover(target_path)
+        if not commit.is_partitioned(target_path, partition_col):
+            raise ValueError(f"{target_path} is not a {partition_col}-partitioned layout")
+        report: dict = {}
+        for escaped in commit.partition_values(target_path, partition_col):
+            # Spark path-escapes the directory suffix (CENTER=X%2F1 holds
+            # "X/1"); callers and the report name the value itself
+            value = unquote(escaped)
+            if centers is not None and value not in centers:
+                continue
+            files = commit.partition_files(target_path, partition_col, escaped)
+            size = sum(os.path.getsize(f) for f in files)
+            n_target = max(1, -(-size // target_file_bytes))
+            if len(files) <= n_target:
+                report[value] = {"files_before": len(files), "files_after": len(files)}
+                continue
+            staging = commit.staging_path(target_path, f"compact.{escaped}")
+            (
+                spark.read.schema(parquet_schema(files))
+                .parquet(*files)
+                .coalesce(n_target)
+                .write.mode("overwrite")
+                .parquet(os.path.join(staging, f"{partition_col}={escaped}"))
+            )
+            commit.commit_partitions(staging, target_path, partition_col)
+            after = len(commit.partition_files(target_path, partition_col, escaped))
+            report[value] = {"files_before": len(files), "files_after": after}
+        return report
 
 
 def rewrite_bronze(
@@ -682,10 +715,11 @@ def rewrite_bronze(
 ) -> None:
     """Full two-phase rewrite (used by retraction, which may touch any
     partition); keeps the partitioned layout when the column is present."""
-    commit.recover(target_path)
-    staging = commit.staging_path(target_path)
-    writer = df.write.mode("overwrite")
-    if partition_col in df.columns:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(staging)
-    commit.commit_whole(staging, target_path)
+    with _writer_lock(target_path):
+        commit.recover(target_path)
+        staging = commit.staging_path(target_path)
+        writer = df.write.mode("overwrite")
+        if partition_col in df.columns:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(staging)
+        commit.commit_whole(staging, target_path)

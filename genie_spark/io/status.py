@@ -24,6 +24,11 @@ rewrite is staged and installed by the bronze tables' journaled
 whole-table swap (``DEFAULT_COMMIT.commit_whole``); a read first rolls
 an interrupted swap forward, so a kill mid-commit loses no row, and a
 table that cannot be read raises instead of reading as empty.
+
+Concurrent ingests in one process (the nightly sweep's batch threads)
+share the table: one module lock covers each read-modify-write and
+each status check, and the rows are stored sorted by (center, name),
+so the table does not depend on the order the batches finished in.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -42,6 +48,9 @@ STATUS_TABLE = "validation_status"
 STATUS_SCHEMA = pa.schema(
     [(c, pa.string()) for c in ("center", "name", "md5", "status", "path", "errors")]
 )
+
+# one read-modify-write of the table at a time in this process
+_LOCK = threading.Lock()
 
 
 def file_md5(path: str) -> str:
@@ -78,7 +87,9 @@ def prior_status(warehouse: str, center: str, name: str, md5: str) -> str | None
     """The stored status when (name, md5) is unchanged — meaning
     revalidation can be skipped (check_existing_file_status: a changed
     md5 or name forces ``to_validate``)."""
-    for r in _read(warehouse):
+    with _LOCK:
+        rows = _read(warehouse)
+    for r in rows:
         if (r["center"], r["name"], r["md5"]) == (center, name, md5):
             return r["status"]
     return None
@@ -94,20 +105,21 @@ def record_status(
     errors: str = "",
 ) -> None:
     """Upsert the (center, name) row; ``errors`` is the file's report
-    text, empty when it is valid."""
-    rows = [r for r in _read(warehouse) if (r["center"], r["name"]) != (center, name)]
-    rows.append(
-        dict(center=center, name=name, md5=md5, status=status, path=path, errors=errors)
-    )
+    text, empty when it is valid.  The rows are stored sorted by
+    (center, name)."""
+    row = dict(center=center, name=name, md5=md5, status=status, path=path, errors=errors)
     target = os.path.join(warehouse, STATUS_TABLE)
     staging = DEFAULT_COMMIT.staging_path(target)
-    shutil.rmtree(staging, ignore_errors=True)
-    os.makedirs(staging)
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=STATUS_SCHEMA),
-        os.path.join(staging, "part-00000.parquet"),
-    )
-    DEFAULT_COMMIT.commit_whole(staging, target)
+    with _LOCK:
+        rows = [r for r in _read(warehouse) if (r["center"], r["name"]) != (center, name)]
+        rows = sorted(rows + [row], key=lambda r: (r["center"], r["name"]))
+        shutil.rmtree(staging, ignore_errors=True)
+        os.makedirs(staging)
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=STATUS_SCHEMA),
+            os.path.join(staging, "part-00000.parquet"),
+        )
+        DEFAULT_COMMIT.commit_whole(staging, target)
 
 
 def invalid_reason_texts(

@@ -1401,6 +1401,152 @@ def test_nightly_sweep(spark, tmp_path):
     assert dec.where("has_decrease").count() == 0
 
 
+def _nightly_args(input_dir, wh, output=None):
+    return _ns(
+        input_dir=str(input_dir), warehouse=wh, centers=None, output=output,
+        dashboard=None, version="N1", study_id="genie_private", pad=10,
+        force=True, prev_release=None,
+    )
+
+
+def _two_center_uploads(root):
+    """SAGE's fixture uploads, and GOLD's copy of them whose sample file
+    has its columns in reverse order plus one more, and a patient
+    retraction.  Returns each center's batches in the order a
+    one-at-a-time sweep ingests them: centers by name, the clinical
+    pair first, then the other files by name."""
+    sage, gold = root / CENTER, root / "GOLD"
+    sage.mkdir(parents=True)
+    gold.mkdir()
+    clinical = _write_clinical_pair(sage)
+    maf, bed = _write_maf(sage), _write_bed(sage)
+    for p in clinical + maf + bed:
+        name = os.path.basename(p).replace(CENTER, "GOLD")
+        with open(p) as f:
+            text = f.read().replace(CENTER, "GOLD")
+        if name.startswith("data_clinical_supp_sample"):
+            lines = [line.split("\t")[::-1] for line in text.splitlines()]
+            lines = [lines[0] + ["SAMPLE_NOTE"]] + [r + ["x"] for r in lines[1:]]
+            text = "".join("\t".join(r) + "\n" for r in lines)
+        (gold / name).write_text(text)
+    (gold / "patientRetraction.csv").write_text("GENIE-GOLD-2\n")
+
+    def g(name):
+        return str(gold / name)
+
+    return [
+        ("GOLD", sorted([g("data_clinical_supp_sample_GOLD.txt"),
+                         g("data_clinical_supp_patient_GOLD.txt")])),
+        ("GOLD", [g("GOLD-PANEL-1.bed")]),
+        ("GOLD", [g("data_mutations_extended_GOLD.txt")]),
+        ("GOLD", [g("patientRetraction.csv")]),
+        (CENTER, sorted(clinical)),
+        (CENTER, bed),
+        (CENTER, maf),
+    ]
+
+
+def test_nightly_matches_one_batch_at_a_time(spark, tmp_path):
+    """The concurrent sweep leaves every bronze table with the same
+    schema (column order included) and rows, and the status table with
+    the same rows, as the same batches ingested one at a time in the
+    old sweep order — which ran GOLD's retraction before SAGE's
+    clinical.  GOLD's sample header differs from SAGE's, so the
+    clinical table's column order depends on which center wrote it
+    first: the clinical lane writes in sweep order."""
+    import pyarrow.parquet as pq
+
+    from genie_spark.cli import cmd_nightly
+    from genie_spark.io.bronze import read_table
+
+    old_order = _two_center_uploads(tmp_path / "uploads")
+    seq, night = str(tmp_path / "seq"), str(tmp_path / "night")
+    for center, paths in old_order:
+        rc = cmd_ingest(
+            spark, _ns(paths=paths, center=center, warehouse=seq, filetype=None, force=True),
+        )
+        assert rc == 0
+    assert cmd_nightly(spark, _nightly_args(tmp_path / "uploads", night)) == 0
+
+    tables = sorted(os.listdir(seq))
+    assert tables == sorted(os.listdir(night))
+    for t in tables:
+        if t == "validation_status" or not os.path.isdir(os.path.join(seq, t)):
+            continue
+        a, b = read_table(spark, os.path.join(seq, t)), read_table(spark, os.path.join(night, t))
+        assert [(f.name, f.dataType) for f in a.schema] == [
+            (f.name, f.dataType) for f in b.schema
+        ], t
+        assert sorted(map(repr, a.collect())) == sorted(map(repr, b.collect())), t
+    clinical = read_table(spark, os.path.join(night, "clinical"))
+    assert "SAMPLE_NOTE" in clinical.columns
+    ids = {r["SAMPLE_ID"] for r in clinical.collect()}
+    assert "GENIE-GOLD-2-1" not in ids and f"GENIE-{CENTER}-2-1" in ids
+
+    def status(wh):
+        return pq.read_table(os.path.join(wh, "validation_status")).to_pylist()
+
+    assert status(seq) == status(night)
+    assert [(r["center"], r["name"]) for r in status(night)] == sorted(
+        (r["center"], r["name"]) for r in status(night)
+    )
+
+
+def test_nightly_failed_batch_stops_the_sweep(spark, tmp_path):
+    """A batch whose format read raises makes the sweep re-raise after
+    the running batches finish: no retraction runs (its bronze table is
+    never written) and no release directory is written."""
+    import yaml
+
+    from genie_spark.cli import cmd_nightly
+
+    gold = tmp_path / "uploads" / "GOLD"
+    gold.mkdir(parents=True)
+    (gold / "GOLD_assay_information.yaml").write_text("GOLD-PANEL-1: [unclosed\n")
+    (gold / "patientRetraction.csv").write_text("GENIE-GOLD-1\n")
+    sage = tmp_path / "uploads" / CENTER
+    sage.mkdir()
+    _write_clinical_pair(sage)
+    _write_bed(sage)
+    wh, out = str(tmp_path / "wh"), str(tmp_path / "rel")
+    with pytest.raises(yaml.YAMLError):
+        cmd_nightly(spark, _nightly_args(tmp_path / "uploads", wh, output=out))
+    assert not os.path.exists(os.path.join(wh, "patientRetraction"))
+    assert not os.path.exists(out)
+
+
+def test_nightly_batches_inherit_job_group(spark, tmp_path, monkeypatch):
+    """Batch threads keep the caller's Spark local properties: a job
+    group set before the sweep is the job group inside each batch."""
+    import threading
+
+    from genie_spark import cli
+
+    up = tmp_path / "uploads" / CENTER
+    up.mkdir(parents=True)
+    _write_clinical_pair(up)
+    _write_maf(up)
+    _write_bed(up)
+    sc = spark.sparkContext
+    seen = []
+
+    def ingest(spark_, args):
+        seen.append((
+            threading.current_thread() is threading.main_thread(),
+            sc.getLocalProperty("spark.jobGroup.id"),
+        ))
+        return 0
+
+    monkeypatch.setattr(cli, "cmd_ingest", ingest)
+    sc.setJobGroup("nightly-pin", "nightly local-property pin")
+    try:
+        rc = cli.cmd_nightly(spark, _nightly_args(tmp_path / "uploads", str(tmp_path / "wh")))
+    finally:
+        sc.setJobGroup(None, None)
+    assert rc == 0
+    assert seen == [(False, "nightly-pin")] * 3
+
+
 def test_compact_bronze(spark, tmp_path):
     """Compaction coalesces a partition's small-file litter into the
     target count, preserves content exactly, and leaves unselected

@@ -212,6 +212,72 @@ def test_upload_status_runs_no_job(spark, tmp_path):
     assert _newest_job(spark) == before
 
 
+def test_concurrent_status_updates(tmp_path):
+    """Eight threads record eight distinct files: the module lock keeps
+    every read-modify-write whole, so the table holds all eight rows,
+    stored sorted by (center, name) whatever order they arrived in."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    from genie_spark.io.status import STATUS_TABLE, record_status
+
+    wh = str(tmp_path / "warehouse")
+    keys = [(c, f"f{i}.txt") for c in ("GOLD", "SAGE") for i in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often: a lost update shows
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            list(pool.map(
+                lambda k: record_status(wh, k[0], k[1], "m", "VALIDATED", f"/in/{k[1]}"),
+                reversed(keys),
+                timeout=120,
+            ))
+    finally:
+        sys.setswitchinterval(interval)
+    rows = pq.read_table(os.path.join(wh, STATUS_TABLE)).to_pylist()
+    assert [(r["center"], r["name"]) for r in rows] == keys
+
+
+def test_concurrent_merges_into_one_table(spark, tmp_path):
+    """Two threads MERGE different centers into one bronze table.  The
+    writers take turns (``io.bronze._writer_lock``): otherwise the
+    second writer's leftover-cleaning recover deletes the first one's
+    staging mid-write, and both stage at the same path.  Both
+    partitions land, the first round (which creates the table) and the
+    second (which upserts both partitions), and no staging dir or
+    manifest is left behind."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from genie_spark.io.bronze import MANIFEST_SUFFIX, merge_into_bronze, read_table
+
+    tgt = str(tmp_path / "clinical")
+    for value in ("first", "second"):
+        batches = {
+            c: spark.createDataFrame(
+                [(f"{c}-{i}", c, value) for i in range(3)],
+                "SAMPLE_ID string, CENTER string, V string",
+            )
+            for c in ("A", "B")
+        }
+        with ThreadPoolExecutor(2) as pool:
+            list(pool.map(
+                lambda c: merge_into_bronze(
+                    batches[c], tgt, ["SAMPLE_ID"], partition_values=[c]
+                ),
+                batches,
+                timeout=300,
+            ))
+        rows = sorted((r.SAMPLE_ID, r.CENTER, r.V) for r in read_table(spark, tgt).collect())
+        assert rows == [(f"{c}-{i}", c, value) for c in "AB" for i in range(3)]
+        assert sorted(e for e in os.listdir(tgt) if not e.startswith((".", "_"))) == [
+            "CENTER=A", "CENTER=B",
+        ]
+        assert not os.path.exists(tgt + ".staging")
+        assert not os.path.exists(tgt + MANIFEST_SUFFIX)
+
+
 def _merged(spark):
     """Spark's own schema-merging read, the reference for table reads."""
     return spark.read.option("mergeSchema", "true")

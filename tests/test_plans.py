@@ -649,6 +649,55 @@ def test_bronze_runs_no_driver_action():
     assert not offenders, offenders
 
 
+def test_thread_pools_only_in_nightly():
+    """Repo policy (cli.cmd_nightly): concurrency lives in one place.
+    The nightly sweep is the package's one thread pool — its lanes
+    inherit the caller's Spark local properties, and the bronze and
+    status writers they reach are locked for it.  No other code under
+    genie_spark/ names ``ThreadPoolExecutor``, ``threading.Thread`` or
+    PySpark's ``InheritableThread``."""
+    import ast
+    import glob as _glob
+    import os as _os
+
+    pkg = _os.path.join(_os.path.dirname(__file__), "..", "genie_spark")
+    pools = {"ThreadPoolExecutor", "Thread", "InheritableThread"}
+    offenders: list[str] = []
+    for path in sorted(_glob.glob(_os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = _os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        allowed: set[int] = set()
+        if rel == "cli.py":
+            nightly = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "cmd_nightly"
+            )
+            allowed = {id(n) for n in ast.walk(nightly)}
+        offenders += [
+            f"{rel}:{node.lineno}: {name}"
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Name, ast.Attribute))
+            and (name := getattr(node, "id", None) or node.attr) in pools
+            and id(node) not in allowed
+        ]
+        # an import under another name would hide a use from the scan
+        if rel != "cli.py":
+            offenders += [
+                f"{rel}:{node.lineno}: imports {alias.name}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom)
+                for alias in node.names
+                if alias.name in pools
+            ]
+    assert not offenders, offenders
+    # the scan is not vacuous: the sweep's pool is where it is pinned
+    assert any(
+        isinstance(n, ast.Name) and n.id == "ThreadPoolExecutor"
+        for n in ast.walk(nightly)
+    )
+
+
 def test_dashboard_renderers_run_no_spark():
     """Repo policy (cli dashboard): each stored dashboard table is read
     once on the driver (``cli._shown_table``), so the markdown and HTML
