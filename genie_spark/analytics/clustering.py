@@ -1118,8 +1118,12 @@ def ivfpq_residual_topk(
     so the k·m codewords spend their whole budget on the WITHIN-cell
     geometry the coarse quantizer already localized — at a fixed
     (m, k) bit budget this recovers recall the non-residual composite
-    (``ivfpq_topk``, X62) leaves on the table
-    (tools/measure_pq_recall.py A/Bs the two).
+    (``ivfpq_topk``, X62) leaves on the table.  Measured recall@10 on
+    the sf0.01 embeddings (20 queries, against exact squared quantized
+    L2): flat PQ 0.145, ``ivfpq_topk`` 0.155, residual 0.16 at m=4,
+    k=8; 0.27 / 0.29 / 0.255 at m=8, k=16 — a wash there, because
+    those vectors are near-uniform (within-label variance is 98% of
+    the total).  The clustered-corpus pytest pins the mechanism.
 
     Residuals are taken against each cell's MEAN (the paper's coarse
     centroid), not the md5-chosen seed vector that defines the cell:

@@ -510,8 +510,8 @@ N_HYPERPLANES = 8
 def _hyperplane(dim: int, seed: int) -> list[int]:
     """Deterministic ±1 hyperplane from md5 bits (no RNG API — results
     must be reproducible across engines and rounds; the planes are
-    computed once driver-side and embedded as literals in both the
-    Spark plan and the SQL oracle).
+    computed once driver-side for both ``sign_signatures`` and the SQL
+    oracles).
 
     History: the first version used an LCG's low bit — whose parity
     strictly alternates, collapsing every plane to ±(+1,-1,+1,…): ONE
@@ -525,24 +525,6 @@ def _hyperplane(dim: int, seed: int) -> list[int]:
         h = hashlib.md5(f"plane_{seed}_{i}".encode()).digest()
         out.append(1 if h[0] & 1 else -1)
     return out
-
-
-def _sign_signature(
-    vec_col: str, dim: int, n_planes: int, seed0: int = 1
-) -> Column:
-    """Sign-bit LSH bucket id: one bit per ±1 hyperplane (md5-derived,
-    deterministic), O(n_planes·dim) per row — assignment cost is
-    independent of how many buckets exist, which is what lets the
-    bucket count scale with n (unlike centroid IVF, whose per-row
-    assignment is O(n_centroids))."""
-    q = quantized(vec_col)
-    sig = None
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, seed0 + p)])
-        proj = dot(q, plane)
-        bit = F.when(proj > 0, F.lit(2**p).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = bit if sig is None else (sig + bit)
-    return sig
 
 
 def banded_plane_counts(
@@ -730,23 +712,27 @@ def sign_signatures(
     n_tables: int,
     seed_base: int = 1,
 ) -> DataFrame:
-    """All ``n_tables`` banded sign-LSH bucket ids in ONE Arrow scan:
+    """All ``n_tables`` sign-LSH bucket ids in ONE Arrow scan:
     (id, b0..b{t-1}) via a single int64 matmul against the stacked
-    (Σ_t r_t)×dim plane matrix — bit-identical to selecting
-    ``_sign_signature`` per table (same md5 planes, seeds
-    ``seed_base + Σ_{u<t} r_u``, same exact-integer projections) but
-    vectorized instead of Σ r_t interpreted higher-order-function
-    folds per row.  Pure map, no shuffle.
+    (Σ_t r_t)×dim plane matrix.  Table t's bucket sets bit p (weight
+    2^p) when the exact-integer projection of the ``quantized`` vector
+    onto the md5 ±1 plane of seed ``seed_base + Σ_{u<t} r_u + p`` is
+    positive — the expression the DuckDB oracles mirror.  One bit per
+    plane makes assignment O(Σ r_t·dim) per row, independent of how
+    many buckets exist, which is what lets the bucket count scale with
+    n (unlike centroid IVF, whose per-row assignment is
+    O(n_centroids)).  Pure map, no shuffle.  The matmul replaced Σ r_t
+    interpreted higher-order-function folds per row: the signature
+    stage of ``semantic_dedup`` went from 31 s to ~2 s at 1M vectors.
 
     ``n_planes`` may be one int (every table identical — the historic
     form, seed-compatible with it) or a per-table list of counts
-    (``banded_plane_counts`` occupancy-smoothed sizing).
+    (``banded_plane_counts`` occupancy-smoothed sizing).  ``id_col``
+    keeps its type.
 
-    Null-propagation parity with the expression form: a null vector,
-    one whose length ≠ ``dim`` (zip_with null-pads → null projection
-    → bit 0), or one carrying a null/NaN ELEMENT (Arrow surfaces
-    element nulls as NaN; the expression's null product also nulls the
-    projection) signs to bucket 0 in EVERY table.
+    Degenerate rows: a null vector, one whose length ≠ ``dim``, or
+    one carrying a null/NaN/Inf ELEMENT (Arrow surfaces element nulls
+    as NaN) signs to bucket 0 in EVERY table.
 
     Guard: if the data's observed vector length disagrees with
     ``dim``, EVERY row would sign to bucket 0 and each banded
@@ -755,6 +741,7 @@ def sign_signatures(
     (one single-row job).
     """
     import numpy as np
+    from pyspark.sql import types as T
 
     first = df.select(vec_col).where(F.col(vec_col).isNotNull()).first()
     if first is not None and first[0] is not None and len(first[0]) != dim:
@@ -790,8 +777,9 @@ def sign_signatures(
     w_full = np.concatenate(
         [np.array([2**p for p in range(c)], dtype=np.int64) for c in counts]
     )
-    schema = f"{id_col} long, " + ", ".join(
-        f"b{t} long" for t in range(n_tables)
+    schema = T.StructType(
+        [df.schema[id_col]]
+        + [T.StructField(f"b{t}", T.LongType()) for t in range(n_tables)]
     )
 
     def sign(batches):
@@ -825,7 +813,7 @@ def sign_signatures(
                     ].sum(axis=1)
                 buckets[~finite] = 0
                 out[ok] = buckets
-            data = {id_col: pdf[id_col].to_numpy()}
+            data = {id_col: pdf[id_col]}
             for t in range(n_tables):
                 data[f"b{t}"] = out[:, t]
             yield pd.DataFrame(data)
@@ -891,17 +879,19 @@ def lsh_cosine_candidates(
     """Random-hyperplane LSH bucketing: sign-bit signature per vector;
     vectors sharing the signature are candidate neighbors.  Turns ANN
     candidate generation into a groupBy/equi-join on the signature —
-    the scale path (no cross join).
+    the scale path (no cross join).  Signs through
+    ``sign_signatures(..., n_tables=1)``, so a ``dim`` that disagrees
+    with the data raises instead of bucketing every row to 0.
 
     Sizing: expected candidate volume ≈ n²/2^n_planes, so n_planes must
     grow with log₂(n) — 8 planes is right for ~10⁴ vectors, use ~16 at
-    10⁵, ~30 at 10¹⁰ (or band several shorter signatures like the
-    MinHash path to keep recall).  Measured in tools/stress_scale.py:
-    at 100k vectors, 8 planes → 23.9M pairs, 16 planes → 170k."""
-    sig = _sign_signature(vec_col, dim, n_planes, seed0=1)
-    sigs = df.select(F.col(id_col).alias("vid"), sig.alias("bucket"))
-    a = sigs.select(F.col("vid").alias("a"), "bucket")
-    b = sigs.select(F.col("vid").alias("b"), "bucket")
+    10⁵, ~30 at 10¹⁰ (or band several shorter signatures with
+    ``lsh_banded_pairs`` to keep recall).  Measured in
+    tools/stress_scale.py: at 100k vectors, 8 planes → 23.9M pairs,
+    16 planes → 170k."""
+    sigs = sign_signatures(df, id_col, vec_col, dim, n_planes, 1)
+    a = sigs.select(F.col(id_col).alias("a"), F.col("b0").alias("bucket"))
+    b = sigs.select(F.col(id_col).alias("b"), F.col("b0").alias("bucket"))
     # merge hint: signature-table self-join (see lsh_banded_pairs)
     return (
         a.hint("merge").join(b, "bucket")

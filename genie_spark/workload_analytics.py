@@ -466,7 +466,7 @@ def ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sign_bucket_sql(n_planes: int, seed0: int) -> str:
     """One banded sign-LSH bucket id as a DuckDB expression over a
     quantized vector column ``v`` — same md5-derived ±1 planes and
-    exact-integer projections as ``similarity._sign_signature``."""
+    exact-integer projections as ``similarity.sign_signatures``."""
     from genie_spark.analytics.similarity import _hyperplane
 
     terms = []
@@ -510,7 +510,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_sql() -> str:
     """DuckDB mirror of ``lsh_cosine_candidates``: the ±1 hyperplanes
-    come from the same LCG (`similarity._hyperplane`), the projection
+    come from the same md5 rule (`similarity._hyperplane`), the projection
     is the same exact integer dot product, so the sign-bit bucket is
     reproducible bit-for-bit across engines."""
     from genie_spark.analytics.similarity import N_HYPERPLANES, _hyperplane

@@ -101,7 +101,6 @@ SLOW_TESTS = {
     "test_connected_components_materializes_pairs_once",
     "test_redaction_invariants",
     "test_ivf_cell_pairs_total_recall_vs_exact",
-    "test_bpe_encode_arrow_equals_literal_chain",
     "test_incremental_minhash_plan_never_reshingle_store",
     "test_ivf_store_build_query_append_parity",
     "test_pq_encode_codes_and_reconstruction",
@@ -138,7 +137,7 @@ SLOW_TESTS = {
     "test_unigram_encode_viterbi_model_ties_and_unk",
     "test_lm_bigram_backoff_semantics",
     "test_exact_duplicates",
-    "test_bpe_train_histogram_engine_equals_spark",
+    "test_bpe_train_histogram_loop_equals_table_loop",
     "test_shingles_unique_id_contract_guard",
     "test_signature_store_change_and_removal",
     "test_signature_store_full_then_noop",

@@ -98,6 +98,24 @@ def test_lsh_buckets_contain_near_dup(spark):
     assert (0, 100) in cand  # near-identical vectors share every sign bit
 
 
+def test_lsh_cosine_candidates_rejects_wrong_dim(spark):
+    """A ``dim`` that disagrees with the vectors would sign every row
+    to bucket 0 and self-join the whole table; it raises instead."""
+    rows = [(i, [float((i * 5 + j) % 7) - 3.0 for j in range(64)]) for i in range(12)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="dim=8"):
+        lsh_cosine_candidates(df, dim=8)
+    pairs = {(r["a"], r["b"]) for r in lsh_cosine_candidates(df, dim=64).collect()}
+    assert len(pairs) < 12 * 11 // 2
+    # ids keep their type through the signer
+    sdf = df.select(F.concat(F.lit("v"), "vec_id").alias("vec_id"), "embedding")
+    spairs = lsh_cosine_candidates(sdf, dim=64)
+    assert spairs.schema["a"].dataType.simpleString() == "string"
+    assert {(int(r["a"][1:]), int(r["b"][1:])) for r in spairs.collect()} == {
+        (a, b) for a, b in pairs if f"v{a}" < f"v{b}"
+    } | {(b, a) for a, b in pairs if f"v{a}" > f"v{b}"}
+
+
 def test_token_stats_and_quality(spark):
     df = spark.createDataFrame(
         [(1, "the cat sat on the mat with a hat and a bat today ok"), (2, "x")],
@@ -1162,6 +1180,22 @@ def test_semantic_dedup_matches_within_cluster_model(spark):
     assert semantic_dedup(empty, k=2, iters=1).count() == 0
 
 
+def _sign_bucket(vec, n_planes, seed0):
+    """Pure-Python sign-LSH bucket of a double-valued vector: bit p is
+    set when the quantized vector's integer projection onto the md5
+    plane of seed ``seed0 + p`` is positive (``sign_signatures``)."""
+    import math
+
+    from genie_spark.analytics.similarity import _hyperplane
+
+    q = [math.floor(x * 1000.0 + 0.5) for x in vec]
+    return sum(
+        2**p
+        for p in range(n_planes)
+        if sum(a * b for a, b in zip(q, _hyperplane(len(vec), seed0 + p))) > 0
+    )
+
+
 def test_semantic_dedup_lsh_matches_banded_model(spark):
     """The default (scale) path == the model built from kmeans_assign
     + exact pairs restricted to SAME-cluster AND ≥1 shared banded
@@ -1169,7 +1203,6 @@ def test_semantic_dedup_lsh_matches_banded_model(spark):
     (per-plane agreement ≈ 1 ⇒ banding recall ≈ 1); the guard that
     capped the exact path does NOT apply here."""
     from genie_spark.analytics.clustering import kmeans_assign, semantic_dedup
-    from genie_spark.analytics.similarity import _sign_signature
 
     import random
 
@@ -1193,16 +1226,7 @@ def test_semantic_dedup_lsh_matches_banded_model(spark):
         r["vec_id"]: r["cluster_id"]
         for r in kmeans_assign(df, k=4, iters=2).collect()
     }
-    sigs = {
-        r["vec_id"]: [r[f"b{t}"] for t in range(4)]
-        for r in df.select(
-            "vec_id",
-            *[
-                _sign_signature("embedding", 64, 4, seed0=1 + t * 4).alias(f"b{t}")
-                for t in range(4)
-            ],
-        ).collect()
-    }
+    sigs = {i: [_sign_bucket(v, 4, 1 + t * 4) for t in range(4)] for i, v in rows}
     expected = {}
     for a, b, cos in (
         (r["a"], r["b"], r["cosine"])
@@ -1576,13 +1600,11 @@ def test_banded_plane_counts_smooth_sizing():
 
 
 def test_sign_signatures_per_table_counts_parity(spark):
-    """A per-table counts list must be bit-identical to evaluating
-    ``_sign_signature`` per table with the cumulative-offset seeds —
-    the contract that lets occupancy-smoothed sizing reuse the same
-    oracle construction."""
-    from pyspark.sql import functions as F
-
-    from genie_spark.analytics.similarity import _sign_signature, sign_signatures
+    """A per-table counts list must be bit-identical to a pure-Python
+    signer over each table's cumulative-offset seeds — the contract
+    that lets occupancy-smoothed sizing reuse the same oracle
+    construction."""
+    from genie_spark.analytics.similarity import sign_signatures
 
     rows = [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -1594,15 +1616,9 @@ def test_sign_signatures_per_table_counts_parity(spark):
         ).collect()
     }
     offsets = [0, 5, 9]
-    expected_df = df.select(
-        "vec_id",
-        *[
-            _sign_signature("embedding", 8, counts[t], seed0=1 + offsets[t]).alias(f"b{t}")
-            for t in range(3)
-        ],
-    )
     expected = {
-        r["vec_id"]: (r["b0"], r["b1"], r["b2"]) for r in expected_df.collect()
+        i: tuple(_sign_bucket(v, counts[t], 1 + offsets[t]) for t in range(3))
+        for i, v in rows
     }
     assert got == expected
     # distinct per-table widths actually produce distinct bucket spaces
@@ -2987,7 +3003,7 @@ def test_bpe_train_matches_sequential_on_md5_corpus(spark):
     """X52 at scale shape: a 300-doc md5-synthetic corpus (hash words,
     realistic repetition) — the full 10-merge sequence matches the
     sequential model."""
-    from genie_spark.analytics.text import bpe_train
+    from genie_spark.analytics.text import _bpe_train_table, _word_counts, bpe_train
 
     texts = []
     import hashlib
@@ -3008,10 +3024,9 @@ def test_bpe_train_matches_sequential_on_md5_corpus(spark):
     # (merges create new pairs), but steps must be 1..10
     assert [g[0] for g in got] == list(range(1, 11))
     # every batch width produces the same pinned sequence (r13 rung)
+    words = _word_counts(docs, "text")
     for bk in (1, 2, 5):
-        assert [
-            tuple(r) for r in bpe_train(docs, n_merges=10, batch_k=bk).collect()
-        ] == want
+        assert _bpe_train_table(words, 10, batch_k=bk) == want
 
 
 def test_bpe_train_batched_created_pair_adversary(spark):
@@ -3020,17 +3035,16 @@ def test_bpe_train_batched_created_pair_adversary(spark):
     lex-smaller lhs — a naive disjoint-only batch would emit (b,b)
     second, but sequential (and the adjacency-bound rule) pick (az,c).
     Also covers the self-pair and shared-symbol fallbacks."""
-    from genie_spark.analytics.text import bpe_train
+    from genie_spark.analytics.text import _bpe_train_table, _word_counts
 
     texts = ["azc"] * 90 + ["az"] * 10 + ["bb"] * 90
     docs = spark.createDataFrame(
         list(enumerate(texts)), ["doc_id", "text"]
     )
+    words = _word_counts(docs, "text")
     want = _seq_bpe(texts, 4)
     for bk in (1, 2, 8, 64):
-        got = [
-            tuple(r) for r in bpe_train(docs, n_merges=4, batch_k=bk).collect()
-        ]
+        got = _bpe_train_table(words, 4, batch_k=bk)
         assert got == want, (bk, got, want)
     # the adversary really is adversarial: step 2 must be the CREATED
     # pair, not the disjoint original candidate
@@ -3045,9 +3059,8 @@ def test_bpe_train_batched_phantom_prefix_adversary(spark):
     of (bq,d)'s 40 occurrences.  The old disjoint-only rule accepted
     (bq,d) at count 40 in the same batch; sequential emits (x,y,35)
     first and (bq,d) at 30.  The prefix-relation + phantom-capability
-    rule must reproduce the sequential order on every engine and
-    batch width."""
-    from genie_spark.analytics.text import bpe_train
+    rule must reproduce the sequential order in both loops and at
+    every batch width."""
 
     texts = (
         ["bq"] * 100 + ["ab"] * 50 + ["abqd"] * 10
@@ -3062,26 +3075,36 @@ def test_bpe_train_batched_phantom_prefix_adversary(spark):
     assert want[2][1:] == ("x", "y", "xy", 35)
     assert want[3][1:] == ("bq", "d", "bqd", 30)
     for bk in (2, 8, 64):
-        got = [
-            tuple(r)
-            for r in bpe_train(docs, n_merges=5, batch_k=bk).collect()
-        ]
-        assert got == want, (bk, got, want)
-    hist = [
-        tuple(r)
-        for r in bpe_train(docs, n_merges=5, engine="histogram").collect()
-    ]
-    assert hist == want
+        got = _bpe_loops(docs, 5, batch_k=bk)
+        assert got == (want, want), (bk, got, want)
 
 
-def test_bpe_train_histogram_engine_equals_spark(spark):
-    """r13 histogram engine: the driver-side heap trainer is byte-
-    identical to the distributed engine — tie order, overlap corpus,
-    the created-pair adversary, AND the space-prefixed encoding's
-    phantom-match corner (' a ab' under merge (a,a): the pattern
-    matches across the 'ab' spelling, so count and replace disagree —
-    consistently in every engine).  Guards: vocab cap raises loudly,
-    auto picks histogram past the threshold."""
+def _bpe_loops(docs, n_merges, batch_k=64):
+    """(vocabulary-table loop, driver-side histogram loop) merge lists
+    of ``bpe_train`` on the same word counts."""
+    from genie_spark.analytics.text import (
+        _bpe_train_histogram,
+        _bpe_train_table,
+        _collect_histogram,
+        _word_counts,
+    )
+
+    words = _word_counts(docs, "text")
+    hist = _collect_histogram(words, 1000, "test")
+    return (
+        _bpe_train_table(words, n_merges, batch_k=batch_k),
+        _bpe_train_histogram(hist, n_merges),
+    )
+
+
+def test_bpe_train_histogram_loop_equals_table_loop(spark):
+    """The driver-side heap loop is byte-identical to the vocabulary-
+    table loop — tie order, overlap corpus, the created-pair
+    adversary, AND the space-prefixed encoding's phantom-match corner
+    (' a ab' under merge (a,a): the pattern matches across the 'ab'
+    spelling, so count and replace disagree — consistently in both
+    loops).  Routing: past the threshold ``bpe_train`` takes the
+    histogram loop, whose vocabulary cap raises loudly."""
     import pytest
 
     from genie_spark.analytics.text import (
@@ -3101,24 +3124,17 @@ def test_bpe_train_histogram_engine_equals_spark(spark):
         docs = spark.createDataFrame(
             list(enumerate(texts)), ["doc_id", "text"]
         )
-        spark_seq = [
-            tuple(r)
-            for r in bpe_train(docs, n_merges=8, engine="spark").collect()
-        ]
-        hist_seq = [
-            tuple(r)
-            for r in bpe_train(docs, n_merges=8, engine="histogram").collect()
-        ]
-        assert hist_seq == spark_seq, texts[:2]
+        table_seq, hist_seq = _bpe_loops(docs, 8)
+        assert hist_seq == table_seq, texts[:2]
         assert hist_seq == _seq_bpe(texts, 8)
     docs = spark.createDataFrame(
         list(enumerate(corpora[0])), ["doc_id", "text"]
     )
-    with pytest.raises(ValueError, match="max_vocab_rows"):
-        bpe_train(docs, n_merges=8, engine="histogram", max_vocab_rows=3)
-    with pytest.raises(ValueError, match="engine"):
-        bpe_train(docs, n_merges=8, engine="nope")
     assert BPE_TRAIN_HISTOGRAM_THRESHOLD == 256
+    with pytest.raises(ValueError, match="max_vocab_rows"):
+        bpe_train(docs, n_merges=257, max_vocab_rows=3)
+    # the table loop never collects the histogram, so no cap applies
+    assert bpe_train(docs, n_merges=2, max_vocab_rows=3).count() == 2
 
 
 def test_winnow_store_sync_and_pairs(spark, tmp_path):
@@ -3802,75 +3818,124 @@ def test_temperature_mix_flattens_head_upsamples_tail(spark):
         temperature_mix(df, n_target=1, group_col="grp", alpha_halvings=-1)
 
 
-def test_bpe_encode_arrow_equals_literal_chain(spark):
-    """X53 Arrow rung: the mapInPandas batch encoder is BYTE-identical
-    to the literal F.replace chain — on a merge table the trainer
-    itself learned (the oracle contract), on null text (null
-    propagation mirrored), on empty docs, and on auto-selection either
-    side of the threshold."""
+def _bpe_replay(word, merges):
+    """Pure-Python apply_bpe of one word: the space-prefixed symbol
+    string, each merge a leftmost non-overlapping ``str.replace``."""
+    s = "".join(" " + ch for ch in word)
+    for l, r in merges:
+        s = s.replace(f" {l} {r}", f" {l}{r}")
+    return s.lstrip(" ").split(" ")
+
+
+def test_bpe_encode_and_fertility_run_a_1000_entry_merge_table(spark):
+    """A production-sized merge table (learned pairs padded to 1000
+    entries with pairs that never match) encodes, and both
+    ``bpe_encode`` and ``bpe_fertility`` equal a pure-Python replay —
+    a one-``F.replace``-per-merge chain overflowed the JVM stack while
+    planning this.  Also: null text gives null outputs, a NUL inside a
+    token encodes like any other character, a merge holding ``\n`` is
+    a no-op, and string ids keep their type."""
+    import collections
+    import hashlib
+
+    from pyspark.sql import types as T
+
     from genie_spark.analytics.text import (
-        BPE_ARROW_THRESHOLD,
+        _bpe_train_histogram,
         bpe_encode,
-        bpe_train,
+        bpe_fertility,
     )
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).limit(120)
-    extra = spark.createDataFrame(
-        [(90001, None), (90002, ""), (90003, "solo")],
-        "doc_id long, text string",
-    )
-    corpus = docs.select("doc_id", "text").unionByName(extra)
-    merges = [
-        (r["lhs"], r["rhs"]) for r in bpe_train(docs, n_merges=6).collect()
+    texts = [
+        " ".join(
+            hashlib.md5(f"{i % 13}_{j}".encode()).hexdigest()[:5]
+            for j in range(6)
+        )
+        for i in range(40)
+    ] + ["a\x00b ab", "solo"]
+    langs = ["en", "de", "fr"]
+    rows = [(i, t, langs[i % 3]) for i, t in enumerate(texts)]
+    rows.append((len(rows), None, "de"))
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    wf = collections.Counter(w for t in texts for w in t.split(" "))
+    learned = [
+        (m[1], m[2]) for m in _bpe_train_histogram(sorted(wf.items()), 40)
     ]
-    assert merges, "trainer produced no merges"
-    lit = sorted(
-        (r["doc_id"], tuple(r["bpe_tokens"]) if r["bpe_tokens"] is not None
-         else None, r["n_tokens"], r["n_subwords"])
-        for r in bpe_encode(corpus, merges, engine="literal").collect()
-    )
-    arw = sorted(
-        (r["doc_id"], tuple(r["bpe_tokens"]) if r["bpe_tokens"] is not None
-         else None, r["n_tokens"], r["n_subwords"])
-        for r in bpe_encode(corpus, merges, engine="arrow").collect()
-    )
-    assert lit == arw
-    # auto picks literal at oracle size, arrow past the threshold
-    small_plan = (
-        bpe_encode(corpus, merges)  # auto, 6 merges
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" not in small_plan, small_plan
-    big_table = merges * ((BPE_ARROW_THRESHOLD // len(merges)) + 1)
-    auto_big = bpe_encode(corpus, big_table)
-    plan = auto_big._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan
-    import pytest
+    assert len(learned) == 40
+    pad = [(chr(0x4E00 + i), chr(0x4E00 + i + 1)) for i in range(959)]
+    merges = learned[:20] + [("a\nb", "c")] + pad + learned[20:]
+    assert len(merges) == 1000
 
-    with pytest.raises(ValueError, match="NUL"):
-        bpe_encode(corpus, [("a\x00", "b")], engine="arrow")
-    with pytest.raises(ValueError, match="engine"):
-        bpe_encode(corpus, merges, engine="nope")
-    # ADVICE r12: the arrow engine must preserve the ORIGINAL id type
-    # — schema identical to the literal engine, including string ids
-    assert (
-        bpe_encode(corpus, merges, engine="arrow").schema
-        == bpe_encode(corpus, merges, engine="literal").schema
-    )
-    sdocs = corpus.where(F.col("text").isNotNull()).select(
+    got = {
+        r["doc_id"]: (r["bpe_tokens"], r["n_tokens"], r["n_subwords"])
+        for r in bpe_encode(docs, merges).collect()
+    }
+    want = {}
+    for i, t, _ in rows:
+        if t is None:
+            want[i] = (None, None, None)
+            continue
+        subs = [s for w in t.split(" ") for s in _bpe_replay(w, merges)]
+        want[i] = (subs, len(t.split(" ")), len(subs))
+    assert got == want
+    assert "".join(got[40][0]) == "a\x00bab"  # NUL is a plain character
+
+    fert = {
+        r["lang"]: tuple(r)[1:]
+        for r in bpe_fertility(docs, merges, group_col="lang").collect()
+    }
+    want_fert = {}
+    for lang in langs:
+        mine = [t for i, t, g in rows if g == lang]
+        toks = [w for t in mine if t is not None for w in t.split(" ")]
+        nt = len(toks)
+        ns = sum(len(_bpe_replay(w, merges)) for w in toks)
+        nc = sum(len(w) for w in toks)
+        want_fert[lang] = (len(mine), nt, ns, nc, ns * 1000 // nt, nc * 1000 // ns)
+    assert fert == want_fert
+
+    sdocs = docs.where(F.col("text").isNotNull()).select(
         F.concat(F.lit("doc-"), F.col("doc_id")).alias("doc_id"), "text"
     )
-    s_lit = sorted(
-        (r["doc_id"], r["n_subwords"])
-        for r in bpe_encode(sdocs, merges, engine="literal").collect()
+    enc = bpe_encode(sdocs, merges)
+    assert enc.schema["doc_id"].dataType == T.StringType()
+    assert sorted((r["doc_id"], r["n_subwords"]) for r in enc.collect()) == sorted(
+        (f"doc-{i}", want[i][2]) for i, t, _ in rows if t is not None
     )
-    s_arw_df = bpe_encode(sdocs, merges, engine="arrow")
-    assert s_arw_df.schema == bpe_encode(sdocs, merges, engine="literal").schema
-    assert s_lit == sorted(
-        (r["doc_id"], r["n_subwords"]) for r in s_arw_df.collect()
+
+
+def test_trainer_loops_and_encoder_split_every_character(spark):
+    """U+0085 and U+2028 are not whitespace to ``tokens()`` (Java's
+    ``\\s``), so they sit inside words.  Every trainer loop and the
+    encoder must split them into their own symbols — a plain Java
+    ``.`` skips them, which once glued them to their left neighbour in
+    the vocabulary-table loops only, so the merge table depended on
+    which loop ``n_merges`` routed to."""
+    from genie_spark.analytics.text import (
+        _collect_histogram,
+        _word_counts,
+        _wordpiece_train_histogram,
+        _wordpiece_train_table,
+        bpe_encode,
     )
+
+    texts = ["x\u0085y x\u0085y x\u0085y", "a\u2028b a\u2028b", "ab"]
+    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    table, hist = _bpe_loops(docs, 4)
+    assert table == hist
+    assert table[0][1:3] == ("x", "\u0085")
+    merges = [(m[1], m[2]) for m in table]
+    enc = {r["doc_id"]: r["bpe_tokens"] for r in bpe_encode(docs, merges).collect()}
+    for i, t in enumerate(texts):
+        assert enc[i] == [s for w in t.split(" ") for s in _bpe_replay(w, merges)]
+    split = {r["doc_id"]: r["bpe_tokens"] for r in bpe_encode(docs, []).collect()}
+    assert split[1] == ["a", "\u2028", "b"] * 2
+
+    words = _word_counts(docs, "text")
+    wp_table = _wordpiece_train_table(words, 3)
+    wp_hist = _wordpiece_train_histogram(_collect_histogram(words, 100, "test"), 3)
+    assert wp_table == wp_hist
+    assert wp_table[0][1:3] == ("##\u0085", "##y")
 
 
 def _clustered_vectors(n=320, dim=16, n_clusters=8):
@@ -4186,6 +4251,9 @@ def test_wordpiece_train_matches_model_and_roundtrips(spark):
     from pyspark.sql import functions as F
 
     from genie_spark.analytics.text import (
+        _collect_histogram,
+        _word_counts,
+        _wordpiece_train_histogram,
         wordpiece_alphabet,
         wordpiece_encode,
         wordpiece_train,
@@ -4204,17 +4272,14 @@ def test_wordpiece_train_matches_model_and_roundtrips(spark):
     # determinism
     again = [tuple(r) for r in wordpiece_train(docs, n_merges=6).collect()]
     assert again == got
-    # the histogram engine (r13, the bpe_train ladder) is byte-equal
-    assert [
-        tuple(r)
-        for r in wordpiece_train(docs, n_merges=6, engine="histogram").collect()
-    ] == want
+    # the driver-side histogram loop (past the threshold) is byte-equal
+    words = _word_counts(docs, "text")
+    hist = _collect_histogram(words, 100, "test")
+    assert _wordpiece_train_histogram(hist, 6) == want
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="max_vocab_rows"):
-        wordpiece_train(docs, n_merges=6, engine="histogram", max_vocab_rows=2)
-    with _pytest.raises(ValueError, match="engine"):
-        wordpiece_train(docs, n_merges=6, engine="nope")
+        wordpiece_train(docs, n_merges=257, max_vocab_rows=2)
     # round-trip with X73
     vocab = wordpiece_alphabet(docs) + [m[3] for m in got]
     enc = wordpiece_encode(docs, vocab)

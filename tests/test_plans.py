@@ -959,9 +959,8 @@ def test_bpe_pair_counts_partial_agg_takeordered(spark):
 
 
 def test_bpe_encode_map_side_only(spark):
-    """X53: applying the merge table is a pure projection — no join,
-    no aggregate-exchange beyond the loader repartition; the literal
-    replace chain folds into one codegen'd project."""
+    """X53: applying the merge table is one map-side batch scan — no
+    join, no aggregate, no shuffle."""
     from genie_spark.analytics.text import bpe_encode
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -1024,10 +1023,10 @@ def test_soft_dedup_partial_counts_takeordered(spark):
 
 
 def test_bpe_fertility_mapside_encode_one_agg(spark):
-    """X59: the encode is a bounded literal replace chain — the plan
-    has NO join and at most the group-agg hashpartitioning exchange
-    plus the |groups|-row ordering exchange; map-side partial sums
-    carry the reduce side."""
+    """X59: the encode is bpe_encode's map-side batch scan carrying the
+    slice column — the plan has NO join and at most the group-agg
+    hashpartitioning exchange plus the |groups|-row ordering exchange;
+    map-side partial sums carry the reduce side."""
     from genie_spark.analytics.text import bpe_fertility
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")

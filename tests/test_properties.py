@@ -1151,8 +1151,8 @@ def test_quantile_sketch_matches_sequential_model(spark, vals, k_max):
 
 
 # ---------------------------------------------------------------------------
-# r13 BPE trainer engines: the histogram engine's lazy-heap loop and
-# the batched distributed prefix rule must BOTH reproduce the
+# BPE trainer loops: the driver-side histogram loop's lazy heap and
+# the vocabulary-table loop's batched prefix rule must BOTH reproduce the
 # sequential reference on arbitrary corpora (including pathological
 # repetition, ties, self-pairs, and phantom-match spellings).
 # ---------------------------------------------------------------------------
@@ -1222,14 +1222,12 @@ def test_bpe_batched_prefix_matches_sequential(spark, texts, bk):
     few examples, wide batch_k range): the provably-sequential-
     equivalent prefix rule == the sequential model on random corpora
     whose small alphabet maximizes overlap/tie/created-pair traffic."""
-    from genie_spark.analytics.text import bpe_train
+    from genie_spark.analytics.text import _bpe_train_table, _word_counts
 
     docs = spark.createDataFrame(
         list(enumerate(texts)), ["doc_id", "text"]
     )
-    got = [
-        tuple(r) for r in bpe_train(docs, n_merges=6, batch_k=bk).collect()
-    ]
+    got = _bpe_train_table(_word_counts(docs, "text"), 6, batch_k=bk)
     assert got == _seq_bpe_model(texts, 6)
 
 
@@ -1257,14 +1255,12 @@ def test_bpe_batched_matches_sequential_on_weighted_corpora(
     each is several Spark jobs): the prefix-relation + phantom-
     capability acceptance rule == the sequential model where the
     plain disjoint rule provably diverged."""
-    from genie_spark.analytics.text import bpe_train
+    from genie_spark.analytics.text import _bpe_train_table, _word_counts
 
     docs = spark.createDataFrame(
         [(i, w) for i, w in enumerate(texts)], ["doc_id", "text"]
     )
-    got = [
-        tuple(r) for r in bpe_train(docs, n_merges=6, batch_k=bk).collect()
-    ]
+    got = _bpe_train_table(_word_counts(docs, "text"), 6, batch_k=bk)
     assert got == _seq_bpe_model([" ".join(texts)], 6)
 
 
